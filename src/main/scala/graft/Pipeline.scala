@@ -337,7 +337,7 @@ object Pipeline {
     * persists into silver so later EXACT-dup checks are one hash
     * semi-join, no text recompute.
     */
-  private def corpusClean(docs: org.apache.spark.sql.DataFrame)
+  private[graft] def corpusClean(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val tf = graft.functions.TextFunctions
     docs.select(col("doc_id"), col("lang"),
@@ -541,50 +541,6 @@ object Pipeline {
     */
   private def indexDir(outDir: String) = s"$outDir/dedup_index"
 
-  /** Hash-evidence partitioning depth: silver norm_hashes side-index
-    * into `16^HashPrefixLen` prefix buckets inside each dedup-index
-    * batch directory, so the daily exact-dup probe reads only the
-    * partition directories the batch's own prefixes can hit — never
-    * silver itself. Deepen the prefix (and re-run
-    * [[Dedup.compactDedupIndex]] after a bootstrap re-index) when
-    * per-prefix evidence outgrows a comfortable probe read; the
-    * constant is a layout property like `recipe.shards`.
-    */
-  private[graft] val HashPrefixLen = 2
-
-  private def hashPrefix(c: org.apache.spark.sql.Column) =
-    substring(c, 1, HashPrefixLen)
-
-  /** The (norm_hash, hp, hp_p) evidence rows a silver landing
-    * contributes to its index batch directory. `repartition(hp_p)`
-    * yields exactly one file per prefix directory regardless of the
-    * upstream layout (a daily batch stays a handful of small files;
-    * the bootstrap write parallelizes across prefixes).
-    */
-  private def hashEvidence(silverDf: DataFrame): DataFrame =
-    silverDf.select(col("norm_hash"))
-      .withColumn("hp", hashPrefix(col("norm_hash")))
-      .withColumn("hp_p", col("hp"))
-      .repartition(col("hp_p"))
-
-  /** The partition-pruned paths the exact-dup probe will read for a
-    * batch covering `prefixes` — `None` when the index predates hash
-    * evidence (bare [[Dedup.writeDedupIndex]] state), `Some(paths)`
-    * otherwise, `paths` empty when no stored prefix overlaps the
-    * batch. Exposed so the scanned-input contract is spec-assertable
-    * (probe input ∝ batch, not corpus).
-    */
-  private[graft] def exactProbePaths(spark: SparkSession, outDir: String,
-                                     prefixes: Seq[String])
-      : Option[Seq[String]] = {
-    val idx = indexDir(outDir)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!Dedup.hasBatchTable(fs, idx, "hashes")) None
-    else Some(
-      Dedup.prunedBatchPartitionPaths(fs, idx, "hashes", "hp_p", prefixes))
-  }
-
   /** Bootstrap the incremental corpus state: bronze → FULLY deduped
     * silver (exact-hash canonical, then MinHash near-dup groups →
     * one best-quality doc per group — the same dedup semantics the
@@ -627,8 +583,7 @@ object Pipeline {
       // to read silver itself (see classifyCleaned).
       Dedup.writeDedupIndex(cleaned, "doc_id", "norm_text",
         indexDir(outDir), maxDocFreq = maxDocFreq,
-        partitionedSideTables =
-          Seq(("hashes", "hp_p", hashEvidence(silverDf))))
+        sideTables = Seq("hashes" -> silverDf.select(col("norm_hash"))))
     }
     withRetries(maxAttempts)(
       corpusGold(spark, outDir, runDate, epoch, recipe))
@@ -686,56 +641,35 @@ object Pipeline {
     * (spec-asserted), applied in exactly [[corpusIncrement]]'s
     * precedence — so `accept` here IS the increment's accepted set,
     * by construction rather than by parallel reimplementation.
+    *
+    * One batch-sized pass: each document carries three flags (exact
+    * winner, text in silver, near an older doc), the first three
+    * labels are one `when` chain over them, and that frame is
+    * checkpointed once; the within-batch groups run over its
+    * unlabelled rows (differential reference: `ClassifyParitySpec`).
     */
   private def classifyCleaned(spark: SparkSession, outDir: String,
                               cleaned: DataFrame): DataFrame = {
+    val idx = indexDir(outDir)
     val ids = cleaned.select(col("doc_id"))
-    // (a) exact: best-quality batch sibling per norm_hash, then drop
-    // anything whose normalized text is already in silver. The
-    // evidence probe is BATCH-sized: silver's norm_hashes ride the
-    // dedup-index batch directories as a prefix-partitioned side
-    // table ([[hashEvidence]]), so the check reads only the partition
-    // directories the batch's own prefixes can hit — the batch prefix
-    // set is a bounded driver scalar (≤ 16^HashPrefixLen values) and
-    // the read never touches the silver table, whose full hash-column
-    // scan was the last O(corpus) step in the daily path.
-    val exactWinners =
-      Dedup.keepCanonical(cleaned, "doc_id", "norm_hash", "q")
-    val exactLosers = ids.join(exactWinners.select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
-    val batchPrefixes = cleaned
-      .select(hashPrefix(col("norm_hash")).as("hp")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val inSilver = exactProbePaths(spark, outDir, batchPrefixes) match {
-      case Some(paths) if paths.isEmpty =>
-        // evidence exists but no stored prefix overlaps the batch:
-        // nothing can be an exact corpus dup
-        ids.limit(0)
-      case Some(paths) =>
-        cleaned.join(
-          spark.read.option("recursiveFileLookup", "true")
-            .parquet(paths: _*).select(col("norm_hash")),
-          Seq("norm_hash"), "left_semi")
-          .select(col("doc_id"))
-      case None =>
-        // compatibility: an index built before hash evidence existed
-        // (bare writeDedupIndex state) — the O(corpus) silver scan
-        cleaned.join(
-          spark.read.parquet(s"$outDir/silver/documents")
-            .select(col("norm_hash")),
-          Seq("norm_hash"), "left_semi")
-          .select(col("doc_id"))
-    }
-    val exactCorpus = exactWinners.select(col("doc_id"))
-      .join(inSilver, Seq("doc_id"), "left_semi")
-    val exactCanon = exactWinners
-      .join(inSilver, Seq("doc_id"), "left_anti")
-    // (b) near-dups vs everything ever processed + within the batch
-    // (the index _meta supplies the boilerplate df-cap, so batch and
-    // stored sides stay consistent with the bootstrap build)
+    // (a) exact: the best-quality batch sibling per norm_hash wins
+    // (keepCanonical's order: score desc, id asc); a winner whose text
+    // is already in silver is a corpus dup. The evidence is every index
+    // batch's `hashes/` side table (32 B per accepted doc) in one scan,
+    // never the silver table — except for an index that predates the
+    // evidence (bare writeDedupIndex state): the O(corpus) silver scan
+    val evidence = Dedup.readBatchHashes(spark, idx).getOrElse(
+      spark.read.parquet(s"$outDir/silver/documents")
+        .select(col("norm_hash")))
+    val inSilver = evidence
+      .join(cleaned.select(col("norm_hash")), Seq("norm_hash"), "left_semi")
+      .distinct().withColumn("in_silver", lit(true))
+    // (b) near-dups vs everything ever processed (the index _meta
+    // supplies the boilerplate df-cap, so batch and stored sides stay
+    // consistent with the bootstrap build)
     val pairs = Dedup.minhashDedupAgainstIndex(cleaned, "doc_id",
-      "norm_text", indexDir(outDir))
-    val vsOld = pairs
+      "norm_text", idx)
+    val nearOld = pairs
       .join(ids.withColumnRenamed("doc_id", "id_a"), Seq("id_a"),
         "left_anti")
       .select(col("id_b").as("doc_id"))
@@ -743,12 +677,21 @@ object Pipeline {
         .join(ids.withColumnRenamed("doc_id", "id_b"), Seq("id_b"),
           "left_anti")
         .select(col("id_a").as("doc_id")))
-      .distinct()
-    val nearCorpus = exactCanon.select(col("doc_id"))
-      .join(vsOld, Seq("doc_id"), "left_semi")
-    val surviving = exactCanon.join(vsOld, Seq("doc_id"), "left_anti")
+      .distinct().withColumn("near_old", lit(true))
+    val winner = row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("norm_hash"))
+        .orderBy(negate(col("q")), col("doc_id"))) === 1
+    val frame = cleaned.select(col("doc_id"), col("norm_hash"), col("q"),
+        winner.as("winner"))
+      .join(inSilver, Seq("norm_hash"), "left")
+      .join(nearOld, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("q"),
+        when(!col("winner"), "exact_dup_batch")
+          .when(col("in_silver"), "exact_dup_corpus")
+          .when(col("near_old"), "near_dup_corpus").as("pre"))
       .localCheckpoint()
     // (c) within-batch near-dup groups over the surviving docs
+    val surviving = frame.filter(col("pre").isNull)
     val sIds = surviving.select(col("doc_id"))
     val innerPairs = pairs
       .join(sIds.withColumnRenamed("doc_id", "id_a"), Seq("id_a"))
@@ -759,16 +702,11 @@ object Pipeline {
       .withColumnRenamed("id", "doc_id")
     val accepts = Dedup.keepCanonical(
         surviving.join(groups, Seq("doc_id")), "doc_id", "group_id", "q")
-      .select(col("doc_id"))
-    val nearBatch = sIds.join(accepts, Seq("doc_id"), "left_anti")
-    def lab(df: DataFrame, d: String) =
-      df.select(col("doc_id"), lit(d).as("decision"))
-    lab(exactLosers, "exact_dup_batch")
-      .unionByName(lab(exactCorpus, "exact_dup_corpus"))
-      .unionByName(lab(nearCorpus, "near_dup_corpus"))
-      .unionByName(lab(nearBatch, "near_dup_batch"))
-      .unionByName(lab(accepts, "accept"))
-      .localCheckpoint()
+      .select(col("doc_id"), lit(true).as("accepted"))
+    frame.join(accepts, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("pre"),
+        when(col("accepted"), "accept").otherwise("near_dup_batch"))
+        .as("decision"))
   }
 
   /** Why was each document of `batch` kept or rejected? The
@@ -839,10 +777,9 @@ object Pipeline {
       val acceptedSilver0 = silverColumns(accepted, runDate, recipe)
         .localCheckpoint() // two consumers: commit record + hash evidence
       Dedup.writeDedupIndex(cleaned, "doc_id", "norm_text", idx,
-        mode = "append",
-        sideTables = Seq("accepted" -> acceptedSilver0),
-        partitionedSideTables =
-          Seq(("hashes", "hp_p", hashEvidence(acceptedSilver0))))
+        mode = "append", knownId = Some(bid),
+        sideTables = Seq("accepted" -> acceptedSilver0.coalesce(1),
+          "hashes" -> acceptedSilver0.select(col("norm_hash"))))
       ()
     }
     afterIndexPublish()
@@ -866,12 +803,14 @@ object Pipeline {
     // gold rebuild is SHARD-LOCAL: only shards that received an
     // accepted doc repack (their pack/epoch windows shift); every
     // other gold partition is untouched on disk. The shard list is a
-    // bounded driver scalar (≤ recipe.shards values), never row data.
-    val touched = acceptedSilver.select(col("shard")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    corpusGold(spark, outDir, runDate, epoch, recipe, Some(touched))
+    // bounded driver scalar (≤ recipe.shards values), never row data;
+    // one aggregate over the commit record yields it and the count.
+    val landed = acceptedSilver
+      .agg(sort_array(collect_set(col("shard"))), count(lit(1))).head()
+    corpusGold(spark, outDir, runDate, epoch, recipe,
+      Some(landed.getSeq[Long](0)))
     fs.create(landedMarker, true).close()
-    acceptedSilver.count()
+    landed.getLong(1)
   }
 
   /** What [[retractDocs]] did, per store — bounded driver scalars for

@@ -567,29 +567,26 @@ object Dedup {
       .filter(fs.exists).map(_.toString).toSeq
   }
 
-  /** Does any published batch directory carry the side table `sub`? */
-  private[graft] def hasBatchTable(fs: org.apache.hadoop.fs.FileSystem,
-                                   path: String, sub: String): Boolean =
-    batchSubPaths(fs, path, sub).nonEmpty
-
-  /** Partition-PRUNED paths of a partitioned side table across every
-    * published batch directory: only the `partCol=<value>` partition
-    * directories whose value is in `values` are returned, so a probe's
-    * scanned input is proportional to the probing batch's key
-    * coverage, never the stored corpus. One `listStatus` per batch
-    * dir (driver metadata, no data read) — the pruning is explicit
-    * paths, not optimizer-dependent.
+  /** The exact-dup evidence (`norm_hash`) of every published batch
+    * that carries a `hashes/` side table, as one scan relation — `None`
+    * when no batch does. See [[readHashTables]] for the layouts read.
     */
-  private[graft] def prunedBatchPartitionPaths(
-      fs: org.apache.hadoop.fs.FileSystem, path: String, sub: String,
-      partCol: String, values: Seq[String]): Seq[String] = {
-    val wanted = values.map(v => s"$partCol=$v").toSet
-    batchSubPaths(fs, path, sub).flatMap { p =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(p))
-        .filter(st => st.isDirectory && wanted(st.getPath.getName))
-        .map(_.getPath.toString)
-    }
+  private[graft] def readBatchHashes(spark: org.apache.spark.sql.SparkSession,
+                                     path: String): Option[DataFrame] = {
+    val paths = batchSubPaths(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), path, "hashes")
+    if (paths.isEmpty) None else Some(readHashTables(spark, paths))
   }
+
+  /** `hashes/` side tables read with their one-column schema fixed:
+    * no footer read to infer it, and batch directories published in
+    * the earlier prefix-partitioned layout (extra `hp` column under
+    * `hp_p=XX/` directories) read as the same `norm_hash` column.
+    */
+  private def readHashTables(spark: org.apache.spark.sql.SparkSession,
+                             paths: Seq[String]): DataFrame =
+    spark.read.schema("norm_hash STRING")
+      .option("recursiveFileLookup", "true").parquet(paths: _*)
 
   /** One scan relation over any number of batch directories. Every
     * batch table is self-contained (no partition-encoded columns — see
@@ -647,7 +644,8 @@ object Dedup {
     * repeats within any real crawl batch, which is exactly where the
     * band-bucket flood comes from.
     *
-    * Returns the published batch id.
+    * `knownId` is `df`'s [[batchId]] when the caller has already
+    * computed it (saves the aggregate). Returns the published batch id.
     */
   def writeDedupIndex(df: DataFrame, idCol: String, textCol: String,
                       path: String, k: Int = 16,
@@ -656,8 +654,7 @@ object Dedup {
                       maxDocFreq: Option[Int] = None,
                       auditOverlap: Boolean = false,
                       sideTables: Seq[(String, DataFrame)] = Nil,
-                      partitionedSideTables: Seq[(String, String, DataFrame)] =
-                        Nil): String = {
+                      knownId: Option[String] = None): String = {
     require(mode == "overwrite" || mode == "append",
       s"mode must be overwrite|append, got $mode")
     // all probes through the Hadoop FS API, NOT java.io.File: the
@@ -666,7 +663,7 @@ object Dedup {
     // guard — the exact silent corruption it exists to prevent
     val fs = fsFor(df, path)
     val spark = df.sparkSession
-    val bid = batchId(df, idCol)
+    val bid = knownId.getOrElse(batchId(df, idCol))
     val batchDir = new org.apache.hadoop.fs.Path(s"$path/batches/$bid")
     val cap: Int =
       if (mode == "overwrite") maxDocFreq.getOrElse(-1)
@@ -730,20 +727,12 @@ object Dedup {
       .parquet(s"$staging/bands")
     sh.write.mode("overwrite").parquet(s"$staging/shingles")
     sh.unpersist()
-    // side tables: commit records riding the same atomic publish (one
-    // file each — they are batch-sized by definition)
+    // side tables (commit records, exact-dup evidence) ride the same
+    // atomic publish, each written with its own partitioning — the
+    // caller coalesces a batch-sized record, corpus-sized evidence
+    // keeps its parallelism
     sideTables.foreach { case (name, t) =>
-      t.coalesce(1).write.mode("overwrite").parquet(s"$staging/$name")
-    }
-    // partitioned side tables: same atomic publish, but laid out for
-    // PRUNED reads (the hash-evidence pattern: a probe lists a batch
-    // dir once and opens only the partition directories its keys can
-    // live in — see prunedBatchPartitionPaths). The partition column
-    // should also ride as a data column (the band/band_p convention)
-    // so recursive full-table reads keep a uniform schema.
-    partitionedSideTables.foreach { case (name, pcol, t) =>
-      t.write.mode("overwrite").partitionBy(pcol)
-        .parquet(s"$staging/$name")
+      t.write.mode("overwrite").parquet(s"$staging/$name")
     }
     if (readIndexMeta(fs, path).isEmpty)
       writeIndexMeta(fs, path, IndexMeta(k, rowsPerBand, cap))
@@ -851,9 +840,10 @@ object Dedup {
                 Seq("sid"), "left_semi")
               .distinct().count()
           }
+        def hashes = readHashTables(spark, Seq(sub("hashes").toString))
         val hashHits =
           if (normHashes.isEmpty || !hasHashes) 0L
-          else readSub("hashes").select(col("norm_hash"))
+          else hashes
             .join(broadcast(hashDf), Seq("norm_hash"), "left_semi")
             .distinct().count()
         if (sidHits > 0L || hashHits > 0L) {
@@ -898,13 +888,10 @@ object Dedup {
             }
           }
           if (hasHashes) {
-            val rem = readSub("hashes")
+            val rem = hashes
               .join(broadcast(hashDf), Seq("norm_hash"), "left_anti")
             if (!rem.isEmpty) {
-              rem.withColumn("hp_p", col("hp"))
-                .repartition(col("hp_p"))
-                .write.mode("overwrite").partitionBy("hp_p")
-                .parquet(s"$staging/hashes")
+              rem.write.mode("overwrite").parquet(s"$staging/hashes")
               wroteAny = true
             }
           }
@@ -998,7 +985,6 @@ object Dedup {
     val shingles =
       readBatchTables(spark, batchSubPaths(fs, path, "shingles"))
         .distinct()
-    val hashPaths = batchSubPaths(fs, path, "hashes")
     val cid = batchId(bands, "sid")
     val merged = new org.apache.hadoop.fs.Path(s"$path/batches/$cid")
     if (!fs.exists(merged)) {
@@ -1017,16 +1003,11 @@ object Dedup {
         .write.mode("overwrite").partitionBy("band_p")
         .parquet(s"$staging/bands")
       shingles.write.mode("overwrite").parquet(s"$staging/shingles")
-      // the hash-evidence side table (corpus pipelines only) compacts
-      // with everything else: per-day prefix files merge into one
-      // partition directory per prefix, restoring the probe's
-      // one-file-per-prefix read shape
-      if (hashPaths.nonEmpty)
-        readBatchTables(spark, hashPaths).distinct()
-          .withColumn("hp_p", col("hp"))
-          .repartition(col("hp_p"))
-          .write.mode("overwrite").partitionBy("hp_p")
-          .parquet(s"$staging/hashes")
+      // the exact-dup evidence (corpus pipelines only) compacts with
+      // everything else: every batch's `hashes/` — either layout —
+      // folds into one unpartitioned table the probe reads as one
+      readBatchHashes(spark, path).foreach(
+        _.distinct().write.mode("overwrite").parquet(s"$staging/hashes"))
       if (!fs.rename(staging, merged)) throw new IllegalStateException(
         s"cannot publish compacted batch $staging to $merged")
     }

@@ -427,29 +427,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(landed == acceptIds, s"landed $landed vs labeled $acceptIds")
   }
 
-  test("exact-dup probe: scanned input is the batch's prefix partitions") {
+  /** Every `hashes/` directory under the index's published batches
+    * that still has the prefix-partitioned (`hp_p=`) layout. */
+  private def prefixPartitioned(idx: String): Seq[String] =
+    Option(new java.io.File(s"$idx/batches").listFiles()).toSeq.flatten
+      .map(b => new java.io.File(b, "hashes"))
+      .filter(h => Option(h.listFiles()).exists(_.exists(f =>
+        f.isDirectory && f.getName.startsWith("hp_p="))))
+      .map(_.getPath)
+
+  /** Asserts the index's exact-dup evidence is exactly silver's
+    * norm_hash set. */
+  private def assertEvidenceMirrorsSilver(out: String, when: String): Unit = {
+    val silver = spark.read.parquet(s"$out/silver/documents")
+      .select("norm_hash")
+    val stored = graft.operators.Dedup
+      .readBatchHashes(spark, s"$out/dedup_index").get
+    assert(stored.except(silver).count() == 0 &&
+      silver.except(stored).count() == 0,
+      s"hash evidence does not mirror silver $when")
+  }
+
+  test("exact-dup probe: one plain evidence table per batch, complete") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    import graft.operators.Corpus
-    val tf = graft.functions.TextFunctions
+    import graft.operators.{Corpus, Dedup}
     val out = java.nio.file.Files.createTempDirectory("graft-hprobe").toString
+    val idx = s"$out/dedup_index"
     val doc = graft.sources.Tables.table(spark, sf, "documents")
       .select("doc_id", "lang", "text")
     val bucket = Corpus.hashBucket(col("doc_id"), "hprobe", 5)
     Pipeline.corpusInit(spark, doc.filter(bucket >= 1), out, "2026-08-12")
     // completeness: the side-indexed hash evidence IS silver's hash set
-    val silverHashes = spark.read.parquet(s"$out/silver/documents")
-      .select("norm_hash")
-    val allPrefixes = (0 until 256).map(i => f"$i%02x")
-    val allPaths = Pipeline.exactProbePaths(spark, out, allPrefixes).get
-    val stored = spark.read.option("recursiveFileLookup", "true")
-      .parquet(allPaths: _*).select("norm_hash")
-    assert(stored.except(silverHashes).count() == 0 &&
-      silverHashes.except(stored).count() == 0,
-      "hash evidence mirrors silver exactly")
-    // a small batch opens ONLY its own prefix partitions — a strict
-    // subset of the stored evidence: the probe's input is
-    // batch-proportional, never a silver hash-column scan
+    assertEvidenceMirrorsSilver(out, "after the bootstrap")
     // seed from SILVER (not the raw batch): a raw doc may have lost a
     // near-dup race at bootstrap, leaving its hash out of silver
     val seed = spark.read.parquet(s"$out/silver/documents")
@@ -460,18 +470,7 @@ class PipelineSpec extends AnyFunSuite {
         (910002L, "en", "a genuinely fresh probe document " +
           (1 to 30).map(i => s"gamma$i").mkString(" ")))
       .toDF("doc_id", "lang", "text")
-    val batchPrefixes = batch.select(
-        substring(sha2(tf.normalizeText(tf.stripMarkup(col("text"))), 256),
-          1, 2).as("hp"))
-      .distinct().collect().map(_.getString(0)).toSeq
-    val probed = Pipeline.exactProbePaths(spark, out, batchPrefixes).get
-    assert(probed.nonEmpty, "the planted dup's prefix partition exists")
-    assert(probed.forall(p =>
-        batchPrefixes.exists(hp => p.endsWith(s"hp_p=$hp"))),
-      s"probe opened a partition outside the batch's prefixes: $probed")
-    assert(probed.size < allPaths.size,
-      s"probe is not pruned: ${probed.size} of ${allPaths.size} partitions")
-    // and the decisions that ride the pruned probe are right
+    // the decisions that ride the evidence probe are right
     val m = Pipeline.classifyBatch(spark, out, batch).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(m(910001L) == "exact_dup_corpus", m.toString)
@@ -480,14 +479,82 @@ class PipelineSpec extends AnyFunSuite {
     // ride the new batch directory)
     val acc = Pipeline.corpusIncrement(spark, out, batch, "2026-08-13")
     assert(acc == 1L)
-    val silverAfter = spark.read.parquet(s"$out/silver/documents")
-      .select("norm_hash")
-    val storedAfter = spark.read.option("recursiveFileLookup", "true")
-      .parquet(Pipeline.exactProbePaths(spark, out, allPrefixes).get: _*)
-      .select("norm_hash")
-    assert(storedAfter.except(silverAfter).count() == 0 &&
-      silverAfter.except(storedAfter).count() == 0,
-      "hash evidence still mirrors silver after an increment")
+    assertEvidenceMirrorsSilver(out, "after an increment")
+    // layout: no batch is prefix-partitioned, and the daily batch's
+    // evidence is a plain table of at most one file per shuffle
+    // partition
+    assert(prefixPartitioned(idx).isEmpty, prefixPartitioned(idx).toString)
+    val daily = new java.io.File(
+      s"$idx/batches/${Dedup.batchId(batch, "doc_id")}/hashes")
+    val files = daily.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty && files.length <=
+      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"${files.length} evidence files in $daily")
+  }
+
+  test("exact-dup evidence: a batch in the earlier hp_p= layout still " +
+      "probes, retracts and compacts beside plain ones") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.operators.{Corpus, Dedup}
+    val out = java.nio.file.Files.createTempDirectory("graft-hmixed").toString
+    val idx = s"$out/dedup_index"
+    val doc = graft.sources.Tables.table(spark, sf, "documents")
+      .select("doc_id", "lang", "text")
+    val bucket = Corpus.hashBucket(col("doc_id"), "hmixed", 5)
+    Pipeline.corpusInit(spark, doc.filter(bucket >= 2), out, "2026-08-12")
+    val day1 = doc.filter(bucket === 0)
+    assert(Pipeline.corpusIncrement(spark, out, day1, "2026-08-13") > 0L)
+    // rewrite one batch's evidence by hand into the layout batches had
+    // before: (norm_hash, hp) rows under hp_p=<2-hex-digit prefix>/
+    def toPrefixLayout(batchDir: String): Unit = {
+      val h = s"$batchDir/hashes"
+      val old = s"$batchDir/hashes_prefixed"
+      spark.read.parquet(h).select("norm_hash")
+        .withColumn("hp", substring(col("norm_hash"), 1, 2))
+        .withColumn("hp_p", col("hp"))
+        .repartition(col("hp_p"))
+        .write.partitionBy("hp_p").parquet(old)
+      rmTree(new java.io.File(h))
+      assert(new java.io.File(old).renameTo(new java.io.File(h)))
+    }
+    val day1Dir = s"$idx/batches/${Dedup.batchId(day1, "doc_id")}"
+    toPrefixLayout(day1Dir)
+    assert(prefixPartitioned(idx) == Seq(s"$day1Dir/hashes"))
+    assertEvidenceMirrorsSilver(out, "over the mixed index")
+    // an exact corpus dup of a doc whose evidence lives ONLY in the
+    // prefix-layout batch, and one of a bootstrap doc
+    val silver = spark.read.parquet(s"$out/silver/documents")
+    val fromDay1 = silver.filter(col("_processing_date") === "2026-08-13")
+      .orderBy("doc_id").select("doc_id", "lang", "clean_text").limit(1)
+      .collect()(0)
+    val fromBoot = silver.filter(col("_processing_date") === "2026-08-12")
+      .orderBy("doc_id").select("doc_id", "lang", "clean_text").limit(1)
+      .collect()(0)
+    val probe = Seq(
+        (920001L, fromDay1.getString(1), fromDay1.getString(2)),
+        (920002L, fromBoot.getString(1), fromBoot.getString(2)))
+      .toDF("doc_id", "lang", "text")
+    val m = Pipeline.classifyBatch(spark, out, probe).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(m == Map(920001L -> "exact_dup_corpus",
+      920002L -> "exact_dup_corpus"), m.toString)
+    // retraction reads both layouts and republishes plain tables
+    val report = Pipeline.retractDocs(spark, out,
+      Seq(fromDay1.getLong(0), fromBoot.getLong(0)).map(_.toString),
+      "2026-08-14")
+    assert(report.silverRemoved == 2L)
+    assertEvidenceMirrorsSilver(out, "after a retraction")
+    assert(prefixPartitioned(idx).isEmpty, prefixPartitioned(idx).toString)
+    // compaction folds a mixed index (one batch put back into the
+    // prefix layout) into one plain evidence table
+    val live = new java.io.File(s"$idx/batches").listFiles()
+      .filter(b => new java.io.File(b, "hashes").exists())
+    toPrefixLayout(live.head.getPath)
+    assert(prefixPartitioned(idx).size == 1)
+    Dedup.compactDedupIndex(spark, idx)
+    assertEvidenceMirrorsSilver(out, "after compaction")
+    assert(prefixPartitioned(idx).isEmpty, prefixPartitioned(idx).toString)
   }
 
   test("increment crash after index publish: retry resumes, lands once") {
