@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -27,7 +25,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // TREND-READABLE ANN TIMING: the two declared-quadratic recall
     // oracles (ann_pq / ann_ivfpq) probe every 50th vector — a set
     // that scales with the corpus, so at sf1 their O(corpus²) oracle
@@ -49,15 +47,7 @@ object Bench {
     // round — the measured 911 s sf1 melt; fixed seed count here
     val annSeedCap = sys.env.getOrElse("SPARK_GRAFT_ANN_SEEDS", "128")
     System.setProperty("graft.ann.maxTrainSeeds", annSeedCap)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     def once(name: String): Double = {
       // drop caches left behind by earlier queries AND by this query's

@@ -425,12 +425,12 @@ object Pipeline {
       .withColumn("shard", col("shard").cast("bigint"))
       .filter(col("q") >= recipe.minQuality &&
         col("n_bpe_tokens").between(recipe.minTokens, recipe.maxTokens))
-    val train = Corpus.splitByHash(
+    // two consumers: pack assignment + join-back
+    val train = Checkpoints.truncate(Corpus.splitByHash(
         Corpus.mixtureSample(kept, "doc_id", "lang", recipe.mixtureSalt,
           recipe.mixtureDen, recipe.mixtureRates.toMap),
         "doc_id", recipe.splitSalt, recipe.splitWeights)
-      .filter(col("split") === "train")
-      .localCheckpoint() // two consumers: pack assignment + join-back
+      .filter(col("split") === "train"))
     val bins = Corpus.packGreedy(train, "doc_id", "n_bpe_tokens",
       "shard", Seq("doc_id"), recipe.packBudget)
     val packed = Corpus.materializePacked(
@@ -558,9 +558,8 @@ object Pipeline {
                  maxDocFreq: Option[Int] = None): DataFrame = {
     withRetries(maxAttempts)(corpusLand(docs, outDir, runDate))
     withRetries(maxAttempts) {
-      val cleaned = corpusClean(
-        spark.read.parquet(s"$outDir/bronze/documents"))
-        .localCheckpoint()
+      val cleaned = Checkpoints.truncate(corpusClean(
+        spark.read.parquet(s"$outDir/bronze/documents")))
       val exactCanon =
         Dedup.keepCanonical(cleaned, "doc_id", "norm_hash", "q")
       val groups = Dedup.resolveGroups(
@@ -569,11 +568,11 @@ object Pipeline {
               maxDocFreq = maxDocFreq)
             .select(col("id_a"), col("id_b")))
         .withColumnRenamed("id", "doc_id")
-      val silverDf = silverColumns(
+      // two consumers: silver write + hash evidence
+      val silverDf = Checkpoints.truncate(silverColumns(
           Dedup.keepCanonical(exactCanon.join(groups, Seq("doc_id")),
             "doc_id", "group_id", "q"),
-          runDate, recipe)
-        .localCheckpoint() // two consumers: silver write + hash evidence
+          runDate, recipe))
       writeSilver(silverDf, outDir, "overwrite")
       // the boilerplate cap persists into the index _meta, so every
       // daily append and query runs the SAME cap the bootstrap dedup
@@ -681,15 +680,14 @@ object Pipeline {
     val winner = row_number().over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("norm_hash"))
         .orderBy(negate(col("q")), col("doc_id"))) === 1
-    val frame = cleaned.select(col("doc_id"), col("norm_hash"), col("q"),
-        winner.as("winner"))
+    val frame = Checkpoints.truncate(cleaned.select(col("doc_id"),
+        col("norm_hash"), col("q"), winner.as("winner"))
       .join(inSilver, Seq("norm_hash"), "left")
       .join(nearOld, Seq("doc_id"), "left")
       .select(col("doc_id"), col("q"),
         when(!col("winner"), "exact_dup_batch")
           .when(col("in_silver"), "exact_dup_corpus")
-          .when(col("near_old"), "near_dup_corpus").as("pre"))
-      .localCheckpoint()
+          .when(col("near_old"), "near_dup_corpus").as("pre")))
     // (c) within-batch near-dup groups over the surviving docs
     val surviving = frame.filter(col("pre").isNull)
     val sIds = surviving.select(col("doc_id"))
@@ -719,7 +717,7 @@ object Pipeline {
     */
   def classifyBatch(spark: SparkSession, outDir: String,
                     batch: DataFrame): DataFrame =
-    classifyCleaned(spark, outDir, corpusClean(batch).localCheckpoint())
+    classifyCleaned(spark, outDir, Checkpoints.truncate(corpusClean(batch)))
 
   /** [[corpusIncrement]] with a crash-injection hook fired at the
     * commit point (after the index batch publishes, before any silver
@@ -751,7 +749,7 @@ object Pipeline {
       runDate: String, epoch: Int = 1,
       recipe: Corpus.TrainingRecipe = Corpus.TrainingRecipe.Default,
       afterIndexPublish: () => Unit = () => ()): Long = {
-    val cleaned = corpusClean(batch).localCheckpoint()
+    val cleaned = Checkpoints.truncate(corpusClean(batch))
     val idx = indexDir(outDir)
     val bid = Dedup.batchId(cleaned, "doc_id")
     val batchDir = new org.apache.hadoop.fs.Path(s"$idx/batches/$bid")
@@ -774,8 +772,9 @@ object Pipeline {
         classifyCleaned(spark, outDir, cleaned)
           .filter(col("decision") === "accept").select(col("doc_id")),
         Seq("doc_id"))
-      val acceptedSilver0 = silverColumns(accepted, runDate, recipe)
-        .localCheckpoint() // two consumers: commit record + hash evidence
+      // two consumers: commit record + hash evidence
+      val acceptedSilver0 =
+        Checkpoints.truncate(silverColumns(accepted, runDate, recipe))
       Dedup.writeDedupIndex(cleaned, "doc_id", "norm_text", idx,
         mode = "append", knownId = Some(bid),
         sideTables = Seq("accepted" -> acceptedSilver0.coalesce(1),

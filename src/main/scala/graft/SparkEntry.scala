@@ -20,11 +20,6 @@ import graft.sources.Tables
 object SparkEntry {
   private val Stamp = "2026-08-12" // injected _processing/_modeling date
 
-  /** Recursive delete for the gates' throwaway staging dirs. */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
   /** Shared fixture of the two fsck gates (q_index_audit /
     * q_index_repair): a REAL postings index over the documents table
     * (80% bootstrap + 20% append) with the common incident plants —
@@ -64,25 +59,23 @@ object SparkEntry {
   private def runStreamGate(s: SparkSession, sfDir: String, copies: Int,
                             outputMode: String,
                             pipeline: DataFrame => DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-gate")
-    (1 to copies).foreach { i =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-        dir.resolve(s"events_$i.parquet"))
-    }
-    val name = "stream_gate_" +
-      java.lang.Long.toHexString(System.nanoTime())
-    try {
-      val q = graft.streaming.EventStream.runToMemory(
-        pipeline(graft.streaming.EventStream.readEvents(s, dir.toString)),
-        name, outputMode)
-      q.stop()
-      // pin the sink's rows into session-local storage so the returned
-      // plan survives the view drop and the source-file delete below
-      s.table(name).localCheckpoint(true)
-    } finally {
-      s.catalog.dropTempView(name)
-      rmTree(dir.toFile)
+    Checkpoints.tempDir("graft-stream-gate") { dir =>
+      (1 to copies).foreach { i =>
+        java.nio.file.Files.copy(
+          java.nio.file.Paths.get(s"$sfDir/events.parquet"),
+          java.nio.file.Paths.get(dir, s"events_$i.parquet"))
+      }
+      val name = "stream_gate_" +
+        java.lang.Long.toHexString(System.nanoTime())
+      try {
+        val q = graft.streaming.EventStream.runToMemory(
+          pipeline(graft.streaming.EventStream.readEvents(s, dir)),
+          name, outputMode)
+        q.stop()
+        // pin the sink's rows so the returned plan survives the view
+        // drop and the source-file delete
+        Checkpoints.truncate(s.table(name))
+      } finally s.catalog.dropTempView(name)
     }
   }
 
@@ -509,25 +502,20 @@ object SparkEntry {
     // partitions); the read-back must equal the source set exactly
     // once. A plain append sink would double every row here.
     "q_stream_sink" -> ((s, d) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-sink-stage")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        stage.resolve("events.parquet"))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-sink-out").toString
-      try {
-        graft.streaming.EventStream.idempotentDailySink(
-          graft.streaming.EventStream.readEvents(s, stage.toString), out)
-        // replay: same data, fresh query, same output dir
-        graft.streaming.EventStream.idempotentDailySink(
-          graft.streaming.EventStream.readEvents(s, stage.toString), out)
-        s.read.parquet(out)
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("event_type"), col("value"))
-          .localCheckpoint(true)
-      } finally {
-        rmTree(stage.toFile); rmTree(new java.io.File(out))
+      Checkpoints.tempDir("graft-sink-stage") { stage =>
+        java.nio.file.Files.copy(
+          java.nio.file.Paths.get(s"$d/events.parquet"),
+          java.nio.file.Paths.get(stage, "events.parquet"))
+        Checkpoints.tempDir("graft-sink-out") { out =>
+          graft.streaming.EventStream.idempotentDailySink(
+            graft.streaming.EventStream.readEvents(s, stage), out)
+          // replay: same data, fresh query, same output dir
+          graft.streaming.EventStream.idempotentDailySink(
+            graft.streaming.EventStream.readEvents(s, stage), out)
+          Checkpoints.truncate(s.read.parquet(out)
+            .select(col("event_id"), col("user_id"), col("ts"),
+              col("event_type"), col("value")))
+        }
       }
     }),
     // ---- §2.5 E6 custom-state streaming sessionization, driver-gated ----
@@ -812,9 +800,7 @@ object SparkEntry {
       val docs = Tables.table(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val isNew = Corpus.hashBucket(col("doc_id"), "binc", 5) === 0
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-bm25-index").toString
-      try {
+      Checkpoints.tempDir("graft-bm25-index") { dir =>
         graft.operators.Bm25.writeBm25Index(docs.filter(!isNew),
           "doc_id", "text", dir)
         graft.operators.Bm25.appendBm25Index(docs.filter(isNew),
@@ -823,11 +809,9 @@ object SparkEntry {
         // must serve the identical ranking (merged postings, same
         // scalars), so the oracle pins compaction correctness too
         graft.operators.Bm25.compactBm25Index(s, dir)
-        // materialize the ≤k-row result before deleting the staged
-        // index (the q_dedup_index pattern)
-        graft.operators.Bm25.bm25TopKIndexed(s, dir,
-          "fast vector hash join", k = 20).localCheckpoint()
-      } finally rmTree(new java.io.File(dir))
+        Checkpoints.truncate(graft.operators.Bm25.bm25TopKIndexed(s, dir,
+          "fast vector hash join", k = 20))
+      }
     }),
     // ---- §2.8 T13b reciprocal-rank fusion (hybrid retrieval) ----
     // BM25 relevance fused with a document-quality prior ranking;
@@ -877,13 +861,11 @@ object SparkEntry {
       val docs = Tables.table(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val (bg0, v) = sharedHeldinBigramLm(s, d)
-      val bg = bg0.persist()
-      try {
-        graft.operators.LangModel
+      Checkpoints.cached(bg0) { bg =>
+        Checkpoints.truncate(graft.operators.LangModel
           .perplexityReport(docs, "doc_id", "text", bg, v)
-          .withColumn("keep", col("nll") <= 3.39)
-          .localCheckpoint()
-      } finally { bg.unpersist(); () }
+          .withColumn("keep", col("nll") <= 3.39))
+      }
     }),
     // ---- §2.8 T14c interpolated (Jelinek–Mercer) perplexity ----
     // the same trained bigram counts served through λ·P_bigram +
@@ -895,14 +877,12 @@ object SparkEntry {
       val docs = Tables.table(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val (bg0, v) = sharedHeldinBigramLm(s, d)
-      val bg = bg0.persist()
-      try {
-        graft.operators.LangModel
+      Checkpoints.cached(bg0) { bg =>
+        Checkpoints.truncate(graft.operators.LangModel
           .perplexityReport(docs, "doc_id", "text", bg, v,
             lambda = 0.8)
-          .withColumn("keep", col("nll") <= 3.387)
-          .localCheckpoint()
-      } finally { bg.unpersist(); () }
+          .withColumn("keep", col("nll") <= 3.387))
+      }
     }),
     // ---- §2.8 T14d backoff trigram perplexity ----
     // the T14c discipline one order up: λ₃P₃ + λ₂P₂ + λ₁P₁ with
@@ -916,16 +896,15 @@ object SparkEntry {
       val heldin = docs.filter(
         Corpus.hashBucket(col("doc_id"), "lm", 5) =!= 0)
       val (bg0, v) = sharedHeldinBigramLm(s, d)
-      val bg = bg0.persist()
-      val tri = graft.operators.LangModel
-        .trainTrigramLm(heldin, "text").persist()
-      try {
-        graft.operators.LangModel
-          .perplexityReportTri(docs, "doc_id", "text", tri, bg, v,
-            alpha = 0.5, lambda3 = 0.5, lambda2 = 0.3, lambda1 = 0.2)
-          .withColumn("keep", col("nll") <= 3.35)
-          .localCheckpoint()
-      } finally { bg.unpersist(); tri.unpersist(); () }
+      Checkpoints.cached(bg0) { bg =>
+        Checkpoints.cached(graft.operators.LangModel
+          .trainTrigramLm(heldin, "text")) { tri =>
+          Checkpoints.truncate(graft.operators.LangModel
+            .perplexityReportTri(docs, "doc_id", "text", tri, bg, v,
+              alpha = 0.5, lambda3 = 0.5, lambda2 = 0.3, lambda1 = 0.2)
+            .withColumn("keep", col("nll") <= 3.35))
+        }
+      }
     }),
     // ---- §2.11 T14b DSIR importance selection ----
     // two LMs — target = held-in English slice, raw = whole held-in
@@ -940,18 +919,17 @@ object SparkEntry {
       val heldin = docs.filter(
         Corpus.hashBucket(col("doc_id"), "lm", 5) =!= 0)
       val target = heldin.filter(col("lang") === "en")
-      val tBg = graft.operators.LangModel.trainBigramLm(target, "text")
-        .persist()
-      val (rBg0, rV) = sharedHeldinBigramLm(s, d)
-      val rBg = rBg0.persist()
-      try {
-        val tV = graft.operators.LangModel.vocabSize(target, "text")
-        graft.operators.LangModel.importanceReport(
-            docs.select(col("doc_id"), col("text")), "doc_id", "text",
-            tBg, tV, rBg, rV)
-          .withColumn("keep", col("log_ratio") >= 0.0)
-          .localCheckpoint()
-      } finally { tBg.unpersist(); rBg.unpersist(); () }
+      Checkpoints.cached(graft.operators.LangModel
+        .trainBigramLm(target, "text")) { tBg =>
+        val (rBg0, rV) = sharedHeldinBigramLm(s, d)
+        Checkpoints.cached(rBg0) { rBg =>
+          val tV = graft.operators.LangModel.vocabSize(target, "text")
+          Checkpoints.truncate(graft.operators.LangModel.importanceReport(
+              docs.select(col("doc_id"), col("text")), "doc_id", "text",
+              tBg, tV, rBg, rV)
+            .withColumn("keep", col("log_ratio") >= 0.0))
+        }
+      }
     }),
     // ---- §2.8 T12 logistic-regression classifier training ----
     // four GD rounds learning lang=='en' from the quality-report
@@ -1012,15 +990,11 @@ object SparkEntry {
     "q_dedup_index" -> ((s, d) => {
       val doc = Tables.table(s, d, "documents")
       val isNew = Corpus.hashBucket(col("doc_id"), "inc", 5) === 0
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-dedup-index").toString
-      try {
+      Checkpoints.tempDir("graft-dedup-index") { dir =>
         Dedup.writeDedupIndex(doc.filter(!isNew), "doc_id", "text", dir)
-        // result is localCheckpoint-materialized inside, so deleting
-        // the staged index right after is safe
         Dedup.minhashDedupAgainstIndex(doc.filter(isNew),
           "doc_id", "text", dir)
-      } finally rmTree(new java.io.File(dir))
+      }
     }),
     // ---- §2.6 D10 canonical-document selection ----
     // groups from the exact-dedup key (normalized-text hash), winner
@@ -1067,7 +1041,7 @@ object SparkEntry {
       val R = Corpus.TrainingRecipe.Default // shared with Pipeline.corpusGold
       // the markup-bearing crawl-source analog (same wrap as
       // q_text_strip, so T6b does real work inside the composition)
-      val normed = Tables.table(s, d, "documents")
+      Checkpoints.cached(Tables.table(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           tf.stripMarkup(
             concat(lit("<div class=\"doc\"><p>"), col("text"),
@@ -1075,12 +1049,8 @@ object SparkEntry {
               col("doc_id"),
               lit(" &amp; more&nbsp;it&#39;s &#x2019;quoted&#x2019;")))
             .as("clean_text"))
-        .withColumn("norm_text", tf.normalizeText(col("clean_text")))
-        .persist()
-      // try/finally: a failure anywhere in the chain (including
-      // resolveGroups' non-convergence throw) must still release the
-      // cached corpus, or it pins executor storage for the session
-      try {
+        .withColumn("norm_text", tf.normalizeText(col("clean_text")))) {
+        normed =>
         // near-dup pairs over normalized text, with the boilerplate
         // df-cap: the wrap's shared suffix is exactly the crawl-corpus
         // boilerplate that otherwise collapses every doc into one band
@@ -1124,12 +1094,11 @@ object SparkEntry {
         // train feeds TWO consumers (the pack assignment and the
         // packed materialization join); the checkpoint stops each from
         // re-running the whole dedup→canonical→filter chain
-        val train = Corpus.splitByHash(mixed, "doc_id", R.splitSalt,
-            R.splitWeights)
+        val train = Checkpoints.truncate(Corpus.splitByHash(mixed, "doc_id",
+            R.splitSalt, R.splitWeights)
           .filter(col("split") === "train")
           .withColumn("shard",
-            Corpus.hashBucket(col("doc_id"), R.shardSalt, R.shards))
-          .localCheckpoint()
+            Corpus.hashBucket(col("doc_id"), R.shardSalt, R.shards)))
         val bins = Corpus.packGreedy(train, "doc_id", "n_bpe_tokens",
           "shard", Seq("doc_id"), R.packBudget)
         val packed = Corpus.materializePacked(
@@ -1139,12 +1108,11 @@ object SparkEntry {
             concat_ws("/", col("shard"), col("bin_id")))
         val ranked = Corpus.epochOrder(packed, "pack_id", "shard",
           epoch = 1)
-        packed
+        Checkpoints.truncate(packed
           .join(ranked.select("pack_id", "epoch_rank"), Seq("pack_id"))
           .select(col("shard"), col("bin_id"), col("n_docs"),
-            col("epoch_rank"), col("packed_text"))
-          .localCheckpoint() // materialize before releasing the cache
-      } finally normed.unpersist()
+            col("epoch_rank"), col("packed_text")))
+      }
     }),
     "q_dedup_cosine" -> ((s, d) =>
       Similarity.cosineNearDupPairs(Tables.table(s, d, "embeddings"),
@@ -1204,8 +1172,7 @@ object SparkEntry {
       val (m, dim) = (8, 64)
       val emb = Tables.table(s, d, "embeddings")
       val qp = annQueryPred
-      val cb = sharedPqCodebook(s, d, m, dim, rounds = 3).persist()
-      try {
+      Checkpoints.cached(sharedPqCodebook(s, d, m, dim, rounds = 3)) { cb =>
         val codes = graft.Checkpoints.truncate(
           Similarity.pqEncode(emb, "vec_id", "embedding", cb, m, dim))
         def topSets(df: DataFrame) = df.collect()
@@ -1242,7 +1209,7 @@ object SparkEntry {
         Seq((adc >= 0.30, rr >= 0.80, recon >= 0.70, codesComplete, n))
           .toDF("adc_recall_floor", "rerank_recall_floor",
             "recon_cosine_floor", "codes_complete", "n_vectors")
-      } finally cb.unpersist()
+      }
     }),
     // ---- §2.7 A6 IVFPQ: cell-routed PQ, driver-gated ----
     // outcome contract (q_ann_pq pattern): the codes table keyed by
@@ -1258,8 +1225,7 @@ object SparkEntry {
       val (m, dim) = (8, 64)
       val emb = Tables.table(s, d, "embeddings")
       val qp = annQueryPred
-      val cb = sharedPqCodebook(s, d, m, dim, rounds = 3).persist()
-      try {
+      Checkpoints.cached(sharedPqCodebook(s, d, m, dim, rounds = 3)) { cb =>
         val cents = emb.filter(annCellPred)
           .select(col("vec_id").as("cell"), col("embedding").as("centv"))
         val cellCodes = graft.Checkpoints.truncate(
@@ -1299,7 +1265,7 @@ object SparkEntry {
         Seq((rr >= 0.30, frac <= 0.5, n))
           .toDF("rerank_recall_floor", "cand_fraction_bound",
             "n_vectors")
-      } finally cb.unpersist()
+      }
     }),
     // ---- §2.7 A6b persisted vector index (serve shape) ----
     // the PRODUCTION form of q_ann_ivfpq: trained artifacts assembled
@@ -1317,13 +1283,10 @@ object SparkEntry {
       val emb = Tables.table(s, d, "embeddings")
       val qp = col("vec_id") % 50 === 0
       val isNew = Corpus.hashBucket(col("vec_id"), "inc", 5) === 0
-      val cb = sharedPqCodebook(s, d, m, dim, rounds = 3).persist()
-      try {
+      Checkpoints.cached(sharedPqCodebook(s, d, m, dim, rounds = 3)) { cb =>
         val cents = emb.filter(col("vec_id") % 37 === 1)
           .select(col("vec_id").as("cell"), col("embedding").as("centv"))
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-vec-index").toString
-        try {
+        Checkpoints.tempDir("graft-vec-index") { dir =>
           // the serve goes THROUGH the republish pointer — the
           // retrain→reindex indirection is part of the gated path
           val idx = s"$dir/v1"
@@ -1345,8 +1308,8 @@ object SparkEntry {
           Seq((served.toSet == mem.toSet && served.nonEmpty,
               emb.count()))
             .toDF("indexed_equals_inmemory", "n_vectors")
-        } finally rmTree(new java.io.File(dir))
-      } finally cb.unpersist()
+        }
+      }
     }),
     // ---- §2.7 A6c as-of-generation snapshot serve (time travel) ----
     // the Iceberg-style snapshot read on the batch-directory layout,
@@ -1366,13 +1329,10 @@ object SparkEntry {
       val emb = Tables.table(s, d, "embeddings")
       val qp = col("vec_id") % 50 === 0
       val isNew = Corpus.hashBucket(col("vec_id"), "inc", 5) === 0
-      val cb = sharedPqCodebook(s, d, m, dim, rounds = 3).persist()
-      try {
+      Checkpoints.cached(sharedPqCodebook(s, d, m, dim, rounds = 3)) { cb =>
         val cents = emb.filter(col("vec_id") % 37 === 1)
           .select(col("vec_id").as("cell"), col("embedding").as("centv"))
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-snapshot").toString
-        try {
+        Checkpoints.tempDir("graft-snapshot") { dir =>
           // dense side: bootstrap → live serve collected → append
           val idx = s"$dir/vec"
           graft.operators.VectorIndex.write(emb.filter(!isNew),
@@ -1420,8 +1380,8 @@ object SparkEntry {
               emb.count()))
             .toDF("vec_snapshot_exact", "bm25_snapshot_exact",
               "missing_gen_refused", "n_vectors")
-        } finally rmTree(new java.io.File(dir))
-      } finally cb.unpersist()
+        }
+      }
     }),
     // ---- §2.7 A6d persisted-index integrity audit (fsck) ----
     // build a real postings index (bootstrap + append), plant the
@@ -1434,15 +1394,12 @@ object SparkEntry {
     // metadata (one meta read + three listings), so its cost is
     // independent of corpus size.
     "q_index_audit" -> ((s, d) => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-fsck").toString
-      try {
+      Checkpoints.tempDir("graft-fsck") { dir =>
         plantedIndexFixture(s, d, dir)
-        graft.operators.IndexAudit.audit(s, dir)
+        Checkpoints.truncate(graft.operators.IndexAudit.audit(s, dir)
           .groupBy(col("kind"), col("status"), col("healthy"))
-          .agg(count(lit(1)).as("n"))
-          .localCheckpoint() // bounded rows; release the temp dir
-      } finally rmTree(new java.io.File(dir))
+          .agg(count(lit(1)).as("n")))
+      }
     }),
     // ---- §2.7 A6e fsck REPAIR (diagnose → remedy, closed loop) ----
     // plant the full repairable incident set on a live index — stale
@@ -1455,9 +1412,7 @@ object SparkEntry {
     // record case that IS recoverable, because the current meta holds
     // that gen's bytes).
     "q_index_repair" -> ((s, d) => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-repair").toString
-      try {
+      Checkpoints.tempDir("graft-repair") { dir =>
         val fs = plantedIndexFixture(s, d, dir)
         // two plants beyond the shared fixture: a stale marker on a
         // committed batch, and a LOST current-gen snapshot record
@@ -1485,7 +1440,7 @@ object SparkEntry {
             "orphans_scheduled", "residue_scheduled",
             "history_rerecorded", "dirs_reclaimed",
             "healthy_after", "snapshot_served")
-      } finally rmTree(new java.io.File(dir))
+      }
     }),
     // ---- §2.7 A6f dedup-index fsck (directory-visibility) --------
     // the same never-trust-the-filesystem pass as A6d, retargeted at
@@ -1499,9 +1454,7 @@ object SparkEntry {
     // reclaimed, unrepairables reported not papered over, and the
     // index audits healthy once the planted damage is lifted.
     "q_dedup_index_audit" -> ((s, d) => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-dfsck").toString
-      try {
+      Checkpoints.tempDir("graft-dfsck") { dir =>
         val idx = s"$dir/idx"
         val docs = Tables.table(s, d, "documents")
           .select(col("doc_id"), col("text"))
@@ -1519,10 +1472,10 @@ object SparkEntry {
         mk(s"$idx/batches/feedbead01/bands") // FS damage: half payload
         mk(s"$idx/_staging/crashed1")
         mk(s"$idx/_dropping/crashed2")
-        val report = graft.operators.IndexAudit.auditDedupDf(s, idx)
-          .groupBy(col("kind"), col("status"), col("healthy"))
-          .agg(count(lit(1)).as("n"))
-          .localCheckpoint()
+        val report = Checkpoints.truncate(
+          graft.operators.IndexAudit.auditDedupDf(s, idx)
+            .groupBy(col("kind"), col("status"), col("healthy"))
+            .agg(count(lit(1)).as("n")))
         require(!graft.operators.IndexAudit.isDedupHealthy(s, idx))
         // repair: residue reclaimed, damage reported — never hidden
         val acts = graft.operators.IndexAudit.repairDedup(s, idx)
@@ -1541,7 +1494,7 @@ object SparkEntry {
           s"$idx/batches/feedbead01"), true))
         require(graft.operators.IndexAudit.isDedupHealthy(s, idx))
         report
-      } finally rmTree(new java.io.File(dir))
+      }
     }),
     // ---- §2.9 M1 multimodal ----
     // features projected to scalar columns: the driver's pandas
@@ -1611,43 +1564,47 @@ object SparkEntry {
     "q_csv_roundtrip" -> ((s, d) => {
       // bronze-layer CSV drop (reference: bucket.py write_to_minio
       // format='csv') → schema'd read back — values must survive
-      val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toString
-      Tables.writeCsv(Tables.table(s, d, "nation"), s"$tmp/nation")
-      Tables.readCsv(s, s"$tmp/nation",
-        Some("n_nationkey INT, n_name STRING, n_regionkey INT"))
+      Checkpoints.tempDir("graft-csv") { tmp =>
+        Tables.writeCsv(Tables.table(s, d, "nation"), s"$tmp/nation")
+        Checkpoints.truncate(Tables.readCsv(s, s"$tmp/nation",
+          Some("n_nationkey INT, n_name STRING, n_regionkey INT")))
+      }
     }),
     "q_json_roundtrip" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-json").toString
-      Tables.writeJson(Tables.table(s, d, "customer"), s"$tmp/customer")
-      Tables.readJson(s, s"$tmp/customer",
-        Some("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
-          "c_acctbal DOUBLE, c_mktsegment STRING"))
-        .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
-          "c_mktsegment")
+      Checkpoints.tempDir("graft-json") { tmp =>
+        Tables.writeJson(Tables.table(s, d, "customer"), s"$tmp/customer")
+        Checkpoints.truncate(Tables.readJson(s, s"$tmp/customer",
+          Some("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+            "c_acctbal DOUBLE, c_mktsegment STRING"))
+          .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
+            "c_mktsegment"))
+      }
     }),
     "q_orc_roundtrip" -> ((s, d) => {
       // the third columnar format: ORC write → schema'd read back —
       // every value (including raw doubles, which are never
       // aggregated here) must survive bit-for-bit
-      val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
-      Tables.writeOrc(Tables.table(s, d, "supplier"), s"$tmp/supplier")
-      Tables.readOrc(s, s"$tmp/supplier",
-        Some("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
-          "s_acctbal DOUBLE"))
+      Checkpoints.tempDir("graft-orc") { tmp =>
+        Tables.writeOrc(Tables.table(s, d, "supplier"), s"$tmp/supplier")
+        Checkpoints.truncate(Tables.readOrc(s, s"$tmp/supplier",
+          Some("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+            "s_acctbal DOUBLE")))
+      }
     }),
     "q_schema_evolution" -> ((s, d) => {
       // lakehouse append contract: half the table is written BEFORE
       // two columns existed, the other half after — the merged read
       // must surface one widened schema with nulls backfilling the
       // old files (which are never rewritten)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-evolve").toString
-      val cust = Tables.table(s, d, "customer")
-      Tables.writeParquet(cust.filter(col("c_custkey") % 2 === 0)
-        .select("c_custkey", "c_name", "c_nationkey"), s"$tmp/customer")
-      Tables.writeParquet(cust.filter(col("c_custkey") % 2 === 1)
-        .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
-          "c_mktsegment"), s"$tmp/customer", mode = "append")
-      Tables.readEvolved(s, s"$tmp/customer")
+      Checkpoints.tempDir("graft-evolve") { tmp =>
+        val cust = Tables.table(s, d, "customer")
+        Tables.writeParquet(cust.filter(col("c_custkey") % 2 === 0)
+          .select("c_custkey", "c_name", "c_nationkey"), s"$tmp/customer")
+        Tables.writeParquet(cust.filter(col("c_custkey") % 2 === 1)
+          .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
+            "c_mktsegment"), s"$tmp/customer", mode = "append")
+        Checkpoints.truncate(Tables.readEvolved(s, s"$tmp/customer"))
+      }
     }),
     // ---- §2.1 S17 partition-scoped upsert (MERGE), driver-gated ----
     // base lands partitioned by order year (key-stable); the batch
@@ -1657,25 +1614,26 @@ object SparkEntry {
     // untouched, or the DuckDB recount breaks. Partition-rewrite
     // minimality and replay idempotence are spec-asserted.
     "q_upsert" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-upsert")
-        .toString + "/orders"
-      val base = Tables.table(s, d, "orders")
-        .withColumn("yr", year(col("o_orderdate")))
-        .withColumn("v", lit(0L))
-      Tables.writeParquet(base, tmp, partitionBy = Seq("yr"))
-      val batch = Tables.table(s, d, "orders")
-        .filter(col("o_orderkey") % 97 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-        .withColumn("yr", year(col("o_orderdate")))
-        .withColumn("v", lit(1L))
-      Incremental.upsertPartitioned(s, tmp, batch,
-        Seq("o_orderkey"), "yr", "v")
-      s.read.parquet(tmp)
-        .groupBy(col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double").as("revenue"),
-          sum(col("v")).as("n_updated"))
+      Checkpoints.tempDir("graft-upsert") { dir =>
+        val tmp = dir + "/orders"
+        val base = Tables.table(s, d, "orders")
+          .withColumn("yr", year(col("o_orderdate")))
+          .withColumn("v", lit(0L))
+        Tables.writeParquet(base, tmp, partitionBy = Seq("yr"))
+        val batch = Tables.table(s, d, "orders")
+          .filter(col("o_orderkey") % 97 === 0)
+          .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
+          .withColumn("yr", year(col("o_orderdate")))
+          .withColumn("v", lit(1L))
+        Incremental.upsertPartitioned(s, tmp, batch,
+          Seq("o_orderkey"), "yr", "v")
+        Checkpoints.truncate(s.read.parquet(tmp)
+          .groupBy(col("o_orderpriority").as("priority"))
+          .agg(count(lit(1)).as("n_orders"),
+            round(sum(col("o_totalprice").cast("decimal(18,2)")), 2)
+              .cast("double").as("revenue"),
+            sum(col("v")).as("n_updated")))
+      }
     }),
     // ---- §2.1 S16 file-stats data skipping, driver-gated ----
     // range-clustered layout + per-file stats index; the skipping read
@@ -1684,19 +1642,19 @@ object SparkEntry {
     // over the original table — any wrongly skipped file breaks the
     // hash). File-count pruning is SourcesSpec-asserted.
     "q_skipping_read" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-skip")
-        .toString
-      Tables.table(s, d, "orders")
-        .repartitionByRange(8, col("o_orderkey"))
-        .sortWithinPartitions("o_orderkey")
-        .write.mode("overwrite").parquet(s"$tmp/orders")
-      Tables.writeStatsIndex(s, s"$tmp/orders", Seq("o_orderkey"))
-      Tables.readSkipping(s, s"$tmp/orders", "o_orderkey",
-        lit(1000L), lit(5000L))
-        .groupBy(col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double").as("revenue"))
+      Checkpoints.tempDir("graft-skip") { tmp =>
+        Tables.table(s, d, "orders")
+          .repartitionByRange(8, col("o_orderkey"))
+          .sortWithinPartitions("o_orderkey")
+          .write.mode("overwrite").parquet(s"$tmp/orders")
+        Tables.writeStatsIndex(s, s"$tmp/orders", Seq("o_orderkey"))
+        Checkpoints.truncate(Tables.readSkipping(s, s"$tmp/orders",
+            "o_orderkey", lit(1000L), lit(5000L))
+          .groupBy(col("o_orderpriority").as("priority"))
+          .agg(count(lit(1)).as("n_orders"),
+            round(sum(col("o_totalprice").cast("decimal(18,2)")), 2)
+              .cast("double").as("revenue")))
+      }
     }),
     // ---- §2.1 S15 co-bucketed shuffle-free join, driver-gated ----
     // both facts land hash-clustered on the join key (8 buckets), so
@@ -1707,44 +1665,44 @@ object SparkEntry {
     "q_bucketed_join" -> ((s, d) => {
       val db = "graft_bkt_gate_" +
         java.lang.Long.toHexString(System.nanoTime())
-      val loc = java.nio.file.Files.createTempDirectory("graft-bkt")
-      s.sql(s"CREATE DATABASE `$db` LOCATION '${loc.toString}'")
-      try {
-        Tables.writeBucketed(Tables.table(s, d, "orders")
-          .select("o_orderkey", "o_orderpriority"),
-          s"`$db`.orders_b", 8, "o_orderkey", Seq("o_orderkey"))
-        Tables.writeBucketed(Tables.table(s, d, "lineitem")
-          .select("l_orderkey", "l_extendedprice", "l_discount"),
-          s"`$db`.lineitem_b", 8, "l_orderkey", Seq("l_orderkey"))
-        val o = s.table(s"`$db`.orders_b")
-        val l = s.table(s"`$db`.lineitem_b")
-        val agg = l.join(o, l("l_orderkey") === o("o_orderkey"))
-          .groupBy(col("o_orderpriority"))
-          .agg(round(sum(col("l_extendedprice").cast("decimal(12,2)") *
-            (lit(1) - col("l_discount")).cast("decimal(4,2)")), 2)
-            .cast("double").as("revenue"),
-            count(lit(1)).as("n_lines"))
-          .withColumnRenamed("o_orderpriority", "priority")
-        val rows = agg.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-      } finally {
-        s.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
-        rmTree(loc.toFile)
+      Checkpoints.tempDir("graft-bkt") { loc =>
+        s.sql(s"CREATE DATABASE `$db` LOCATION '$loc'")
+        try {
+          Tables.writeBucketed(Tables.table(s, d, "orders")
+            .select("o_orderkey", "o_orderpriority"),
+            s"`$db`.orders_b", 8, "o_orderkey", Seq("o_orderkey"))
+          Tables.writeBucketed(Tables.table(s, d, "lineitem")
+            .select("l_orderkey", "l_extendedprice", "l_discount"),
+            s"`$db`.lineitem_b", 8, "l_orderkey", Seq("l_orderkey"))
+          val o = s.table(s"`$db`.orders_b")
+          val l = s.table(s"`$db`.lineitem_b")
+          val agg = l.join(o, l("l_orderkey") === o("o_orderkey"))
+            .groupBy(col("o_orderpriority"))
+            .agg(round(sum(col("l_extendedprice").cast("decimal(12,2)") *
+              (lit(1) - col("l_discount")).cast("decimal(4,2)")), 2)
+              .cast("double").as("revenue"),
+              count(lit(1)).as("n_lines"))
+            .withColumnRenamed("o_orderpriority", "priority")
+          val rows = agg.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
+        } finally s.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
       }
     }),
     "q_partitioned_write" -> ((s, d) => {
       // lakehouse layout: write partitioned by day, read back filtered
       // to one partition (pruned scan), aggregate
-      val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
-      val ev = Tables.table(s, d, "events")
-        .withColumn("event_date", col("ts").cast("date").cast("string"))
-      Tables.writeParquet(ev, s"$tmp/events", partitionBy = Seq("event_date"))
-      s.read.parquet(s"$tmp/events")
-        .filter(col("event_date").cast("string") === "2024-01-15")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value").cast("decimal(18,6)")), 4).cast("double")
-            .as("sum_value"))
+      Checkpoints.tempDir("graft-part") { tmp =>
+        val ev = Tables.table(s, d, "events")
+          .withColumn("event_date", col("ts").cast("date").cast("string"))
+        Tables.writeParquet(ev, s"$tmp/events",
+          partitionBy = Seq("event_date"))
+        Checkpoints.truncate(s.read.parquet(s"$tmp/events")
+          .filter(col("event_date").cast("string") === "2024-01-15")
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_events"),
+            round(sum(col("value").cast("decimal(18,6)")), 4).cast("double")
+              .as("sum_value")))
+      }
     }),
     // ---- §2.1 S11 z-order clustering key ----
     "q_zorder_key" -> ((s, d) =>
@@ -1758,9 +1716,7 @@ object SparkEntry {
     // fact_rows is the real oracle row: the fact table must carry
     // exactly one row per source lineitem, which DuckDB recounts
     "q_pipeline_run" -> ((s, d) => {
-      val out = java.nio.file.Files.createTempDirectory("graft-dag")
-        .toString
-      try {
+      Checkpoints.tempDir("graft-dag") { out =>
         val fact = Pipeline.run(s, d, out, Stamp)
         val factN = fact.count()
         val silverN = s.read.parquet(s"$out/silver/nation").count()
@@ -1771,7 +1727,7 @@ object SparkEntry {
         import s.implicits._
         Seq((silverN, dimsUnique, factN))
           .toDF("silver_nation_rows", "dim_keys_unique", "fact_rows")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.11 O1b incremental gold (S7 as-of slice + S17 merge ----
     // ---- into the S20 manifest fact), driver-gated ----
@@ -1784,9 +1740,7 @@ object SparkEntry {
     // the real oracle row: the merged fact must equal the full-table
     // build, which DuckDB recounts from lineitem.
     "q_pipeline_incremental" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-goldinc").toString
-      try {
+      Checkpoints.tempDir("graft-goldinc") { out =>
         val M = graft.sources.ManifestStore
         val factRoot = s"$out/gold/fact_sales"
         val li = Tables.table(s, d, "lineitem")
@@ -1819,7 +1773,7 @@ object SparkEntry {
         Seq((untouchedReused, batchMonthsNew, tripleAdvanced, factRows))
           .toDF("untouched_months_reused", "batch_months_new",
             "schema_triple_advanced", "fact_rows")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.1 S13 small-file compaction, driver-gated ----
     // outcome contract (same pattern as q_freshness_gate): scatter the
@@ -1828,9 +1782,8 @@ object SparkEntry {
     // (rows_readable is the REAL oracle row: DuckDB recounts the
     // source table)
     "q_compact" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-compact")
-        .toString + "/orders"
-      try {
+      Checkpoints.tempDir("graft-compact") { dir =>
+        val tmp = dir + "/orders"
         val orders = Tables.table(s, d, "orders")
         orders.repartition(24).write.mode("overwrite").parquet(tmp)
         def nFiles = Option(new java.io.File(tmp).listFiles()).get
@@ -1848,7 +1801,7 @@ object SparkEntry {
         Seq((before == 24, after == target && after < before,
           s.read.parquet(tmp).count()))
           .toDF("scattered_24", "compacted_to_target", "rows_readable")
-      } finally rmTree(new java.io.File(tmp).getParentFile)
+      }
     }),
     // ---- §2.3 P7 mergeable HLL sketches, driver-gated ----
     // outcome contract: a union of per-shard sketches estimates within
@@ -1944,9 +1897,8 @@ object SparkEntry {
       val merged = shards
         .agg(Profiling.freqSketchMergeAgg(col("sketch"), k).as("sk"))
         .select(explode(col("sk")).as(Seq("item", "est")))
-      val exact = toks.groupBy(col("tok"))
-        .agg(count(lit(1)).as("exact")).persist()
-      try {
+      Checkpoints.cached(toks.groupBy(col("tok"))
+        .agg(count(lit(1)).as("exact"))) { exact =>
         val n = exact.agg(sum(col("exact"))).head().getLong(0)
         // r19: the three counting actions (missed heavy hitters,
         // guarantee violations, heavy count) fuse into ONE aggregate
@@ -1973,7 +1925,7 @@ object SparkEntry {
         Seq((missed == 0L, outOfBound == 0L, nHeavy, n))
           .toDF("union_contains_all_heavy", "counters_within_guarantee",
             "n_heavy_exact", "n_tokens")
-      } finally exact.unpersist()
+      }
     }),
     // ---- §2.3 P9 incremental profile maintenance, driver-gated ----
     // per-year shard profiles merged into the current profile: counts
@@ -1995,17 +1947,18 @@ object SparkEntry {
             <= col("n_distinct") * 0.05).as("distinct_within_5pct"))
     }),
     "q_freshness_gate" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-fresh")
-        .toString + "/nation"
-      val nation = Tables.table(s, d, "nation")
-      val first = Tables.writeIfStale(nation, tmp)
-      val second = Tables.writeIfStale(nation, tmp) // fresh → skipped
-      val forced = Tables.writeIfStale(nation, tmp,
-        nowMillis = System.currentTimeMillis() + 366L * 86400000L) // stale
-      import s.implicits._
-      Seq((first, second, forced, s.read.parquet(tmp).count()))
-        .toDF("first_write", "second_skipped_is_false", "forced_rewrite",
-          "rows_readable")
+      Checkpoints.tempDir("graft-fresh") { dir =>
+        val tmp = dir + "/nation"
+        val nation = Tables.table(s, d, "nation")
+        val first = Tables.writeIfStale(nation, tmp)
+        val second = Tables.writeIfStale(nation, tmp) // fresh → skipped
+        val forced = Tables.writeIfStale(nation, tmp,
+          nowMillis = System.currentTimeMillis() + 366L * 86400000L) // stale
+        import s.implicits._
+        Seq((first, second, forced, s.read.parquet(tmp).count()))
+          .toDF("first_write", "second_skipped_is_false", "forced_rewrite",
+            "rows_readable")
+      }
     }),
     // ---- §2.1 S18 write-audit-publish, driver-gated ----
     // outcome contract (q_freshness_gate pattern): a clean-rules
@@ -2014,37 +1967,37 @@ object SparkEntry {
     // staging for inspection and never creates the target, and a
     // second publish onto the live target refuses
     "q_write_audited" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-wap")
-        .toString
-      val orders = Tables.table(s, d, "orders")
-      val goodRules = Seq(
-        Cleaning.ExpectNotNull("o_custkey"),
-        Cleaning.ExpectUnique("o_orderkey"),
-        Cleaning.ExpectInSet("o_orderstatus", Seq("O", "F", "P")))
-      val report = Tables.writeAudited(s, orders,
-        s"$tmp/orders_ok", goodRules)
-      val allPassed = report.collect().forall(_.getBoolean(5))
-      val publishedRows = s.read.parquet(s"$tmp/orders_ok").count()
-      val refused =
-        try {
-          Tables.writeAudited(s, orders, s"$tmp/orders_bad",
-            Seq(Cleaning.ExpectRange("o_totalprice", 1000.0, 300000.0)))
-          false
-        } catch { case _: graft.AuditFailed => true }
-      val targetAbsent = !new java.io.File(s"$tmp/orders_bad").exists()
-      val stagingLeft =
-        new java.io.File(s"$tmp/orders_bad.staging").exists()
-      val republishRefused =
-        try {
-          Tables.writeAudited(s, orders, s"$tmp/orders_ok", goodRules)
-          false
-        } catch { case _: graft.AuditFailed => true }
-      import s.implicits._
-      Seq((publishedRows, allPassed, refused, targetAbsent,
-        stagingLeft, republishRefused))
-        .toDF("published_rows", "audit_all_passed",
-          "failing_audit_refused", "failed_target_absent",
-          "staging_left_for_inspection", "existing_target_refused")
+      Checkpoints.tempDir("graft-wap") { tmp =>
+        val orders = Tables.table(s, d, "orders")
+        val goodRules = Seq(
+          Cleaning.ExpectNotNull("o_custkey"),
+          Cleaning.ExpectUnique("o_orderkey"),
+          Cleaning.ExpectInSet("o_orderstatus", Seq("O", "F", "P")))
+        val report = Tables.writeAudited(s, orders,
+          s"$tmp/orders_ok", goodRules)
+        val allPassed = report.collect().forall(_.getBoolean(5))
+        val publishedRows = s.read.parquet(s"$tmp/orders_ok").count()
+        val refused =
+          try {
+            Tables.writeAudited(s, orders, s"$tmp/orders_bad",
+              Seq(Cleaning.ExpectRange("o_totalprice", 1000.0, 300000.0)))
+            false
+          } catch { case _: graft.AuditFailed => true }
+        val targetAbsent = !new java.io.File(s"$tmp/orders_bad").exists()
+        val stagingLeft =
+          new java.io.File(s"$tmp/orders_bad.staging").exists()
+        val republishRefused =
+          try {
+            Tables.writeAudited(s, orders, s"$tmp/orders_ok", goodRules)
+            false
+          } catch { case _: graft.AuditFailed => true }
+        import s.implicits._
+        Seq((publishedRows, allPassed, refused, targetAbsent,
+          stagingLeft, republishRefused))
+          .toDF("published_rows", "audit_all_passed",
+            "failing_audit_refused", "failed_target_absent",
+            "staging_left_for_inspection", "existing_target_refused")
+      }
     }),
     // ---- §2.1 S19 snapshot-table pointer publish, driver-gated ----
     // outcome contract (q_write_audited pattern): an audited v1 then
@@ -2056,9 +2009,7 @@ object SparkEntry {
     // compactCurrent hits its file-count target with rows unchanged.
     // rows_current is the real oracle row DuckDB recounts.
     "q_snapshot_table" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-snap").toString
-      try {
+      Checkpoints.tempDir("graft-snap") { tmp =>
         val root = s"$tmp/nation"
         val nation = Tables.table(s, d, "nation")
         val v1 = nation.filter(col("n_regionkey") < 2)
@@ -2100,7 +2051,7 @@ object SparkEntry {
           compactedToTarget, rowsCurrent))
           .toDF("v1_timetravel_exact", "crash_never_gapped",
             "residue_refused", "compacted_to_target", "rows_current")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S20 manifest table (file-level reuse between ----
     // ---- generations), driver-gated ----
@@ -2113,9 +2064,7 @@ object SparkEntry {
     // not full copies), and that the fsck flags a manifest naming a
     // missing file. rows_current is the real oracle row.
     "q_snapshot_manifest" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manifest").toString
-      try {
+      Checkpoints.tempDir("graft-manifest") { tmp =>
         val root = s"$tmp/nation"
         val M = graft.sources.ManifestStore
         val nation = Tables.table(s, d, "nation")
@@ -2184,7 +2133,7 @@ object SparkEntry {
           .toDF("untouched_files_reused", "changed_partition_new",
             "v1_timetravel_exact", "retention_holds_deltas",
             "missing_file_unhealthy", "rows_current")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S19c time-travel CDC over the snapshot table ----
     // S12's added/removed/changed/unchanged diff applied to two
@@ -2195,9 +2144,7 @@ object SparkEntry {
     // per-status counts are all data-derived and DuckDB recomputes
     // each from the base table.
     "q_snapshot_diff_gens" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-snapdiffg").toString
-      try {
+      Checkpoints.tempDir("graft-snapdiffg") { tmp =>
         val root = s"$tmp/nation"
         val nation = Tables.table(s, d, "nation")
         graft.sources.SnapshotStore.publish(s, nation, root) // gen 1
@@ -2207,11 +2154,10 @@ object SparkEntry {
           .unionByName(nation.filter(col("n_regionkey") === 4)
             .withColumn("n_nationkey", col("n_nationkey") + 1000))
         graft.sources.SnapshotStore.publish(s, v2, root) // gen 2
-        graft.sources.SnapshotStore
+        Checkpoints.truncate(graft.sources.SnapshotStore
           .diff(s, root, 1L, 2L, Seq("n_nationkey"))
-          .groupBy(col("change")).agg(count(lit(1)).as("n"))
-          .localCheckpoint() // bounded rows; release the temp dir
-      } finally rmTree(new java.io.File(tmp))
+          .groupBy(col("change")).agg(count(lit(1)).as("n")))
+      }
     }),
     // ---- §2.1 S19b snapshot-table fsck (the A6d family on the ----
     // ---- pointer protocol), driver-gated ----
@@ -2226,9 +2172,7 @@ object SparkEntry {
     // the serving read untouched throughout, and the audit healthy
     // once the planted damage is lifted.
     "q_snapshot_audit" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-snapfsck").toString
-      try {
+      Checkpoints.tempDir("graft-snapfsck") { tmp =>
         val root = s"$tmp/tbl"
         val nation = Tables.table(s, d, "nation")
         graft.sources.SnapshotStore.publish(s, nation, root, Nil,
@@ -2245,11 +2189,10 @@ object SparkEntry {
         val next = fs.create(
           new org.apache.hadoop.fs.Path(s"$root/_current.next"), true)
         try next.write("gen=3\n".getBytes("UTF-8")) finally next.close()
-        val report = graft.operators.IndexAudit
+        val report = Checkpoints.truncate(graft.operators.IndexAudit
           .auditSnapshotsDf(s, root, keep = 1)
           .groupBy(col("kind"), col("status"), col("healthy"))
-          .agg(count(lit(1)).as("n"))
-          .localCheckpoint() // bounded rows; release the temp dir
+          .agg(count(lit(1)).as("n")))
         require(!graft.operators.IndexAudit
           .isSnapshotsHealthy(s, root, keep = 1))
         val acts = graft.operators.IndexAudit
@@ -2275,7 +2218,7 @@ object SparkEntry {
           .count() ==
           nation.filter(col("n_regionkey") < 2).count())
         report
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S19d SQL time-travel surface, driver-gated ----
     // S19's readCurrent/readAt reachable from pure SQL: a pinned
@@ -2284,9 +2227,7 @@ object SparkEntry {
     // recomputes from the base table — the output IS the SQL result,
     // not booleans.
     "q_snapshot_sql" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-snapsql").toString
-      try {
+      Checkpoints.tempDir("graft-snapsql") { tmp =>
         val root = s"$tmp/nation"
         val nation = Tables.table(s, d, "nation")
         graft.sources.SnapshotStore.publish(s, nation, root) // gen 1
@@ -2298,15 +2239,14 @@ object SparkEntry {
         s.sql("CREATE OR REPLACE TEMPORARY VIEW graft_snap_cur " +
           s"USING graft.sources.SnapshotSource " +
           s"OPTIONS (path '$root')")
-        val out = s.sql(
+        val out = Checkpoints.truncate(s.sql(
           """SELECT n_regionkey, count(*) AS n_v1,
             |  (SELECT count(*) FROM graft_snap_cur) AS n_current
-            |FROM graft_snap_v1 GROUP BY n_regionkey""".stripMargin)
-          .localCheckpoint() // bounded rows; release the temp dir
+            |FROM graft_snap_v1 GROUP BY n_regionkey""".stripMargin))
         s.catalog.dropTempView("graft_snap_v1")
         s.catalog.dropTempView("graft_snap_cur")
         out
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S23 change feed (streaming CDC source), ----
     // ---- driver-gated ----
@@ -2318,9 +2258,7 @@ object SparkEntry {
     // change class against DuckDB (the q_snapshot_diff_gens shapes,
     // minus `unchanged` — a change feed carries changes).
     "q_snapshot_cdc" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-cdc-gate").toString
-      try {
+      Checkpoints.tempDir("graft-cdc-gate") { tmp =>
         val S = graft.sources.SnapshotStore
         val CF = graft.sources.ChangeFeed
         val root = s"$tmp/nation"
@@ -2371,7 +2309,7 @@ object SparkEntry {
           .toDF("full_sync_added", "restart_noop",
             "crash_redelivers_exact", "n_bootstrap", "n_added",
             "n_changed", "n_removed")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S23b change feed as a readStream SOURCE, ----
     // ---- driver-gated ----
@@ -2384,9 +2322,7 @@ object SparkEntry {
     // streamed change class against DuckDB (the q_snapshot_cdc
     // shapes).
     "q_stream_cdf" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-cdfgate").toString
-      try {
+      Checkpoints.tempDir("graft-cdfgate") { tmp =>
         val S = graft.sources.SnapshotStore
         val root = s"$tmp/nation"
         val nation = Tables.table(s, d, "nation")
@@ -2436,7 +2372,7 @@ object SparkEntry {
           .toDF("full_sync_added", "restart_noop",
             "startgen_diffs_only", "n_bootstrap", "n_added",
             "n_changed", "n_removed")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S24 manifest-list layer (two-level metadata), ----
     // ---- driver-gated ----
@@ -2448,9 +2384,7 @@ object SparkEntry {
     // The gate asserts the literal group-file reuse and the
     // one-group-parse contract; rows_current is the real oracle row.
     "q_manifest_list" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manilist").toString
-      try {
+      Checkpoints.tempDir("graft-manilist") { tmp =>
         val root = s"$tmp/nation"
         val M = graft.sources.ManifestStore
         val nation = Tables.table(s, d, "nation")
@@ -2493,7 +2427,7 @@ object SparkEntry {
           .toDF("group_refs_reused", "single_group_parse",
             "partition_read_exact", "v1_timetravel_exact",
             "fsck_healthy", "rows_current")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S19e TIME-based travel (timestampAsOf), ----
     // ---- driver-gated ----
@@ -2504,9 +2438,7 @@ object SparkEntry {
     // before every retained publish refuses typed. n_at_t1 and
     // n_current are the real oracle rows (DuckDB recounts both).
     "q_snapshot_ts" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-snapts").toString
-      try {
+      Checkpoints.tempDir("graft-snapts") { tmp =>
         val S = graft.sources.SnapshotStore
         val M = graft.sources.ManifestStore
         val snapRoot = s"$tmp/nation"
@@ -2555,7 +2487,7 @@ object SparkEntry {
           .toDF("pre_publish_refused", "now_resolves_current",
             "manifest_ts_resolves", "sql_ts_pinned", "n_at_t1",
             "n_current")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S21 row-level DELETE on the manifest table, ----
     // ---- driver-gated ----
@@ -2568,9 +2500,7 @@ object SparkEntry {
     // the real oracle row — DuckDB recomputes the post-delete table
     // from orders.
     "q_manifest_delete" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manidel").toString
-      try {
+      Checkpoints.tempDir("graft-manidel") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -2606,7 +2536,7 @@ object SparkEntry {
           healthy, nCur))
           .toDF("untouched_files_reused", "emptied_partition_dropped",
             "timetravel_intact", "fsck_healthy", "n_rows_current")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S37 MERGE-ON-READ delete (deletion vectors), ----
     // ---- driver-gated ----
@@ -2617,9 +2547,7 @@ object SparkEntry {
     // the vectors back into plain data files. n_rows_current is the
     // real oracle row — DuckDB recomputes the post-delete table.
     "q_manifest_dv" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manidv").toString
-      try {
+      Checkpoints.tempDir("graft-manidv") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -2667,7 +2595,7 @@ object SparkEntry {
             "cdf_removed_exact", "timetravel_intact",
             "fsck_healthy_with_dv", "dv_folded_by_compaction",
             "n_rows_current")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S40 metadata-only column RENAME, driver-gated ----
     // the name mapping: one manifest publish renames the column with
@@ -2677,9 +2605,7 @@ object SparkEntry {
     // and the fsck stays healthy. DuckDB recomputes rows + the
     // post-update revenue under the renamed column.
     "q_manifest_rename" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-maniren").toString
-      try {
+      Checkpoints.tempDir("graft-maniren") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -2712,7 +2638,7 @@ object SparkEntry {
           agg.getLong(0), agg.getDouble(1)))
           .toDF("data_files_byte_identical", "timetravel_old_schema",
             "fsck_healthy", "n_rows", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S21b row-level UPDATE on the manifest table, ----
     // ---- driver-gated ----
@@ -2724,9 +2650,7 @@ object SparkEntry {
     // the fsck stays healthy. The aggregate row is the real oracle —
     // DuckDB recomputes the post-update table with CASE WHEN.
     "q_manifest_update" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-maniupd").toString
-      try {
+      Checkpoints.tempDir("graft-maniupd") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -2775,7 +2699,7 @@ object SparkEntry {
           .toDF("untouched_files_reused", "timetravel_intact",
             "fsck_healthy", "n_rows_current", "revenue_after",
             "n_updated")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S28 SQL DML on pointer-served tables, driver-gated ----
     // the statement-level write surface: DELETE FROM / UPDATE /
@@ -2788,9 +2712,7 @@ object SparkEntry {
     // final table from orders (delete → decimal reprice → canonical
     // upsert with deterministic key-sampled source).
     "q_sql_dml" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-sqldml").toString
-      try {
+      Checkpoints.tempDir("graft-sqldml") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -2849,7 +2771,7 @@ object SparkEntry {
           agg.getLong(0), agg.getDouble(1), agg.getLong(2)))
           .toDF("untouched_files_reused", "sql_returns_gen",
             "fsck_healthy", "n_rows", "revenue", "n_status_m")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S28b GENERAL SQL MERGE (CDC apply), driver-gated ----
     // the full MERGE grammar Delta/Iceberg users write: conditional
@@ -2861,9 +2783,7 @@ object SparkEntry {
     // whole apply; partitions no clause touches must carry
     // byte-identical.
     "q_sql_merge" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-sqlmerge").toString
-      try {
+      Checkpoints.tempDir("graft-sqlmerge") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -2928,7 +2848,7 @@ object SparkEntry {
           agg.getLong(3)))
           .toDF("untouched_files_reused", "one_generation",
             "fsck_healthy", "n_rows", "revenue", "n_cdc", "n_inserted")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S33 SQL INSERT INTO (append), driver-gated ----
     // the fourth DML verb: INSERT INTO a graft view appends through
@@ -2938,9 +2858,7 @@ object SparkEntry {
     // columns. Sources are closed-form (key-negated slices of the
     // table itself) so DuckDB recounts the final state.
     "q_sql_insert" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-sqlins").toString
-      try {
+      Checkpoints.tempDir("graft-sqlins") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -2991,7 +2909,7 @@ object SparkEntry {
           .toDF("untouched_files_reused", "sql_returns_gen",
             "fsck_healthy", "n_rows", "revenue", "n_new",
             "n_nullfilled")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S34 DSv2 TableCatalog, driver-gated ----
     // the temp-view ceremony removed: CREATE NAMESPACE / CREATE TABLE
@@ -3002,13 +2920,11 @@ object SparkEntry {
     // stats-pruned relation; DML rides the S28/S33 parser routes).
     // DuckDB recomputes the insert→update→delete trajectory.
     "q_sql_catalog" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-sqlcat").toString
-      // catalog instances cache by NAME per session — derive a fresh
-      // name from the temp dir so re-runs never see a stale warehouse
-      val cat = "gcat" + tmp.replaceAll("[^0-9a-zA-Z]", "")
-        .takeRight(8)
-      try {
+      Checkpoints.tempDir("graft-sqlcat") { tmp =>
+        // catalog instances cache by NAME per session — derive a fresh
+        // name from the temp dir so re-runs never see a stale warehouse
+        val cat = "gcat" + tmp.replaceAll("[^0-9a-zA-Z]", "")
+          .takeRight(8)
         s.conf.set(s"spark.sql.catalog.$cat",
           "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.warehouse", tmp)
@@ -3105,7 +3021,7 @@ object SparkEntry {
             "alter_metadata_only", "alter_backfills",
             "overwrite_carries", "n_version2", "n_rows", "revenue",
             "n_ctas", "n_overwritten_1997", "n_after_append")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S29 manifest-table schema evolution, driver-gated ----
     // the S14 contract pinned INSIDE S20: a partial publish may WIDEN
@@ -3116,9 +3032,7 @@ object SparkEntry {
     // honest rebuild). DuckDB recomputes rows/flags/revenue from
     // orders.
     "q_manifest_evolution" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manievol").toString
-      try {
+      Checkpoints.tempDir("graft-manievol") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -3169,7 +3083,7 @@ object SparkEntry {
           .toDF("untouched_files_reused", "old_era_null_backfilled",
             "timetravel_old_schema", "drop_refused", "retype_refused",
             "fsck_healthy", "n_rows", "n_flagged", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S30 hierarchical (multi-column) partitioning, ----
     // ---- driver-gated ----
@@ -3188,9 +3102,7 @@ object SparkEntry {
     // spec rewrites only its (year, month) cell — untouched cells
     // byte-identical. DuckDB recomputes rows/revenue in closed form.
     "q_manifest_repartition" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manirepart").toString
-      try {
+      Checkpoints.tempDir("graft-manirepart") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -3240,12 +3152,10 @@ object SparkEntry {
           .toDF("spec_migrated", "timetravel_old_spec",
             "untouched_cells_reused", "prefix_read_scoped",
             "fsck_healthy", "n_rows", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     "q_manifest_multipart" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manimulti").toString
-      try {
+      Checkpoints.tempDir("graft-manimulti") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -3291,7 +3201,7 @@ object SparkEntry {
           agg.getLong(0), agg.getDouble(1)))
           .toDF("cell_scoped_rewrite", "prefix_read_scoped",
             "fsck_healthy", "n_cell", "n_prefix", "n_rows", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S27 metadata-only RESTORE + explicit expire, ----
     // ---- driver-gated ----
@@ -3302,9 +3212,7 @@ object SparkEntry {
     // quiet-table janitor: it reclaims a dropped branch's private
     // files with NO publish. DuckDB recounts the restored table.
     "q_manifest_restore" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manirestore").toString
-      try {
+      Checkpoints.tempDir("graft-manirestore") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -3346,7 +3254,7 @@ object SparkEntry {
           .toDF("restore_metadata_only", "history_intact",
             "expire_reclaimed_branch", "fsck_healthy",
             "n_rows_current", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S26 clustered OPTIMIZE on the manifest table, ----
     // ---- driver-gated ----
@@ -3357,9 +3265,7 @@ object SparkEntry {
     // bytes afterwards with row-identical results, and DuckDB
     // recounts the range aggregate.
     "q_manifest_cluster" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-maniclus").toString
-      try {
+      Checkpoints.tempDir("graft-maniclus") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -3399,7 +3305,7 @@ object SparkEntry {
           agg.getLong(0), agg.getDouble(1)))
           .toDF("partitions_rewritten", "pruned_under_half",
             "rows_equal_unpruned", "fsck_healthy", "n_rows", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S25 named refs: tags + branches with WAP-on-branch ----
     // ---- and metadata-only fast-forward, driver-gated ----
@@ -3412,9 +3318,7 @@ object SparkEntry {
     // The aggregate row is the real oracle — DuckDB recomputes the
     // post-promotion table from orders.
     "q_table_refs" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-manirefs").toString
-      try {
+      Checkpoints.tempDir("graft-manirefs") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -3507,7 +3411,7 @@ object SparkEntry {
             "promoted_from_branch", "tag_serves_original",
             "snapshot_tag_pinned", "snapshot_branch_ff",
             "fsck_healthy", "n_rows_current", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.1 S22 per-file column stats in manifest entries → ----
     // ---- scan-pruned manifest reads, driver-gated ----
@@ -3518,9 +3422,7 @@ object SparkEntry {
     // and recounts the pruned read's aggregate against DuckDB's plain
     // range filter.
     "q_manifest_skipping" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-maniskip").toString
-      try {
+      Checkpoints.tempDir("graft-maniskip") { tmp =>
         val root = s"$tmp/orders"
         val M = graft.sources.ManifestStore
         val orders = Tables.table(s, d, "orders")
@@ -3547,7 +3449,7 @@ object SparkEntry {
           agg.getLong(0), agg.getDouble(1)))
           .toDF("pruned_under_half", "opened_only_matching",
             "rows_equal_unpruned", "n_rows", "revenue")
-      } finally rmTree(new java.io.File(tmp))
+      }
     }),
     // ---- §2.11 O2 stage retries, driver-gated ----
     // outcome contract (q_pipeline_run pattern): a stage failing twice
@@ -3616,9 +3518,7 @@ object SparkEntry {
     // one doc per distinct normalized text, which DuckDB recomputes
     // from scratch.
     "q_corpus_pipeline" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-corpus-dag").toString
-      try {
+      Checkpoints.tempDir("graft-corpus-dag") { out =>
         val gold = Pipeline.runCorpus(s, d, out, Stamp)
         val silverN = s.read.parquet(s"$out/silver/documents").count()
         val goldRows = gold.count()
@@ -3631,7 +3531,7 @@ object SparkEntry {
         import s.implicits._
         Seq((goldRows > 0, dense, silverN))
           .toDF("gold_nonempty", "epoch_ranks_dense", "silver_docs")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.11 R2 cross-store takedown, driver-gated ----
     // the opt-out path: two documents retract from EVERY store that
@@ -3644,9 +3544,7 @@ object SparkEntry {
     // oracle row: DuckDB recomputes the canonical silver count from
     // the raw table and subtracts the two retracted docs.
     "q_corpus_retract" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-retract-gate").toString
-      try {
+      Checkpoints.tempDir("graft-retract-gate") { out =>
         Pipeline.runCorpus(s, d, out, Stamp)
         val silverPath = s"$out/silver/documents"
         val victims = s.read.parquet(silverPath)
@@ -3707,7 +3605,7 @@ object SparkEntry {
           auditsHealthy, silverAfter.count()))
           .toDF("silver_scrubbed", "gold_scrubbed", "bm25_scrubbed",
             "vector_scrubbed", "audits_healthy", "n_silver_after")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.10/§2.11 INCREMENTAL corpus pipeline, driver-gated ----
     // the production daily shape: init on a 60% slice, then two daily
@@ -3720,9 +3618,7 @@ object SparkEntry {
     // (every source doc plus the two planted ones), recounted by
     // DuckDB.
     "q_corpus_increment" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-cinc-gate").toString
-      try {
+      Checkpoints.tempDir("graft-cinc-gate") { out =>
         val doc = Tables.table(s, d, "documents")
           .select("doc_id", "lang", "text")
         val bucket = Corpus.hashBucket(col("doc_id"), "cinc", 5)
@@ -3763,7 +3659,7 @@ object SparkEntry {
           noExact && noNear, replayRefused, doc.count() + 2))
           .toDF("growth_exact", "planted_rejected", "silver_deduped",
             "replay_refused", "n_docs_processed")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.10 O6 streaming corpus ingestion, driver-gated ----
     // the continuous form of corpusIncrement: per-file micro-batches
@@ -3774,9 +3670,7 @@ object SparkEntry {
     // landing), and the corpus-wide exact-dedup invariant holds.
     // n_docs_source is the real row, recounted by DuckDB.
     "q_stream_corpus" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-cstream-gate").toString
-      try {
+      Checkpoints.tempDir("graft-cstream-gate") { out =>
         val doc = Tables.table(s, d, "documents")
           .select("doc_id", "lang", "text")
         val bucket = Corpus.hashBucket(col("doc_id"), "cinc", 5)
@@ -3806,7 +3700,7 @@ object SparkEntry {
         Seq((n1 > n0, n2 == n1, n3 == n1, noExact, doc.count()))
           .toDF("stream_landed", "restart_noop", "redelivery_skipped",
             "silver_deduped", "n_docs_source")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.11 O6d streaming snapshot promotion ----
     // the exactly-once foreachBatch discipline applied to the
@@ -3818,9 +3712,7 @@ object SparkEntry {
     // redelivery is refused batch-by-batch by the content-derived
     // partition guard, and time travel across promotions stays exact.
     "q_stream_snapshot" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-sstream-gate").toString
-      try {
+      Checkpoints.tempDir("graft-sstream-gate") { out =>
         val M = graft.sources.ManifestStore
         val root = s"$out/gold"
         val doc = Tables.table(s, d, "documents")
@@ -3850,7 +3742,7 @@ object SparkEntry {
           redeliverySkipped, timetravelPartial, doc.count()))
           .toDF("stream_landed", "restart_noop", "redelivery_skipped",
             "timetravel_per_batch", "n_docs_source")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.7 O6b streaming dense-index ingest ----
     // the CONTINUOUS form of q_ann_index's append path: an 80%
@@ -3862,15 +3754,12 @@ object SparkEntry {
     // served top-k over the streamed index is bit-identical to the
     // in-memory serve over the full corpus.
     "q_stream_vectors" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-vstream-gate").toString
-      try {
+      Checkpoints.tempDir("graft-vstream-gate") { out =>
         val (m, dim) = (8, 64)
         val emb = Tables.table(s, d, "embeddings")
         val qp = col("vec_id") % 50 === 0
         val isNew = Corpus.hashBucket(col("vec_id"), "vinc", 5) === 0
-        val cb = sharedPqCodebook(s, d, m, dim, rounds = 2).persist()
-        try {
+        Checkpoints.cached(sharedPqCodebook(s, d, m, dim, rounds = 2)) { cb =>
           val cents = emb.filter(col("vec_id") % 37 === 1)
             .select(col("vec_id").as("cell"),
               col("embedding").as("centv"))
@@ -3912,8 +3801,8 @@ object SparkEntry {
             .toDF("stream_landed", "restart_noop",
               "redelivery_skipped", "serve_equals_inmemory",
               "n_vectors_source")
-        } finally cb.unpersist()
-      } finally rmTree(new java.io.File(out))
+        }
+      }
     }),
     // ---- §2.8 O6c streaming lexical-index ingest ----
     // the CONTINUOUS form of q_text_bm25_indexed's append path: 80%
@@ -3924,9 +3813,7 @@ object SparkEntry {
     // itself — which must equal the one-shot full-corpus BM25, so
     // this gate rides the REAL ranking oracle, not booleans.
     "q_stream_bm25" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-bstream-gate").toString
-      try {
+      Checkpoints.tempDir("graft-bstream-gate") { out =>
         val docs = Tables.table(s, d, "documents")
           .select(col("doc_id"), col("text"))
         val isNew = Corpus.hashBucket(col("doc_id"), "binc", 5) === 0
@@ -3953,9 +3840,9 @@ object SparkEntry {
         val b3 = committed()
         require(b1 > b0 && b2 == b1 && b3 == b1,
           s"stream contract broken: batches $b0 -> $b1 -> $b2 -> $b3")
-        graft.operators.Bm25.bm25TopKIndexed(s, idx,
-          "fast vector hash join", k = 20).localCheckpoint()
-      } finally rmTree(new java.io.File(out))
+        Checkpoints.truncate(graft.operators.Bm25.bm25TopKIndexed(s, idx,
+          "fast vector hash join", k = 20))
+      }
     }),
     // ---- §2.10/§2.11 batch decision introspection, driver-gated ----
     // classifyBatch = corpusIncrement's accept/reject decision as a
@@ -3966,9 +3853,7 @@ object SparkEntry {
     // rejection reasons. n_docs_classified is the real row (the
     // day-1 slice plus the two planted docs), recounted by DuckDB.
     "q_corpus_classify" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-classify-gate").toString
-      try {
+      Checkpoints.tempDir("graft-classify-gate") { out =>
         val doc = Tables.table(s, d, "documents")
           .select("doc_id", "lang", "text")
         val bucket = Corpus.hashBucket(col("doc_id"), "cinc", 5)
@@ -4002,7 +3887,7 @@ object SparkEntry {
           .toDF("labels_partition_batch", "accepts_equal_landed",
             "planted_exact_labeled", "planted_near_labeled",
             "n_docs_classified")
-      } finally rmTree(new java.io.File(out))
+      }
     }),
     // ---- §2.1 S10 namespace init, driver-gated ----
     // create-once/exists-after idempotence for both namespace forms,
@@ -4018,9 +3903,8 @@ object SparkEntry {
           val created = graft.sources.Ingest.ensureDatabase(s, db)
           (created, graft.sources.Ingest.ensureDatabase(s, db))
         } finally s.sql(s"DROP DATABASE IF EXISTS `$db`")
-      val root = java.nio.file.Files.createTempDirectory("graft-ns")
-      try {
-        val path = root.toString + "/warehouse/nation"
+      Checkpoints.tempDir("graft-ns") { root =>
+        val path = root + "/warehouse/nation"
         val pCreated = graft.sources.Ingest.ensurePath(path)
         val pAgain = graft.sources.Ingest.ensurePath(path)
         Tables.writeParquet(Tables.table(s, d, "nation"), path)
@@ -4029,7 +3913,7 @@ object SparkEntry {
           s.read.parquet(path).count()))
           .toDF("database_created_once", "path_created_once",
             "rows_readable")
-      } finally rmTree(root.toFile)
+      }
     }),
   )
 

@@ -46,16 +46,13 @@ object Bm25 {
     require(k >= 1, s"k must be >= 1, got $k")
     val terms = queryTerms(query)
     require(terms.nonEmpty, s"query has no tokens: '$query'")
-    // one tokenize scan, persisted across the corpus-scalar pull and
-    // the postings build (released after the ≤k-row result
-    // materializes — the packTokenStream pattern)
-    val base = graft.sources.Tables.fanOut(
+    // one tokenize scan, cached across the corpus-scalar pull and
+    // the postings build
+    graft.Checkpoints.cached(graft.sources.Tables.fanOut(
         docs.select(col(idCol),
           graft.functions.TextFunctions.bpeTokens(lower(col(textCol)))
             .as("__t")))
-      .withColumn("__len", size(col("__t")).cast("bigint"))
-      .persist()
-    try {
+      .withColumn("__len", size(col("__t")).cast("bigint"))) { base =>
       // two bounded corpus scalars (N, Σlen) — exact integers
       val s = base.agg(count(lit(1)).as("n"), sum(col("__len")).as("sl"))
         .head()
@@ -66,9 +63,9 @@ object Bm25 {
         .filter(col("term").isin(terms: _*))
         .groupBy(col(idCol), col("__len"), col("term"))
         .agg(count(lit(1)).as("tf"))
-      scorePostings(tf, idCol, n, sl, k, k1, b)
-        .localCheckpoint() // ≤k rows — materialize, then release base
-    } finally { base.unpersist(); () }
+      graft.Checkpoints.truncate(
+        scorePostings(tf, idCol, n, sl, k, k1, b)) // ≤k rows
+    }
   }
 
   /** Shared scoring tail of the inline and indexed forms: a
@@ -317,13 +314,11 @@ object Bm25 {
       throw new IllegalStateException(
         s"cannot wipe stale staging at $staging before publishing " +
           s"batch $bid")
-    val base = graft.sources.Tables.fanOut(
+    graft.Checkpoints.cached(graft.sources.Tables.fanOut(
         docs.select(col(idCol),
           graft.functions.TextFunctions.bpeTokens(lower(col(textCol)))
             .as("__t")))
-      .withColumn("len", size(col("__t")).cast("bigint"))
-      .persist()
-    try {
+      .withColumn("len", size(col("__t")).cast("bigint"))) { base =>
       // scalars BEFORE any write: an empty batch must refuse loudly
       // here (sum over zero rows is null — the old order NPE'd after
       // already staging files), and the streams' skip-empty guard is
@@ -344,7 +339,7 @@ object Bm25 {
       require(fs.rename(staging, target),
         s"atomic publish of batch $bid failed (staging → $target)")
       (s.getLong(0), s.getLong(1))
-    } finally { base.unpersist(); () }
+    }
   }
 
   /** T13 (production shape) — materialize the inverted index ONCE so

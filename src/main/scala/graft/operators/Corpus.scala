@@ -356,33 +356,31 @@ object Corpus {
   def packTokenStream(docs: DataFrame, idCol: String, textCol: String,
                       shardCol: String, budget: Int,
                       sep: String = "<|eot|>"): DataFrame = {
-    val toks = graft.sources.Tables.fanOut(
+    graft.Checkpoints.cached(graft.sources.Tables.fanOut(
         docs.select(col(idCol), col(shardCol),
           graft.functions.TextFunctions.bpeTokens(col(textCol))
             .as("__toks")))
-      .withColumn("__nt", size(col("__toks")).cast("bigint"))
-      .persist()
-    try {
+      .withColumn("__nt", size(col("__toks")).cast("bigint"))) { toks =>
       val pieces = packPieces(toks.select(col(idCol), col(shardCol),
           col("__nt")), idCol, "__nt", shardCol, Seq(idCol), budget)
-      pieces.join(toks.select(col(idCol), col("__toks")), Seq(idCol))
-        .select(col(shardCol), col("bin_id"), col(idCol),
-          col("piece_len"),
-          array_join(slice(col("__toks"),
-            (col("piece_start") + 1).cast("int"),
-            col("piece_len").cast("int")), " ").as("__pt"))
-        .groupBy(col(shardCol), col("bin_id"))
-        .agg(
-          array_sort(collect_list(struct(col(idCol), col("__pt"))))
-            .as("__ds"),
-          count(lit(1)).as("n_pieces"),
-          sum(col("piece_len")).as("n_tokens"))
-        .select(col(shardCol), col("bin_id"), col("n_pieces"),
-          col("n_tokens"),
-          array_join(transform(col("__ds"), d => d.getField("__pt")), sep)
-            .as("packed_text"))
-        .localCheckpoint() // materialize before releasing the cache
-    } finally { toks.unpersist(); () }
+      graft.Checkpoints.truncate(
+        pieces.join(toks.select(col(idCol), col("__toks")), Seq(idCol))
+          .select(col(shardCol), col("bin_id"), col(idCol),
+            col("piece_len"),
+            array_join(slice(col("__toks"),
+              (col("piece_start") + 1).cast("int"),
+              col("piece_len").cast("int")), " ").as("__pt"))
+          .groupBy(col(shardCol), col("bin_id"))
+          .agg(
+            array_sort(collect_list(struct(col(idCol), col("__pt"))))
+              .as("__ds"),
+            count(lit(1)).as("n_pieces"),
+            sum(col("piece_len")).as("n_tokens"))
+          .select(col(shardCol), col("bin_id"), col("n_pieces"),
+            col("n_tokens"),
+            array_join(transform(col("__ds"), d => d.getField("__pt")), sep)
+              .as("packed_text")))
+    }
   }
 
   /** T10 — sliding-window token CHUNKING: split each document into
@@ -495,7 +493,7 @@ object Corpus {
     // snapshot the (id, score) input once: the threshold action and
     // the assignment projection would otherwise each re-run the whole
     // upstream scoring pipeline
-    val snap = df.select(col(idCol), col(scoreCol)).localCheckpoint()
+    val snap = graft.Checkpoints.truncate(df.select(col(idCol), col(scoreCol)))
     val probs = (1 until k).map(_.toDouble / k)
     val rawThs = snap.agg(org.apache.spark.sql.functions.expr(
         s"percentile($scoreCol, array(${probs.mkString(",")}))"))

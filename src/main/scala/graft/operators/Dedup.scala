@@ -212,24 +212,18 @@ object Dedup {
                    thresholdNum: Int = 1, thresholdDen: Int = 2,
                    maxDocFreq: Option[Int] = None): DataFrame = {
     // The shingle index feeds the signature build AND the verify join
-    // sides — persist it once instead of re-deriving it four times.
+    // sides — cache it once instead of re-deriving it four times.
     // (Cheap: |docs|·avg-shingles rows of (long, short string).)
-    // EXPLICIT LIFETIME (r19): the verified pairs (≪ index-sized)
-    // materialize eagerly so the index releases before returning —
-    // a composed session (Verify runs 189 queries in one) must not
-    // accumulate corpus-sized cache entries, and a leaked entry also
-    // shadows sibling queries' plan fragments via the cache manager.
     val all = shingleIndex(df, idCol, textCol)
-    val sh = maxDocFreq.fold(all)(capDocFreq(all, _)).persist()
-    // the band-bucket table (bands-per-doc rows — tiny next to the
-    // index) persists too, so the signature aggregation runs once,
-    // not once per side of the candidate self-join
-    val buckets = bandBuckets(signatureFromIndex(sh)).persist()
-    try {
-      val cand = candidatesFromBuckets(buckets)
-      graft.Checkpoints.truncate(
-        jaccardVerify(sh, Some(cand), thresholdNum, thresholdDen))
-    } finally { sh.unpersist(); buckets.unpersist(); () }
+    graft.Checkpoints.cached(maxDocFreq.fold(all)(capDocFreq(all, _))) { sh =>
+      // the band-bucket table (bands-per-doc rows — tiny next to the
+      // index) is cached too, so the signature aggregation runs once,
+      // not once per side of the candidate self-join
+      graft.Checkpoints.cached(bandBuckets(signatureFromIndex(sh))) { buckets =>
+        graft.Checkpoints.truncate(jaccardVerify(sh,
+          Some(candidatesFromBuckets(buckets)), thresholdNum, thresholdDen))
+      }
+    }
   }
 
   /** Drop shingles whose document frequency exceeds `maxDocFreq`.
@@ -272,16 +266,14 @@ object Dedup {
                         thresholdDen: Int = 10,
                         maxDocFreq: Int = Int.MaxValue): DataFrame = {
     val sh = shingleIndex(df, idCol, textCol)
-    val capped =
-      (if (maxDocFreq == Int.MaxValue) sh else capDocFreq(sh, maxDocFreq))
-        .persist() // the verify join reads the index three times
-                   // (x side, y side, sizes) — one tokenize+shingle
-                   // pass instead of three (the minhashDedup pattern)
-    // pairs materialize eagerly → the index cache releases before the
-    // caller sees the result (see minhashDedup's lifetime rationale)
-    try graft.Checkpoints.truncate(
-      jaccardVerify(capped, None, thresholdNum, thresholdDen))
-    finally { capped.unpersist(); () }
+    val index =
+      if (maxDocFreq == Int.MaxValue) sh else capDocFreq(sh, maxDocFreq)
+    // the verify join reads the index three times (x side, y side,
+    // sizes) — one tokenize+shingle pass instead of three
+    graft.Checkpoints.cached(index) { capped =>
+      graft.Checkpoints.truncate(
+        jaccardVerify(capped, None, thresholdNum, thresholdDen))
+    }
   }
 
   /** D13 — shingle CONTAINMENT pairs: `|A∩B| / min(|A|, |B|)` over
@@ -304,24 +296,23 @@ object Dedup {
                        thresholdNum: Int = 3, thresholdDen: Int = 10,
                        maxDocFreq: Int = Int.MaxValue): DataFrame = {
     val sh = shingleIndex(df, idCol, textCol)
-    val capped =
-      (if (maxDocFreq == Int.MaxValue) sh else capDocFreq(sh, maxDocFreq))
-        .persist() // read three times (pair self-join ×2 + sizes)
-    val sizes = capped.groupBy(col("sid")).agg(count(lit(1)).as("n"))
-    // pairs materialize eagerly → the index cache releases before the
-    // caller sees the result (see minhashDedup's lifetime rationale)
-    try graft.Checkpoints.truncate(cooccurrence(capped)
-      .join(sizes.as("sa"), col("sa.sid") === col("id_a"))
-      .join(sizes.as("sb"), col("sb.sid") === col("id_b"))
-      .filter(col("i") * thresholdDen >=
-        least(col("sa.n"), col("sb.n")) * thresholdNum)
-      .select(col("id_a"), col("id_b"),
-        col("sa.n").as("n_a"), col("sb.n").as("n_b"),
-        col("i").as("n_shared"),
-        round(col("i").cast("double") /
-          least(col("sa.n"), col("sb.n")).cast("double"), 6)
-          .as("containment")))
-    finally { capped.unpersist(); () }
+    val index =
+      if (maxDocFreq == Int.MaxValue) sh else capDocFreq(sh, maxDocFreq)
+    // read three times (pair self-join ×2 + sizes)
+    graft.Checkpoints.cached(index) { capped =>
+      val sizes = capped.groupBy(col("sid")).agg(count(lit(1)).as("n"))
+      graft.Checkpoints.truncate(cooccurrence(capped)
+        .join(sizes.as("sa"), col("sa.sid") === col("id_a"))
+        .join(sizes.as("sb"), col("sb.sid") === col("id_b"))
+        .filter(col("i") * thresholdDen >=
+          least(col("sa.n"), col("sb.n")) * thresholdNum)
+        .select(col("id_a"), col("id_b"),
+          col("sa.n").as("n_a"), col("sb.n").as("n_b"),
+          col("i").as("n_shared"),
+          round(col("i").cast("double") /
+            least(col("sa.n"), col("sb.n")).cast("double"), 6)
+            .as("containment")))
+    }
   }
 
   /** D3 — 64-bit SimHash per document: per-bit majority vote over
@@ -391,19 +382,19 @@ object Dedup {
         shiftright(col("simhash"), b * width)
           .bitwiseAND((1L << width) - 1).as("key"))
     }
-    // persist + eager release, as in simhashPairsPortable: the
-    // simhash aggregation must not run once per join side
-    val keyed = sh.select(col("sid"), col("simhash"),
-      explode(array(blocks: _*)).as("bk")).persist()
-    try graft.Checkpoints.truncate(keyed.as("a")
-      .join(keyed.as("b"),
-        col("a.bk") === col("b.bk") && col("a.sid") < col("b.sid"))
-      .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming))
-    finally { keyed.unpersist(); () }
+    // cached, as in simhashPairsPortable: the simhash aggregation must
+    // not run once per join side
+    graft.Checkpoints.cached(sh.select(col("sid"), col("simhash"),
+      explode(array(blocks: _*)).as("bk"))) { keyed =>
+      graft.Checkpoints.truncate(keyed.as("a")
+        .join(keyed.as("b"),
+          col("a.bk") === col("b.bk") && col("a.sid") < col("b.sid"))
+        .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"),
+          bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
+            .as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= maxHamming))
+    }
   }
 
   /** D3 (portable pair step) — SimHash near-dup candidate pairs over
@@ -427,19 +418,18 @@ object Dedup {
     // the simhash aggregation (60 per-bit sums over every token) would
     // otherwise run once PER SIDE of the block self-join (the planner
     // does not reuse the subtree across aliases — the minhashDedup
-    // finding); persist the tiny keyed table, materialize the pairs,
-    // release
-    val keyed = sh.select(col("sid"), col("simhash"),
-      explode(array(blocks: _*)).as("bk")).persist()
-    try graft.Checkpoints.truncate(keyed.as("a")
-      .join(keyed.as("b"),
-        col("a.bk") === col("b.bk") && col("a.sid") < col("b.sid"))
-      .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .cast("bigint").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming))
-    finally { keyed.unpersist(); () }
+    // finding); cache the tiny keyed table
+    graft.Checkpoints.cached(sh.select(col("sid"), col("simhash"),
+      explode(array(blocks: _*)).as("bk"))) { keyed =>
+      graft.Checkpoints.truncate(keyed.as("a")
+        .join(keyed.as("b"),
+          col("a.bk") === col("b.bk") && col("a.sid") < col("b.sid"))
+        .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"),
+          bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
+            .cast("bigint").as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= maxHamming))
+    }
   }
 
   /** D8 — INCREMENTAL MinHash dedup: check only a NEW batch of
@@ -460,30 +450,23 @@ object Dedup {
                               textCol: String, isNew: Column,
                               thresholdNum: Int = 1,
                               thresholdDen: Int = 2): DataFrame = {
-    val sh = shingleIndex(df, idCol, textCol).persist()
-    val buckets = bandBuckets(signatureFromIndex(sh)).persist()
-    val newIds = df.filter(isNew).select(col(idCol).as("nid"))
-    val newBuckets = buckets.join(broadcast(newIds),
-      col("sid") === col("nid")).select(col("sid"), col("bk"))
-    // candidates materialize EAGERLY (localCheckpoint) while `buckets`
-    // is still cached — a lazy return would evaluate after the
-    // unpersist below and recompute the band pipeline per join side
-    val cand = newBuckets.as("a")
-      .join(buckets.as("b"),
-        col("a.bk") === col("b.bk") && col("a.sid") =!= col("b.sid"))
-      .select(least(col("a.sid"), col("b.sid")).as("id_a"),
-        greatest(col("a.sid"), col("b.sid")).as("id_b"))
-      .distinct()
-      .localCheckpoint()
-    buckets.unpersist()
-    // materialize the (small) verified-pair result so the shingle
-    // index cache can be released — otherwise repeated calls over
-    // DIFFERENT corpora accumulate cache entries for the session
-    val verified =
-      jaccardVerify(sh, Some(cand), thresholdNum, thresholdDen)
-        .localCheckpoint()
-    sh.unpersist()
-    verified
+    graft.Checkpoints.cached(shingleIndex(df, idCol, textCol)) { sh =>
+      // the band table is released before the verify runs
+      val cand = graft.Checkpoints.cached(
+        bandBuckets(signatureFromIndex(sh))) { buckets =>
+        val newIds = df.filter(isNew).select(col(idCol).as("nid"))
+        val newBuckets = buckets.join(broadcast(newIds),
+          col("sid") === col("nid")).select(col("sid"), col("bk"))
+        graft.Checkpoints.truncate(newBuckets.as("a")
+          .join(buckets.as("b"),
+            col("a.bk") === col("b.bk") && col("a.sid") =!= col("b.sid"))
+          .select(least(col("a.sid"), col("b.sid")).as("id_a"),
+            greatest(col("a.sid"), col("b.sid")).as("id_b"))
+          .distinct())
+      }
+      graft.Checkpoints.truncate(
+        jaccardVerify(sh, Some(cand), thresholdNum, thresholdDen))
+    }
   }
 
   /** Content-derived batch id: a 16-hex digest of the batch's DISTINCT
@@ -711,22 +694,22 @@ object Dedup {
         s"cannot wipe stale staging at $staging before publishing " +
           s"batch $bid")
     val all = shingleIndex(df, idCol, textCol)
-    val sh = (if (cap < 0) all else capDocFreq(all, cap)).persist()
-    // band rides BOTH as a data column and as the partition directory
-    // (band_p): the directory clusters each band's buckets into their
-    // own files, while the data column keeps every batch directory a
-    // uniform self-contained table — which is what lets the reader
-    // union any number of batch dirs in ONE scan relation
-    // (recursiveFileLookup) instead of per-batch plans or a
-    // partition-discovery walk over heterogeneous roots
-    bandBuckets(signatureFromIndex(sh, k), k, rowsPerBand)
-      .select(col("sid"), col("bk.band").as("band"),
-        col("bk.bucket").as("bucket"))
-      .withColumn("band_p", col("band"))
-      .write.mode("overwrite").partitionBy("band_p")
-      .parquet(s"$staging/bands")
-    sh.write.mode("overwrite").parquet(s"$staging/shingles")
-    sh.unpersist()
+    graft.Checkpoints.cached(if (cap < 0) all else capDocFreq(all, cap)) { sh =>
+      // band rides BOTH as a data column and as the partition directory
+      // (band_p): the directory clusters each band's buckets into their
+      // own files, while the data column keeps every batch directory a
+      // uniform self-contained table — which is what lets the reader
+      // union any number of batch dirs in ONE scan relation
+      // (recursiveFileLookup) instead of per-batch plans or a
+      // partition-discovery walk over heterogeneous roots
+      bandBuckets(signatureFromIndex(sh, k), k, rowsPerBand)
+        .select(col("sid"), col("bk.band").as("band"),
+          col("bk.bucket").as("bucket"))
+        .withColumn("band_p", col("band"))
+        .write.mode("overwrite").partitionBy("band_p")
+        .parquet(s"$staging/bands")
+      sh.write.mode("overwrite").parquet(s"$staging/shingles")
+    }
     // side tables (commit records, exact-dup evidence) ride the same
     // atomic publish, each written with its own partitioning — the
     // caller coalesces a batch-sized record, corpus-sized evidence
@@ -1058,52 +1041,50 @@ object Dedup {
       s"no dedup index published at $path — build one with " +
         "writeDedupIndex before querying against it")
     val allNewSh = shingleIndex(newBatch, idCol, textCol)
-    val newSh =
-      (if (cap < 0) allNewSh else capDocFreq(allNewSh, cap)).persist()
-    val newBk = bandBuckets(signatureFromIndex(newSh, k), k, rowsPerBand)
-      .select(col("sid"), col("bk.band").as("band"),
-        col("bk.bucket").as("bucket"))
-      .persist() // feeds the index join AND the batch self-join
-    val idxBk = readBatchTables(spark, storedBands)
-    val vsIndex = newBk.as("a")
-      .join(idxBk.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.sid") =!= col("b.sid"))
-      .select(least(col("a.sid"), col("b.sid")).as("id_a"),
-        greatest(col("a.sid"), col("b.sid")).as("id_b"))
-    val vsSelf = newBk.as("a")
-      .join(newBk.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.sid") < col("b.sid"))
-      .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"))
-    // eager materialization while newBk is cached (see the sibling's
-    // rationale at minhashDedupIncremental)
-    val cand = vsIndex.unionByName(vsSelf).distinct().localCheckpoint()
-    newBk.unpersist()
-    // verify needs shingles for candidate ids only: semi-join the
-    // (corpus-sized) stored shingle table down to candidates BEFORE
-    // the size aggregate, so the only aggregation that runs is
-    // candidate-sized. No broadcast hint: `cand` is checkpointed, so
-    // AQE sees its true size and broadcasts when it fits (the normal
-    // case — a map-side probe per partition) but degrades to a shuffle
-    // join instead of failing if one day's candidates are huge.
-    val candIds = cand.select(col("id_a").as("cid"))
-      .unionByName(cand.select(col("id_b").as("cid"))).distinct()
-    // .distinct() AFTER the semi-join (candidate-sized, so cheap):
-    // shingle rows are unique per (sid, sh) by construction, but a
-    // duplicated index append that slipped past writeDedupIndex's
-    // guard would double them — and doubled rows shift every verify
-    // count. Dedupe on read so verify stays exact regardless.
-    val idxSh = readBatchTables(spark, batchSubPaths(fs, path, "shingles"))
-      .join(candIds, col("sid") === col("cid"), "left_semi")
-      .distinct()
-    val verified = jaccardVerify(newSh.unionByName(idxSh), Some(cand),
-        thresholdNum, thresholdDen)
-      .localCheckpoint()
-    newSh.unpersist()
-    verified
+    graft.Checkpoints.cached(
+      if (cap < 0) allNewSh else capDocFreq(allNewSh, cap)) { newSh =>
+      // the batch's band table feeds the index join AND the batch
+      // self-join; it is released before the verify runs
+      val cand = graft.Checkpoints.cached(
+        bandBuckets(signatureFromIndex(newSh, k), k, rowsPerBand)
+          .select(col("sid"), col("bk.band").as("band"),
+            col("bk.bucket").as("bucket"))) { newBk =>
+        val idxBk = readBatchTables(spark, storedBands)
+        val vsIndex = newBk.as("a")
+          .join(idxBk.as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.bucket") === col("b.bucket") &&
+              col("a.sid") =!= col("b.sid"))
+          .select(least(col("a.sid"), col("b.sid")).as("id_a"),
+            greatest(col("a.sid"), col("b.sid")).as("id_b"))
+        val vsSelf = newBk.as("a")
+          .join(newBk.as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.bucket") === col("b.bucket") &&
+              col("a.sid") < col("b.sid"))
+          .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"))
+        graft.Checkpoints.truncate(vsIndex.unionByName(vsSelf).distinct())
+      }
+      // verify needs shingles for candidate ids only: semi-join the
+      // (corpus-sized) stored shingle table down to candidates BEFORE
+      // the size aggregate, so the only aggregation that runs is
+      // candidate-sized. No broadcast hint: `cand` is checkpointed, so
+      // AQE sees its true size and broadcasts when it fits (the normal
+      // case — a map-side probe per partition) but degrades to a shuffle
+      // join instead of failing if one day's candidates are huge.
+      val candIds = cand.select(col("id_a").as("cid"))
+        .unionByName(cand.select(col("id_b").as("cid"))).distinct()
+      // .distinct() AFTER the semi-join (candidate-sized, so cheap):
+      // shingle rows are unique per (sid, sh) by construction, but a
+      // duplicated index append that slipped past writeDedupIndex's
+      // guard would double them — and doubled rows shift every verify
+      // count. Dedupe on read so verify stays exact regardless.
+      val idxSh = readBatchTables(spark, batchSubPaths(fs, path, "shingles"))
+        .join(candIds, col("sid") === col("cid"), "left_semi")
+        .distinct()
+      graft.Checkpoints.truncate(jaccardVerify(newSh.unionByName(idxSh),
+        Some(cand), thresholdNum, thresholdDen))
+    }
   }
 
   /** D9 — benchmark CONTAMINATION check (decontamination pass): flag
@@ -1117,21 +1098,17 @@ object Dedup {
   def contaminationCheck(df: DataFrame, idCol: String, textCol: String,
                          isBenchmark: Column,
                          minShared: Int = 8): DataFrame = {
-    val sh = shingleIndex(df, idCol, textCol).persist()
-    val benchIds = df.filter(isBenchmark).select(col(idCol).as("bid"))
-    val benchSh = sh.join(broadcast(benchIds), col("sid") === col("bid"))
-      .select(col("bid"), col("sh"))
-    val corpusSh = sh.join(broadcast(benchIds), col("sid") === col("bid"),
-      "left_anti")
-    // materialize the (tiny) flag set eagerly so the shingle-index
-    // cache is released instead of living for the whole session
-    val flagged = corpusSh.join(benchSh, Seq("sh"))
-      .groupBy(col("sid").as("doc_id"), col("bid").as("bench_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .localCheckpoint()
-    sh.unpersist()
-    flagged
+    graft.Checkpoints.cached(shingleIndex(df, idCol, textCol)) { sh =>
+      val benchIds = df.filter(isBenchmark).select(col(idCol).as("bid"))
+      val benchSh = sh.join(broadcast(benchIds), col("sid") === col("bid"))
+        .select(col("bid"), col("sh"))
+      val corpusSh = sh.join(broadcast(benchIds),
+        col("sid") === col("bid"), "left_anti")
+      graft.Checkpoints.truncate(corpusSh.join(benchSh, Seq("sh"))
+        .groupBy(col("sid").as("doc_id"), col("bid").as("bench_id"))
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared))
+    }
   }
 
   /** D7 — near-duplicate GROUP resolution: the step that turns
@@ -1147,11 +1124,8 @@ object Dedup {
     * the propagation distance — O(log diameter) rounds instead of
     * O(diameter), the same asymptotics as large-star/small-star
     * (Kiveris et al., SoCC 2014) with a simpler join shape. Per-round
-    * lineage truncation via [[graft.Checkpoints.truncate]]: reliable
-    * `checkpoint` when the session has a checkpoint dir (cluster
-    * runs — iteration state survives executor loss), `localCheckpoint`
-    * otherwise; the driver sees only one convergence count per round,
-    * never row data.
+    * lineage truncation via [[graft.Checkpoints.truncate]]; the driver
+    * sees only one convergence count per round, never row data.
     *
     * `ids` must expose column `id`; `pairs` columns `id_a`,`id_b`.
     */
@@ -1161,152 +1135,149 @@ object Dedup {
     // both edge directions from ONE pass over `pairs` (a union of two
     // projections would execute the upstream pair pipeline — e.g. the
     // whole MinHash verify chain — once per branch)
-    val sym = pairs.select(explode(array(
+    graft.Checkpoints.cached(pairs.select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
-    // One count materializes the edge cache AND decides the join
-    // strategy: the iteration state (nodes-with-edges, ≤ 2·edges rows)
-    // is usually a sliver of the corpus, and below the threshold every
-    // per-round join can run broadcast — single-stage rounds with no
-    // shuffle. Above it (real-scale runs) everything stays a shuffle
-    // join; the algorithm is identical either way.
-    val edgeRows = sym.count()
-    if (edgeRows == 0L) { // clean corpus: every id is its own group
-      sym.unpersist()
-      return ids.select(col("id"), col("id").as("group_id"))
-    }
-    val tiny = edgeRows <= tinyThreshold
-    // Below the threshold AND with long ids (every corpus id in this
-    // engine), the components are computed by ONE EXECUTOR TASK: the
-    // symmetric edge list coalesces to a single partition and a
-    // union–find (path-halving, min-label per root) labels every
-    // edge-touching node in O(E α(E)) — the same result the iterative
-    // min-label propagation converges to (components are unique;
-    // both paths label a node with the MINIMUM id reachable through
-    // the pair graph — spec-pinned equal on real minhash pairs and
-    // random graphs). What the driver sees is unchanged (no collect —
-    // the fold runs on an executor, like a broadcast build side);
-    // what disappears is ~log(diameter) rounds × (checkpoint +
-    // convergence-sum + broadcast) Spark jobs, which dominated the
-    // gate's wall clock at ~1.4k pairs (measured 2.6 s → 0.3 s).
-    // Above the threshold (real scale) the shuffle-join iteration
-    // below runs exactly as before.
-    val idIsLong = ids.schema("id").dataType ==
-      org.apache.spark.sql.types.LongType
-    if (tiny && idIsLong) {
-      import org.apache.spark.sql.Row
-      val labelled = sym.select(col("src").cast("long"),
-          col("dst").cast("long"))
-        .coalesce(1)
-        .mapPartitions { it =>
-          val parent = new java.util.HashMap[Long, Long]()
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.get(r) != r) {
-              val p = parent.get(r)
-              parent.put(r, parent.get(p)) // path halving
-              r = parent.get(p)
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))) { sym =>
+      // One count materializes the edge cache AND decides the join
+      // strategy: the iteration state (nodes-with-edges, ≤ 2·edges rows)
+      // is usually a sliver of the corpus, and below the threshold every
+      // per-round join can run broadcast — single-stage rounds with no
+      // shuffle. Above it (real-scale runs) everything stays a shuffle
+      // join; the algorithm is identical either way.
+      val edgeRows = sym.count()
+      val tiny = edgeRows <= tinyThreshold
+      // Below the threshold AND with long ids (every corpus id in this
+      // engine), the components are computed by ONE EXECUTOR TASK: the
+      // symmetric edge list coalesces to a single partition and a
+      // union–find (path-halving, min-label per root) labels every
+      // edge-touching node in O(E α(E)) — the same result the iterative
+      // min-label propagation converges to (components are unique;
+      // both paths label a node with the MINIMUM id reachable through
+      // the pair graph — spec-pinned equal on real minhash pairs and
+      // random graphs). What the driver sees is unchanged (no collect —
+      // the fold runs on an executor, like a broadcast build side);
+      // what disappears is ~log(diameter) rounds × (checkpoint +
+      // convergence-sum + broadcast) Spark jobs, which dominated the
+      // gate's wall clock at ~1.4k pairs (measured 2.6 s → 0.3 s).
+      // Above the threshold (real scale) the shuffle-join iteration
+      // below runs exactly as before.
+      val idIsLong = ids.schema("id").dataType ==
+        org.apache.spark.sql.types.LongType
+      if (edgeRows == 0L) // clean corpus: every id is its own group
+        ids.select(col("id"), col("id").as("group_id"))
+      else if (tiny && idIsLong) {
+        import org.apache.spark.sql.Row
+        val labelled = sym.select(col("src").cast("long"),
+            col("dst").cast("long"))
+          .coalesce(1)
+          .mapPartitions { it =>
+            val parent = new java.util.HashMap[Long, Long]()
+            def find(x: Long): Long = {
+              var r = x
+              while (parent.get(r) != r) {
+                val p = parent.get(r)
+                parent.put(r, parent.get(p)) // path halving
+                r = parent.get(p)
+              }
+              r
             }
-            r
-          }
-          it.foreach { row =>
-            val a = row.getLong(0); val b = row.getLong(1)
-            if (!parent.containsKey(a)) parent.put(a, a)
-            if (!parent.containsKey(b)) parent.put(b, b)
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-          }
-          val minOf = new java.util.HashMap[Long, Long]()
-          val nodes = parent.keySet().iterator()
-          while (nodes.hasNext) {
-            val n = nodes.next(); val r = find(n)
-            val cur = minOf.getOrDefault(r, Long.MaxValue)
-            if (n < cur) minOf.put(r, n)
-          }
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          val it2 = parent.keySet().iterator()
-          while (it2.hasNext) {
-            val n = it2.next()
-            out += Row(n, minOf.get(find(n)))
-          }
-          out.iterator
-        }(org.apache.spark.sql.Encoders.row(
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("__g",
-              org.apache.spark.sql.types.LongType, nullable = false)))))
-      // materialize the (small) edge-touching labels before releasing
-      // the edge cache; the full-corpus join back stays lazy exactly
-      // like the iterative path's return
-      val labCp = graft.Checkpoints.truncate(labelled.toDF())
-      sym.unpersist()
-      return ids.join(broadcast(labCp), Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("__g"), col("id")).as("group_id"))
+            it.foreach { row =>
+              val a = row.getLong(0); val b = row.getLong(1)
+              if (!parent.containsKey(a)) parent.put(a, a)
+              if (!parent.containsKey(b)) parent.put(b, b)
+              val ra = find(a); val rb = find(b)
+              if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+            }
+            val minOf = new java.util.HashMap[Long, Long]()
+            val nodes = parent.keySet().iterator()
+            while (nodes.hasNext) {
+              val n = nodes.next(); val r = find(n)
+              val cur = minOf.getOrDefault(r, Long.MaxValue)
+              if (n < cur) minOf.put(r, n)
+            }
+            val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+            val it2 = parent.keySet().iterator()
+            while (it2.hasNext) {
+              val n = it2.next()
+              out += Row(n, minOf.get(find(n)))
+            }
+            out.iterator
+          }(org.apache.spark.sql.Encoders.row(
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("id",
+                org.apache.spark.sql.types.LongType, nullable = false),
+              org.apache.spark.sql.types.StructField("__g",
+                org.apache.spark.sql.types.LongType, nullable = false)))))
+        // the edge-touching labels materialize inside the edge scope;
+        // the full-corpus join back stays lazy exactly like the
+        // iterative path's return
+        val labCp = graft.Checkpoints.truncate(labelled.toDF())
+        ids.join(broadcast(labCp), Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("__g"), col("id")).as("group_id"))
+      } else {
+        def small(df: DataFrame): DataFrame = if (tiny) broadcast(df) else df
+        // below the threshold the whole iteration state fits one task:
+        // coalesced checkpoints make each round a handful of tasks instead
+        // of 32-partition waves (at real scale this branch never fires)
+        def compact(df: DataFrame): DataFrame = if (tiny) df.coalesce(1) else df
+        // iterate ONLY over nodes that appear in a pair: every other id is
+        // trivially its own component and joins back at the end. On a real
+        // corpus near-dup clusters touch a small fraction of documents, so
+        // this shrinks the per-round state by orders of magnitude.
+        var labels = graft.Checkpoints.truncate(
+          compact(sym.select(col("src").as("id")).distinct()
+            .withColumn("group_id", col("id"))))
+        // labels only ever decrease, so Σ group_id strictly decreases iff
+        // anything changed — a one-stage partial-aggregated sum per round
+        // replaces a join-based change detector. Exact decimal: a 64-bit
+        // sum would overflow on billions of 64-bit ids.
+        def labelSum(df: DataFrame): java.math.BigDecimal =
+          df.agg(sum(col("group_id").cast("decimal(38,0)"))).head()
+            .getDecimal(0)
+        def jump(df: DataFrame): DataFrame =
+          df.as("a")
+            .join(small(df.select(col("id").as("jid"),
+              col("group_id").as("jg")).as("b")),
+              col("a.group_id") === col("b.jid"), "left")
+            .select(col("a.id").as("id"),
+              least(col("a.group_id"),
+                coalesce(col("b.jg"), col("a.group_id"))).as("group_id"))
+        var prevSum = labelSum(labels)
+        var round = 0
+        var changed = true
+        while (changed && round < maxRounds) {
+          val nmin = sym.join(small(labels), sym("dst") === labels("id"))
+            .groupBy(col("src")).agg(min(col("group_id")).as("nmin"))
+          val stepped = labels.as("l")
+            .join(small(nmin.as("n")), col("l.id") === col("n.src"), "left")
+            .select(col("l.id").as("id"),
+              least(col("l.group_id"),
+                coalesce(col("n.nmin"), col("l.group_id"))).as("group_id"))
+          // two pointer jumps (labels are themselves ids: replace my label
+          // with my label's label): each quadruples the distance a min has
+          // travelled, so rounds stay ~log₄(diameter) with no extra action
+          val next = graft.Checkpoints.truncate(compact(jump(jump(stepped))))
+          val curSum = labelSum(next)
+          changed = curSum.compareTo(prevSum) != 0
+          prevSum = curSum
+          labels = next
+          round += 1
+        }
+        // loud non-convergence contract: exiting while labels were still
+        // moving would return PARTIALLY propagated groups with no signal
+        // to the caller. Unreachable in practice (×4 pointer jumping needs
+        // a graph of diameter ~4^maxRounds), but if it ever fires the
+        // caller must know the labels are not components.
+        if (changed) throw new IllegalStateException(
+          s"resolveGroups did not converge within $maxRounds rounds — " +
+            "labels were still propagating; raise maxRounds")
+        ids.join(small(labels.withColumnRenamed("group_id", "__g")),
+            Seq("id"), "left")
+          .select(col("id"), coalesce(col("__g"), col("id")).as("group_id"))
+      }
     }
-    def small(df: DataFrame): DataFrame = if (tiny) broadcast(df) else df
-    // below the threshold the whole iteration state fits one task:
-    // coalesced checkpoints make each round a handful of tasks instead
-    // of 32-partition waves (at real scale this branch never fires)
-    def compact(df: DataFrame): DataFrame = if (tiny) df.coalesce(1) else df
-    // iterate ONLY over nodes that appear in a pair: every other id is
-    // trivially its own component and joins back at the end. On a real
-    // corpus near-dup clusters touch a small fraction of documents, so
-    // this shrinks the per-round state by orders of magnitude.
-    var labels = graft.Checkpoints.truncate(
-      compact(sym.select(col("src").as("id")).distinct()
-        .withColumn("group_id", col("id"))))
-    // labels only ever decrease, so Σ group_id strictly decreases iff
-    // anything changed — a one-stage partial-aggregated sum per round
-    // replaces a join-based change detector. Exact decimal: a 64-bit
-    // sum would overflow on billions of 64-bit ids.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("group_id").cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-    def jump(df: DataFrame): DataFrame =
-      df.as("a")
-        .join(small(df.select(col("id").as("jid"),
-          col("group_id").as("jg")).as("b")),
-          col("a.group_id") === col("b.jid"), "left")
-        .select(col("a.id").as("id"),
-          least(col("a.group_id"),
-            coalesce(col("b.jg"), col("a.group_id"))).as("group_id"))
-    var prevSum = labelSum(labels)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      val nmin = sym.join(small(labels), sym("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("group_id")).as("nmin"))
-      val stepped = labels.as("l")
-        .join(small(nmin.as("n")), col("l.id") === col("n.src"), "left")
-        .select(col("l.id").as("id"),
-          least(col("l.group_id"),
-            coalesce(col("n.nmin"), col("l.group_id"))).as("group_id"))
-      // two pointer jumps (labels are themselves ids: replace my label
-      // with my label's label): each quadruples the distance a min has
-      // travelled, so rounds stay ~log₄(diameter) with no extra action
-      val next = graft.Checkpoints.truncate(compact(jump(jump(stepped))))
-      val curSum = labelSum(next)
-      changed = curSum.compareTo(prevSum) != 0
-      prevSum = curSum
-      labels = next
-      round += 1
-    }
-    sym.unpersist()
-    // loud non-convergence contract: exiting while labels were still
-    // moving would return PARTIALLY propagated groups with no signal
-    // to the caller. Unreachable in practice (×4 pointer jumping needs
-    // a graph of diameter ~4^maxRounds), but if it ever fires the
-    // caller must know the labels are not components.
-    if (changed) throw new IllegalStateException(
-      s"resolveGroups did not converge within $maxRounds rounds — " +
-        "labels were still propagating; raise maxRounds")
-    ids.join(small(labels.withColumnRenamed("group_id", "__g")),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("__g"), col("id")).as("group_id"))
   }
 
   /** D10 — canonical-document selection: the final step of every dedup
@@ -1395,8 +1366,7 @@ object Dedup {
     // from the df aggregate alone: two aggregations over one
     // persisted index, doc-sized join at the end, no index-sized
     // join. Identical rows (oracle-pinned).
-    val idx = shingleIndex(df, idCol, textCol, n).persist()
-    try {
+    graft.Checkpoints.cached(shingleIndex(df, idCol, textCol, n)) { idx =>
       val per = idx.groupBy(col("sid")).agg(count(lit(1)).as("__nsh"))
       val nov = idx.groupBy(col("sh"))
         .agg(count(lit(1)).as("__df"), min(col("sid")).as("__owner"))
@@ -1414,7 +1384,7 @@ object Dedup {
           coalesce(col("__nnov"), lit(0L)).as("n_novel"),
           round(coalesce(col("__nnov"), lit(0L)).cast("double")
             / col("__nsh").cast("double"), 6).as("novelty")))
-    } finally { idx.unpersist(); () }
+    }
   }
 
   /** D12 — duplicated token-WINDOW hashes: every w-token window of

@@ -334,10 +334,8 @@ object Similarity {
     * Per-round cost at scale: one broadcast of the k×dim centroid
     * table, one scan of the corpus, one (cell, pos)-keyed partial
     * aggregate — no corpus shuffle ever; per-round lineage truncation
-    * via [[graft.Checkpoints.truncate]] (reliable `checkpoint` when
-    * the session has a checkpoint dir, so a cluster run's iteration
-    * state survives executor loss; `localCheckpoint` otherwise). The
-    * per-round movement scalar is the only thing the driver sees.
+    * via [[graft.Checkpoints.truncate]]. The per-round movement scalar
+    * is the only thing the driver sees.
     * Mean centroids are NOT renormalized: cosine is scale-invariant in
     * the centroid argument, so the argmax assignment is identical
     * either way (spherical k-means without the cosmetic normalize).
@@ -356,67 +354,65 @@ object Similarity {
                     tol: Double = 0.0)
       : (DataFrame, DataFrame, Seq[Double]) = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    val base = graft.sources.Tables.fanOut(
-      emb.select(col(idCol).as("cand_id"), col(vecCol).as("cv")))
-      .persist()
-    // quantized long form of a centroid table — the grid the movement
-    // metric lives on (same 6-dp decimal quantization as the stats)
-    def longForm(c: DataFrame, vAs: String): DataFrame =
-      c.select(col("cell"), posexplode(col("centv")).as(Seq("pos", "v")))
-        .select(col("cell"), (col("pos") + 1).cast("bigint").as("pos"),
-          round(col("v").cast("double"), 6).cast("decimal(18,6)").as(vAs))
-    var cent = graft.Checkpoints.truncate(
-      emb.filter(initPred)
-        .select(col(idCol).as("cell"), col(vecCol).as("centv")))
-    val moves = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var iter = 0
-    var converged = false
-    // r19: with early stopping disabled (tol < 0) the per-round
-    // movement scalar gates nothing — so instead of one driver action
-    // PER ROUND (a full job over tiny checkpointed tables, pure
-    // scheduling overhead at low SF), the round pairs are remembered
-    // and all movements compute in ONE batched job after the loop
-    // (identical arithmetic: same per-round inner join, same exact-
-    // decimal sum, grouped by round tag). With tol >= 0 the per-round
-    // action stays — it decides the loop.
-    val batchMoves = tol < 0
-    val pending =
-      scala.collection.mutable.ArrayBuffer.empty[(DataFrame, DataFrame)]
-    while (iter < maxIter && !converged) {
-      val newCent = graft.Checkpoints.truncate(centroidTable(
-        centroidStats(assignToCentroids(base, "cand_id", "cv", cent))))
-      if (batchMoves) pending += ((cent, newCent))
-      else {
-        // inner join: a cell that lost all members contributes no
-        // movement (it no longer exists to move)
-        val mv = longForm(cent, "o").join(longForm(newCent, "n"),
-            Seq("cell", "pos"))
-          .agg(coalesce(sum(abs(col("o") - col("n"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double"))
-          .head().getDouble(0)
-        moves += mv
-        if (mv <= tol) converged = true
+    graft.Checkpoints.cached(graft.sources.Tables.fanOut(
+      emb.select(col(idCol).as("cand_id"), col(vecCol).as("cv")))) { base =>
+      // quantized long form of a centroid table — the grid the movement
+      // metric lives on (same 6-dp decimal quantization as the stats)
+      def longForm(c: DataFrame, vAs: String): DataFrame =
+        c.select(col("cell"), posexplode(col("centv")).as(Seq("pos", "v")))
+          .select(col("cell"), (col("pos") + 1).cast("bigint").as("pos"),
+            round(col("v").cast("double"), 6).cast("decimal(18,6)").as(vAs))
+      var cent = graft.Checkpoints.truncate(
+        emb.filter(initPred)
+          .select(col(idCol).as("cell"), col(vecCol).as("centv")))
+      val moves = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var iter = 0
+      var converged = false
+      // r19: with early stopping disabled (tol < 0) the per-round
+      // movement scalar gates nothing — so instead of one driver action
+      // PER ROUND (a full job over tiny checkpointed tables, pure
+      // scheduling overhead at low SF), the round pairs are remembered
+      // and all movements compute in ONE batched job after the loop
+      // (identical arithmetic: same per-round inner join, same exact-
+      // decimal sum, grouped by round tag). With tol >= 0 the per-round
+      // action stays — it decides the loop.
+      val batchMoves = tol < 0
+      val pending =
+        scala.collection.mutable.ArrayBuffer.empty[(DataFrame, DataFrame)]
+      while (iter < maxIter && !converged) {
+        val newCent = graft.Checkpoints.truncate(centroidTable(
+          centroidStats(assignToCentroids(base, "cand_id", "cv", cent))))
+        if (batchMoves) pending += ((cent, newCent))
+        else {
+          // inner join: a cell that lost all members contributes no
+          // movement (it no longer exists to move)
+          val mv = longForm(cent, "o").join(longForm(newCent, "n"),
+              Seq("cell", "pos"))
+            .agg(coalesce(sum(abs(col("o") - col("n"))),
+              lit(java.math.BigDecimal.ZERO)).cast("double"))
+            .head().getDouble(0)
+          moves += mv
+          if (mv <= tol) converged = true
+        }
+        cent = newCent
+        iter += 1
       }
-      cent = newCent
-      iter += 1
+      if (pending.nonEmpty) {
+        val byRound = pending.zipWithIndex.map { case ((o, n), i) =>
+            longForm(o, "o").join(longForm(n, "n"), Seq("cell", "pos"))
+              .select(lit(i).as("__round"),
+                abs(col("o") - col("n")).as("__d"))
+          }.reduce(_ unionByName _)
+          .groupBy(col("__round"))
+          .agg(sum(col("__d")).cast("double").as("__mv"))
+          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+        // a round whose join was empty has no group — its movement is 0
+        // (exactly the per-round coalesce above)
+        pending.indices.foreach(i => moves += byRound.getOrElse(i, 0.0))
+      }
+      (graft.Checkpoints.truncate(
+        assignCellOnly(base, "cand_id", "cv", cent)), cent, moves.toSeq)
     }
-    if (pending.nonEmpty) {
-      val byRound = pending.zipWithIndex.map { case ((o, n), i) =>
-          longForm(o, "o").join(longForm(n, "n"), Seq("cell", "pos"))
-            .select(lit(i).as("__round"),
-              abs(col("o") - col("n")).as("__d"))
-        }.reduce(_ unionByName _)
-        .groupBy(col("__round"))
-        .agg(sum(col("__d")).cast("double").as("__mv"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      // a round whose join was empty has no group — its movement is 0
-      // (exactly the per-round coalesce above)
-      pending.indices.foreach(i => moves += byRound.getOrElse(i, 0.0))
-    }
-    val finalAssign = graft.Checkpoints.truncate( // materialize before
-      assignCellOnly(base, "cand_id", "cv", cent)) // base.unpersist
-    base.unpersist()
-    (finalAssign, cent, moves.toSeq)
   }
 
   /** D5 (scale path) — LSH-bucketed near-dup pairs: candidate pairs
@@ -592,9 +588,8 @@ object Similarity {
               m: Int, dim: Int, initPred: Column,
               rounds: Int = 2): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val long = graft.sources.Tables.fanOut(
-      sliced(emb, idCol, vecCol, m, dim)).persist()
-    try {
+    graft.Checkpoints.cached(graft.sources.Tables.fanOut(
+      sliced(emb, idCol, vecCol, m, dim))) { long =>
       var cent = sliced(emb.filter(initPred), idCol, vecCol, m, dim)
         .select(col("subspace"), col("cand_id").as("cell"),
           col("subvec").as("centv"))
@@ -628,7 +623,7 @@ object Similarity {
             transform(col("__pm"), p => p.getField("mv")).as("centv")))
       }
       cent.select(col("subspace"), col("cell").as("code"), col("centv"))
-    } finally long.unpersist()
+    }
   }
 
   /** The PRODUCTION entry to PQ training: a codebook of exactly `k`

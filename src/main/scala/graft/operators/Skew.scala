@@ -85,7 +85,7 @@ object Skew {
     *    cold majority's size;
     *  - the cold join is an ordinary equi-join AQE can still optimize
     *    (broadcast, skew-split) as usual;
-    *  - the hot-key set is materialized ONCE (`localCheckpoint`) and
+    *  - the hot-key set is materialized ONCE (`Checkpoints.truncate`) and
     *    broadcast into all three split joins, so detection costs one
     *    aggregate pass over the left side, not three.
     *
@@ -99,7 +99,8 @@ object Skew {
     // small by construction (≤ |left|/hotThreshold rows): materialize
     // once, broadcast into every split — the splits are map-side
     // semi/anti probes, no extra shuffle of either table
-    val hot = broadcast(hotKeys(left, key, hotThreshold).localCheckpoint())
+    val hot = broadcast(graft.Checkpoints.truncate(
+      hotKeys(left, key, hotThreshold)))
     val leftHot = left.join(hot, Seq(key), "left_semi")
     val leftCold = left.join(hot, Seq(key), "left_anti")
     val rightHot = right.join(hot, Seq(key), "left_semi")

@@ -165,38 +165,25 @@ case class CarryOut(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Low/high 64 bits of a decimal's unscaled value. `compact = true`
-  * (declared precision ≤ 18) takes the long-backed fast path.
-  */
-case class UnscaledLo(child: Expression, compact: Boolean)
-    extends UnaryExpression {
+/** Low/high 64 bits of a wide decimal's unscaled value. */
+case class UnscaledLo(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any = {
-    val d = input.asInstanceOf[Decimal]
-    if (compact) d.toUnscaledLong else Decimal128.unscaledLoBig(d)
-  }
+  override def nullSafeEval(input: Any): Any =
+    Decimal128.unscaledLoBig(input.asInstanceOf[Decimal])
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    if (compact) defineCodeGen(ctx, ev, d => s"$d.toUnscaledLong()")
-    else defineCodeGen(ctx, ev,
-      d => s"graft.plans.Decimal128.unscaledLoBig($d)")
+    defineCodeGen(ctx, ev, d => s"graft.plans.Decimal128.unscaledLoBig($d)")
   override protected def withNewChildInternal(newChild: Expression)
       : UnscaledLo = copy(child = newChild)
 }
 
-case class UnscaledHi(child: Expression, compact: Boolean)
-    extends UnaryExpression {
+case class UnscaledHi(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any = {
-    val d = input.asInstanceOf[Decimal]
-    if (compact) d.toUnscaledLong >> 63
-    else Decimal128.unscaledHiBig(d)
-  }
+  override def nullSafeEval(input: Any): Any =
+    Decimal128.unscaledHiBig(input.asInstanceOf[Decimal])
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    if (compact) defineCodeGen(ctx, ev, d => s"($d.toUnscaledLong() >> 63)")
-    else defineCodeGen(ctx, ev,
-      d => s"graft.plans.Decimal128.unscaledHiBig($d)")
+    defineCodeGen(ctx, ev, d => s"graft.plans.Decimal128.unscaledHiBig($d)")
   override protected def withNewChildInternal(newChild: Expression)
       : UnscaledHi = copy(child = newChild)
 }
@@ -305,103 +292,10 @@ abstract class LimbSumBase extends DeclarativeAggregate {
       ansiEnabled)
 }
 
-/** Exact `sum(child)` for a decimal child — same value, type, and
-  * null/overflow contract as Spark's `Sum`, on limb arithmetic.
+/** Column API: `sum(c)` / `sum(x * y)` twins over pre-projected
+  * unscaled limbs, plus the projections that produce them.
   */
-case class DecimalLimbSum(child: Expression) extends LimbSumBase {
-  // lazy: the child is unresolved at construction from the Column API
-  private lazy val childType = child.dataType.asInstanceOf[DecimalType]
-  private def compact = childType.precision <= Decimal.MAX_LONG_DIGITS
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case _: DecimalType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"DecimalLimbSum needs a decimal child, got $other")
-    }
-  override protected def resultPrecision: Int =
-    math.min(childType.precision + 10, DecimalType.MAX_PRECISION)
-  override protected def resultScale: Int = childType.scale
-  override def children: Seq[Expression] = Seq(child)
-  override lazy val updateExpressions: Seq[Expression] = {
-    val inLo = UnscaledLo(child, compact)
-    val inHi = UnscaledHi(child, compact)
-    val (nl, nm, nh) = add128(inLo, inHi)
-    val isNull = IsNull(child)
-    Seq(
-      If(isNull, lo, nl),
-      If(isNull, mid, nm),
-      If(isNull, hi, nh),
-      Or(seen, IsNotNull(child)))
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): DecimalLimbSum =
-    copy(child = newChildren(0))
-}
-
-/** Exact `sum(x * y)` for decimal factors whose product precision
-  * stays within 38 digits (so Spark's multiply is itself exact —
-  * beyond that Spark ROUNDS the product and this form would refuse at
-  * plan time rather than silently disagree). The unscaled product is
-  * computed as a full signed 128-bit (MulHigh + WrapMul) — no
-  * BigDecimal per row — and accumulated like [[DecimalLimbSum]]. A
-  * null in either factor skips the row, exactly like
-  * `sum(x * y)` with null-propagating multiply.
-  */
-case class DecimalProdLimbSum(x: Expression, y: Expression)
-    extends LimbSumBase {
-  // lazy: the children are unresolved at construction from the
-  // Column API; the compactness/precision preconditions are enforced
-  // by checkInputDataTypes at analysis
-  private lazy val xt = x.dataType.asInstanceOf[DecimalType]
-  private lazy val yt = y.dataType.asInstanceOf[DecimalType]
-  override def checkInputDataTypes(): TypeCheckResult =
-    (x.dataType, y.dataType) match {
-      case (a: DecimalType, b: DecimalType)
-          if a.precision <= Decimal.MAX_LONG_DIGITS &&
-            b.precision <= Decimal.MAX_LONG_DIGITS &&
-            a.precision + b.precision + 1 <= DecimalType.MAX_PRECISION =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"DecimalProdLimbSum needs compact decimal factors (p <= 18, " +
-          s"product precision <= 38) — Spark's multiply would round " +
-          s"beyond that and the exact form must refuse; got $a and $b")
-    }
-  // Spark's Multiply result type: (p1 + p2 + 1, s1 + s2) — within 38
-  // by the check above; the sum then widens precision by 10, capped
-  private lazy val prodPrecision = xt.precision + yt.precision + 1
-  private lazy val prodScale = xt.scale + yt.scale
-  override protected def resultPrecision: Int =
-    math.min(prodPrecision + 10, DecimalType.MAX_PRECISION)
-  override protected def resultScale: Int = prodScale
-  override def children: Seq[Expression] = Seq(x, y)
-  override lazy val updateExpressions: Seq[Expression] = {
-    val xu = UnscaledLo(x, compact = true)
-    val yu = UnscaledLo(y, compact = true)
-    val pLo = WrapMul(xu, yu)
-    val pHi = MulHigh(xu, yu)
-    val (nl, nm, nh) = add128(pLo, pHi)
-    val isNull = Or(IsNull(x), IsNull(y))
-    Seq(
-      If(isNull, lo, nl),
-      If(isNull, mid, nm),
-      If(isNull, hi, nh),
-      Or(seen, Not(isNull)))
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): DecimalProdLimbSum =
-    copy(x = newChildren(0), y = newChildren(1))
-}
-
-/** Column API: drop-in twins of `sum(c)` / `sum(x * y)` on decimals. */
 object Decimal128Api {
-  def sum128(c: Column): Column =
-    GraftSqlBridge.toColumn(
-      DecimalLimbSum(GraftSqlBridge.toExpression(c))
-        .toAggregateExpression())
-  def prodSum128(x: Column, y: Column): Column =
-    GraftSqlBridge.toColumn(
-      DecimalProdLimbSum(GraftSqlBridge.toExpression(x),
-        GraftSqlBridge.toExpression(y)).toAggregateExpression())
   def mul_compact(x: Column, y: Column): Column =
     GraftSqlBridge.toColumn(MulCompactDecimal(
       GraftSqlBridge.toExpression(x), GraftSqlBridge.toExpression(y)))
@@ -413,10 +307,10 @@ object Decimal128Api {
   /** Lo/hi limbs of a WIDE decimal's unscaled value (p > 18). */
   def unscaled_lo(c: Column): Column =
     GraftSqlBridge.toColumn(
-      UnscaledLo(GraftSqlBridge.toExpression(c), compact = false))
+      UnscaledLo(GraftSqlBridge.toExpression(c)))
   def unscaled_hi(c: Column): Column =
     GraftSqlBridge.toColumn(
-      UnscaledHi(GraftSqlBridge.toExpression(c), compact = false))
+      UnscaledHi(GraftSqlBridge.toExpression(c)))
   /** `sum` twin over a pre-projected COMPACT unscaled-long column:
     * result type/value identical to `sum` of the decimal(p, s) the
     * longs encode.
@@ -488,7 +382,7 @@ case class MulCompactDecimal(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** [[DecimalLimbSum]] over a PRE-PROJECTED unscaled representation:
+/** Exact `sum` over a PRE-PROJECTED unscaled representation:
   * `lo`/`hi` are long expressions carrying the input's signed 128-bit
   * unscaled value (for compact decimals: `UnscaledValue(dec)` and its
   * sign `ShiftRight(·, 63)` — cheap to re-evaluate per buffer slot
@@ -520,7 +414,7 @@ case class LimbSumLongs(inLo: Expression, inHi: Expression,
     copy(inLo = newChildren(0), inHi = newChildren(1))
 }
 
-/** [[DecimalProdLimbSum]] over pre-projected unscaled longs: the
+/** Exact `sum(x * y)` over pre-projected unscaled longs: the
   * factors' unscaled values arrive as long columns, the 128-bit
   * product is formed per slot with one long multiply + multiplyHigh.
   * A null in either factor skips the row. Result identical to

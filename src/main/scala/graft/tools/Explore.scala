@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.Tables
@@ -11,12 +10,7 @@ import graft.sources.Tables
 object Explore {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     val emb = Tables.table(spark, sfDir, "embeddings").localCheckpoint()
     val qp = col("vec_id") % 50 === 0
@@ -468,19 +462,16 @@ object Explore {
         sum(dec("l_quantity") * dec("l_quantity")),
         sum(dec("l_extendedprice") * dec("l_extendedprice")),
         sum(dec("l_quantity") * dec("l_extendedprice"))))
-      t("limb sums (1 pair)")(li.agg(
-        graft.plans.Decimal128Api.sum128(dec("l_quantity")),
-        graft.plans.Decimal128Api.sum128(dec("l_extendedprice")),
-        graft.plans.Decimal128Api.prodSum128(dec("l_quantity"), dec("l_quantity")),
-        graft.plans.Decimal128Api.prodSum128(dec("l_extendedprice"), dec("l_extendedprice")),
-        graft.plans.Decimal128Api.prodSum128(dec("l_quantity"), dec("l_extendedprice"))))
+      import graft.plans.Decimal128Api.{prodSum128Long, sum128Long, unscaled}
+      val limbSums = li.select(unscaled(dec("l_quantity")).as("q"),
+          unscaled(dec("l_extendedprice")).as("p"))
+        .agg(sum128Long(col("q"), 18, 6), sum128Long(col("p"), 18, 6),
+          prodSum128Long(col("q"), col("q"), 18, 6, 18, 6),
+          prodSum128Long(col("p"), col("p"), 18, 6, 18, 6),
+          prodSum128Long(col("q"), col("p"), 18, 6, 18, 6))
+      t("limb sums (1 pair)")(limbSums)
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      t("limb sums (1 pair) NOCODEGEN")(li.agg(
-        graft.plans.Decimal128Api.sum128(dec("l_quantity")),
-        graft.plans.Decimal128Api.sum128(dec("l_extendedprice")),
-        graft.plans.Decimal128Api.prodSum128(dec("l_quantity"), dec("l_quantity")),
-        graft.plans.Decimal128Api.prodSum128(dec("l_extendedprice"), dec("l_extendedprice")),
-        graft.plans.Decimal128Api.prodSum128(dec("l_quantity"), dec("l_extendedprice"))))
+      t("limb sums (1 pair) NOCODEGEN")(limbSums)
       t("old decimal sums NOCODEGEN")(li.agg(
         sum(dec("l_quantity")), sum(dec("l_extendedprice")),
         sum(dec("l_quantity") * dec("l_quantity")),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a handful of named SparkEntry queries in isolation
   * (same session config and noop-sink materialization as
   * [[graft.Bench]], two runs each with a cache clear between). Use it
@@ -12,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object MiniBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // same env knobs as Bench, or the numbers aren't comparable
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     args.foreach { name =>
       (1 to 2).foreach { i =>
         spark.catalog.clearCache()

@@ -23,10 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleStress {
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
   private def time[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = body
@@ -51,15 +47,8 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val srcSf = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val work = if (args.length > 1) args(1) else "/tmp/graft-sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    rmTree(new java.io.File(work))
+    val spark = graft.GraftSession.local()
+    graft.Checkpoints.rmTree(new java.io.File(work))
     new java.io.File(work).mkdirs()
 
     // ---- synthesize sf1 by deterministic 10× replication ----------
@@ -90,10 +79,10 @@ object ScaleStress {
         .parquet(s"$work/sf1/embeddings.parquet")
     }
     val sf1 = s"$work/sf1"
-    val docs = spark.read.parquet(s"$sf1/documents.parquet")
-      .localCheckpoint()
-    val emb = spark.read.parquet(s"$sf1/embeddings.parquet")
-      .localCheckpoint()
+    val docs = graft.Checkpoints.truncate(
+      spark.read.parquet(s"$sf1/documents.parquet"))
+    val emb = graft.Checkpoints.truncate(
+      spark.read.parquet(s"$sf1/embeddings.parquet"))
     val nDocs = docs.count()
     val nVecs = emb.count()
     // the daily slice: ~20% lands after bootstrap, and the PROBE is a
@@ -165,17 +154,16 @@ object ScaleStress {
       "sf1v", 5) === 0
     val qp = col("vec_id") % 6659 === 0 // ~3 queries at 20k vectors
     val (m, dim) = (8, 64)
-    val cents = emb.filter(col("vec_id") % 371 === 1)
-      .select(col("vec_id").as("cell"), col("embedding").as("centv"))
-      .localCheckpoint()
+    val cents = graft.Checkpoints.truncate(emb.filter(col("vec_id") % 371 === 1)
+      .select(col("vec_id").as("cell"), col("embedding").as("centv")))
     // FIXED-size codebook init (~120 codes — a model constant), not
     // the gate's corpus-proportional modulo: a production codebook's
     // k does not grow with the corpus, and training cost is
     // k-bounded per round
     val (cb, tVecTrain) = time {
-      val t = graft.operators.Similarity.pqTrain(emb, "vec_id",
-        "embedding", m, dim, initPred = col("vec_id") % 171 === 5,
-        rounds = 2).localCheckpoint()
+      val t = graft.Checkpoints.truncate(graft.operators.Similarity.pqTrain(
+        emb, "vec_id", "embedding", m, dim,
+        initPred = col("vec_id") % 171 === 5, rounds = 2))
       t.count(); t
     }
     val (_, tVecBuild) = time {

@@ -7,24 +7,11 @@ import graft.operators._
 import graft.sources.Tables
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("4")
   val sf = "/root/testdata/sf0.001"
 
   /** Recursive delete for specs' throwaway staging dirs. */
-  def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
+  def rmTree(f: java.io.File): Unit = Checkpoints.rmTree(f)
 }
 
 class CoreOperatorsSpec extends AnyFunSuite {

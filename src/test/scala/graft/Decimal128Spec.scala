@@ -4,36 +4,46 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential parity for the limb-sum aggregates
-  * (graft.plans.Decimal128): `sum128(c)` must equal `sum(c)` and
-  * `prodSum128(x, y)` must equal `sum(x * y)` — value, TYPE, and
-  * null semantics — on real corpus data, adversarial magnitudes
-  * (values at the 18-digit edge, sign flips), null patterns, and
-  * empty groups.
+  * (graft.plans.Decimal128) over pre-projected unscaled limbs:
+  * `sum128Long(unscaled(c))` and `sum128Wide(unscaled_lo(c),
+  * unscaled_hi(c))` must equal `sum(c)`, and
+  * `prodSum128Long(unscaled(x), unscaled(y))` must equal
+  * `sum(x * y)` — value, TYPE, and null semantics — on real corpus
+  * data, adversarial magnitudes (values at the 18-digit edge, sign
+  * flips), null patterns, and empty groups.
   */
 class Decimal128Spec extends AnyFunSuite {
   import SparkTestSession._
   import graft.plans.Decimal128Api._
 
-  test("sum128 == sum on lineitem decimal(18,6) measures, grouped") {
+  // the two limb-sum forms over a decimal(18,6) column, through the
+  // unscaled-long projection the production callers use
+  private def limbSum(c: org.apache.spark.sql.Column) =
+    sum128Long(unscaled(c), 18, 6)
+  private def limbProdSum(x: org.apache.spark.sql.Column,
+                         y: org.apache.spark.sql.Column) =
+    prodSum128Long(unscaled(x), unscaled(y), 18, 6, 18, 6)
+
+  test("sum128Long == sum on lineitem decimal(18,6) measures, grouped") {
     val li = sources.Tables.table(spark, "/root/testdata/sf0.01", "lineitem")
       .select(col("l_orderkey") % 7 as "g",
         col("l_extendedprice").cast("decimal(18,6)").as("v"))
     val d = li.groupBy("g")
-      .agg(sum128(col("v")).as("a"), sum(col("v")).as("b"))
+      .agg(limbSum(col("v")).as("a"), sum(col("v")).as("b"))
     assert(d.schema("a").dataType == d.schema("b").dataType,
       s"type mismatch: ${d.schema("a").dataType} vs ${d.schema("b").dataType}")
     assert(d.filter(not(col("a") <=> col("b"))).count() == 0)
   }
 
-  test("prodSum128 == sum(x*y) on lineitem pairs, grouped") {
+  test("prodSum128Long == sum(x*y) on lineitem pairs, grouped") {
     val li = sources.Tables.table(spark, "/root/testdata/sf0.01", "lineitem")
       .select(col("l_orderkey") % 5 as "g",
         col("l_extendedprice").cast("decimal(18,6)").as("x"),
         col("l_discount").cast("decimal(18,6)").as("y"))
     val d = li.groupBy("g")
-      .agg(prodSum128(col("x"), col("y")).as("a"),
+      .agg(limbProdSum(col("x"), col("y")).as("a"),
         sum(col("x") * col("y")).as("b"),
-        prodSum128(col("x"), col("x")).as("a2"),
+        limbProdSum(col("x"), col("x")).as("a2"),
         sum(col("x") * col("x")).as("b2"))
     assert(d.schema("a").dataType == d.schema("b").dataType)
     assert(d.filter(not(col("a") <=> col("b")) ||
@@ -51,8 +61,8 @@ class Decimal128Spec extends AnyFunSuite {
       .toDF("v", "i")
       .select((col("i") % 2).as("g"), col("v").cast("decimal(18,6)").as("v"))
     val d = df.groupBy("g")
-      .agg(sum128(col("v")).as("a"), sum(col("v")).as("b"),
-        prodSum128(col("v"), col("v")).as("pa"),
+      .agg(limbSum(col("v")).as("a"), sum(col("v")).as("b"),
+        limbProdSum(col("v"), col("v")).as("pa"),
         sum(col("v") * col("v")).as("pb"))
     assert(d.filter(not(col("a") <=> col("b")) ||
       not(col("pa") <=> col("pb"))).count() == 0)
@@ -68,8 +78,8 @@ class Decimal128Spec extends AnyFunSuite {
       .select(col("g"), col("xs").cast("decimal(18,6)").as("x"),
         col("ys").cast("decimal(18,6)").as("y"))
     val d = df.groupBy("g")
-      .agg(sum128(col("x")).as("a"), sum(col("x")).as("b"),
-        prodSum128(col("x"), col("y")).as("pa"),
+      .agg(limbSum(col("x")).as("a"), sum(col("x")).as("b"),
+        limbProdSum(col("x"), col("y")).as("pa"),
         sum(col("x") * col("y")).as("pb"))
     assert(d.filter(not(col("a") <=> col("b")) ||
       not(col("pa") <=> col("pb"))).count() == 0)
@@ -84,7 +94,8 @@ class Decimal128Spec extends AnyFunSuite {
       .toDF("d")
       .select((lit(0)).as("g"), col("d").cast("decimal(38,18)").as("v"))
     val r = df.groupBy("g")
-      .agg(sum128(col("v")).as("a"), sum(col("v")).as("b"))
+      .agg(sum128Wide(unscaled_lo(col("v")), unscaled_hi(col("v")), 38, 18)
+        .as("a"), sum(col("v")).as("b"))
     assert(r.schema("a").dataType == r.schema("b").dataType)
     assert(r.filter(not(col("a") <=> col("b"))).count() == 0)
   }
@@ -93,10 +104,10 @@ class Decimal128Spec extends AnyFunSuite {
     import spark.implicits._
     val one = Seq("42.000001").toDF("v")
       .select(col("v").cast("decimal(18,6)").as("v"))
-    val r1 = one.agg(sum128(col("v")).as("a"), sum(col("v")).as("b")).head()
+    val r1 = one.agg(limbSum(col("v")).as("a"), sum(col("v")).as("b")).head()
     assert(r1.getDecimal(0) == r1.getDecimal(1))
     val empty = one.filter(lit(false))
-    val r0 = empty.agg(sum128(col("v")).as("a"), sum(col("v")).as("b"))
+    val r0 = empty.agg(limbSum(col("v")).as("a"), sum(col("v")).as("b"))
       .head()
     assert(r0.isNullAt(0) && r0.isNullAt(1))
   }
@@ -125,7 +136,7 @@ class Decimal128Spec extends AnyFunSuite {
         col("l_quantity").cast("decimal(18,6)").as("v"))
       .repartition(7)
     val d = li.groupBy("g")
-      .agg(sum128(col("v")).as("a"), sum(col("v")).as("b"))
+      .agg(limbSum(col("v")).as("a"), sum(col("v")).as("b"))
     assert(d.filter(not(col("a") <=> col("b"))).count() == 0)
   }
 }
