@@ -34,19 +34,18 @@ object Bench {
     // multiples of 50 — deterministic at any scale; recorded in the
     // JSON as ann_query_cap); Verify keeps the full-probe correctness
     // form and its calibrated recall floors.
-    val annQueryCap = sys.env.getOrElse("SPARK_GRAFT_ANN_QUERIES",
-      "200")
-    System.setProperty("graft.ann.maxQueries", annQueryCap)
+    val annQueryCap = 200
+    System.setProperty("graft.ann.maxQueries", annQueryCap.toString)
     // the ivfpq gate's coarse-cell count also scales with the corpus
     // (nlist = n/37), which makes its ENCODE pass n×nlist — the
     // second quadratic term; fixed cell count for the timed form
-    val annCellCap = sys.env.getOrElse("SPARK_GRAFT_ANN_CELLS", "256")
-    System.setProperty("graft.ann.maxCells", annCellCap)
+    val annCellCap = 256
+    System.setProperty("graft.ann.maxCells", annCellCap.toString)
     // the PQ codebook's modulo seed recipe (kept for oracle replay)
     // also scales with the corpus: k = n/17 seeds at k·n per Lloyd
     // round — the measured 911 s sf1 melt; fixed seed count here
-    val annSeedCap = sys.env.getOrElse("SPARK_GRAFT_ANN_SEEDS", "128")
-    System.setProperty("graft.ann.maxTrainSeeds", annSeedCap)
+    val annSeedCap = 128
+    System.setProperty("graft.ann.maxTrainSeeds", annSeedCap.toString)
     val spark = GraftSession.local(cpus)
 
     def once(name: String): Double = {

@@ -35,29 +35,11 @@ import org.apache.spark.sql.DataFrame
   * bit-identical results).
   */
 object Checkpoints {
-  // dev-only observability (plan evidence for the optimization
-  // rounds): when SPARK_GRAFT_PLAN_DIR is set, the PRE-truncation
-  // plan of every checkpointed intermediate is dumped there —
-  // eager-materializing operators otherwise show only an
-  // ExistingRDD scan to explain(). Absent env (every driver /
-  // production run), nothing changes.
-  private val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-  private val planSeq = new java.util.concurrent.atomic.AtomicInteger
-
   /** Materialize `df` now and return it with its lineage cut. */
-  def truncate(df: DataFrame): DataFrame = {
-    planDir.foreach { dir =>
-      val i = planSeq.incrementAndGet()
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(f"$dir/truncate_$i%03d.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
+  def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint()
     else df.localCheckpoint()
-  }
 
   /** Persist `df`, run `body` on the persisted frame, and unpersist it
     * on every exit.

@@ -116,36 +116,37 @@ object Pipeline {
                               beforeSchemaSwap: () => Unit = () => (),
                               factLineitem: Option[DataFrame] = None,
                               incremental: Boolean = false): Unit = {
-    // SCHEMA-PINNED retention for the dims: if the fact stage keeps
-    // failing run after run, the dims advance a generation per run
+    // SCHEMA-PINNED retention: if a later stage keeps failing run
+    // after run, the tables before it advance a generation per run
     // while `_schema` stays put — with a flat keep=3 the third failed
     // run would prune the generation `_schema` still names and break
     // the consistent-triple reader exactly while promotions are
-    // failing. Each dim publish therefore sizes its keep so the
-    // schema-named generation survives: keep >= (about-to-commit gen)
-    // + 1 - (schema-named gen).
-    def pinnedKeep(name: String): Int = {
-      val schemaGen =
-        try goldSchemaGens(spark, outDir).get(name)
-        catch { case _: IllegalStateException => None } // first run
-      val cur = graft.sources.SnapshotStore
-        .currentGen(spark, s"$outDir/gold/$name")
-      (schemaGen, cur) match {
+    // failing. Each publish (dims and fact) therefore sizes its keep
+    // so the schema-named generation survives: keep >= (about-to-
+    // commit gen) + 1 - (schema-named gen). `_schema` only moves at
+    // the end of this call, so one read serves all three (there is
+    // none before the first run).
+    val schemaGens =
+      try goldSchemaGens(spark, outDir)
+      catch { case _: IllegalStateException => Map.empty[String, Long] }
+    def pinnedKeep(name: String, cur: Option[Long]): Int =
+      (schemaGens.get(name), cur) match {
         case (Some(s), Some(c)) => math.max(3, (c + 2 - s).toInt)
         case _                  => 3
       }
-    }
     val gDate = graft.sources.SnapshotStore.publish(spark,
       StarSchema.dimDate(spark, sfDir), s"$outDir/gold/dim_date",
       Seq(Cleaning.ExpectNotNull("id_date"),
         Cleaning.ExpectUnique("id_date")),
-      keep = pinnedKeep("dim_date"))
+      keep = pinnedKeep("dim_date", graft.sources.SnapshotStore
+        .currentGen(spark, s"$outDir/gold/dim_date")))
     val gCust = graft.sources.SnapshotStore.publish(spark,
       StarSchema.dimCustomer(spark, sfDir),
       s"$outDir/gold/dim_customer",
       Seq(Cleaning.ExpectNotNull("id_customer"),
         Cleaning.ExpectUnique("id_customer")),
-      keep = pinnedKeep("dim_customer"))
+      keep = pinnedKeep("dim_customer", graft.sources.SnapshotStore
+        .currentGen(spark, s"$outDir/gold/dim_customer")))
     val li = factLineitem.getOrElse(
       Tables.table(spark, sfDir, "lineitem"))
     val factRows = StarSchema.factSalesFrom(li,
@@ -156,19 +157,8 @@ object Pipeline {
     // list, so the daily promotion writes only the touched ship
     // months' files and keep=3 retains deltas — never three copies
     // of a 100 TB fact (the O1×S19 full-rewrite boundary, closed)
-    // same pin for the fact: a schema swap crashing run after run
-    // must never let the fact's retention prune the generation
-    // `_schema` still names
-    val factKeep = {
-      val schemaGen =
-        try goldSchemaGens(spark, outDir).get("fact_sales")
-        catch { case _: IllegalStateException => None }
-      val cur = graft.sources.ManifestStore.currentGen(spark, factRoot)
-      (schemaGen, cur) match {
-        case (Some(sg), Some(c)) => math.max(3, (c + 2 - sg).toInt)
-        case _                   => 3
-      }
-    }
+    val factKeep = pinnedKeep("fact_sales",
+      graft.sources.ManifestStore.currentGen(spark, factRoot))
     val gFact =
       if (incremental)
         graft.sources.ManifestStore.mergePartitions(spark, factRows,

@@ -599,10 +599,10 @@ object SparkEntry {
       Dedup.minhashDedup(Tables.table(s, d, "documents"),
         "doc_id", "text")),
     "q_dedup_simhash" -> ((s, d) =>
-      Dedup.simhashPortable(Tables.table(s, d, "documents"),
+      Dedup.simhash(Tables.table(s, d, "documents"),
         "doc_id", "text")),
     "q_dedup_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashPairsPortable(Tables.table(s, d, "documents"),
+      Dedup.simhashPairs(Tables.table(s, d, "documents"),
         "doc_id", "text")),
     // df cap 1000: a no-op on the test corpora (max df 25 at sf0.1)
     // but the bound that keeps the inverted-index join finite at scale;
@@ -4542,7 +4542,7 @@ object SparkEntry {
       |  FROM wn
       |)""".stripMargin
 
-  /** Portable SimHash mirror (Dedup.simhashPortable): per-bit majority
+  /** Portable SimHash mirror (Dedup.simhash): per-bit majority
     * vote over sha256-nibble token hashes, 60-bit word. Shared by the
     * signature and pair-join gates.
     */

@@ -20,7 +20,7 @@ import graft.plans.MinRollingHash
   *  - The inverted-index Jaccard join (`ngramJaccardPairs`) is the
   *    exact verify; at 100 TB you run it per-LSH-bucket, never
   *    globally.
-  *  - SimHash reduces each document to one 64-bit word; near-dups are
+  *  - SimHash reduces each document to one 60-bit word; near-dups are
   *    bucket-joins on bit-blocks (Hamming ≤ k ⇒ some block equal —
   *    the pigeonhole trick from Manku et al., WWW 2007).
   * All formulations are pure `functions._` column expressions —
@@ -315,42 +315,15 @@ object Dedup {
     }
   }
 
-  /** D3 — 64-bit SimHash per document: per-bit majority vote over
-    * xxhash64 of the tokens. One explode + one aggregation; the bit
-    * loop is unrolled into 64 codegen'd sums.
-    */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // fan out BEFORE the explode: repartitioning 5k docs is free,
-    // repartitioning 500k exploded tokens is a full shuffle of the data
-    val tok = graft.sources.Tables
-      .fanOut(df.select(col(idCol).as("sid"), col(textCol).as("__t")))
-      .select(col("sid"), explode(TextFunctions.tokens(col("__t"))).as("t"))
-      .withColumn("h", xxhash64(col("t")))
-    val bitSums = (0 until 64).map { b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1)
-        .otherwise(-1)).as(s"b$b")
-    }
-    val agg = tok.groupBy(col("sid")).agg(bitSums.head, bitSums.tail: _*)
-    val word = (0 until 64).map { b =>
-      when(col(s"b$b") > 0, shiftleft(lit(1L), b)).otherwise(0L)
-    }.reduce((a, b) => a.bitwiseOR(b))
-    agg.select(col("sid"), word.as("simhash"))
-  }
-
-  /** D3 (portable form) — SimHash from sha256-derived token hashes so
+  /** D3 — SimHash per document from sha256-derived token hashes, so
     * ANY engine can recompute it bit-for-bit: token hash = hex nibbles
     * of sha256(token); bit b lives at nibble b/4, position b%4;
     * per-bit majority vote over the document's tokens (with term
     * frequency). 60 bits so the word always fits signed 64-bit
     * arithmetic on engines without unsigned integers.
-    *
-    * [[simhash]] (xxhash64-based) is the production-fast variant — one
-    * 64-bit hash vs a sha256 per token; this one exists for
-    * cross-engine verification gates, same trade as Profiling's
-    * `exact` flag.
     */
-  def simhashPortable(df: DataFrame, idCol: String, textCol: String,
-                      nBits: Int = 60): DataFrame = {
+  def simhash(df: DataFrame, idCol: String, textCol: String,
+              nBits: Int = 60): DataFrame = {
     val tok = graft.sources.Tables
       .fanOut(df.select(col(idCol).as("sid"), col(textCol).as("__t")))
       .select(col("sid"), explode(TextFunctions.tokens(col("__t"))).as("t"))
@@ -367,46 +340,15 @@ object Dedup {
     agg.select(col("sid"), word.cast("bigint").as("simhash"))
   }
 
-  /** D3 — SimHash near-dup candidates: Hamming distance ≤ maxHamming
-    * found by block-pigeonhole (split 64 bits into maxHamming+1
-    * blocks; equal somewhere ⇒ candidate), then exact bit_count
-    * verify. No O(n²) anywhere.
+  /** D3 — SimHash near-dup candidate pairs: Hamming distance ≤
+    * maxHamming found by block-pigeonhole (split the [[simhash]] word
+    * into maxHamming+1 equal blocks; equal somewhere ⇒ candidate),
+    * then exact bit_count verify. No O(n²) anywhere, and every pair is
+    * recomputable by any engine.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    val sh = simhash(df, idCol, textCol)
-    val nBlocks = maxHamming + 1
-    val width = 64 / nBlocks
-    val blocks = (0 until nBlocks).map { b =>
-      struct(lit(b).as("blk"),
-        shiftright(col("simhash"), b * width)
-          .bitwiseAND((1L << width) - 1).as("key"))
-    }
-    // cached, as in simhashPairsPortable: the simhash aggregation must
-    // not run once per join side
-    graft.Checkpoints.cached(sh.select(col("sid"), col("simhash"),
-      explode(array(blocks: _*)).as("bk"))) { keyed =>
-      graft.Checkpoints.truncate(keyed.as("a")
-        .join(keyed.as("b"),
-          col("a.bk") === col("b.bk") && col("a.sid") < col("b.sid"))
-        .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"),
-          bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-            .as("hamming"))
-        .distinct()
-        .filter(col("hamming") <= maxHamming))
-    }
-  }
-
-  /** D3 (portable pair step) — SimHash near-dup candidate pairs over
-    * [[simhashPortable]] words: same block-pigeonhole join as
-    * [[simhashPairs]] (Hamming ≤ maxHamming ⇒ some bit-block equal)
-    * but on the sha256-derived 60-bit word, so a cross-engine gate can
-    * recompute every pair exactly. 60 bits split into maxHamming+1
-    * equal blocks.
-    */
-  def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 3, nBits: Int = 60): DataFrame = {
-    val sh = simhashPortable(df, idCol, textCol, nBits)
+                   maxHamming: Int = 3, nBits: Int = 60): DataFrame = {
+    val sh = simhash(df, idCol, textCol, nBits)
     val nBlocks = maxHamming + 1
     require(nBits % nBlocks == 0, s"nBits=$nBits not divisible by $nBlocks")
     val width = nBits / nBlocks
@@ -1321,9 +1263,9 @@ object Dedup {
     * it bit-for-bit (the byte-level Rabin–Karp in [[fingerprintGroups]]
     * is Spark-native codegen and has no cross-engine twin). Documents
     * too short to shingle fall back to sha256 of the whole text, so
-    * every document lands in exactly one group. Same trade as
-    * [[simhashPortable]]: the native variant is the production-fast
-    * path, this one feeds cross-engine verification gates.
+    * every document lands in exactly one group. The native variant is
+    * the production-fast path; this one feeds cross-engine
+    * verification gates.
     */
   def fingerprintGroupsPortable(df: DataFrame, idCol: String,
                                 textCol: String): DataFrame = {

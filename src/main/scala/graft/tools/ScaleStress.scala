@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     the literal path sets, not inferred from timing.
   *
   * Prints one JSON line; numbers land in docs/SCALE.md. Not part of
-  * the shipped library (same status as [[MiniBench]]).
+  * the shipped library (same status as [[Profile]]).
   *
   * `sbt 'runMain graft.tools.ScaleStress /root/testdata/sf0.1 /tmp/graft-sf1'`
   */

@@ -15,6 +15,14 @@ object GraftSqlBridge {
   def toExpression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** Block until every event posted so far has reached the session's
+    * listeners — the listener bus delivers asynchronously, so a
+    * profiler reads its counters only after this (`waitUntilEmpty` is
+    * `private[spark]`, hence bridged).
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** A DataFrame over an unresolved logical plan — what lets the DML
     * router carry an `INSERT INTO ... SELECT` statement's query
     * subtree into its command and analyze it at execution

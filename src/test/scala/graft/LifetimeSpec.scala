@@ -133,7 +133,7 @@ class LifetimeSpec extends AnyFunSuite {
     assert(java.nio.file.Files.isDirectory(root),
       s"run from the project root: $root not found")
     val raw = """\.persist\(|\.cache\(\)|\.localCheckpoint\(|createTempDirectory""".r
-    val exempt = Set("graft/Checkpoints.scala", "graft/tools/Explore.scala")
+    val exempt = Set("graft/Checkpoints.scala")
     val offenders = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(p => exempt.exists(e => p.endsWith(e)))
