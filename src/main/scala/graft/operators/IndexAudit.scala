@@ -270,6 +270,29 @@ object IndexAudit {
   // generation is GONE (the serving table is lost) and a future gen
   // the gen=current+1 rule cannot produce (tampering/FS damage).
 
+  /** The fsck's view of `<root>/_current`: whether a crashed swap's
+    * `.next` was present (recorded BEFORE the committed read heals it,
+    * so the finding survives its own remediation), the pointer state
+    * (Left = CORRUPT bytes, classified instead of crashed on — an fsck
+    * must report the damage it exists to diagnose; Right(None) =
+    * never published), and the recorded keep and grace.
+    */
+  private def pointerState(fs: org.apache.hadoop.fs.FileSystem,
+                           root: String)
+      : (Boolean, Either[Unit, Option[Long]], Option[Int], Option[Long]) = {
+    import graft.sources.Generations
+    val swapResidue =
+      fs.exists(new org.apache.hadoop.fs.Path(s"$root/_current.next"))
+    Generations.committed(fs, Generations.pointer(root)) match {
+      case None => (swapResidue, Right(None), None, None)
+      case Some(raw) => Generations.parsedGen(raw) match {
+        case Some(g) => (swapResidue, Right(Some(g)),
+          Generations.parsedKeep(raw), Generations.parsedGrace(raw))
+        case None => (swapResidue, Left(()), None, None)
+      }
+    }
+  }
+
   /** Audit a [[graft.sources.SnapshotStore]] root; one
     * [[IndexProtocol.AuditFinding]] per entity, deterministic order.
     * Pure metadata cost — one pointer read + one listing.
@@ -332,27 +355,8 @@ object IndexAudit {
       : Seq[IndexProtocol.AuditFinding] = {
     import IndexProtocol.AuditFinding
     val fs = graft.sources.Tables.fsFor(spark, root)
-    val ptr = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val swapResidue = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$root/_current.next"))
-    // the committed read self-heals the crashed-swap form exactly as
-    // every reader does; the residue is recorded first so the finding
-    // survives its own remediation. CORRUPT pointer bytes (no
-    // parseable gen= line) classify instead of crashing — an fsck
-    // must report the damage it exists to diagnose; Left = corrupt
-    graft.sources.MetaSwap.heal(fs, ptr)
-    val (ptrState, persistedKeep, persistedGrace) =
-      if (!fs.exists(ptr))
-        (Right(None): Either[Unit, Option[Long]], None, None)
-      else {
-        val raw = graft.sources.MetaSwap.readCommitted(fs, ptr)
-        graft.sources.SnapshotStore.parsedGen(raw) match {
-          case Some(g) => (Right(Some(g)),
-            graft.sources.SnapshotStore.parsedKeep(raw),
-            graft.sources.SnapshotStore.parsedGrace(raw))
-          case None => (Left(()), None, None)
-        }
-      }
+    val (swapResidue, ptrState, persistedKeep, persistedGrace) =
+      pointerState(fs, root)
     val cur = ptrState.toOption.flatten
     // the retention window rides the pointer bytes since r13, so the
     // audit is self-sufficient; an explicit caller `keep` overrides
@@ -388,28 +392,21 @@ object IndexAudit {
     // repair must not reclaim it. Ref rows classify the markers
     // themselves; branch-copy DIRECTORIES (`r-<name>-<seq>`) classify
     // below like generations do.
-    val refsParsed = graft.sources.ManifestStore
-      .rawRefs(fs, root).toSeq.sortBy(_._1)
-      .map { case (n, b) =>
-        n -> graft.sources.ManifestStore.parsedRef(b) }
-    val pinnedGens: Set[Long] = refsParsed.collect {
-      case (_, Some(graft.sources.ManifestStore.TagRef(g, _))) => g
-      case (_, Some(graft.sources.ManifestStore
-        .BranchRef(0L, b, _))) => b
-    }.toSet
+    import graft.sources.Generations
+    val refsParsed = Generations.rawRefs(fs, root).toSeq.sortBy(_._1)
+      .map { case (n, b) => n -> Generations.parsedRef(b) }
+    val pinnedGens = Generations.pinned(refsParsed.flatMap(_._2))
     val branchDirs: Seq[(String, String, Long)] =
       if (!fs.exists(base)) Seq.empty
       else fs.listStatus(base).toSeq.map(_.getPath.getName)
-        .flatMap(n => graft.sources.ManifestStore.parseBranchToken(n)
+        .flatMap(n => Generations.parseBranchToken(n)
           .map(t => (n, t._1, t._2)))
     val branchHeads: Map[String, Long] = refsParsed.collect {
-      case (n, Some(graft.sources.ManifestStore
-        .BranchRef(h, _, _))) => n -> h
+      case (n, Some(Generations.BranchRef(h, _, _))) => n -> h
     }.toMap
     val refRows = refsParsed.map {
       case (n, None) => AuditFinding("ref", n, "corrupt", false)
-      case (n, Some(graft.sources.ManifestStore
-          .BranchRef(h, b, _))) =>
+      case (n, Some(Generations.BranchRef(h, b, _))) =>
         if (h == 0L) {
           if (gens.contains(b)) AuditFinding("ref", n, "branch_ok",
             true)
@@ -417,7 +414,7 @@ object IndexAudit {
         } else if (branchDirs.exists(d => d._2 == n && d._3 == h))
           AuditFinding("ref", n, "branch_ok", true)
         else AuditFinding("ref", n, "missing_head", false)
-      case (n, Some(graft.sources.ManifestStore.TagRef(g, _))) =>
+      case (n, Some(Generations.TagRef(g, _))) =>
         if (gens.contains(g))
           AuditFinding("ref", n, "tag_ok", true)
         else AuditFinding("ref", n, "missing_target", false)
@@ -533,24 +530,10 @@ object IndexAudit {
                          nowMs: Long = System.currentTimeMillis())
       : Seq[IndexProtocol.AuditFinding] = {
     import IndexProtocol.AuditFinding
-    import graft.sources.{ManifestStore, MetaSwap, SnapshotStore}
+    import graft.sources.{Generations, ManifestStore, MetaSwap}
     val fs = graft.sources.Tables.fsFor(spark, root)
-    val ptr = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val swapResidue = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$root/_current.next"))
-    MetaSwap.heal(fs, ptr)
-    val (ptrState, persistedKeep, persistedGrace) =
-      if (!fs.exists(ptr))
-        (Right(None): Either[Unit, Option[Long]], None, None)
-      else {
-        val raw = MetaSwap.readCommitted(fs, ptr)
-        SnapshotStore.parsedGen(raw) match {
-          case Some(g) => (Right(Some(g)),
-            SnapshotStore.parsedKeep(raw),
-            SnapshotStore.parsedGrace(raw))
-          case None => (Left(()), None, None)
-        }
-      }
+    val (swapResidue, ptrState, persistedKeep, persistedGrace) =
+      pointerState(fs, root)
     val cur = ptrState.toOption.flatten
     val corrupt = ptrState.isLeft
     val effKeep = persistedKeep.getOrElse(0)
@@ -586,11 +569,7 @@ object IndexAudit {
     // generation (or a fresh branch's base) beyond the keep window is
     // "ref_pinned" — deliberate retention, NOT a crashed prune's
     // over_retained leftover (which repair would reclaim)
-    val pinnedGens: Set[Long] = ManifestStore.rawRefs(fs, root)
-      .values.flatMap(ManifestStore.parsedRef).collect {
-        case ManifestStore.TagRef(g, _) => g
-        case ManifestStore.BranchRef(0L, base, _) => base
-      }.toSet
+    val pinnedGens = Generations.pinned(Generations.refs(fs, root).values)
     val manifestRows = gens.flatMap { g =>
       val m0 = parsed(g)
       val status = cur match {
@@ -655,7 +634,7 @@ object IndexAudit {
     // is a READABLE line, not just a marker. Corrupt markers are
     // damage (the reference set becomes unknowable, which also
     // suspends prune's sweeps).
-    val refsRaw = ManifestStore.rawRefs(fs, root)
+    val refsRaw = Generations.rawRefs(fs, root)
     def branchHeadParsed(name: String, h: Long)
         : Option[graft.sources.ManifestStore.GenFile] = {
       val p = new org.apache.hadoop.fs.Path(
@@ -667,15 +646,15 @@ object IndexAudit {
     }
     val refRows = refsRaw.toSeq.sortBy(_._1).flatMap {
       case (name, bytes) =>
-        ManifestStore.parsedRef(bytes) match {
+        Generations.parsedRef(bytes) match {
           case None =>
             Seq(AuditFinding("ref", name, "corrupt", false))
-          case Some(ManifestStore.TagRef(g, _)) =>
+          case Some(Generations.TagRef(g, _)) =>
             if (gens.contains(g) && parsed(g).isDefined)
               Seq(AuditFinding("ref", name, "tag_ok", true))
             else
               Seq(AuditFinding("ref", name, "missing_target", false))
-          case Some(ManifestStore.BranchRef(h, base, _)) =>
+          case Some(Generations.BranchRef(h, base, _)) =>
             val headFile =
               if (h == 0L) {
                 if (gens.contains(base)) parsed(base) else None
@@ -707,8 +686,8 @@ object IndexAudit {
     // reference pool files too, so they join the set — a file whose
     // only reference is a living branch is NOT an orphan)
     val branchHeadEntries = refsRaw.toSeq.flatMap { case (name, b) =>
-      ManifestStore.parsedRef(b) match {
-        case Some(ManifestStore.BranchRef(h, _, _)) if h >= 1L =>
+      Generations.parsedRef(b) match {
+        case Some(Generations.BranchRef(h, _, _)) if h >= 1L =>
           branchHeadParsed(name, h).toSeq.flatMap(gf =>
             ManifestStore.assembleLenient(fs, root, gf)._1
               .map(_.relPath))
@@ -877,7 +856,7 @@ object IndexAudit {
               !st.getPath.getName.endsWith(".next"))
             .filter(st =>
               st.getPath.getName.toLongOption.isDefined ||
-                ManifestStore.parseBranchToken(st.getPath.getName)
+                graft.sources.Generations.parseBranchToken(st.getPath.getName)
                   .isDefined)
             .flatMap { st =>
               try ManifestStore.assembleLenient(fs, root,

@@ -81,7 +81,7 @@ object ChangeFeed {
     val p = cursorPath(checkpointDir)
     MetaSwap.heal(fs, p)
     if (!fs.exists(p)) None
-    else SnapshotStore.parsedGen(MetaSwap.readCommitted(fs, p))
+    else Generations.parsedGen(MetaSwap.readCommitted(fs, p))
       .orElse(throw new IllegalStateException(
         s"malformed change-feed cursor at $p: no parseable gen= line"))
   }

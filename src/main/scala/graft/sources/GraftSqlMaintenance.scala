@@ -75,8 +75,8 @@ case class GraftOptimizeCommand(table: Seq[String],
     // (the keep= the pointer carries) — stamping a default here
     // would silently widen or narrow the operator's window
     val fs = Tables.fsFor(spark, target.root)
-    val keep = SnapshotStore.parsedKeep(MetaSwap.readCommitted(fs,
-      new Path(s"${target.root}/_current"))).getOrElse(3)
+    val keep = Generations.parsedKeep(MetaSwap.readCommitted(fs,
+      Generations.pointer(target.root))).getOrElse(3)
     val rewritten =
       if (sortCols.isEmpty)
         ManifestStore.compactSmallPartitions(spark, target.root,

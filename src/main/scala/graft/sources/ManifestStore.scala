@@ -4,11 +4,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** S20 — MANIFEST TABLE: the snapshot table ([[SnapshotStore]])
-  * restated with FILE-LEVEL REUSE between generations — the Iceberg
-  * trick, on the repo's own marker protocol. [[SnapshotStore]] writes
-  * every generation as a complete physical copy, which is the right
-  * cost for a bounded dimension but the wrong one for a large fact:
+/** S20 — MANIFEST TABLE: the S19 snapshot table with FILE-LEVEL
+  * REUSE between generations — the Iceberg trick, on the shared
+  * [[Generations]] protocol (pointer, commit, refs, expire); this
+  * object is the layout. The snapshot table writes every generation
+  * as a complete physical copy, which is the right cost for a bounded
+  * dimension but the wrong one for a large fact:
   * a daily promotion that changes one partition pays an O(table)
   * write, and `keep = N` retains N full copies. Here a generation is
   * a MANIFEST — a small text file listing, per partition value, the
@@ -39,12 +40,11 @@ import org.apache.spark.sql.functions.col
   *  - `_manifests/<gen>` — the generation: a header (partition
   *    column, schema DDL) plus one `(value, relative file path)` line
   *    per data file, possibly spanning MANY write directories.
-  *  - `_current` — the serving pointer (`gen=`/`keep=` lines),
-  *    committed via the [[MetaSwap]] CAS exactly like
-  *    [[SnapshotStore]]'s: racing promotions fail loudly
+  *  - `_current` — the serving pointer, committed through the
+  *    [[Generations]] CAS: racing promotions fail loudly
   *    (single-logical-promoter), readers never see a gap.
   *
-  * Crash honesty (the [[SnapshotStore]] contract, file-granular): a
+  * Crash honesty (the snapshot table's contract, file-granular): a
   * publish stages its write directory, audits the staged bytes
   * (C11, blocking), writes the manifest, and only then repoints — a
   * crash anywhere before the repoint leaves residue nothing points
@@ -182,60 +182,36 @@ object ManifestStore {
     if (!byPrefix) partition
     else partition.split(TupleSep, -1).head
 
-  // ---- EXCLUSIVE STAGING LOCK --------------------------------------
-  // The pointer CAS makes COMMITS safe under concurrency, but two
-  // writers that both planned from generation N stage into the SAME
-  // `_writes/<N+1>` directory — overwrite-mode staging then deletes
-  // the other writer's in-flight (or even just-committed) files
-  // before any CAS can catch it. True-concurrency stress surfaced
-  // exactly that interleaving, so staging takes a per-token OWNED
-  // lock ([[StagingLock]], shared with the snapshot layout): held
-  // across stage + pointer swap, re-validating the planned-from
-  // pointer INSIDE the lock, with ownership VERIFIED again right
-  // before every commit so a stolen lock (crash recovery after the
-  // lease) fails the victim typed instead of letting two stagers
-  // overwrite each other.
+  // Staging locks live beside the write directories
+  // (`_writes/.lock-<token>`): two writers that both planned from
+  // generation N stage into the SAME `_writes/<N+1>` — the shared
+  // commit ([[Generations]]) holds the token's lock across stage +
+  // pointer swap and re-validates the planned-from pointer inside it.
+  private val layout = Generations.Layout("_writes", "manifest table",
+    "IndexAudit.auditManifestTable",
+    (fs, root, g) => fs.exists(manifestPath(root, g)), prune)
 
-  private val StagingLeaseMs = StagingLock.LeaseMs
-
-  private def lockPath(root: String, token: String) =
-    new Path(s"$root/_writes/.lock-$token")
-
-  private def acquireStagingLock(fs: org.apache.hadoop.fs.FileSystem,
-                                 root: String,
-                                 token: String): Array[Byte] =
-    StagingLock.acquire(fs, lockPath(root, token),
-      s"generation $token of $root (_writes/.lock-$token)")
-
-  private def verifyStagingLock(fs: org.apache.hadoop.fs.FileSystem,
-                                root: String, token: String,
-                                owner: Array[Byte]): Unit =
-    StagingLock.verify(fs, lockPath(root, token), owner,
-      s"generation $token of $root (_writes/.lock-$token)")
-
-  private def releaseStagingLock(fs: org.apache.hadoop.fs.FileSystem,
-                                 root: String, token: String): Unit =
-    StagingLock.release(fs, lockPath(root, token))
-
-  private def pointer(root: String) = new Path(s"$root/_current")
   private def manifestPath(root: String, gen: Long) =
     new Path(s"$root/_manifests/$gen")
-  private def groupDir(root: String, gen: Long) =
-    s"$root/_manifests/$gen.d"
   private def writesDir(root: String, gen: Long) =
     s"$root/_writes/$gen"
 
   /** The committed generation the pointer serves, if the table has
     * ever been published (self-heals a crashed swap first).
     */
-  def currentGen(spark: SparkSession, root: String): Option[Long] = {
-    val fs = Tables.fsFor(spark, root)
-    val p = pointer(root)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) None
-    else SnapshotStore.parsedGen(MetaSwap.readCommitted(fs, p))
-      .orElse(throw new IllegalStateException(
-        "malformed manifest-table pointer: no parseable gen= line"))
+  def currentGen(spark: SparkSession, root: String): Option[Long] =
+    Generations.currentGen(Tables.fsFor(spark, root), root, layout)
+
+  /** The serving generation and the pointer bytes it was read from —
+    * the CAS expectation of a writer that plans from this read.
+    */
+  private def servingPointer(spark: SparkSession,
+                             root: String): (Long, Array[Byte]) = {
+    val raw = Generations.committed(Tables.fsFor(spark, root),
+      Generations.pointer(root)).getOrElse(throw new IllegalStateException(
+        s"no published manifest table at $root — bootstrap with " +
+          "ManifestStore.publish first"))
+    (Generations.genOf(raw, layout), raw)
   }
 
   // ---- manifest (de)serialization --------------------------------
@@ -433,7 +409,7 @@ object ManifestStore {
   /** Generation `gen`'s manifest. Refuses with the typed
     * [[graft.SnapshotUnavailable]] when `gen` never committed (a
     * crashed publish's manifest residue is NOT readable) or aged past
-    * the retention window — [[SnapshotStore.readAt]]'s contract.
+    * the retention window — the snapshot table's `readAt` contract.
     */
   def manifestAt(spark: SparkSession, root: String,
                  gen: Long): Manifest = {
@@ -664,8 +640,8 @@ object ManifestStore {
     readEntries(spark, root, m.schemaDdl, m.entries, m.renames)
   }
 
-  /** TIME-based travel ([[SnapshotStore.genAsOfTimestamp]] on the
-    * manifest layout): the newest retained generation whose
+  /** TIME-based travel (the snapshot table's `genAsOfTimestamp` on
+    * the manifest layout): the newest retained generation whose
     * manifest's `published=` instant is at-or-before `tsMs`.
     * Resolution parses the retained manifests' headers — bounded by
     * `keep`, metadata only. Typed refusal when T predates every
@@ -1005,10 +981,7 @@ object ManifestStore {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val fs = Tables.fsFor(spark, root)
     def attempt(): Long = {
-      val gen = currentGen(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no published manifest table at $root"))
-      val raw = MetaSwap.readCommitted(fs, pointer(root))
+      val (gen, raw) = servingPointer(spark, root)
       val m = manifestAt(spark, root, gen)
       val affected = readAt(spark, root, gen).filter(predicate)
         .select(partKeyExpr(m.partCol)).distinct()
@@ -1106,13 +1079,9 @@ object ManifestStore {
                                         keep: Int, retainMs: Long,
                                         beforePublish: () => Unit): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    require(keep >= 1, s"keep must be >= 1, got $keep")
     val fs = Tables.fsFor(spark, root)
     def attempt(): Long = {
-      val gen = currentGen(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no published manifest table at $root"))
-      val raw = MetaSwap.readCommitted(fs, pointer(root))
+      val (gen, raw) = servingPointer(spark, root)
       val gf = genFileAt(spark, root, gen)
       val m = assemble(fs, root, gf)
       val (dels, datas) = m.entries.partition(isDeleteEntry)
@@ -1134,17 +1103,12 @@ object ManifestStore {
       // SQL DELETE semantics: a NULL predicate keeps the row
       val matched = live.filter(coalesce(predicate, lit(false)))
       if (matched.head(1).isEmpty) return gen
-      val newGen = gen + 1L
-      val token = newGen.toString
-      val lockOwner = acquireStagingLock(fs, root, token)
-      try {
-        // re-validate inside the lock (the publishImpl rule)
-        if (!java.util.Arrays.equals(
-            MetaSwap.readCommitted(fs, pointer(root)), raw))
-          throw new MetaSwap.CasFailed(
-            s"concurrent promotion committed at $root while this " +
-              "DV delete acquired the staging lock — nothing was " +
-              "staged or lost; re-read and re-run")
+      var affected = Set.empty[String]
+      def rebase(lost: MetaSwap.CasFailed) =
+        new RebaseSignal(gen, affected, lost)
+      Generations.commitGeneration(fs, root, layout, Some(raw), keep,
+        retainMs, beforePublish, rebase) { staging =>
+        val newGen = staging.gen
         // stage the vectors: one partitioned write of O(matched)
         // rows under the generation's _deletes dir
         val dvDir = s"${writesDir(root, newGen)}/$DeleteDirName"
@@ -1174,7 +1138,9 @@ object ManifestStore {
           }
         if (dvEntries.isEmpty)
           // the predicate matched between plan and stage only via
-          // race — nothing staged, serve the current generation
+          // race — nothing staged: serve the current generation (the
+          // return leaves the commit uncommitted; its finally releases
+          // the lock)
           return gen
         val publishedMs = System.currentTimeMillis()
         // the new generation carries EVERY prior entry verbatim and
@@ -1211,22 +1177,8 @@ object ManifestStore {
               serializeList(lg.copy(publishedMs = publishedMs,
                 refs = refs.sortBy(_.group))))
         }
-        beforePublish()
-        val effRetain =
-          if (retainMs > 0) retainMs
-          else SnapshotStore.parsedGrace(raw).getOrElse(0L)
-        val bytes = s"gen=$newGen\nkeep=$keep\ngrace=$effRetain\n"
-          .getBytes("UTF-8")
-        verifyStagingLock(fs, root, token, lockOwner)
-        try MetaSwap.swap(fs, pointer(root), bytes, raw)
-        catch {
-          case e: MetaSwap.CasFailed =>
-            val affected = dvEntries.map(_.partition).toSet
-            throw new RebaseSignal(gen, affected, e)
-        }
-        prune(fs, root, newGen, keep, effRetain)
-        newGen
-      } finally releaseStagingLock(fs, root, token)
+        affected = dvEntries.map(_.partition).toSet
+      }
     }
     withDisjointRebase(spark, root)(() => attempt())
   }
@@ -1287,10 +1239,7 @@ object ManifestStore {
       s"duplicate assignment targets: ${set.map(_._1).mkString(",")}")
     val fs = Tables.fsFor(spark, root)
     def attempt(): Long = {
-    val gen = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published manifest table at $root"))
-    val raw = MetaSwap.readCommitted(fs, pointer(root))
+    val (gen, raw) = servingPointer(spark, root)
     val m = manifestAt(spark, root, gen)
     require(!set.exists(kv => partColsOf(m.partCol).contains(kv._1)),
       s"cannot assign a partition column (${m.partCol}): a " +
@@ -1366,8 +1315,8 @@ object ManifestStore {
     * as one): older manifests are pruned, then every file no
     * surviving manifest references is deleted — so retention holds
     * deltas, never `keep` full copies. `retainMs` is the WALL-CLOCK
-    * grace floor beside it ([[SnapshotStore.publish]]'s r14 reader
-    * contract): a superseded manifest also survives until at least
+    * grace floor beside it (the r14 reader contract of
+    * [[Generations]]): a superseded manifest also survives until at least
     * that many ms after its publish instant (recorded in the
     * manifest's own `published=` header), and while it survives,
     * every file it references survives with it. The floor is a table
@@ -1391,8 +1340,7 @@ object ManifestStore {
       statsCols = statsCols, manifestGroups = manifestGroups)
 
   /** [[publish]] with a crash-injection hook fired between the staged
-    * write+audit+manifest and the pointer swap — the
-    * [[SnapshotStore.publishImpl]] pattern, so the no-serving-gap and
+    * write+audit+manifest and the pointer swap, so the no-serving-gap and
     * residue-refusal contracts are TESTED, not asserted.
     *
     * `expectPointer` is a CAS expectation captured when the CALLER
@@ -1421,73 +1369,16 @@ object ManifestStore {
                                    Set.empty,
                                  statsCols: Seq[String] = Nil,
                                  manifestGroups: Int = 0): Long = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    require(retainMs >= 0, s"retainMs must be >= 0, got $retainMs")
     val fs = Tables.fsFor(spark, root)
-    val p = pointer(root)
-    MetaSwap.heal(fs, p)
-    val committedNow =
-      if (fs.exists(p)) Some(MetaSwap.readCommitted(fs, p)) else None
-    expectPointer.foreach { exp =>
-      if (!committedNow.exists(java.util.Arrays.equals(_, exp)))
-        throw new MetaSwap.CasFailed(
-          s"concurrent promotion detected at $root: the serving " +
-            "pointer changed since this writer read the table it " +
-            "planned from — nothing was staged or lost; re-read and " +
-            "re-run (mergePartitions rebases disjoint races itself)")
-    }
-    val prior = expectPointer.orElse(committedNow)
-    val priorGen = prior.map(b => SnapshotStore.parsedGen(b).getOrElse(
-      throw new IllegalStateException(
-        "malformed manifest-table pointer: no parseable gen= line")))
-    val priorFile = priorGen.map(g =>
-      parseGenFile(MetaSwap.readCommitted(fs, manifestPath(root, g))))
-    val gen = priorGen.getOrElse(0L) + 1L
-    val lockOwner = acquireStagingLock(fs, root, gen.toString)
-    try {
-      // RE-VALIDATE inside the lock: a winner may have committed this
-      // very generation between the read above and the lock — staging
-      // now would overwrite its committed files. Nothing has staged
-      // yet, so the refusal is free.
-      val nowBytes =
-        if (fs.exists(p)) Some(MetaSwap.readCommitted(fs, p)) else None
-      val unchanged = (prior, nowBytes) match {
-        case (Some(a), Some(b)) => java.util.Arrays.equals(a, b)
-        case (None, None)       => true
-        case _                  => false
-      }
-      if (!unchanged) throw new MetaSwap.CasFailed(
-        s"concurrent promotion committed at $root while this writer " +
-          "acquired the staging lock — nothing was staged or lost; " +
-          "re-read and re-run")
+    val planned = Generations.plannedFrom(fs, root, expectPointer)
+    val priorFile = planned.map(b => parseGenFile(MetaSwap.readCommitted(
+      fs, manifestPath(root, Generations.genOf(b, layout)))))
+    Generations.commitGeneration(fs, root, layout, planned, keep,
+      retainMs, beforeRepoint) { staging =>
       stageGeneration(spark, df, root, partCol, expectations,
-        replaceAll, coalescePartitions, gen.toString, priorFile,
+        replaceAll, coalescePartitions, staging.token, priorFile,
         replacedPartitions, statsCols, manifestGroups)
-      beforeRepoint()
-      // grace INHERITANCE: retainMs > 0 SETS the table's wall-clock
-      // floor (raise or lower, an explicit operator decision); the
-      // default 0 means "unspecified" and INHERITS the grace the prior
-      // pointer committed — so a maintenance publish (merge, OPTIMIZE,
-      // streaming promotion) can never silently prune inside the
-      // reader window an earlier publish promised
-      val effRetain =
-        if (retainMs > 0) retainMs
-        else prior.flatMap(SnapshotStore.parsedGrace).getOrElse(0L)
-      val bytes = s"gen=$gen\nkeep=$keep\ngrace=$effRetain\n"
-        .getBytes("UTF-8")
-      // ownership check before the commit: a stage that outlived the
-      // lease and lost its lock to a recoverer must fail TYPED here,
-      // never repoint over the new holder's staging
-      verifyStagingLock(fs, root, gen.toString, lockOwner)
-      prior match {
-        case Some(expect) => MetaSwap.swap(fs, p, bytes, expect)
-        case None         => MetaSwap.swap(fs, p, bytes)
-      }
-      // retention AFTER the repoint: a crash anywhere above leaves
-      // residue nothing points at, never a gap
-      prune(fs, root, gen, keep, effRetain)
-      gen
-    } finally releaseStagingLock(fs, root, gen.toString)
+    }
   }
 
   /** Stage `df` and write the generation file for `token` — the
@@ -1754,134 +1645,30 @@ object ManifestStore {
   // line of manifests sharing the same immutable file pool, so a
   // write-audit-publish cycle can stage whole promotions on a branch
   // (readable, auditable, time-shared files) and FAST-FORWARD main to
-  // the branch head without rewriting a byte of data. Refs live as
-  // `_refs/<name>` markers committed through [[MetaSwap]]; branch
-  // generations are `_manifests/r-<name>-<seq>` over staged writes in
-  // `_writes/r-<name>-<seq>` — namespaced so they can NEVER collide
-  // with main's numeric gen allocation, which is what lets a branch
-  // publish run concurrently with a main promotion (disjoint commit
-  // targets, disjoint staging). Retention treats ref-reachable
+  // the branch head without rewriting a byte of data. The `_refs/`
+  // markers, their codec and the branch commit are [[Generations]]';
+  // branch generations are `_manifests/r-<name>-<seq>` over staged
+  // writes in `_writes/r-<name>-<seq>` — namespaced so they can NEVER
+  // collide with main's numeric gen allocation, which is what lets a
+  // branch publish run concurrently with a main promotion (disjoint
+  // commit targets, disjoint staging). Retention treats ref-reachable
   // manifests as surviving: tagged gens (and a fresh branch's base)
   // are pinned, branch heads join the reference set for the file and
   // group sweeps, and a DROPPED ref's private files are reclaimed by
-  // the next main publish's prune. The snapshot table gets no branch
-  // form by design: its generations are full copies, so "branching"
-  // it would just be a second table.
+  // the next main publish's prune.
 
-  /** A named ref, parsed from `_refs/<name>`. */
-  sealed trait Ref { def createdMs: Long }
-
-  /** An immutable pin of a committed generation. */
-  final case class TagRef(gen: Long, createdMs: Long) extends Ref
-
-  /** An independent line of manifests. `head` is the branch's own
-    * publish sequence (0 = no branch publishes yet — the branch
-    * serves `base`); `base` is the MAIN generation it was forked
-    * from.
-    */
-  final case class BranchRef(head: Long, base: Long,
-                             createdMs: Long) extends Ref
-
-  private def refPath(root: String, name: String) =
-    new Path(s"$root/_refs/$name")
-
-  private def branchToken(name: String, seq: Long) = s"r-$name-$seq"
-
-  /** Parse `r-<name>-<seq>` (the LAST dash splits — names may carry
-    * dashes). None for anything that is not a branch token.
-    */
-  private[graft] def parseBranchToken(s: String)
-      : Option[(String, Long)] =
-    if (!s.startsWith("r-")) None
-    else {
-      val body = s.stripPrefix("r-")
-      val i = body.lastIndexOf('-')
-      if (i <= 0) None
-      else body.drop(i + 1).toLongOption.map(k => (body.take(i), k))
-    }
-
-  private[sources] def requireRefName(name: String): Unit = {
-    require(name.matches("[A-Za-z0-9][A-Za-z0-9_.-]*"),
-      s"ref name '$name' must match [A-Za-z0-9][A-Za-z0-9_.-]*")
-    // '.next' is MetaSwap's temp-marker suffix: a committed ref named
-    // 'foo.next' would read to rawRefs/heal as ref 'foo's crashed swap
-    // (silently renamed to '_refs/foo') and dropRef("foo") would
-    // delete it — a legally-named ref destroyed through normal calls
-    require(!name.endsWith(".next"),
-      s"ref name '$name' collides with the swap protocol's temp-" +
-        "marker suffix ('.next') — pick another name")
-  }
-
-  private[graft] def serializeRef(r: Ref): Array[Byte] = (r match {
-    case TagRef(g, c) => s"kind=tag\ngen=$g\ncreated=$c\n"
-    case BranchRef(h, b, c) =>
-      s"kind=branch\nhead=$h\nbase=$b\ncreated=$c\n"
-  }).getBytes("UTF-8")
-
-  /** None for corrupt bytes — the fsck classifies, never crashes. */
-  private[graft] def parsedRef(bytes: Array[Byte]): Option[Ref] = {
-    def f(k: String) = new String(bytes, "UTF-8").linesIterator
-      .collectFirst { case s if s.startsWith(s"$k=") =>
-        s.stripPrefix(s"$k=").trim }
-    f("kind") match {
-      case Some("tag") => for {
-        g <- f("gen").flatMap(_.toLongOption)
-        c <- f("created").flatMap(_.toLongOption)
-      } yield TagRef(g, c)
-      case Some("branch") => for {
-        h <- f("head").flatMap(_.toLongOption)
-        b <- f("base").flatMap(_.toLongOption)
-        c <- f("created").flatMap(_.toLongOption)
-      } yield BranchRef(h, b, c)
-      case _ => None
-    }
-  }
+  type Ref = Generations.Ref
+  type TagRef = Generations.TagRef
+  val TagRef = Generations.TagRef
+  type BranchRef = Generations.BranchRef
+  val BranchRef = Generations.BranchRef
 
   /** Every ref of the table, healed and parsed. Corrupt markers are
-    * OMITTED here (the fsck reports them); the retention sweeps use
-    * [[rawRefs]] and SUSPEND on damage instead.
+    * OMITTED here (the fsck reports them); the retention sweeps
+    * SUSPEND on damage instead.
     */
   def refs(spark: SparkSession, root: String): Map[String, Ref] =
-    rawRefs(Tables.fsFor(spark, root), root).flatMap {
-      case (n, bytes) => parsedRef(bytes).map(n -> _)
-    }
-
-  /** (name → committed marker bytes) of every ref. HEALS crashed
-    * swaps first: a ref CAS that died between its delete and rename
-    * leaves only `<name>.next` — skipping it here would make the
-    * branch invisible to prune (which would then reclaim the
-    * branch's live files) while the next [[refAt]] resurrects the
-    * ref pointing at swept data. Every reader of the full ref set
-    * must see what a healed read would see.
-    */
-  private[graft] def rawRefs(fs: org.apache.hadoop.fs.FileSystem,
-                             root: String): Map[String, Array[Byte]] = {
-    val base = new Path(s"$root/_refs")
-    if (!fs.exists(base)) Map.empty
-    else fs.listStatus(base).toSeq
-      .filter(_.isFile)
-      .map(_.getPath.getName.stripSuffix(".next"))
-      .distinct
-      .flatMap { n =>
-        val p = refPath(root, n)
-        MetaSwap.heal(fs, p)
-        if (!fs.exists(p)) None
-        else Some(n -> MetaSwap.readCommitted(fs, p))
-      }.toMap
-  }
-
-  private[sources] def refAt(spark: SparkSession, root: String,
-                             name: String): Ref = {
-    val fs = Tables.fsFor(spark, root)
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) throw new graft.SnapshotUnavailable(
-      s"no ref '$name' at $root")
-    parsedRef(MetaSwap.readCommitted(fs, p)).getOrElse(
-      throw new IllegalStateException(
-        s"ref '$name' of $root is corrupt — run " +
-          "IndexAudit.auditManifestTable"))
-  }
+    Generations.refs(Tables.fsFor(spark, root), root)
 
   /** TAG `gen` (default: the serving generation) as `name`: the
     * generation's manifest — and every file it references — is
@@ -1889,29 +1676,9 @@ object ManifestStore {
     * by contract: an existing ref under the name refuses.
     */
   def tag(spark: SparkSession, root: String, name: String,
-          gen: Option[Long] = None): Long = {
-    requireRefName(name)
-    val fs = Tables.fsFor(spark, root)
-    val cur = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published manifest table at $root"))
-    val g = gen.getOrElse(cur)
-    // must be a committed, still-retained generation (genFileAt's
-    // refusal semantics do the checking)
-    genFileAt(spark, root, g)
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (fs.exists(p)) throw new IllegalStateException(
-      s"ref '$name' already exists at $root — refs are immutable; " +
-        "dropRef first to rename on purpose")
-    // create-EXCLUSIVE, not bare swap: two racing creators of the
-    // same name collide on the one stage file and one side fails
-    // typed, instead of last-writer-wins silently violating the
-    // refs-are-immutable contract
-    MetaSwap.create(fs, p, serializeRef(
-      TagRef(g, System.currentTimeMillis())))
-    g
-  }
+          gen: Option[Long] = None): Long =
+    Generations.createRef(Tables.fsFor(spark, root), root, layout, name,
+      gen)(g => TagRef(g, System.currentTimeMillis()))
 
   /** Create BRANCH `name` forked from `fromGen` (default: the serving
     * generation). Metadata-only — nothing is copied; until the first
@@ -1920,20 +1687,9 @@ object ManifestStore {
     */
   def branch(spark: SparkSession, root: String, name: String,
              fromGen: Option[Long] = None): Unit = {
-    requireRefName(name)
-    val fs = Tables.fsFor(spark, root)
-    val cur = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published manifest table at $root"))
-    val base = fromGen.getOrElse(cur)
-    genFileAt(spark, root, base)
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (fs.exists(p)) throw new IllegalStateException(
-      s"ref '$name' already exists at $root — refs are immutable; " +
-        "dropRef first to rename on purpose")
-    MetaSwap.create(fs, p, serializeRef(
-      BranchRef(0L, base, System.currentTimeMillis())))
+    Generations.createRef(Tables.fsFor(spark, root), root, layout, name,
+      fromGen)(g => BranchRef(0L, g, System.currentTimeMillis()))
+    ()
   }
 
   /** Drop ref `name`. A dropped TAG un-pins its generation (the
@@ -1942,13 +1698,12 @@ object ManifestStore {
     * prune — unless main fast-forwarded onto them, in which case the
     * file-level reference sweep keeps exactly the referenced ones.
     */
-  def dropRef(spark: SparkSession, root: String, name: String): Unit = {
-    val fs = Tables.fsFor(spark, root)
-    val p = refPath(root, name)
-    fs.delete(p, false)
-    fs.delete(new Path(p.getParent, p.getName + ".next"), false)
-    ()
-  }
+  def dropRef(spark: SparkSession, root: String, name: String): Unit =
+    Generations.dropRef(Tables.fsFor(spark, root), root, name)
+
+  private[sources] def refAt(spark: SparkSession, root: String,
+                             name: String): Ref =
+    Generations.refAt(Tables.fsFor(spark, root), root, name, layout)
 
   /** The branch's generation file: its own head manifest, or the base
     * generation's while head = 0.
@@ -1959,7 +1714,7 @@ object ManifestStore {
     else {
       val fs = Tables.fsFor(spark, root)
       val p = new Path(
-        s"$root/_manifests/${branchToken(name, b.head)}")
+        s"$root/_manifests/${Generations.branchToken(name, b.head)}")
       if (!fs.exists(p)) throw new graft.SnapshotUnavailable(
         s"branch '$name' of $root is missing its head manifest " +
           s"${p.getName} — run IndexAudit.auditManifestTable")
@@ -2009,47 +1764,28 @@ object ManifestStore {
                         Nil,
                       coalescePartitions: Boolean = true,
                       statsCols: Seq[String] = Nil,
-                      manifestGroups: Int = 0): Long = {
-    val fs = Tables.fsFor(spark, root)
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) throw new graft.SnapshotUnavailable(
-      s"no ref '$name' at $root")
-    val expect = MetaSwap.readCommitted(fs, p)
-    val b = parsedRef(expect) match {
-      case Some(br: BranchRef) => br
-      case Some(_: TagRef) => throw new IllegalStateException(
-        s"ref '$name' of $root is a TAG — tags are immutable pins; " +
-          "publish onto a branch")
-      case None => throw new IllegalStateException(
-        s"ref '$name' of $root is corrupt — run " +
-          "IndexAudit.auditManifestTable")
-    }
-    val priorFile = branchGenFile(spark, root, name, b)
-    val seq = b.head + 1L
-    val token = branchToken(name, seq)
-    val lockOwner = acquireStagingLock(fs, root, token)
-    try {
-      // re-validate the ref inside the lock (the publishImpl rule):
-      // a racing branch publish that committed this seq must fail
-      // this writer BEFORE its staging can overwrite anything
-      if (!java.util.Arrays.equals(MetaSwap.readCommitted(fs, p),
-          expect)) throw new MetaSwap.CasFailed(
-        s"concurrent publish committed on branch '$name' of $root " +
-          "while this writer acquired the staging lock — nothing " +
-          "was staged or lost; re-read and re-run")
+                      manifestGroups: Int = 0): Long =
+    Generations.commitToBranch(Tables.fsFor(spark, root), root, layout,
+      name) { (b, staging) =>
+      val priorFile = branchGenFile(spark, root, name, b)
       stageGeneration(spark, df, root, priorFile.partCol, expectations,
-        replaceAll = false, coalescePartitions,
-        token, Some(priorFile),
-        replacedPartitions = Set.empty, statsCols, manifestGroups)
-      // CAS against the marker bytes this publish planned from — a
-      // racing publish on the same branch fails loudly, its staged
-      // token left as residue the retry overwrites
-      verifyStagingLock(fs, root, token, lockOwner)
-      MetaSwap.swap(fs, p,
-        serializeRef(BranchRef(seq, b.base, b.createdMs)), expect)
-      seq
-    } finally releaseStagingLock(fs, root, token)
+        replaceAll = false, coalescePartitions, staging.token,
+        Some(priorFile), replacedPartitions = Set.empty, statsCols,
+        manifestGroups)
+    }
+
+  /** Write `gf` as generation `gen`'s file, restamped with the commit
+    * instant — the metadata-only commits (fast-forward, restore,
+    * rename) carry entry lines or group REFERENCES verbatim; those
+    * group files are immutable, so sharing them is free.
+    */
+  private def writeGenFile(fs: org.apache.hadoop.fs.FileSystem,
+                           root: String, gen: Long, gf: GenFile): Unit = {
+    val now = System.currentTimeMillis()
+    MetaSwap.swap(fs, manifestPath(root, gen), gf match {
+      case FlatGen(m) => serializeManifest(m.copy(publishedMs = now))
+      case lg: ListGen => serializeList(lg.copy(publishedMs = now))
+    })
   }
 
   /** FAST-FORWARD main to branch `name`'s head — the publish half of
@@ -2074,32 +1810,10 @@ object ManifestStore {
                     Nil,
                   keep: Int = 3, retainMs: Long = 0L,
                   force: Boolean = false): Long = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
     val fs = Tables.fsFor(spark, root)
-    val ptr = pointer(root)
-    MetaSwap.heal(fs, ptr)
-    val prior = MetaSwap.readCommitted(fs, ptr)
-    val mainGen = SnapshotStore.parsedGen(prior).getOrElse(
-      throw new IllegalStateException(
-        "malformed manifest-table pointer: no parseable gen= line"))
-    val refMarker = refPath(root, name)
-    MetaSwap.heal(fs, refMarker)
-    if (!fs.exists(refMarker)) throw new graft.SnapshotUnavailable(
-      s"no ref '$name' at $root")
-    val refBytes = MetaSwap.readCommitted(fs, refMarker)
-    val b = parsedRef(refBytes) match {
-      case Some(br: BranchRef) => br
-      case Some(_: TagRef) => throw new IllegalStateException(
-        s"ref '$name' of $root is a TAG — fast-forward needs a branch")
-      case None => throw new IllegalStateException(
-        s"ref '$name' of $root is corrupt — run " +
-          "IndexAudit.auditManifestTable")
-    }
-    if (!force && mainGen != b.base) throw new IllegalStateException(
-      s"cannot fast-forward $root to branch '$name': main is at " +
-        s"generation $mainGen but the branch forked from ${b.base} — " +
-        "promotions landed on main since; re-branch (or force = true " +
-        "to REPLACE main with the branch state)")
+    val (mainGen, prior) = servingPointer(spark, root)
+    val (b, refBytes) =
+      Generations.fastForwardSource(fs, root, name, layout, mainGen, force)
     val headFile = branchGenFile(spark, root, name, b)
     if (expectations.nonEmpty) {
       val m = assemble(fs, root, headFile)
@@ -2112,58 +1826,13 @@ object ManifestStore {
             s"${r.getLong(4)} violations").mkString(", ") +
           "; main untouched, branch left for inspection")
     }
-    val gen = mainGen + 1L
-    val effRetain =
-      if (retainMs > 0) retainMs
-      else SnapshotStore.parsedGrace(prior).getOrElse(0L)
-    // the staging LOCK on the target generation: a concurrent writer
-    // staging this same number holds it across its stage + swap, so
-    // the gen-file write below can never overwrite (or be overwritten
-    // by) a stager's manifest — and the pointer re-check inside the
-    // lock shrinks the racing-commit window to the microseconds
-    // MetaSwap documents (the publishImpl pattern)
-    val lockOwner = acquireStagingLock(fs, root, gen.toString)
-    try {
-    if (!java.util.Arrays.equals(MetaSwap.readCommitted(fs, ptr),
-        prior))
-      throw new MetaSwap.CasFailed(
-        s"concurrent promotion detected at $root: the serving " +
-          "pointer moved while the fast-forward audit ran — " +
-          "nothing was staged or lost; re-read and re-run")
-    val publishedMs = System.currentTimeMillis()
-    // the metadata-only promotion: the new main manifest carries the
-    // branch head's content verbatim (entry lines on a flat layout,
-    // group REFERENCES on a list layout — those group files are
-    // immutable and now shared between the branch and main)
-    val bytesOut = headFile match {
-      case FlatGen(m) => serializeManifest(
-        m.copy(publishedMs = publishedMs))
-      case lg: ListGen => serializeList(
-        lg.copy(publishedMs = publishedMs))
-    }
-    verifyStagingLock(fs, root, gen.toString, lockOwner)
-    MetaSwap.swap(fs, manifestPath(root, gen), bytesOut)
-    val ptrBytes = s"gen=$gen\nkeep=$keep\ngrace=$effRetain\n"
-      .getBytes("UTF-8")
-    MetaSwap.swap(fs, ptr, ptrBytes, prior)
-    } finally releaseStagingLock(fs, root, gen.toString)
+    val gen = Generations.commitGeneration(fs, root, layout, Some(prior),
+      keep, retainMs)(staging => writeGenFile(fs, root, staging.gen, headFile))
     // rebase the branch onto what main now serves, so the ref's
     // retention claims stay minimal and a later branch publish
-    // continues from the promoted state (CAS: a publish racing the
-    // fast-forward on this branch fails one side loudly). The
-    // promotion above is already COMMITTED — a lost rebase must say
-    // so instead of implying nothing happened.
-    try MetaSwap.swap(fs, refMarker,
-      serializeRef(BranchRef(b.head, gen, b.createdMs)), refBytes)
-    catch {
-      case _: MetaSwap.CasFailed => throw new MetaSwap.CasFailed(
-        s"fast-forward of $root to branch '$name' COMMITTED (main " +
-          s"now serves generation $gen), but a branch publish raced " +
-          "the ref rebase — the branch keeps its old base and now " +
-          "carries content main does not; re-branch from the new " +
-          "main, or fast-forward again with force = true")
-    }
-    prune(fs, root, gen, keep, effRetain)
+    // continues from the promoted state
+    Generations.rebaseBranch(fs, root, name, refBytes,
+      BranchRef(b.head, gen, b.createdMs), gen)
     gen
   }
 
@@ -2172,41 +1841,20 @@ object ManifestStore {
     * list as the table's NEXT generation — a rollback that never
     * rewrites, moves, or reads a data file, never renumbers history
     * (time travel over the bad generations keeps working until
-    * retention lapses them), and goes through the same pointer CAS
-    * as every promotion. The restored generation carries the old
-    * manifest's entries (or group references) verbatim, exactly the
-    * [[fastForward]] mechanism pointed at the past instead of a
-    * branch. Refuses typed when `gen` is residue or aged out
-    * ([[genFileAt]]'s contract).
+    * retention lapses them), and commits like every promotion (the
+    * staging lock, then the pointer CAS). The restored generation
+    * carries the old manifest's entries (or group references)
+    * verbatim, exactly the [[fastForward]] mechanism pointed at the
+    * past instead of a branch. Refuses typed when `gen` is residue or
+    * aged out ([[genFileAt]]'s contract).
     */
   def restore(spark: SparkSession, root: String, gen: Long,
               keep: Int = 3, retainMs: Long = 0L): Long = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
     val fs = Tables.fsFor(spark, root)
-    val ptr = pointer(root)
-    MetaSwap.heal(fs, ptr)
-    val prior = MetaSwap.readCommitted(fs, ptr)
-    val cur = SnapshotStore.parsedGen(prior).getOrElse(
-      throw new IllegalStateException(
-        "malformed manifest-table pointer: no parseable gen= line"))
+    val (_, prior) = servingPointer(spark, root)
     val past = genFileAt(spark, root, gen)
-    val next = cur + 1L
-    val publishedMs = System.currentTimeMillis()
-    val bytesOut = past match {
-      case FlatGen(m) => serializeManifest(
-        m.copy(publishedMs = publishedMs))
-      case lg: ListGen => serializeList(
-        lg.copy(publishedMs = publishedMs))
-    }
-    MetaSwap.swap(fs, manifestPath(root, next), bytesOut)
-    val effRetain =
-      if (retainMs > 0) retainMs
-      else SnapshotStore.parsedGrace(prior).getOrElse(0L)
-    MetaSwap.swap(fs, ptr,
-      s"gen=$next\nkeep=$keep\ngrace=$effRetain\n".getBytes("UTF-8"),
-      prior)
-    prune(fs, root, next, keep, effRetain)
-    next
+    Generations.commitGeneration(fs, root, layout, Some(prior), keep,
+      retainMs)(staging => writeGenFile(fs, root, staging.gen, past))
   }
 
   /** Explicit retention maintenance: run the prune NOW, against the
@@ -2218,18 +1866,8 @@ object ManifestStore {
     * expire_snapshots, under the same single-maintainer contract as
     * every maintenance entry).
     */
-  def expire(spark: SparkSession, root: String): Unit = {
-    val fs = Tables.fsFor(spark, root)
-    val ptr = pointer(root)
-    MetaSwap.heal(fs, ptr)
-    if (!fs.exists(ptr)) return
-    val raw = MetaSwap.readCommitted(fs, ptr)
-    val curOpt = SnapshotStore.parsedGen(raw)
-    if (curOpt.isEmpty) return // corrupt pointer: fsck territory
-    val keep = SnapshotStore.parsedKeep(raw).getOrElse(3)
-    val grace = SnapshotStore.parsedGrace(raw).getOrElse(0L)
-    prune(fs, root, curOpt.get, keep, grace)
-  }
+  def expire(spark: SparkSession, root: String): Unit =
+    Generations.expire(Tables.fsFor(spark, root), root, layout)
 
   /** Retention: drop manifests older than the window, then every
     * data file NO surviving manifest references — this is what makes
@@ -2259,16 +1897,8 @@ object ManifestStore {
     // for the reference sweeps. A corrupt ref marker makes the
     // reference set unknowable → SUSPEND everything (the r14 rule:
     // over-retention is the safe failure; fsck reports the damage).
-    val refByName: Map[String, Ref] = {
-      val raw = rawRefs(fs, root)
-      val parsed = raw.map { case (n, b) => n -> parsedRef(b) }
-      if (parsed.values.exists(_.isEmpty)) return
-      parsed.map { case (n, r) => n -> r.get }
-    }
-    val pinned: Set[Long] = refByName.values.collect {
-      case TagRef(g, _) => g
-      case BranchRef(0L, base, _) => base
-    }.toSet
+    val refByName = Generations.refsForPrune(fs, root).getOrElse(return)
+    val pinned = Generations.pinned(refByName.values)
     // the kept set is decided FIRST (generation window, wall-clock
     // grace, or a ref pin), and the file sweep is railed on exactly
     // that set — a retained manifest keeps every file it references,
@@ -2295,16 +1925,13 @@ object ManifestStore {
     // sweeps; a corrupt survivor suspends them.
     val branchManifests = fs.listStatus(mBase).toSeq
       .filter(st => st.isFile && !st.getPath.getName.endsWith(".next"))
-      .flatMap(st => parseBranchToken(st.getPath.getName)
+      .flatMap(st => Generations.parseBranchToken(st.getPath.getName)
         .map { case (n, k) => (st.getPath, n, k) })
     var suspendSweeps = false
     val branchSurvivors = scala.collection.mutable
       .ArrayBuffer[GenFile]()
     branchManifests.foreach { case (p, n, k) =>
-      val head = refByName.get(n) match {
-        case Some(BranchRef(h, _, _)) => Some(h)
-        case _ => None
-      }
+      val head = refByName.get(n).collect { case BranchRef(h, _, _) => h }
       lazy val parsedBm =
         try Some(parseGenFile(MetaSwap.readCommitted(fs, p)))
         catch { case scala.util.control.NonFatal(_) => None }
@@ -2351,7 +1978,7 @@ object ManifestStore {
       }.flatten.toSet
     // does an existing branch ref hold a residue at this owner token?
     def inFlightBranchToken(token: String): Boolean =
-      parseBranchToken(token).exists { case (n, k) =>
+      Generations.parseBranchToken(token).exists { case (n, k) =>
         refByName.get(n) match {
           case Some(BranchRef(h, _, _)) => k > h
           case _ => false
@@ -2366,7 +1993,7 @@ object ManifestStore {
         // beyond the serving one, and branch seqs beyond the head
         val sweepable = token.toLongOption match {
           case Some(owner) => owner <= gen
-          case None => parseBranchToken(token).isDefined &&
+          case None => Generations.parseBranchToken(token).isDefined &&
             !inFlightBranchToken(token)
         }
         if (sweepable) {
@@ -2396,14 +2023,14 @@ object ManifestStore {
       // reference sweep below entirely.
       if (token.startsWith(".lock-")) {
         if (System.currentTimeMillis() -
-            wd.getModificationTime > StagingLeaseMs)
+            wd.getModificationTime > StagingLock.LeaseMs)
           verifiedDelete(wd.getPath, "expired staging lock")
       } else {
       // numeric tokens sweep as before; branch tokens sweep unless
       // they are an existing ref's in-flight residue (beyond head)
       val sweepable = token.toLongOption match {
         case Some(_) => true
-        case None => parseBranchToken(token).isDefined &&
+        case None => Generations.parseBranchToken(token).isDefined &&
           !inFlightBranchToken(token)
       }
       // the sweep itself takes the token's STAGING LOCK (try-lock:
@@ -2412,9 +2039,11 @@ object ManifestStore {
       // concurrent-prune corruption the stress spec caught; skip and
       // let a later prune reclaim). A crashed stager's lock expires
       // after the lease and the next prune proceeds.
+      val lock = new Path(s"$root/_writes/.lock-$token")
+      val what = s"generation $token of $root (_writes/.lock-$token)"
       val sweepOwner: Option[Array[Byte]] =
         if (!sweepable) None
-        else try Some(acquireStagingLock(fs, root, token))
+        else try Some(StagingLock.acquire(fs, lock, what))
         catch { case _: MetaSwap.CasFailed => None }
       if (sweepOwner.isDefined) try {
         var kept = false
@@ -2432,7 +2061,7 @@ object ManifestStore {
         // re-verify lock ownership before anything destructive: a
         // sweep that somehow outlived the lease and lost its lock to
         // a stager must not delete that stager's in-flight files
-        sweepOwner.foreach(verifyStagingLock(fs, root, token, _))
+        sweepOwner.foreach(StagingLock.verify(fs, lock, _, what))
         if (!kept)
           // no surviving manifest references this publish at all:
           // reclaim the whole write directory (markers included)
@@ -2449,7 +2078,7 @@ object ManifestStore {
             .foreach(st =>
               verifiedDelete(st.getPath, "emptied partition dir"))
         }
-      } finally releaseStagingLock(fs, root, token)
+      } finally StagingLock.release(fs, lock)
       }
     }
   }
@@ -2492,14 +2121,10 @@ object ManifestStore {
       : Long = {
     val fs = Tables.fsFor(spark, root)
     def plan(): (Long, Array[Byte], GenFile) = {
-      val gen = currentGen(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no published manifest table at $root — bootstrap with " +
-            "ManifestStore.publish first"))
       // the CAS expectation is the bytes THIS plan read — publish
       // compare-and-sets against them, so a promotion landing between
       // here and the swap fails loudly instead of being overwritten
-      val raw = MetaSwap.readCommitted(fs, pointer(root))
+      val (gen, raw) = servingPointer(spark, root)
       (gen, raw, genFileAt(spark, root, gen))
     }
     def attempt(gen: Long, raw: Array[Byte], gf: GenFile): Long = {
@@ -2654,11 +2279,7 @@ object ManifestStore {
     val srcPrefix = "__graft_src_"
 
     def attempt(): Long = {
-      val gen = currentGen(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no published manifest table at $root — bootstrap with " +
-            "ManifestStore.publish first"))
-      val raw = MetaSwap.readCommitted(fs, pointer(root))
+      val (gen, raw) = servingPointer(spark, root)
       val m = manifestAt(spark, root, gen)
       val partCol = m.partCol
       val partCols = partColsOf(partCol)
@@ -2914,11 +2535,7 @@ object ManifestStore {
                                 beforePublish: () => Unit): Long = {
     val fs = Tables.fsFor(spark, root)
     def attempt(): Long = {
-      val gen = currentGen(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no published manifest table at $root — bootstrap with " +
-            "ManifestStore.publish first"))
-      val raw = MetaSwap.readCommitted(fs, pointer(root))
+      val (gen, raw) = servingPointer(spark, root)
       val m = manifestAt(spark, root, gen)
       val schema =
         org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
@@ -2975,10 +2592,7 @@ object ManifestStore {
                        statsCols: Seq[String] = Nil,
                        manifestGroups: Int = 0): Long = {
     val fs = Tables.fsFor(spark, root)
-    val gen = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published manifest table at $root"))
-    val raw = MetaSwap.readCommitted(fs, pointer(root))
+    val (gen, raw) = servingPointer(spark, root)
     val m = manifestAt(spark, root, gen)
     require(partColsOf(newPartCol).nonEmpty,
       s"empty partition-column spec: '$newPartCol'")
@@ -3020,10 +2634,7 @@ object ManifestStore {
                    oldName: String, newName: String,
                    keep: Int = 3, retainMs: Long = 0L): Long = {
     val fs = Tables.fsFor(spark, root)
-    val gen = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published manifest table at $root"))
-    val raw = MetaSwap.readCommitted(fs, pointer(root))
+    val (gen, raw) = servingPointer(spark, root)
     val gf = genFileAt(spark, root, gen)
     val schema =
       org.apache.spark.sql.types.StructType.fromDDL(gf.schemaDdl)
@@ -3047,36 +2658,14 @@ object ManifestStore {
     val newStats = gf.statsCols.map(c =>
       if (c == oldName) newName else c)
     val newRenames = gf.renames :+ (oldName -> newName)
-    val newGen = gen + 1L
-    val token = newGen.toString
-    val lockOwner = acquireStagingLock(fs, root, token)
-    try {
-      if (!java.util.Arrays.equals(
-          MetaSwap.readCommitted(fs, pointer(root)), raw))
-        throw new MetaSwap.CasFailed(
-          s"concurrent promotion committed at $root while this " +
-            "rename acquired the staging lock — nothing was staged " +
-            "or lost; re-read and re-run")
-      val publishedMs = System.currentTimeMillis()
-      val bytesOut = gf match {
-        case FlatGen(m) => serializeManifest(m.copy(
-          schemaDdl = newDdl, statsCols = newStats,
-          renames = newRenames, publishedMs = publishedMs))
-        case lg: ListGen => serializeList(lg.copy(
-          schemaDdl = newDdl, statsCols = newStats,
-          renames = newRenames, publishedMs = publishedMs))
-      }
-      MetaSwap.swap(fs, manifestPath(root, newGen), bytesOut)
-      val effRetain =
-        if (retainMs > 0) retainMs
-        else SnapshotStore.parsedGrace(raw).getOrElse(0L)
-      verifyStagingLock(fs, root, token, lockOwner)
-      MetaSwap.swap(fs, pointer(root),
-        s"gen=$newGen\nkeep=$keep\ngrace=$effRetain\n"
-          .getBytes("UTF-8"), raw)
-      prune(fs, root, newGen, keep, effRetain)
-      newGen
-    } finally releaseStagingLock(fs, root, token)
+    val renamed = gf match {
+      case FlatGen(m) => FlatGen(m.copy(schemaDdl = newDdl,
+        statsCols = newStats, renames = newRenames))
+      case lg: ListGen => lg.copy(schemaDdl = newDdl,
+        statsCols = newStats, renames = newRenames)
+    }
+    Generations.commitGeneration(fs, root, layout, Some(raw), keep,
+      retainMs)(staging => writeGenFile(fs, root, staging.gen, renamed))
   }
 
   /** OPTIMISTIC REBASE (the Iceberg commit-conflict rule), shared by
@@ -3177,14 +2766,11 @@ object ManifestStore {
           "for the full report and repairManifestTable / restore the " +
           "named file, then retry"))
     def attempt(): Int = {
-    val gen = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published manifest table at $root"))
     val fs = Tables.fsFor(spark, root)
     // CAS expectation captured with the sizing read: a promotion
     // landing mid-OPTIMIZE fails this publish loudly (re-run the
     // maintenance) instead of being silently overwritten
-    val raw = MetaSwap.readCommitted(fs, pointer(root))
+    val (gen, raw) = servingPointer(spark, root)
     val m = manifestAt(spark, root, gen)
     val byPart = m.entries.groupBy(_.partition)
     val offenders = byPart.filter { case (_, es) =>
@@ -3306,11 +2892,8 @@ object ManifestStore {
           "for the full report and repairManifestTable / restore the " +
           "named file, then retry"))
     def attempt(): Int = {
-    val gen = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published manifest table at $root"))
+    val (gen, raw) = servingPointer(spark, root)
     val fs = Tables.fsFor(spark, root)
-    val raw = MetaSwap.readCommitted(fs, pointer(root))
     val m = manifestAt(spark, root, gen)
     sortCols.foreach(c => require(
       org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)

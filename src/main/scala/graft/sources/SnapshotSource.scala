@@ -204,10 +204,10 @@ class SnapshotSource extends RelationProvider with DataSourceRegister
         mark(org.apache.spark.sql.GraftSqlBridge.fileRelationOf(
           SnapshotStore.readRef(spark, root, name)))
       else ManifestStore.refAt(spark, root, name) match {
-        case ManifestStore.TagRef(g, _) =>
+        case Generations.TagRef(g, _) =>
           manifestRelation(sqlContext, root,
             ManifestStore.manifestAt(spark, root, g), pinned)
-        case b: ManifestStore.BranchRef =>
+        case b: Generations.BranchRef =>
           val fs = Tables.fsFor(spark, root)
           manifestRelation(sqlContext, root, ManifestStore.assemble(
             fs, root,

@@ -5,10 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** S19 — SNAPSHOT TABLE: a parquet table published as immutable
   * generation directories behind one atomically-swapped pointer — the
-  * Iceberg/Delta promotion discipline restated on the repo's own
-  * marker protocol ([[MetaSwap]], the same `.next` self-healing swap
-  * that commits the index metas). This is the zero-downtime publish
-  * path the plain rename-swap forms cannot give:
+  * Iceberg/Delta promotion discipline on the repo's own marker
+  * protocol. The pointer, the commit sequence, refs and expire are
+  * the shared [[Generations]] protocol; this object is the layout:
+  * where a generation's bytes live, how it stages, prunes and reads.
+  * This is the zero-downtime publish path the plain rename-swap forms
+  * cannot give:
   *
   *  - [[Tables.writeAudited]]`(replace = true)` and [[Tables.compact]]
   *    both have a one-rename window where no table exists at the
@@ -25,8 +27,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    cadence, not wall time, is what a racing reader lags by.
   *
   * Layout: `<root>/_snapshots/<gen>/` immutable parquet directories,
-  * `<root>/_current` the pointer marker (`gen=<n>`), committed via
-  * the [[MetaSwap]] CAS so two racing promotions fail loudly instead
+  * `<root>/_current` the pointer marker, committed via the
+  * [[Generations]] CAS so two racing promotions fail loudly instead
   * of silently dropping one (single-logical-promoter contract,
   * enforced the same way as the index maintenance paths). Underscore
   * prefixes keep both invisible to a naive parquet read of the root —
@@ -50,89 +52,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SnapshotStore {
 
-  private def pointer(root: String) = new Path(s"$root/_current")
-
   private def genDir(root: String, gen: Long) =
     new Path(s"$root/_snapshots/$gen")
 
-  // ---- EXCLUSIVE STAGING LOCK (the ManifestStore discipline on this
-  // layout): two publishes planning from generation N both stage the
-  // SAME `_snapshots/<N+1>` directory — overwrite-mode staging then
-  // destroys the other's in-flight files before the pointer CAS can
-  // catch the race. Staging takes a leased per-token lock (sibling
-  // `_snapshots/.lock-<token>`, created exclusively through
-  // MetaSwap's one-`.next` hinge), re-validating the planned-from
-  // pointer INSIDE the lock; branch publishes and the fast-forward
-  // rename take the same lock for their target directory.
-
-  private val StagingLeaseMs = StagingLock.LeaseMs
-
-  private def lockPath(root: String, token: String) =
-    new Path(s"$root/_snapshots/.lock-$token")
-
-  private def acquireStagingLock(fs: org.apache.hadoop.fs.FileSystem,
-                                 root: String,
-                                 token: String): Array[Byte] =
-    StagingLock.acquire(fs, lockPath(root, token),
-      s"generation $token of $root (_snapshots/.lock-$token)")
-
-  private def verifyStagingLock(fs: org.apache.hadoop.fs.FileSystem,
-                                root: String, token: String,
-                                owner: Array[Byte]): Unit =
-    StagingLock.verify(fs, lockPath(root, token), owner,
-      s"generation $token of $root (_snapshots/.lock-$token)")
-
-  private def releaseStagingLock(fs: org.apache.hadoop.fs.FileSystem,
-                                 root: String, token: String): Unit =
-    StagingLock.release(fs, lockPath(root, token))
-
-  /** The pointer bytes' committed generation, or None when the bytes
-    * are CORRUPT (no `gen=` line, or a non-numeric value) — the
-    * tolerant form the fsck classifies with ([[graft.operators
-    * .IndexAudit.auditSnapshots]] must report damage, never crash on
-    * it); the serving paths below keep throwing.
-    */
-  private[graft] def parsedGen(bytes: Array[Byte]): Option[Long] =
-    parsedField(bytes, "gen")
-
-  /** The retention window the last publish committed with, recorded
-    * in the pointer bytes since r13 (`keep=` line) so the fsck can
-    * classify over-retention WITHOUT an out-of-band parameter. None
-    * on a pre-r13 pointer (gen-only bytes) — callers fall back to
-    * "window unknown", exactly the old behavior.
-    */
-  private[graft] def parsedKeep(bytes: Array[Byte]): Option[Int] =
-    parsedField(bytes, "keep").map(_.toInt)
-
-  /** The wall-clock grace floor the last publish committed with
-    * (`grace=` ms line, recorded since r14). None on an older pointer
-    * — callers treat the floor as 0, the pre-r14 behavior.
-    */
-  private[graft] def parsedGrace(bytes: Array[Byte]): Option[Long] =
-    parsedField(bytes, "grace")
-
-  private def parsedField(bytes: Array[Byte],
-                          key: String): Option[Long] =
-    new String(bytes, "UTF-8").linesIterator
-      .collectFirst { case s if s.startsWith(s"$key=") =>
-        s.stripPrefix(s"$key=").trim }
-      .flatMap(_.toLongOption)
-
-  private def parseGen(bytes: Array[Byte]): Long =
-    parsedGen(bytes).getOrElse(throw new IllegalStateException(
-      "malformed snapshot pointer: no parseable gen= line"))
+  // staging locks are siblings of the generation directories
+  // (`_snapshots/.lock-<token>`); branch publishes and the fast-forward
+  // rename take the same lock for their target directory
+  private val layout = Generations.Layout("_snapshots", "snapshot",
+    "IndexAudit.auditSnapshots",
+    (fs, root, g) => fs.exists(genDir(root, g)), prune)
 
   /** The committed generation the pointer serves, if the table has
     * ever been published (self-heals a crashed swap first, like every
     * marker read).
     */
-  def currentGen(spark: SparkSession, root: String): Option[Long] = {
-    val fs = Tables.fsFor(spark, root)
-    val p = pointer(root)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) None
-    else Some(parseGen(MetaSwap.readCommitted(fs, p)))
-  }
+  def currentGen(spark: SparkSession, root: String): Option[Long] =
+    Generations.currentGen(Tables.fsFor(spark, root), root, layout)
 
   /** Publish `df` as the table's next generation: write the new
     * snapshot directory (invisible until the repoint), BLOCK on the
@@ -182,92 +117,42 @@ object SnapshotStore {
                                  retainMs: Long = 0L,
                                  expectPointer: Option[Array[Byte]] =
                                    None): Long = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    require(retainMs >= 0, s"retainMs must be >= 0, got $retainMs")
     val fs = Tables.fsFor(spark, root)
-    val p = pointer(root)
-    MetaSwap.heal(fs, p)
-    val committedNow =
-      if (fs.exists(p)) Some(MetaSwap.readCommitted(fs, p)) else None
     // a caller that PLANNED from a generation it read earlier (the
-    // OPTIMIZE forms re-publish the rows of the gen they sized)
-    // passes those pointer bytes: a promotion landing in between
-    // fails loudly here instead of being silently replaced by a
-    // republish of the older rows (the ManifestStore expectPointer
-    // rule)
-    expectPointer.foreach { exp =>
-      if (!committedNow.exists(java.util.Arrays.equals(_, exp)))
-        throw new MetaSwap.CasFailed(
-          s"concurrent promotion detected at $root: the serving " +
-            "pointer changed since this writer read the table it " +
-            "planned from — nothing was staged or lost; re-read " +
-            "and re-run")
+    // OPTIMIZE forms re-publish the rows of the gen they sized) passes
+    // those pointer bytes: a promotion landing in between fails loudly
+    // instead of being silently replaced by a republish of older rows
+    val planned = Generations.plannedFrom(fs, root, expectPointer)
+    Generations.commitGeneration(fs, root, layout, planned, keep,
+      retainMs, beforeRepoint) { staging =>
+      // mode=overwrite consumes the one possible residue here: a prior
+      // publish of THIS gen that crashed (or failed its audit) before
+      // the repoint — nothing ever pointed at it
+      writeStamped(spark, df, genDir(root, staging.gen), expectations)
     }
-    val prior = expectPointer.orElse(committedNow)
-    val gen = prior.map(parseGen).getOrElse(0L) + 1L
-    val dir = genDir(root, gen)
-    val lockOwner = acquireStagingLock(fs, root, gen.toString)
-    try {
-    // RE-VALIDATE inside the lock (the ManifestStore rule): a winner
-    // may have committed this very generation between the read above
-    // and the lock — staging now would overwrite its committed files
-    val nowBytes =
-      if (fs.exists(p)) Some(MetaSwap.readCommitted(fs, p)) else None
-    val unchanged = (prior, nowBytes) match {
-      case (Some(a), Some(b)) => java.util.Arrays.equals(a, b)
-      case (None, None)       => true
-      case _                  => false
-    }
-    if (!unchanged) throw new MetaSwap.CasFailed(
-      s"concurrent promotion committed at $root while this writer " +
-        "acquired the staging lock — nothing was staged or lost; " +
-        "re-read and re-run")
-    // mode=overwrite consumes the one possible residue here: a prior
-    // publish of THIS gen that crashed (or failed its audit) before
-    // the repoint — nothing ever pointed at it
+  }
+
+  /** Write `df` as a generation directory, audit the staged bytes
+    * (blocking), and record its publish instant — an explicit
+    * `_published_at` marker (directory mtimes are not portable to
+    * object stores), underscore-prefixed and invisible to readers.
+    */
+  private def writeStamped(spark: SparkSession, df: DataFrame, dir: Path,
+                           expectations: Seq[graft.operators.Cleaning.Expectation])
+      : Unit = {
     df.write.mode("overwrite").parquet(dir.toString)
     if (expectations.nonEmpty) {
       Tables.auditStaged(spark, dir.toString, expectations)
       ()
     }
-    // the gen's publish instant, recorded as an explicit marker (the
-    // index-protocol discipline — directory mtimes are not portable
-    // to object stores); underscore-prefixed, invisible to readers
-    val stamp = fs.create(new Path(dir, "_published_at"), true)
-    try stamp.write(
-      System.currentTimeMillis().toString.getBytes("UTF-8"))
-    finally stamp.close()
-    beforeRepoint()
-    // the pointer carries the retention window AND the grace floor
-    // alongside the gen so the fsck (IndexAudit.auditSnapshots) can
-    // classify a crashed prune's over-retention — and distinguish it
-    // from grace-retention — without out-of-band parameters; readers
-    // parse only the lines they know (legacy pointers stay readable,
-    // and the CAS expectation is the raw prior bytes verbatim, so
-    // format changes commit like any other swap). The floor INHERITS:
-    // retainMs > 0 SETS the table's grace (raise or lower, an
-    // explicit operator decision); the default 0 means "unspecified"
-    // and inherits the prior pointer's grace= — so a maintenance
-    // publish (compactCurrent*, a default-0 promotion) preserves the
-    // configured reader window instead of pruning inside it.
-    val effRetain =
-      if (retainMs > 0) retainMs
-      else prior.flatMap(parsedGrace).getOrElse(0L)
-    val bytes = s"gen=$gen\nkeep=$keep\ngrace=$effRetain\n"
-      .getBytes("UTF-8")
-    // ownership check before the commit (the StagingLock discipline):
-    // a stage that outlived the lease and lost its lock must fail
-    // TYPED here, never repoint over the new holder's staging
-    verifyStagingLock(fs, root, gen.toString, lockOwner)
-    prior match {
-      case Some(expect) => MetaSwap.swap(fs, p, bytes, expect)
-      case None         => MetaSwap.swap(fs, p, bytes)
-    }
-    // retention AFTER the repoint: a crash anywhere above leaves the
-    // old gens (over-retention, pruned next publish), never a gap
-    prune(fs, root, gen, keep, effRetain)
-    gen
-    } finally releaseStagingLock(fs, root, gen.toString)
+    stamp(Tables.fsFor(spark, dir.toString), dir)
+  }
+
+  private def stamp(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+                    marker: String = "_published_at"): Unit = {
+    val out = fs.create(new Path(dir, marker), true)
+    try out.write(System.currentTimeMillis().toString.getBytes("UTF-8"))
+    finally out.close()
   }
 
   /** The `_published_at` instant of generation `g`, or None for a gen
@@ -304,14 +189,8 @@ object SnapshotStore {
     // business. A corrupt ref marker makes the pin set unknowable:
     // SUSPEND the prune (over-retention is the safe failure; fsck
     // reports it).
-    val parsedRefs = ManifestStore.rawRefs(fs, root)
-      .map { case (n, b) => n -> ManifestStore.parsedRef(b) }
-    if (parsedRefs.values.exists(_.isEmpty)) return
-    val refs = parsedRefs.map { case (n, r) => n -> r.get }
-    val pinned: Set[Long] = refs.values.collect {
-      case ManifestStore.TagRef(g, _) => g
-      case ManifestStore.BranchRef(0L, b, _) => b
-    }.toSet
+    val refs = Generations.refsForPrune(fs, root).getOrElse(return)
+    val pinned = Generations.pinned(refs.values)
     val now = System.currentTimeMillis()
     def verifiedDelete(p: Path): Unit =
       if (!fs.delete(p, true)) throw new IllegalStateException(
@@ -331,13 +210,12 @@ object SnapshotStore {
         case None if nm.startsWith(".lock-") =>
           // a crashed stager's EXPIRED lock is residue; a live one is
           // a writer mid-staging (its own finally releases it)
-          if (now - st.getModificationTime > StagingLeaseMs)
+          if (now - st.getModificationTime > StagingLock.LeaseMs)
             verifiedDelete(st.getPath)
-        case None => ManifestStore.parseBranchToken(nm).foreach {
+        case None => Generations.parseBranchToken(nm).foreach {
           case (bn, k) =>
-            val head = refs.get(bn) match {
-              case Some(ManifestStore.BranchRef(h, _, _)) => Some(h)
-              case _ => None
+            val head = refs.get(bn).collect {
+              case Generations.BranchRef(h, _, _) => h
             }
             val superseded =
               fs.exists(new Path(st.getPath, "_superseded"))
@@ -454,155 +332,90 @@ object SnapshotStore {
   /** RESTORE (rollback-by-republish): publish retained generation
     * `gen`'s rows as the table's NEXT generation. On this layout the
     * restore is a physical copy (generations are full copies — the
-    * manifest table's [[ManifestStore.restore]] is the metadata-only
-    * form); history is never renumbered, so time travel over the
-    * rolled-back generations keeps working until retention lapses
-    * them. Refuses typed when `gen` is residue or aged out.
+    * manifest layout's restore is the metadata-only form); history
+    * is never renumbered, so time travel over the rolled-back
+    * generations keeps working until retention lapses them. Refuses
+    * typed when `gen` is residue or aged out.
     */
   def restore(spark: SparkSession, root: String, gen: Long,
               keep: Int = 3, retainMs: Long = 0L): Long =
     publish(spark, readAt(spark, root, gen), root, Nil, keep,
       retainMs)
 
-  /** Explicit retention maintenance ([[ManifestStore.expire]] on
-    * this layout): run the prune NOW against the serving generation
-    * and the pointer's recorded keep/grace, without publishing — the
-    * quiet-table janitor that reclaims grace-expired generations
-    * when promotions have stopped.
+  /** Explicit retention maintenance: run the prune NOW against the
+    * serving generation and the pointer's recorded keep/grace, without
+    * publishing — the quiet-table janitor that reclaims grace-expired
+    * generations when promotions have stopped.
     */
-  def expire(spark: SparkSession, root: String): Unit = {
-    val fs = Tables.fsFor(spark, root)
-    val p = pointer(root)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) return
-    val raw = MetaSwap.readCommitted(fs, p)
-    val curOpt = parsedGen(raw)
-    if (curOpt.isEmpty) return // corrupt pointer: fsck territory
-    val keep = parsedKeep(raw).getOrElse(3)
-    val grace = parsedGrace(raw).getOrElse(0L)
-    prune(fs, root, curOpt.get, keep, grace)
-  }
+  def expire(spark: SparkSession, root: String): Unit =
+    Generations.expire(Tables.fsFor(spark, root), root, layout)
 
   // ---- TAGS AND BRANCHES (S25 on the snapshot table) ---------------
-  // `_refs/<name>` markers with the SAME codec as the manifest
-  // table's ([[ManifestStore.parsedRef]]), so tooling reads one
-  // format. A TAG pins a committed generation against retention. A
-  // BRANCH is the write-audit-publish workflow at DIMENSION scale:
-  // [[publishToBranch]] stages a FULL COPY at
+  // `_refs/<name>` markers ([[Generations]] owns the codec and every
+  // ref operation). A TAG pins a committed generation against
+  // retention. A BRANCH is the write-audit-publish workflow at
+  // DIMENSION scale: [[publishToBranch]] stages a FULL COPY at
   // `_snapshots/r-<name>-<seq>` (generations here are full copies by
   // design — cheap for a bounded dim; branch a 100 TB fact on its
   // manifest form instead), auditable and readable in isolation, and
   // [[fastForwardBranch]] promotes it by RENAMING the head directory
   // to the next main generation — one filesystem metadata op, zero
-  // data bytes copied, the manifest table's metadata-only
-  // fast-forward restated on the full-copy layout.
-
-  private def refPath(root: String, name: String) =
-    new Path(s"$root/_refs/$name")
+  // data bytes copied.
 
   /** TAG `gen` (default: the serving generation) as `name`: the
     * generation directory is PINNED against retention until
     * [[dropRef]]. Tags are immutable — an existing name refuses.
     */
   def tag(spark: SparkSession, root: String, name: String,
-          gen: Option[Long] = None): Long = {
-    ManifestStore.requireRefName(name)
-    val fs = Tables.fsFor(spark, root)
-    val cur = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published snapshot at $root"))
-    val g = gen.getOrElse(cur)
-    if (g > cur || !fs.exists(genDir(root, g)))
-      throw new graft.SnapshotUnavailable(
-        s"cannot tag generation $g of $root: not a committed, " +
-          "retained generation")
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (fs.exists(p)) throw new IllegalStateException(
-      s"ref '$name' already exists at $root — refs are immutable; " +
-        "dropRef first to rename on purpose")
-    MetaSwap.create(fs, p, ManifestStore.serializeRef(
-      ManifestStore.TagRef(g, System.currentTimeMillis())))
-    g
-  }
+          gen: Option[Long] = None): Long =
+    Generations.createRef(Tables.fsFor(spark, root), root, layout, name,
+      gen)(g => Generations.TagRef(g, System.currentTimeMillis()))
 
   /** Drop tag `name`; the generation it pinned rejoins the normal
     * retention window at the next publish's prune.
     */
-  def dropRef(spark: SparkSession, root: String, name: String): Unit = {
-    val fs = Tables.fsFor(spark, root)
-    val p = refPath(root, name)
-    fs.delete(p, false)
-    fs.delete(new Path(p.getParent, p.getName + ".next"), false)
-    ()
-  }
+  def dropRef(spark: SparkSession, root: String, name: String): Unit =
+    Generations.dropRef(Tables.fsFor(spark, root), root, name)
 
   /** Every tag of the table: name → pinned generation. */
   def refs(spark: SparkSession, root: String): Map[String, Long] =
-    ManifestStore.rawRefs(Tables.fsFor(spark, root), root).flatMap {
-      case (n, b) => ManifestStore.parsedRef(b).collect {
-        case ManifestStore.TagRef(g, _) => n -> g
-      }
+    Generations.refs(Tables.fsFor(spark, root), root).collect {
+      case (n, Generations.TagRef(g, _)) => n -> g
     }
 
   private def branchDir(root: String, name: String, seq: Long) =
-    new Path(s"$root/_snapshots/r-$name-$seq")
+    new Path(s"$root/_snapshots/${Generations.branchToken(name, seq)}")
 
   private[graft] def refAt(spark: SparkSession, root: String,
-                           name: String): ManifestStore.Ref = {
-    val fs = Tables.fsFor(spark, root)
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) throw new graft.SnapshotUnavailable(
-      s"no ref '$name' at $root")
-    ManifestStore.parsedRef(MetaSwap.readCommitted(fs, p)).getOrElse(
-      throw new IllegalStateException(
-        s"ref '$name' of $root is corrupt — run " +
-          "IndexAudit.auditSnapshots"))
-  }
+                           name: String): Generations.Ref =
+    Generations.refAt(Tables.fsFor(spark, root), root, name, layout)
 
   /** Read what ref `name` serves: a TAG's pinned generation, or a
     * BRANCH's head copy (the base generation while head = 0) —
     * [[readAt]] semantics throughout.
     */
-  def readRef(spark: SparkSession, root: String,
-              name: String): DataFrame = refAt(spark, root, name) match {
-    case ManifestStore.TagRef(g, _) => readAt(spark, root, g)
-    case ManifestStore.BranchRef(0L, base, _) =>
-      readAt(spark, root, base)
-    case ManifestStore.BranchRef(head, _, _) =>
-      val d = branchDir(root, name, head)
-      if (!Tables.fsFor(spark, root).exists(d))
-        throw new graft.SnapshotUnavailable(
-          s"branch '$name' of $root is missing its head copy " +
-            s"${d.getName} — run IndexAudit.auditSnapshots")
-      spark.read.parquet(d.toString)
-  }
+  def readRef(spark: SparkSession, root: String, name: String): DataFrame =
+    refAt(spark, root, name) match {
+      case Generations.TagRef(g, _) => readAt(spark, root, g)
+      case Generations.BranchRef(0L, base, _) => readAt(spark, root, base)
+      case Generations.BranchRef(head, _, _) =>
+        val d = branchDir(root, name, head)
+        if (!Tables.fsFor(spark, root).exists(d))
+          throw new graft.SnapshotUnavailable(
+            s"branch '$name' of $root is missing its head copy " +
+              s"${d.getName} — run IndexAudit.auditSnapshots")
+        spark.read.parquet(d.toString)
+    }
 
   /** Create BRANCH `name` forked from `fromGen` (default: the
     * serving generation). Metadata-only; the base is PINNED against
-    * retention while the branch sits at head 0, exactly the manifest
-    * table's rule.
+    * retention while the branch sits at head 0.
     */
   def branch(spark: SparkSession, root: String, name: String,
              fromGen: Option[Long] = None): Unit = {
-    ManifestStore.requireRefName(name)
-    val fs = Tables.fsFor(spark, root)
-    val cur = currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no published snapshot at $root"))
-    val base = fromGen.getOrElse(cur)
-    if (base > cur || !fs.exists(genDir(root, base)))
-      throw new graft.SnapshotUnavailable(
-        s"cannot branch from generation $base of $root: not a " +
-          "committed, retained generation")
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (fs.exists(p)) throw new IllegalStateException(
-      s"ref '$name' already exists at $root — refs are immutable; " +
-        "dropRef first to rename on purpose")
-    MetaSwap.create(fs, p, ManifestStore.serializeRef(
-      ManifestStore.BranchRef(0L, base, System.currentTimeMillis())))
+    Generations.createRef(Tables.fsFor(spark, root), root, layout, name,
+      fromGen)(g => Generations.BranchRef(0L, g, System.currentTimeMillis()))
+    ()
   }
 
   /** Publish `df` onto BRANCH `name`: a FULL COPY staged at
@@ -615,52 +428,14 @@ object SnapshotStore {
   def publishToBranch(spark: SparkSession, df: DataFrame,
                       root: String, name: String,
                       expectations: Seq[graft.operators.Cleaning.Expectation] =
-                        Nil): Long = {
-    val fs = Tables.fsFor(spark, root)
-    val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) throw new graft.SnapshotUnavailable(
-      s"no ref '$name' at $root")
-    val expect = MetaSwap.readCommitted(fs, p)
-    val b = ManifestStore.parsedRef(expect) match {
-      case Some(br: ManifestStore.BranchRef) => br
-      case Some(_: ManifestStore.TagRef) =>
-        throw new IllegalStateException(
-          s"ref '$name' of $root is a TAG — tags are immutable pins; " +
-            "publish onto a branch")
-      case None => throw new IllegalStateException(
-        s"ref '$name' of $root is corrupt — run " +
-          "IndexAudit.auditSnapshots")
+                        Nil): Long =
+    Generations.commitToBranch(Tables.fsFor(spark, root), root, layout,
+      name) { (_, staging) =>
+      // overwrite consumes a crashed prior publish of THIS seq (the
+      // numeric-generation residue rule)
+      writeStamped(spark, df, branchDir(root, name, staging.gen),
+        expectations)
     }
-    val seq = b.head + 1L
-    val dir = branchDir(root, name, seq)
-    val lockOwner = acquireStagingLock(fs, root, dir.getName)
-    try {
-    // re-validate the ref inside the lock (the publish rule): a
-    // racing branch publish that committed this seq must fail this
-    // writer BEFORE its staging can overwrite anything
-    if (!java.util.Arrays.equals(MetaSwap.readCommitted(fs, p),
-        expect)) throw new MetaSwap.CasFailed(
-      s"concurrent publish committed on branch '$name' of $root " +
-        "while this writer acquired the staging lock — nothing was " +
-        "staged or lost; re-read and re-run")
-    // overwrite consumes a crashed prior publish of THIS seq (the
-    // numeric-generation residue rule)
-    df.write.mode("overwrite").parquet(dir.toString)
-    if (expectations.nonEmpty) {
-      Tables.auditStaged(spark, dir.toString, expectations)
-      ()
-    }
-    val stamp = fs.create(new Path(dir, "_published_at"), true)
-    try stamp.write(
-      System.currentTimeMillis().toString.getBytes("UTF-8"))
-    finally stamp.close()
-    verifyStagingLock(fs, root, dir.getName, lockOwner)
-    MetaSwap.swap(fs, p, ManifestStore.serializeRef(
-      ManifestStore.BranchRef(seq, b.base, b.createdMs)), expect)
-    seq
-    } finally releaseStagingLock(fs, root, dir.getName)
-  }
 
   /** FAST-FORWARD main to branch `name`'s head — METADATA-ONLY on
     * this layout too: the head directory is RENAMED to
@@ -697,36 +472,15 @@ object SnapshotStore {
                           Nil,
                         keep: Int = 3, retainMs: Long = 0L,
                         force: Boolean = false): Long = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
     val fs = Tables.fsFor(spark, root)
-    val ptr = pointer(root)
-    MetaSwap.heal(fs, ptr)
-    val prior = MetaSwap.readCommitted(fs, ptr)
-    val mainGen = parsedGen(prior).getOrElse(
-      throw new IllegalStateException(
-        "malformed snapshot pointer: no parseable gen= line"))
-    val refMarker = refPath(root, name)
-    MetaSwap.heal(fs, refMarker)
-    if (!fs.exists(refMarker)) throw new graft.SnapshotUnavailable(
-      s"no ref '$name' at $root")
-    val refBytes = MetaSwap.readCommitted(fs, refMarker)
-    val b = ManifestStore.parsedRef(refBytes) match {
-      case Some(br: ManifestStore.BranchRef) => br
-      case Some(_: ManifestStore.TagRef) =>
-        throw new IllegalStateException(
-          s"ref '$name' of $root is a TAG — fast-forward needs a branch")
-      case None => throw new IllegalStateException(
-        s"ref '$name' of $root is corrupt — run " +
-          "IndexAudit.auditSnapshots")
-    }
+    val prior = Generations.committed(fs, Generations.pointer(root))
+    val mainGen = prior.map(Generations.genOf(_, layout)).getOrElse(
+      throw new IllegalStateException(s"no published snapshot at $root"))
+    val (b, refBytes) =
+      Generations.fastForwardSource(fs, root, name, layout, mainGen, force)
     if (b.head == 0L) throw new IllegalStateException(
       s"branch '$name' of $root has no publishes to fast-forward " +
         "(head = 0 — it still serves its base)")
-    if (!force && mainGen != b.base) throw new IllegalStateException(
-      s"cannot fast-forward $root to branch '$name': main is at " +
-        s"generation $mainGen but the branch forked from ${b.base} — " +
-        "promotions landed on main since; re-branch (or force = true " +
-        "to REPLACE main with the branch state)")
     val headDir = branchDir(root, name, b.head)
     if (!fs.exists(headDir)) throw new graft.SnapshotUnavailable(
       s"branch '$name' of $root is missing its head copy " +
@@ -741,101 +495,60 @@ object SnapshotStore {
             s"${r.getLong(4)} violations").mkString(", ") +
           "; main untouched, branch left for inspection")
     }
-    val gen = mainGen + 1L
-    val effRetain =
-      if (retainMs > 0) retainMs
-      else parsedGrace(prior).getOrElse(0L)
-    // the staging LOCK on the target generation (the publish path's
-    // discipline): a writer staging this same number holds it across
-    // its stage + swap, so the delete/rename below can never clobber
-    // (or be clobbered by) an in-flight staging
-    val lockOwner = acquireStagingLock(fs, root, gen.toString)
-    try {
-    // fail-fast re-check after the (possibly long) audit — the
-    // publishImpl pattern: the rename below would land on a racing
-    // promotion's committed directory number
-    if (!java.util.Arrays.equals(MetaSwap.readCommitted(fs, ptr),
-        prior))
-      throw new MetaSwap.CasFailed(
-        s"concurrent promotion detected at $root: the serving " +
-          "pointer moved while the fast-forward audit ran — " +
-          "nothing was renamed or lost; re-read and re-run")
-    // the metadata-only promotion: ONE rename, zero data bytes —
-    // ownership re-verified first: the delete below must never
-    // consume a lock-stealing stager's in-flight directory
-    verifyStagingLock(fs, root, gen.toString, lockOwner)
-    val target = genDir(root, gen)
-    fs.delete(target, true) // a crashed publish's residue at cur+1
-    if (!fs.rename(headDir, target)) throw new IllegalStateException(
-      s"cannot promote branch '$name' of $root: rename " +
-        s"$headDir -> $target failed")
-    // refresh the publish instant: the PROMOTION is the served event
-    val stamp = fs.create(new Path(target, "_published_at"), true)
-    try stamp.write(
-      System.currentTimeMillis().toString.getBytes("UTF-8"))
-    finally stamp.close()
-    try MetaSwap.swap(fs, ptr,
-      s"gen=$gen\nkeep=$keep\ngrace=$effRetain\n".getBytes("UTF-8"),
-      prior)
-    catch {
-      case cas: MetaSwap.CasFailed =>
-        // a racing promotion committed between the fail-fast re-check
-        // and this swap. UNDO the rename so the branch head is back in
-        // place and nothing of the branch serves under the racer's
-        // generation — if the racer claimed this same gen number, its
-        // readers now fail LOUDLY on the missing directory (strictly
-        // better than silently serving branch rows); its data bytes
-        // were a staged copy this call consumed, which is the
-        // single-writer violation the scaladoc names.
-        if (fs.exists(target) && !fs.rename(target, headDir))
-          throw new IllegalStateException(
-            s"fast-forward of $root to branch '$name' lost the " +
-              s"pointer race AND could not restore the branch head " +
-              s"($target -> $headDir failed) — the promoted copy is " +
-              "a residue at the target; rename it back manually or " +
-              "run IndexAudit.auditSnapshots", cas)
-        throw new MetaSwap.CasFailed(
-          s"concurrent promotion committed at $root while the " +
-            s"fast-forward of branch '$name' ran — nothing was " +
-            "promoted, the branch head is restored; re-read and " +
-            "re-run (single-writer contract: see fastForwardBranch)")
+    val target = genDir(root, mainGen + 1L)
+    // a racing promotion that committed between the re-check inside
+    // the lock and the swap: UNDO the rename so the branch head is
+    // back in place and nothing of the branch serves under the racer's
+    // generation — if the racer claimed this same gen number, its
+    // readers now fail LOUDLY on the missing directory (strictly
+    // better than silently serving branch rows); its data bytes were a
+    // staged copy this call consumed, which is the single-writer
+    // violation the scaladoc names
+    def renameBack(lost: MetaSwap.CasFailed): Throwable =
+      if (fs.exists(target) && !fs.rename(target, headDir))
+        new IllegalStateException(
+          s"fast-forward of $root to branch '$name' lost the " +
+            s"pointer race AND could not restore the branch head " +
+            s"($target -> $headDir failed) — the promoted copy is " +
+            "a residue at the target; rename it back manually or " +
+            "run IndexAudit.auditSnapshots", lost)
+      else new MetaSwap.CasFailed(
+        s"concurrent promotion committed at $root while the " +
+          s"fast-forward of branch '$name' ran — nothing was " +
+          "promoted, the branch head is restored; re-read and " +
+          "re-run (single-writer contract: see fastForwardBranch)")
+    val gen = Generations.commitGeneration(fs, root, layout, prior, keep,
+      retainMs, onLostCas = renameBack) { staging =>
+      // the metadata-only promotion: ONE rename, zero data bytes —
+      // ownership re-verified first: the delete below must never
+      // consume a lock-stealing stager's in-flight directory
+      staging.verifyLock()
+      fs.delete(target, true) // a crashed publish's residue at cur+1
+      if (!fs.rename(headDir, target)) throw new IllegalStateException(
+        s"cannot promote branch '$name' of $root: rename " +
+          s"$headDir -> $target failed")
+      // refresh the publish instant: the PROMOTION is the served event
+      stamp(fs, target)
     }
-    } finally releaseStagingLock(fs, root, gen.toString)
-    try MetaSwap.swap(fs, refMarker, ManifestStore.serializeRef(
-      ManifestStore.BranchRef(0L, gen, b.createdMs)), refBytes)
-    catch {
-      case _: MetaSwap.CasFailed => throw new MetaSwap.CasFailed(
-        s"fast-forward of $root to branch '$name' COMMITTED (main " +
-          s"now serves generation $gen), but a branch publish raced " +
-          "the ref rebase — re-branch from the new main")
-    }
+    Generations.rebaseBranch(fs, root, name, refBytes,
+      Generations.BranchRef(0L, gen, b.createdMs), gen)
     // the SUPERSEDED branch copies (seq < the promoted head): after
     // the rebase to head 0 they would read as in-flight publishes to
-    // prune's `k > head` rule and be retained forever — sweep them
-    // here, honoring the wall-clock grace an in-flight reader holds.
-    // seqs ABOVE the old head really are someone's in-flight publish
-    // and stay.
-    val now = System.currentTimeMillis()
-    (1L until b.head).foreach { k =>
-      val d = branchDir(root, name, k)
-      if (fs.exists(d)) {
-        val inGrace = effRetain > 0 && publishedAtDir(fs, d)
-          .exists(t => now - t < effRetain)
-        if (!inGrace) fs.delete(d, true)
-        else {
-          // an in-flight reader may hold this copy: mark it
-          // superseded so a LATER prune can reclaim it once grace
-          // lapses (to prune's head rule, `k > head(=0)` would
-          // otherwise read as an in-flight publish forever)
-          val m = fs.create(new Path(d, "_superseded"), true)
-          try m.write(now.toString.getBytes("UTF-8"))
-          finally m.close()
-        }
-      }
-    }
-    prune(fs, root, gen, keep, effRetain)
+    // prune's `k > head` rule and be retained forever — the commit's
+    // prune reclaimed every one past the wall-clock grace; mark the
+    // ones an in-flight reader may still hold so a LATER prune can
+    // reclaim them once grace lapses. Seqs ABOVE the old head really
+    // are someone's in-flight publish and stay.
+    (1L until b.head).map(branchDir(root, name, _)).filter(fs.exists)
+      .foreach(stamp(fs, _, "_superseded"))
     gen
   }
+
+  private def servingPointer(spark: SparkSession, root: String): Array[Byte] =
+    Generations.committed(Tables.fsFor(spark, root), Generations.pointer(root))
+      .getOrElse(throw new IllegalStateException(
+        s"no published snapshot at $root — nothing has been " +
+          "promoted yet (SnapshotStore.publish)"))
 
   /** Zero-downtime OPTIMIZE: republish the CURRENT generation's rows
     * compacted to ≈`targetRowsPerFile`-sized files as a fresh
@@ -849,15 +562,9 @@ object SnapshotStore {
                      targetRowsPerFile: Long, keep: Int = 3,
                      retainMs: Long = 0L): Int = {
     require(targetRowsPerFile > 0)
-    val fs = Tables.fsFor(spark, root)
-    MetaSwap.heal(fs, pointer(root))
-    val raw =
-      try MetaSwap.readCommitted(fs, pointer(root))
-      catch { case _: IllegalArgumentException =>
-        throw new IllegalStateException(
-          s"no published snapshot at $root — nothing has been " +
-            "promoted yet (SnapshotStore.publish)") }
-    val df = spark.read.parquet(genDir(root, parseGen(raw)).toString)
+    val raw = servingPointer(spark, root)
+    val df = spark.read.parquet(
+      genDir(root, Generations.genOf(raw, layout)).toString)
     val n = df.count()
     val files = math.max(1L,
       (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
@@ -881,15 +588,8 @@ object SnapshotStore {
                           targetBytesPerFile: Long,
                           keep: Int = 3, retainMs: Long = 0L): Int = {
     require(targetBytesPerFile > 0)
-    val fs = Tables.fsFor(spark, root)
-    MetaSwap.heal(fs, pointer(root))
-    val raw =
-      try MetaSwap.readCommitted(fs, pointer(root))
-      catch { case _: IllegalArgumentException =>
-        throw new IllegalStateException(
-          s"no published snapshot at $root — nothing has been " +
-            "promoted yet (SnapshotStore.publish)") }
-    val gen = parseGen(raw)
+    val raw = servingPointer(spark, root)
+    val gen = Generations.genOf(raw, layout)
     // sidecar-aware like Tables.compactBytes: a stats index or other
     // underscore tree inside the generation must not inflate sizing
     val total = Tables.tableDataBytes(spark, genDir(root, gen).toString)

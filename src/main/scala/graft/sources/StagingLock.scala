@@ -2,15 +2,14 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The per-generation EXCLUSIVE STAGING LOCK shared by both table
-  * layouts ([[ManifestStore]] `_writes/.lock-<token>`,
-  * [[SnapshotStore]] `_snapshots/.lock-<token>`). The pointer CAS
-  * makes COMMITS safe under concurrency, but two writers that both
-  * planned from generation N stage into the SAME `<N+1>` target —
-  * overwrite-mode staging then deletes the other writer's in-flight
-  * (or just-committed) files before any CAS can catch it. Staging
-  * therefore takes this lock, holds it across stage + commit, and
-  * re-validates the planned-from pointer inside it.
+/** The per-generation EXCLUSIVE STAGING LOCK every generation commit
+  * takes ([[Generations]], at the layout's `<lockDir>/.lock-<token>`).
+  * The pointer CAS makes COMMITS safe under concurrency, but two
+  * writers that both planned from generation N stage into the SAME
+  * `<N+1>` target — overwrite-mode staging then deletes the other
+  * writer's in-flight (or just-committed) files before any CAS can
+  * catch it. The commit therefore takes this lock, holds it across
+  * stage + swap, and re-validates the planned-from pointer inside it.
   *
   * The lock is OWNED, not merely held: [[acquire]] stamps unique
   * owner bytes (timestamp + UUID) into the marker and returns them;

@@ -455,7 +455,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       val fs = Tables.fsFor(spark, root)
       val raw = graft.sources.MetaSwap.readCommitted(fs,
         new org.apache.hadoop.fs.Path(s"$root/_current"))
-      assert(graft.sources.SnapshotStore.parsedGrace(raw)
+      assert(graft.sources.Generations.parsedGrace(raw)
         .contains(hour))
     } finally rmTree(dir)
   }
@@ -940,10 +940,45 @@ class ManifestStoreSpec extends AnyFunSuite {
     } finally rmTree(dir)
   }
 
+  /** The ref surface both table layouts share through
+    * graft.sources.Generations: the ref specs below run once per
+    * layout.
+    */
+  private case class RefLayout(
+      name: String,
+      publish: (org.apache.spark.sql.DataFrame, String, String) => Long,
+      branch: (String, String) => Unit,
+      publishToBranch: (org.apache.spark.sql.DataFrame, String,
+        String) => Long,
+      readRef: (String, String) => org.apache.spark.sql.DataFrame,
+      tag: (String, String) => Long,
+      healthy: String => Boolean)
+
+  private lazy val refLayouts = {
+    import graft.sources.SnapshotStore
+    Seq(
+      RefLayout("manifest",
+        (df, root, partCol) => ManifestStore.publish(spark, df, root,
+          partCol),
+        (root, n) => ManifestStore.branch(spark, root, n),
+        (df, root, n) => ManifestStore.publishToBranch(spark, df, root, n),
+        (root, n) => ManifestStore.readRef(spark, root, n),
+        (root, n) => ManifestStore.tag(spark, root, n),
+        root => IndexAudit.isManifestTableHealthy(spark, root)),
+      RefLayout("snapshot",
+        (df, root, _) => SnapshotStore.publish(spark, df, root),
+        (root, n) => SnapshotStore.branch(spark, root, n),
+        (df, root, n) => SnapshotStore.publishToBranch(spark, df, root, n),
+        (root, n) => SnapshotStore.readRef(spark, root, n),
+        (root, n) => SnapshotStore.tag(spark, root, n),
+        root => IndexAudit.isSnapshotsHealthy(spark, root)))
+  }
+
   test("refs crash honesty: a ref CAS that died mid-swap (only " +
       ".next present) is healed by every full-ref-set reader — " +
       "prune must not treat the branch as dropped and sweep its " +
       "live files") {
+    refLayouts.foreach { L =>
     val dir = tmp("manirefswap")
     try {
       val root = dir.toString + "/t"
@@ -952,11 +987,10 @@ class ManifestStoreSpec extends AnyFunSuite {
       def batch(tag: String, ps: Seq[Int]) =
         ps.flatMap(p => (1 to 5).map(i => (s"$tag-$p-$i", p)))
           .toDF("id", "p")
-      ManifestStore.publish(spark, batch("g1", 0 to 2), root, "p")
-      ManifestStore.branch(spark, root, "b")
-      ManifestStore.publishToBranch(spark, batch("b1", Seq(0)), root,
-        "b")
-      val branchRows = rows(ManifestStore.readRef(spark, root, "b"))
+      L.publish(batch("g1", 0 to 2), root, "p")
+      L.branch(root, "b")
+      L.publishToBranch(batch("b1", Seq(0)), root, "b")
+      val branchRows = rows(L.readRef(root, "b"))
       // simulate the crash window of the ref swap: the committed
       // marker deleted, the staged .next not yet renamed in
       val marker = new org.apache.hadoop.fs.Path(s"$root/_refs/b")
@@ -965,14 +999,15 @@ class ManifestStoreSpec extends AnyFunSuite {
         spark.sparkContext.hadoopConfiguration)
       assert(fs.delete(marker, false))
       // a main publish prunes — it must HEAL the ref first, keep the
-      // branch head manifest, and keep the branch's unique files
-      ManifestStore.publish(spark, batch("g2", Seq(1)), root, "p")
-      assert(fs.exists(marker), "prune must heal the crashed swap")
-      assert(rows(ManifestStore.readRef(spark, root, "b"))
-        == branchRows,
-        "the branch must serve in full after the healed prune")
-      assert(IndexAudit.isManifestTableHealthy(spark, root))
+      // branch head, and keep the branch's unique files
+      L.publish(batch("g2", Seq(1)), root, "p")
+      assert(fs.exists(marker),
+        s"${L.name}: prune must heal the crashed swap")
+      assert(rows(L.readRef(root, "b")) == branchRows,
+        s"${L.name}: the branch must serve in full after the healed prune")
+      assert(L.healthy(root), L.name)
     } finally rmTree(dir)
+    }
   }
 
   test("restore: metadata-only rollback republishes a retained " +
@@ -1027,6 +1062,25 @@ class ManifestStoreSpec extends AnyFunSuite {
         "expire must reclaim the dropped branch without a publish")
       assert(rows(ManifestStore.readCurrent(spark, root)) == good)
       assert(IndexAudit.isManifestTableHealthy(spark, root))
+      // restore commits under the staging lock: run inside a publish
+      // that holds gen 3's lock, it must lose typed, and the lock
+      // holder commits its own gen 3
+      val race = dir.toString + "/race"
+      val nation = Tables.table(spark, sf, "nation")
+      ManifestStore.publish(spark, nation, race, "n_regionkey")
+      ManifestStore.publish(spark, nation, race, "n_regionkey")
+      val published = nation.filter(col("n_nationkey") < 3)
+      var lost: Option[Throwable] = None
+      val g3 = ManifestStore.publishImpl(spark, published, race,
+        "n_regionkey", Nil, 3, true, true, () => {
+          lost = scala.util.Try(ManifestStore.restore(spark, race, 1L))
+            .failed.toOption
+        })
+      assert(lost.exists(_.isInstanceOf[graft.sources.MetaSwap.CasFailed]),
+        s"restore inside a held staging lock must fail typed: $lost")
+      assert(g3 == 3L)
+      assert(rows(ManifestStore.readCurrent(spark, race)) ==
+        rows(published))
     } finally rmTree(dir)
   }
 
@@ -1554,11 +1608,12 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("racing creations of the same ref name: exactly one side " +
       "commits, the loser fails typed (create-exclusive, not " +
       "last-writer-wins)") {
+    refLayouts.foreach { L =>
     val dir = tmp("manirefrace")
     try {
       val root = dir.toString + "/t"
       val nation = Tables.table(spark, sf, "nation")
-      ManifestStore.publish(spark, nation, root, "n_regionkey")
+      L.publish(nation, root, "n_regionkey")
       val fs = Tables.fsFor(spark, root)
       // drive the race at the MetaSwap layer (the tag/branch calls
       // both sit on create): two creators of one marker — the second
@@ -1572,14 +1627,15 @@ class ManifestStoreSpec extends AnyFunSuite {
       }
       // the committed marker is the winner's, verbatim
       assert(new String(graft.sources.MetaSwap.readCommitted(fs, p),
-        "UTF-8").contains("created=1"))
+        "UTF-8").contains("created=1"), L.name)
       // and the API-level duplicate refuses loudly too
-      ManifestStore.tag(spark, root, "t1")
+      L.tag(root, "t1")
       intercept[IllegalStateException] {
-        ManifestStore.tag(spark, root, "t1")
+        L.tag(root, "t1")
       }
       ()
     } finally rmTree(dir)
+    }
   }
 
   test("prefix-aware list grouping: a (year,month) list table " +
@@ -1911,6 +1967,16 @@ class ManifestStoreSpec extends AnyFunSuite {
           .toDF("k", "w", "p", "v"), root, "p")
       }
       assert(e4.getMessage.contains("RENAME"))
+      // keep = 0 refuses before anything commits: the table keeps
+      // serving (a committed rename pruning its own manifest would
+      // leave it unreadable)
+      val small = dir.toString + "/keep0"
+      M.publish(spark, Tables.table(spark, sf, "nation"), small,
+        "n_regionkey")
+      intercept[IllegalArgumentException] {
+        M.renameColumn(spark, small, "n_name", "nm", keep = 0)
+      }
+      assert(M.readCurrent(spark, small).count() == 25L)
       // ---- DV on a renamed table ----
       val g6 = M.deleteWhereMor(spark, root, col("w") === 4L)
       assert(M.readCurrent(spark, root)

@@ -907,4 +907,32 @@ class SnapshotStoreSpec extends AnyFunSuite {
       ()
     } finally rmTree(dir)
   }
+
+  test("one generation protocol: neither layout mentions the other, " +
+      "and only Generations writes the pointer bytes") {
+    val src = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(src),
+      s"run from the project root: $src not found")
+    def lines(rel: String): Seq[(String, Int)] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(src.resolve(rel)).asScala.toSeq
+        .zipWithIndex
+    }
+    def offenders(rel: String, word: String): Seq[String] =
+      lines(rel).collect { case (l, i) if l.contains(word) =>
+        s"$rel:${i + 1}: ${l.trim}" }
+    val crossRefs =
+      offenders("sources/SnapshotStore.scala", "ManifestStore") ++
+        offenders("sources/ManifestStore.scala", "SnapshotStore")
+    assert(crossRefs.isEmpty, crossRefs.mkString("\n"))
+    val pointerWriters = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(src).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => src.relativize(p).toString)
+        .filterNot(_ == "sources/Generations.scala")
+        .flatMap(offenders(_, "keep=$")).toList
+    }
+    assert(pointerWriters.isEmpty, pointerWriters.mkString("\n"))
+  }
 }
