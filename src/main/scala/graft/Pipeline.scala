@@ -638,7 +638,8 @@ object Pipeline {
     * unlabelled rows (differential reference: `ClassifyParitySpec`).
     */
   private def classifyCleaned(spark: SparkSession, outDir: String,
-                              cleaned: DataFrame): DataFrame = {
+                              cleaned: DataFrame,
+                              sketch: Dedup.BatchSketch): DataFrame = {
     val idx = indexDir(outDir)
     val ids = cleaned.select(col("doc_id"))
     // (a) exact: the best-quality batch sibling per norm_hash wins
@@ -653,11 +654,10 @@ object Pipeline {
     val inSilver = evidence
       .join(cleaned.select(col("norm_hash")), Seq("norm_hash"), "left_semi")
       .distinct().withColumn("in_silver", lit(true))
-    // (b) near-dups vs everything ever processed (the index _meta
-    // supplies the boilerplate df-cap, so batch and stored sides stay
-    // consistent with the bootstrap build)
-    val pairs = Dedup.minhashDedupAgainstIndex(cleaned, "doc_id",
-      "norm_text", idx)
+    // (b) near-dups vs everything ever processed, from the batch's
+    // sketch (the index _meta supplies the boilerplate df-cap, so batch
+    // and stored sides stay consistent with the bootstrap build)
+    val pairs = Dedup.matchSketch(sketch, idx)
     val nearOld = pairs
       .join(ids.withColumnRenamed("doc_id", "id_a"), Seq("id_a"),
         "left_anti")
@@ -706,8 +706,11 @@ object Pipeline {
     * label vocabulary.
     */
   def classifyBatch(spark: SparkSession, outDir: String,
-                    batch: DataFrame): DataFrame =
-    classifyCleaned(spark, outDir, Checkpoints.truncate(corpusClean(batch)))
+                    batch: DataFrame): DataFrame = {
+    val cleaned = Checkpoints.truncate(corpusClean(batch))
+    Dedup.withIndexSketch(cleaned, "doc_id", "norm_text", indexDir(outDir),
+      cleaned.count())(classifyCleaned(spark, outDir, cleaned, _))
+  }
 
   /** [[corpusIncrement]] with a crash-injection hook fired at the
     * commit point (after the index batch publishes, before any silver
@@ -741,7 +744,7 @@ object Pipeline {
       afterIndexPublish: () => Unit = () => ()): Long = {
     val cleaned = Checkpoints.truncate(corpusClean(batch))
     val idx = indexDir(outDir)
-    val bid = Dedup.batchId(cleaned, "doc_id")
+    val (bid, rows) = Dedup.batchIdAndRows(cleaned, "doc_id")
     val batchDir = new org.apache.hadoop.fs.Path(s"$idx/batches/$bid")
     val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val landedMarker = new org.apache.hadoop.fs.Path(batchDir, "_landed")
@@ -757,16 +760,17 @@ object Pipeline {
         s"processed and landed at $batchDir — re-submitting a committed " +
         "batch would double-count it")
     val resuming = fs.exists(batchDir)
-    if (!resuming) {
+    if (!resuming) Dedup.withIndexSketch(cleaned, "doc_id", "norm_text",
+        idx, rows) { sketch =>
       val accepted = cleaned.join(
-        classifyCleaned(spark, outDir, cleaned)
+        classifyCleaned(spark, outDir, cleaned, sketch)
           .filter(col("decision") === "accept").select(col("doc_id")),
         Seq("doc_id"))
       // two consumers: commit record + hash evidence
       val acceptedSilver0 =
         Checkpoints.truncate(silverColumns(accepted, runDate, recipe))
-      Dedup.writeDedupIndex(cleaned, "doc_id", "norm_text", idx,
-        mode = "append", knownId = Some(bid),
+      Dedup.publishBatch(sketch, cleaned, "doc_id", idx, mode = "append",
+        knownId = Some(bid),
         sideTables = Seq("accepted" -> acceptedSilver0.coalesce(1),
           "hashes" -> acceptedSilver0.select(col("norm_hash"))))
       ()

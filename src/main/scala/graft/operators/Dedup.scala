@@ -64,11 +64,15 @@ object Dedup {
     */
   def shingleIndex(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3): DataFrame =
-    graft.sources.Tables.fanOut(
+    shingleRows(graft.sources.Tables.fanOut(
       df.select(col(idCol).as("sid"),
-        TextFunctions.tokens(col(textCol)).as("__ws")))
-      .select(col("sid"),
-        explode(array_distinct(shinglesFromTokens(col("__ws"), n))).as("sh"))
+        TextFunctions.tokens(col(textCol)).as("__ws"))), n)
+
+  /** [[shingleIndex]] on the frame's own partitioning: (sid, __ws) in,
+    * one (sid, sh) row per distinct shingle out. */
+  private def shingleRows(ws: DataFrame, n: Int = 3): DataFrame =
+    ws.select(col("sid"),
+      explode(array_distinct(shinglesFromTokens(col("__ws"), n))).as("sh"))
 
   /** D2 step 1 — k-function MinHash signature per id. ONE sha256 per
     * (doc, shingle); the k "hash functions" are k overlapping 8-hex
@@ -180,15 +184,23 @@ object Dedup {
           .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("i"))
       case None => cooccurrence(sh)
     }
-    inter
-      .join(sizes.as("sa"), col("sa.sid") === col("id_a"))
-      .join(sizes.as("sb"), col("sb.sid") === col("id_b"))
-      .filter(col("i") * thresholdDen >=
-        (col("sa.n") + col("sb.n") - col("i")) * thresholdNum)
-      .select(col("id_a"), col("id_b"),
-        round(col("i").cast("double") /
-          (col("sa.n") + col("sb.n") - col("i")), 6).as("jaccard"))
+    jaccardOf(inter
+        .join(sizes.as("sa"), col("sa.sid") === col("id_a"))
+        .join(sizes.as("sb"), col("sb.sid") === col("id_b")),
+      col("sa.n"), col("sb.n"), thresholdNum, thresholdDen)
   }
+
+  /** The threshold filter and rounded Jaccard of [[jaccardVerify]] over
+    * (id_a, id_b, i) rows with set sizes `na` and `nb` — shared by
+    * every verify form, so their outputs are bit-identical.
+    */
+  private def jaccardOf(pairs: DataFrame, na: Column, nb: Column,
+                        thresholdNum: Int, thresholdDen: Int): DataFrame =
+    pairs
+      .filter(col("i") * thresholdDen >= (na + nb - col("i")) * thresholdNum)
+      .select(col("id_a"), col("id_b"),
+        round(col("i").cast("double") / (na + nb - col("i")), 6)
+          .as("jaccard"))
 
   /** D2 — full MinHash+LSH near-dup pipeline: shingle → minhash →
     * band-bucket join → Jaccard-verified pairs at ≥ num/den.
@@ -419,20 +431,28 @@ object Dedup {
     * aggregate to compute, one O(1) directory probe to compare — the
     * whole cost of the replay guard.
     */
-  def batchId(df: DataFrame, idCol: String): String = {
-    val r = df.select(sha2(col(idCol).cast("string"), 256).as("d"))
-      .distinct()
+  def batchId(df: DataFrame, idCol: String): String =
+    batchIdAndRows(df, idCol)._1
+
+  /** [[batchId]] and `df`'s row count from the same aggregate — the
+    * count sizes the batch for [[withBatchSketch]] at no extra job.
+    */
+  private[graft] def batchIdAndRows(df: DataFrame,
+                                    idCol: String): (String, Long) = {
+    val r = df.groupBy(sha2(col(idCol).cast("string"), 256).as("d"))
+      .agg(count(lit(1)).as("c"))
       .agg(
         sum(conv(substring(col("d"), 1, 14), 16, 10)
           .cast("decimal(38,0)")).as("s1"),
         sum(conv(substring(col("d"), 33, 14), 16, 10)
           .cast("decimal(38,0)")).as("s2"),
-        count(lit(1)).as("n"))
+        count(lit(1)).as("n"), sum(col("c")).as("rows"))
       .head()
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(s"${r.getDecimal(0)}:${r.getDecimal(1)}:${r.getLong(2)}"
+    val id = md.digest(s"${r.getDecimal(0)}:${r.getDecimal(1)}:${r.getLong(2)}"
         .getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString
+    (id, if (r.isNullAt(3)) 0L else r.getLong(3))
   }
 
   /** The index's structural parameters, persisted at `_meta` in the
@@ -571,6 +591,13 @@ object Dedup {
     *
     * `knownId` is `df`'s [[batchId]] when the caller has already
     * computed it (saves the aggregate). Returns the published batch id.
+    *
+    * The batch's shingles and band buckets are sketched in the
+    * exchange form ([[withBatchSketch]]) and written by
+    * [[publishBatch]]. A caller that has already matched the batch
+    * against the index (the corpus increment) publishes that same
+    * sketch through [[publishBatch]] instead of re-deriving it; both
+    * write the same rows (spec-asserted: AgainstIndexParitySpec).
     */
   def writeDedupIndex(df: DataFrame, idCol: String, textCol: String,
                       path: String, k: Int = 16,
@@ -582,6 +609,46 @@ object Dedup {
                       knownId: Option[String] = None): String = {
     require(mode == "overwrite" || mode == "append",
       s"mode must be overwrite|append, got $mode")
+    val cap =
+      if (mode == "overwrite") maxDocFreq.getOrElse(-1)
+      else indexCap(fsFor(df, path), path, k, rowsPerBand, maxDocFreq,
+        "append")
+    withBatchSketch(df, idCol, textCol, k, rowsPerBand, cap,
+        local = false) { sk =>
+      publishBatch(sk, df, idCol, path, mode, auditOverlap, sideTables,
+        knownId)
+    }
+  }
+
+  /** The df-cap a batch must be sketched with to join or extend the
+    * index at `path`: the one its `_meta` records (a k/band/cap
+    * mismatch is refused), else `maxDocFreq` (-1: no cap).
+    */
+  private def indexCap(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                       k: Int, rowsPerBand: Int,
+                       maxDocFreq: Option[Int], what: String): Int =
+    readIndexMeta(fs, path) match {
+      case Some(m) =>
+        require(m.k == k && m.rowsPerBand == rowsPerBand,
+          s"index at $path was built with k=${m.k}/rowsPerBand=" +
+            s"${m.rowsPerBand}, $what called with $k/$rowsPerBand")
+        maxDocFreq.foreach(c => require(c == m.maxDocFreq,
+          s"index at $path was built with maxDocFreq=${m.maxDocFreq}, " +
+            s"$what called with $c"))
+        m.maxDocFreq
+      case None => maxDocFreq.getOrElse(-1)
+    }
+
+  /** [[writeDedupIndex]] from an already-built sketch of `df`: the
+    * replay guard, the staged write of the sketch's bands and shingles
+    * plus `sideTables`, and the atomic publish. Returns the batch id.
+    */
+  private[graft] def publishBatch(sk: BatchSketch, df: DataFrame,
+                                  idCol: String, path: String,
+                                  mode: String,
+                                  auditOverlap: Boolean = false,
+                                  sideTables: Seq[(String, DataFrame)] = Nil,
+                                  knownId: Option[String] = None): String = {
     // all probes through the Hadoop FS API, NOT java.io.File: the
     // production index lives on hdfs:// paths where File.exists is
     // always false and a local-only probe would silently skip the
@@ -590,23 +657,15 @@ object Dedup {
     val spark = df.sparkSession
     val bid = knownId.getOrElse(batchId(df, idCol))
     val batchDir = new org.apache.hadoop.fs.Path(s"$path/batches/$bid")
-    val cap: Int =
-      if (mode == "overwrite") maxDocFreq.getOrElse(-1)
-      else readIndexMeta(fs, path) match {
-        case Some(m) =>
-          require(m.k == k && m.rowsPerBand == rowsPerBand,
-            s"index at $path was built with k=${m.k}/rowsPerBand=" +
-              s"${m.rowsPerBand}, append called with $k/$rowsPerBand")
-          maxDocFreq.foreach(c => require(c == m.maxDocFreq,
-            s"index at $path was built with maxDocFreq=${m.maxDocFreq}, " +
-              s"append called with $c"))
-          m.maxDocFreq
-        case None => maxDocFreq.getOrElse(-1)
-      }
+    val meta = IndexMeta(sk.k, sk.rowsPerBand, sk.cap)
+    val stored = if (mode == "overwrite") None else readIndexMeta(fs, path)
     if (mode == "overwrite") {
       fs.delete(new org.apache.hadoop.fs.Path(path), true)
       ()
     } else {
+      stored.foreach(m => require(m == meta,
+        s"index at $path was built with $m, the batch is sketched with " +
+          s"$meta"))
       if (fs.exists(batchDir)) throw new graft.ReplayRefused(
         s"writeDedupIndex append refused: batch $bid is already " +
           s"published in the index at $path — a duplicated/retried " +
@@ -635,23 +694,17 @@ object Dedup {
       throw new IllegalStateException(
         s"cannot wipe stale staging at $staging before publishing " +
           s"batch $bid")
-    val all = shingleIndex(df, idCol, textCol)
-    graft.Checkpoints.cached(if (cap < 0) all else capDocFreq(all, cap)) { sh =>
-      // band rides BOTH as a data column and as the partition directory
-      // (band_p): the directory clusters each band's buckets into their
-      // own files, while the data column keeps every batch directory a
-      // uniform self-contained table — which is what lets the reader
-      // union any number of batch dirs in ONE scan relation
-      // (recursiveFileLookup) instead of per-batch plans or a
-      // partition-discovery walk over heterogeneous roots
-      bandBuckets(signatureFromIndex(sh, k), k, rowsPerBand)
-        .select(col("sid"), col("bk.band").as("band"),
-          col("bk.bucket").as("bucket"))
-        .withColumn("band_p", col("band"))
-        .write.mode("overwrite").partitionBy("band_p")
-        .parquet(s"$staging/bands")
-      sh.write.mode("overwrite").parquet(s"$staging/shingles")
-    }
+    // band rides BOTH as a data column and as the partition directory
+    // (band_p): the directory clusters each band's buckets into their
+    // own files, while the data column keeps every batch directory a
+    // uniform self-contained table — which is what lets the reader
+    // union any number of batch dirs in ONE scan relation
+    // (recursiveFileLookup) instead of per-batch plans or a
+    // partition-discovery walk over heterogeneous roots
+    sk.bands.withColumn("band_p", col("band"))
+      .write.mode("overwrite").partitionBy("band_p")
+      .parquet(s"$staging/bands")
+    sk.sh.write.mode("overwrite").parquet(s"$staging/shingles")
     // side tables (commit records, exact-dup evidence) ride the same
     // atomic publish, each written with its own partitioning — the
     // caller coalesces a batch-sized record, corpus-sized evidence
@@ -659,12 +712,102 @@ object Dedup {
     sideTables.foreach { case (name, t) =>
       t.write.mode("overwrite").parquet(s"$staging/$name")
     }
-    if (readIndexMeta(fs, path).isEmpty)
-      writeIndexMeta(fs, path, IndexMeta(k, rowsPerBand, cap))
+    if (stored.isEmpty) writeIndexMeta(fs, path, meta)
     fs.mkdirs(batchDir.getParent)
     if (!fs.rename(staging, batchDir)) throw new IllegalStateException(
       s"cannot publish staged batch $staging to $batchDir")
     bid
+  }
+
+  /** One batch's side of the incremental dedup index, derived once and
+    * read by the candidate probe, the Jaccard verify and the publish:
+    * the batch's df-capped shingles `sh` (sid, sh), cached, and its
+    * band buckets `bands` (sid, band, bucket) derived from them, under
+    * the index's signature scheme (`k`, `rowsPerBand`, `cap` — the
+    * `_meta` values).
+    *
+    * A `local` sketch sits on ONE partition (see [[LocalBatchRows]]):
+    * its df-cap and signature aggregate run without an exchange, so
+    * each reader re-derives the bands in-task, and `shRows` is its
+    * measured shingle-row count (-1 for any other sketch). Otherwise it
+    * is the exchange form ([[shingleIndex]]'s fan-out, [[capDocFreq]]),
+    * and a reader that scans the bands more than once caches them.
+    */
+  private[graft] final case class BatchSketch(sh: DataFrame,
+                                              bands: DataFrame, k: Int,
+                                              rowsPerBand: Int, cap: Int,
+                                              local: Boolean,
+                                              shRows: Long)
+
+  /** The largest batch, in rows, that is sketched on one partition and
+    * may be verified in one task. It bounds the serial work, not the
+    * memory: the one-partition sketch's window, aggregate and cache
+    * spill like any Spark operator, and the verify task's resident
+    * maps are gated by [[LocalVerifyBytes]] on measured row counts.
+    * What it does bound in that task is the per-document state — the
+    * batch's band buckets (k/rowsPerBand entries a document) and one
+    * document's within-batch neighbour set (≤ this many ids). Larger
+    * batches run the exchange form, which spreads over the cluster.
+    */
+  private[graft] val LocalBatchRows: Long = 4096L
+
+  /** The batch-local verify task's memory budget: half of a 4-core
+    * local executor's ~250 MB unified-memory share per task at a 2 GB
+    * heap. The task holds every batch shingle and every stored shingle
+    * of the batch's candidates in Java hash maps, plus the stored
+    * candidate pairs in a hash set; [[verifyTaskBytes]] prices them
+    * from the counts the path measures before the task runs (the
+    * sketch's shingle rows, the stored-band probe's rows, the
+    * semi-joined stored shingle rows). Over budget — long documents, or
+    * a crowded bucket pulling many stored copies of a template — the
+    * exchange verify runs instead.
+    */
+  private[graft] val LocalVerifyBytes: Long = 128L << 20
+
+  /** Resident bytes of the one-task verify: ~150 B a batch shingle
+    * (string, map node, table slot), ~200 B a stored shingle (the same
+    * plus its dedup-set node) and ~100 B a stored candidate pair row
+    * (boxed tuple, set node). Within-batch pairs are never held: the
+    * task forms them one document at a time.
+    */
+  private def verifyTaskBytes(batchShingles: Long, storedShingles: Long,
+                              storedPairs: Long): Long =
+    150L * batchShingles + 200L * storedShingles + 100L * storedPairs
+
+  /** Build `batch`'s [[BatchSketch]], run `body` on it, and release
+    * its cached shingles on every exit (one scope, so an increment's
+    * probe, verify and publish all read the same sketch).
+    */
+  private[graft] def withBatchSketch[T](batch: DataFrame, idCol: String,
+                                        textCol: String, k: Int,
+                                        rowsPerBand: Int, cap: Int,
+                                        local: Boolean)
+                                       (body: BatchSketch => T): T = {
+    val sh =
+      if (local) {
+        // one partition, no fan-out; the df-cap is a window over that
+        // partition (no exchange), keeping exactly capDocFreq's rows
+        val one = shingleRows(batch.coalesce(1).select(
+          col(idCol).as("sid"), TextFunctions.tokens(col(textCol)).as("__ws")))
+        if (cap < 0) one
+        else one.withColumn("__df", count(lit(1)).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))))
+          .filter(col("__df") <= cap).drop("__df")
+      } else {
+        val all = shingleIndex(batch, idCol, textCol)
+        if (cap < 0) all else capDocFreq(all, cap)
+      }
+    graft.Checkpoints.cached(sh) { s =>
+      // under AQE every not-yet-built cached scan in a plan is its own
+      // cache-building job, and the batch-local verify's plan scans the
+      // shingles several times: build them here, once — the count is
+      // the verify budget's batch term
+      val shRows = if (local) rowsUpTo(s) else -1L
+      body(BatchSketch(s, bandBuckets(signatureFromIndex(s, k), k,
+          rowsPerBand).select(col("sid"), col("bk.band").as("band"),
+          col("bk.bucket").as("bucket")), k, rowsPerBand, cap, local,
+        shRows))
+    }
   }
 
   /** Remove one published batch from a [[writeDedupIndex]] index — the
@@ -957,6 +1100,16 @@ object Dedup {
     * [[minhashDedupIncremental]] over (indexed corpus ∪ newBatch)
     * (spec-asserted).
     *
+    * A batch of at most [[LocalBatchRows]] rows with a long id column
+    * (a one-job row probe that stops past the bound decides) runs
+    * batch-local: its sketch sits on one partition and, while the
+    * measured verify state fits [[LocalVerifyBytes]], the candidate
+    * grouping and verify run in one executor task ([[localMatch]]),
+    * so the batch side costs a handful of Spark jobs instead of one
+    * per exchange. Larger batches, and state over the budget, run the
+    * exchange form. Both return the same pairs (spec-asserted:
+    * AgainstIndexParitySpec).
+    *
     * `newBatch` ids must be disjoint from the indexed corpus (the
     * landing-zone invariant incremental dedup exists to maintain).
     */
@@ -964,34 +1117,89 @@ object Dedup {
                                textCol: String, path: String,
                                thresholdNum: Int = 1,
                                thresholdDen: Int = 2, k: Int = 16,
-                               rowsPerBand: Int = 2): DataFrame = {
-    val spark = newBatch.sparkSession
-    val fs = fsFor(newBatch, path)
+                               rowsPerBand: Int = 2): DataFrame =
+    withIndexSketch(newBatch, idCol, textCol, path,
+        rowsUpTo(newBatch.select(col(idCol)), LocalBatchRows), k,
+        rowsPerBand)(matchSketch(_, path, thresholdNum, thresholdDen))
+
+  /** `df`'s rows, counted by ONE job with no exchange (`Dataset.count`
+    * aggregates through one, and under AQE builds a cached input in a
+    * job of its own); each partition stops past `upTo` rows, so a
+    * result above `upTo` only says "more than `upTo`". It runs as one
+    * SQL execution, so its jobs (a broadcast in `df`'s plan included)
+    * show up in the SQL tab and in [[graft.tools.Profile]] under it.
+    */
+  private def rowsUpTo(df: DataFrame, upTo: Long = Long.MaxValue): Long = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+        Some("count")) {
+      qe.toRdd.mapPartitions { it =>
+        var n = 0L
+        while (n <= upTo && it.hasNext) { it.next(); n += 1 }
+        Iterator(n)
+      }.fold(0L)(_ + _)
+    }
+  }
+
+  /** [[withBatchSketch]] for a batch of `rows` rows that is matched
+    * against, and then appended to, the published index at `path`:
+    * sketched batch-local when its id column is long and `rows` (only
+    * evaluated then) is at most `localRows` (negative: never; specs
+    * force either form with it).
+    */
+  private[graft] def withIndexSketch[T](batch: DataFrame, idCol: String,
+                                        textCol: String, path: String,
+                                        rows: => Long, k: Int = 16,
+                                        rowsPerBand: Int = 2,
+                                        localRows: Long = LocalBatchRows)
+                                       (body: BatchSketch => T): T = {
     // the batch side MUST run the same signature scheme and df-cap the
     // stored index was built with (see writeDedupIndex's meta
     // rationale) — inherit the cap, refuse a k/band mismatch
-    val cap = readIndexMeta(fs, path) match {
-      case Some(m) =>
-        require(m.k == k && m.rowsPerBand == rowsPerBand,
-          s"index at $path was built with k=${m.k}/rowsPerBand=" +
-            s"${m.rowsPerBand}, query called with $k/$rowsPerBand")
-        m.maxDocFreq
-      case None => -1
-    }
-    val storedBands = batchSubPaths(fs, path, "bands")
-    require(storedBands.nonEmpty,
+    val cap = indexCap(fsFor(batch, path), path, k, rowsPerBand, None,
+      "query")
+    // long ids only: the one-task verify keys its maps by long id
+    val local = localRows >= 0 && batch.schema(idCol).dataType ==
+      org.apache.spark.sql.types.LongType && rows <= localRows
+    withBatchSketch(batch, idCol, textCol, k, rowsPerBand, cap, local)(body)
+  }
+
+  /** The verified (id_a, id_b, jaccard) pairs of a sketched batch
+    * against the index at `path` and against itself, materialized (the
+    * result outlives the sketch's scope). A local sketch runs
+    * [[localMatch]] under the `verifyBytes` budget (specs shrink it);
+    * any other sketch, or one over budget, runs the exchange form: a
+    * band-bucket join against the stored bands plus the batch's
+    * self-join, then [[jaccardVerify]] over the batch shingles and the
+    * candidate-restricted stored shingles.
+    */
+  private[graft] def matchSketch(sk: BatchSketch, path: String,
+                                 thresholdNum: Int = 1,
+                                 thresholdDen: Int = 2,
+                                 verifyBytes: Long = LocalVerifyBytes)
+      : DataFrame = {
+    val spark = sk.sh.sparkSession
+    val fs = fsFor(sk.sh, path)
+    val bandPaths = batchSubPaths(fs, path, "bands")
+    require(bandPaths.nonEmpty,
       s"no dedup index published at $path — build one with " +
         "writeDedupIndex before querying against it")
-    val allNewSh = shingleIndex(newBatch, idCol, textCol)
-    graft.Checkpoints.cached(
-      if (cap < 0) allNewSh else capDocFreq(allNewSh, cap)) { newSh =>
+    val shinglePaths = batchSubPaths(fs, path, "shingles")
+    // the stored tables share the batch's schema (same id column), so
+    // no footer-reading schema inference job runs
+    def stored(paths: Seq[String], as: DataFrame) =
+      spark.read.schema(as.schema).option("recursiveFileLookup", "true")
+        .parquet(paths: _*)
+    val local =
+      if (!sk.local) None
+      else localMatch(sk, stored(bandPaths, sk.bands),
+        stored(shinglePaths, sk.sh), thresholdNum, thresholdDen, verifyBytes)
+    local.getOrElse {
+      val idxBk = readBatchTables(spark, bandPaths)
+      val idxSh = readBatchTables(spark, shinglePaths)
       // the batch's band table feeds the index join AND the batch
       // self-join; it is released before the verify runs
-      val cand = graft.Checkpoints.cached(
-        bandBuckets(signatureFromIndex(newSh, k), k, rowsPerBand)
-          .select(col("sid"), col("bk.band").as("band"),
-            col("bk.bucket").as("bucket"))) { newBk =>
-        val idxBk = readBatchTables(spark, storedBands)
+      val cand = graft.Checkpoints.cached(sk.bands) { newBk =>
         val vsIndex = newBk.as("a")
           .join(idxBk.as("b"),
             col("a.band") === col("b.band") &&
@@ -1021,12 +1229,148 @@ object Dedup {
       // duplicated index append that slipped past writeDedupIndex's
       // guard would double them — and doubled rows shift every verify
       // count. Dedupe on read so verify stays exact regardless.
-      val idxSh = readBatchTables(spark, batchSubPaths(fs, path, "shingles"))
+      val storedSh = idxSh
         .join(candIds, col("sid") === col("cid"), "left_semi")
         .distinct()
-      graft.Checkpoints.truncate(jaccardVerify(newSh.unionByName(idxSh),
+      graft.Checkpoints.truncate(jaccardVerify(sk.sh.unionByName(storedSh),
         Some(cand), thresholdNum, thresholdDen))
     }
+  }
+
+  /** The batch-local form of [[matchSketch]] (`idxBk`, `idxSh`: the
+    * stored bands and shingles), or None when the verify task's
+    * measured state would exceed `verifyBytes` ([[verifyTaskBytes]]).
+    * Only the stored scans run in parallel: the batch's buckets
+    * broadcast into the stored band scan, and the batch ids plus the
+    * stored candidate ids broadcast into the stored shingle scan; each
+    * result is cached and counted in one job ([[rowsUpTo]]), read once
+    * by the gate and once by the task. Everything else is ONE executor
+    * task (the [[resolveGroups]] union-find precedent): it receives the
+    * stored candidate pairs, the batch's bands and shingles and the
+    * semi-joined stored shingles as tagged rows, forms the within-batch
+    * pairs one document at a time from the (band, bucket) groups, and
+    * counts each candidate pair's shared shingles and set sizes exactly
+    * as [[jaccardVerify]]'s joins do (stored rows deduped, batch rows
+    * as they are). [[jaccardOf]] then applies the same threshold and
+    * rounding, so the output equals the exchange form's (spec-pinned:
+    * AgainstIndexParitySpec).
+    */
+  private def localMatch(sk: BatchSketch, idxBk: DataFrame,
+                         idxSh: DataFrame, thresholdNum: Int,
+                         thresholdDen: Int,
+                         verifyBytes: Long): Option[DataFrame] = {
+    // one row shape for the task's four inputs, told apart by `t`:
+    // 0 stored candidate pair (a batch sid, b stored sid), 1 batch band
+    // (a sid, b band, s bucket), 2 batch shingle and 3 stored shingle
+    // (a sid, s shingle)
+    def tagged(t: Int, a: Column, b: Column, s: Column) =
+      Seq(lit(t).as("t"), a.cast("long").as("a"), b.cast("long").as("b"),
+        s.cast("string").as("s"))
+    val probe = idxBk.join(broadcast(sk.bands.select(col("sid").as("__n"),
+          col("band").as("__b"), col("bucket").as("__k"))),
+        col("band") === col("__b") && col("bucket") === col("__k") &&
+          col("sid") =!= col("__n"))
+      .select(tagged(0, col("__n"), col("sid"), lit(null)): _*)
+    graft.Checkpoints.cached(probe) { pairRows =>
+      val nPairs = rowsUpTo(pairRows)
+      if (verifyTaskBytes(sk.shRows, 0L, nPairs) > verifyBytes) None
+      else {
+        // the batch's ids ride along: a batch id that is also stored (a
+        // landing-zone violation) gets its stored rows, as in the
+        // exchange form's candidate-id semi-join
+        val ids = pairRows.select(col("b").as("__id"))
+          .unionByName(sk.bands.select(col("sid").as("__id")))
+        val storedSh = idxSh.join(broadcast(ids), col("sid") === col("__id"),
+            "left_semi")
+          .select(tagged(3, col("sid"), lit(null), col("sh")): _*)
+        graft.Checkpoints.cached(storedSh) { shRows =>
+          if (verifyTaskBytes(sk.shRows, rowsUpTo(shRows), nPairs) >
+              verifyBytes) None
+          else Some(verifyInOneTask(pairRows
+            .unionByName(sk.bands.select(
+              tagged(1, col("sid"), col("band"), col("bucket")): _*))
+            .unionByName(sk.sh.select(
+              tagged(2, col("sid"), lit(null), col("sh")): _*))
+            .unionByName(shRows), thresholdNum, thresholdDen))
+        }
+      }
+    }
+  }
+
+  /** [[localMatch]]'s task over its tagged rows, materialized. */
+  private def verifyInOneTask(rows: DataFrame, thresholdNum: Int,
+                              thresholdDen: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.collection.mutable.ArrayBuffer
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq("id_a", "id_b", "i", "n_a", "n_b")
+      .map(StructField(_, LongType, nullable = false)))
+    val verified = rows.repartition(1).mapPartitions { it =>
+      type Counts = java.util.HashMap[String, java.lang.Integer]
+      type Key = (Long, String)
+      val counts = new java.util.HashMap[java.lang.Long, Counts]()
+      val storedSeen =
+        new java.util.HashMap[java.lang.Long, java.util.HashSet[String]]()
+      // (band, bucket) -> batch sids, and sid -> its (band, bucket)s
+      val members = new java.util.HashMap[Key, ArrayBuffer[Long]]()
+      val keys = new java.util.HashMap[java.lang.Long, ArrayBuffer[Key]]()
+      val storedPairs = new java.util.HashSet[(Long, Long)]()
+      def addShingle(sid: Long, sh: String): Unit = {
+        val m = counts.computeIfAbsent(sid, _ => new Counts())
+        m.merge(sh, Integer.valueOf(1),
+          (x, y) => Integer.valueOf(x.intValue + y.intValue)); ()
+      }
+      it.foreach { r =>
+        val a = r.getLong(1)
+        r.getInt(0) match {
+          case 0 =>
+            val b = r.getLong(2)
+            storedPairs.add((math.min(a, b), math.max(a, b)))
+          case 1 =>
+            val key = (r.getLong(2), r.getString(3))
+            members.computeIfAbsent(key, _ => ArrayBuffer.empty[Long]) += a
+            keys.computeIfAbsent(a, _ => ArrayBuffer.empty[Key]) += key
+          case 2 => addShingle(a, r.getString(3))
+          case _ =>
+            if (storedSeen.computeIfAbsent(a,
+                _ => new java.util.HashSet[String]()).add(r.getString(3)))
+              addShingle(a, r.getString(3))
+        }
+        ()
+      }
+      storedSeen.clear()
+      val sizes = new java.util.HashMap[java.lang.Long, java.lang.Long]()
+      counts.forEach { (sid, m) =>
+        var n = 0L; m.values().forEach(c => n += c.longValue)
+        sizes.put(sid, n); ()
+      }
+      // within-batch pairs (a, c), a < c, one document's neighbour set
+      // at a time — never the whole pair set; a pair the stored probe
+      // also found is left to `storedPairs`
+      val batchPairs = keys.asScala.iterator.flatMap { case (a, ks) =>
+        val near = new java.util.HashSet[Long]()
+        ks.foreach(members.get(_).foreach(c => if (c > a) near.add(c)))
+        near.asScala.iterator.map(c => (a.longValue, c))
+          .filterNot(p => storedPairs.contains(p))
+      }
+      (batchPairs ++ storedPairs.asScala.iterator).flatMap { case (a, b) =>
+        val (ma, mb) = (counts.get(a), counts.get(b))
+        if (ma == null || mb == null) None
+        else {
+          val (small, big) = if (ma.size <= mb.size) (ma, mb) else (mb, ma)
+          var i = 0L
+          small.forEach((sh, c) => {
+            val o = big.get(sh)
+            if (o != null) i += c.longValue * o.longValue
+          })
+          if (i > 0) Some(Row(a, b, i, sizes.get(a), sizes.get(b)))
+          else None
+        }
+      }
+    }(org.apache.spark.sql.Encoders.row(schema))
+    graft.Checkpoints.truncate(jaccardOf(verified.toDF(), col("n_a"),
+      col("n_b"), thresholdNum, thresholdDen))
   }
 
   /** D9 — benchmark CONTAMINATION check (decontamination pass): flag

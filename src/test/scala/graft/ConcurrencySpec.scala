@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{ManifestStore, MetaSwap, Tables}
+import scala.jdk.CollectionConverters._
 
 /** TRUE concurrent-writer stress on one manifest table: N real JVM
   * threads race publish / merge / update / insert+delete /
@@ -78,6 +79,10 @@ class ConcurrencySpec extends AnyFunSuite {
         val claims = new java.util.concurrent.ConcurrentHashMap[
           Long, Op]()
         val aborted = new java.util.concurrent.atomic.AtomicInteger(0)
+        // a throwable inside a racer thread kills only that thread; it is
+        // collected here and the spec fails on it after the join
+        val failures =
+          new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
         def claim(gen: Long, op: Op): Unit = {
           val prev = claims.putIfAbsent(gen, op)
           assert(prev == null,
@@ -85,7 +90,7 @@ class ConcurrencySpec extends AnyFunSuite {
               "generations must be CAS-unique")
         }
         val threads = (0 until 4).map { t =>
-          new Thread(() => {
+          new Thread(() => try {
             val rnd = new scala.util.Random(seed * 1000 + t)
             (0 until 4).foreach { i =>
               val tag = (seed.toLong * 1000000L) + t * 1000L + i
@@ -141,11 +146,13 @@ class ConcurrencySpec extends AnyFunSuite {
                   aborted.incrementAndGet()
               }
             }
-          })
+          } catch { case e: Throwable => failures.add(e); () })
         }
         threads.foreach(_.start())
         threads.foreach(_.join(300000))
         assert(threads.forall(!_.isAlive), "a racer hung")
+        assert(failures.isEmpty, s"seed $seed racer threads threw: " +
+          failures.asScala.mkString("; "))
 
         // ---- the serializability replay ----
         val maxGen = ManifestStore.currentGen(spark, root).get
@@ -180,11 +187,15 @@ class ConcurrencySpec extends AnyFunSuite {
         val base = (0L until 20L).map(k => (k, 0L))
         SnapshotStore.publish(spark, base.toDF("k", "v"), root,
           keep = 100)
+        // boxed keys and values: with scala.Long, putIfAbsent's null
+        // would unbox to 0L and the claim check below could never pass
         val claims = new java.util.concurrent.ConcurrentHashMap[
-          Long, Long]() // gen -> the publish's tag
+          java.lang.Long, java.lang.Long]() // gen -> the publish's tag
         val aborted = new java.util.concurrent.atomic.AtomicInteger(0)
+        val failures =
+          new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
         val threads = (0 until 4).map { t =>
-          new Thread(() => {
+          new Thread(() => try {
             val rnd = new scala.util.Random(seed * 77 + t)
             (0 until 3).foreach { i =>
               val tag = seed * 1000L + t * 100L + i
@@ -195,7 +206,7 @@ class ConcurrencySpec extends AnyFunSuite {
                     root, keep = 100)
                   val prev = claims.putIfAbsent(g, tag)
                   assert(prev == null,
-                    s"two publishes claim generation $g")
+                    s"two publishes claim generation $g: tags $prev and $tag")
                 case 1 =>
                   SnapshotStore.compactCurrentBytes(spark, root,
                     targetBytesPerFile = 1L << 30, keep = 100)
@@ -207,15 +218,17 @@ class ConcurrencySpec extends AnyFunSuite {
                   aborted.incrementAndGet()
               }
             }
-          })
+          } catch { case e: Throwable => failures.add(e); () })
         }
         threads.foreach(_.start())
         threads.foreach(_.join(300000))
         assert(threads.forall(!_.isAlive), "a racer hung")
+        assert(failures.isEmpty, s"seed $seed racer threads threw: " +
+          failures.asScala.mkString("; "))
         val maxGen = SnapshotStore.currentGen(spark, root).get
         var lastTag = 0L
         (1L to maxGen).foreach { g =>
-          Option(claims.get(g)).foreach(t => lastTag = t)
+          Option(claims.get(g)).foreach(t => lastTag = t.longValue)
           val served = SnapshotStore.readAt(spark, root, g)
             .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
           val model = (0L until 20L).map(k => (k, lastTag)).toSet

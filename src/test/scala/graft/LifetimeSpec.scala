@@ -41,14 +41,18 @@ class LifetimeSpec extends AnyFunSuite {
   private def badEmb = poisoned(emb, "vec_id", "embedding")
 
   private def releasesOnThrow(name: String)(op: => Any): Unit =
-    test(s"$name releases its cache when an action throws") {
-      spark.catalog.clearCache()
-      val e = intercept[Exception](op)
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("injected")),
-        s"failed for another reason: $e")
-      assert(cacheIsEmpty, s"$name left a cache entry behind")
-    }
+    test(s"$name releases its cache when an action throws")(
+      assertReleases(name)(op))
+
+  /** `op` fails on the injected row and leaves no cache entry behind. */
+  private def assertReleases(name: String)(op: => Any): Unit = {
+    spark.catalog.clearCache()
+    val e = intercept[Exception](op)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected")),
+      s"$name failed for another reason: $e")
+    assert(cacheIsEmpty, s"$name left a cache entry behind")
+  }
 
   releasesOnThrow("minhashDedup") {
     Dedup.minhashDedup(badDocs, "doc_id", "text")
@@ -62,12 +66,27 @@ class LifetimeSpec extends AnyFunSuite {
       Dedup.writeDedupIndex(badDocs, "doc_id", "text", dir)
     }
   }
-  releasesOnThrow("minhashDedupAgainstIndex") {
+  test("minhashDedupAgainstIndex releases its cache when an action throws") {
     Checkpoints.tempDir("graft-lifetime") { dir =>
       val isNew = col("doc_id") % 5 === 0
       Dedup.writeDedupIndex(docs.filter(!isNew), "doc_id", "text", dir)
-      Dedup.minhashDedupAgainstIndex(
-        poisoned(docs.filter(isNew), "doc_id", "text"), "doc_id", "text", dir)
+      val bad = poisoned(docs.filter(isNew), "doc_id", "text")
+      // the batch-local form (this batch is below the bound) ...
+      assertReleases("minhashDedupAgainstIndex")(
+        Dedup.minhashDedupAgainstIndex(bad, "doc_id", "text", dir))
+      // ... and the exchange form
+      assertReleases("its exchange form")(
+        Dedup.withIndexSketch(bad, "doc_id", "text", dir, bad.count(),
+          localRows = -1)(Dedup.matchSketch(_, dir)))
+      // the scope an increment runs its probe, verify and publish in
+      Seq(Dedup.LocalBatchRows, -1L).foreach { bound =>
+        assertReleases(s"the shared sketch scope (bound $bound)")(
+          Dedup.withIndexSketch(bad, "doc_id", "text", dir, bad.count(),
+              localRows = bound) { sk =>
+            Dedup.matchSketch(sk, dir)
+            Dedup.publishBatch(sk, bad, "doc_id", dir, "append")
+          })
+      }
     }
   }
   releasesOnThrow("contaminationCheck") {
