@@ -161,13 +161,8 @@ object Bm25 {
       meta: Bm25Meta, terms: Seq[String]): Seq[String] = {
     val fs = fsFor(spark, path)
     val wanted = terms.map(t => s"term_p=${termPrefix(t)}").toSet
-    meta.batches.flatMap { bid =>
-      val base = new org.apache.hadoop.fs.Path(s"$path/batches/$bid")
-      if (!fs.exists(base)) Seq.empty
-      else fs.listStatus(base)
-        .filter(st => st.isDirectory && wanted(st.getPath.getName))
-        .map(_.getPath.toString).toSeq
-    }
+    meta.batches.flatMap(termDirs(fs, path, _))
+      .filter(d => wanted(new org.apache.hadoop.fs.Path(d).getName))
   }
 
   /** Convenience form for callers without a snapshot in hand (specs,
@@ -178,169 +173,103 @@ object Bm25 {
       terms: Seq[String]): Seq[String] =
     prunedPostingPaths(spark, path, readBm25Meta(spark, path), terms)
 
-  private def bm25MetaPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_meta")
-
-  /** `gen` is the swap FENCE ([[graft.operators.VectorIndex.VecMeta]]
-    * rationale): bumped on every commit so no two successive committed
-    * metas are byte-identical — a state-preserving swap (the
-    * single-batch compaction no-op) must still invalidate a concurrent
-    * writer's stale CAS expectation.
+  /** The committed state of the index: the corpus scalars (N, Σlen),
+    * the id column's name and type, and the shared batch lists
+    * ([[IndexProtocol.Listed]]: `gen` is the swap fence).
     */
   private[graft] final case class Bm25Meta(n: Long, sumLen: Long,
                                            idCol: String, idType: String,
                                            batches: Seq[String],
                                            retired: Seq[String] = Nil,
                                            gen: Long = 0L)
+      extends IndexProtocol.Listed
 
-  private def bm25MetaBytes(m: Bm25Meta): Array[Byte] =
-    (s"n=${m.n}\nsum_len=${m.sumLen}\nid_col=${m.idCol}\n" +
-      s"id_type=${m.idType}\nbatches=${m.batches.mkString(",")}\n" +
-      s"retired=${m.retired.mkString(",")}\ngen=${m.gen}\n")
-      .getBytes("UTF-8")
-
-  /** Commit a new meta with the COMPARE-AND-SET `_meta.next` swap
-    * ([[graft.sources.MetaSwap]] — shared with the vector index):
-    * `expect` is the committed bytes this writer read when it planned
-    * the change, so a concurrent append/drop/compact landing in
-    * between fails this commit LOUDLY ([[graft.sources.MetaSwap.CasFailed]])
-    * instead of silently delisting the other writer's batch. Every
-    * maintenance path threads its own read through here — the
-    * single-logical-writer contract is enforced, not just documented.
+  /** The postings layout on the shared batch-list protocol: head
+    * `n, sum_len, id_col, id_type`.
     */
-  private def swapBm25Meta(fs: org.apache.hadoop.fs.FileSystem,
-                           path: String, m: Bm25Meta,
-                           expect: Array[Byte]): Unit = {
-    // bump the fence on EVERY commit (see Bm25Meta.gen)
-    val next = m.copy(gen = m.gen + 1)
-    val bytes = bm25MetaBytes(next)
-    graft.sources.MetaSwap.swap(fs, bm25MetaPath(path), bytes, expect)
-    // snapshot log for as-of-gen probes — recorded AFTER the swap, so
-    // it never alters commit semantics (see IndexProtocol)
-    IndexProtocol.recordMetaHistory(fs, path, next.gen, bytes)
+  private object Layout extends IndexProtocol.BatchList[Bm25Meta](
+      "BM25 index", "writeBm25Index", "double every tf/df it carries") {
+    protected def head(m: Bm25Meta) = Seq("n" -> m.n,
+      "sum_len" -> m.sumLen, "id_col" -> m.idCol, "id_type" -> m.idType)
+    protected def fromKv(kv: Map[String, String], batches: Seq[String],
+                         retired: Seq[String], gen: Long) =
+      Bm25Meta(kv("n").toLong, kv("sum_len").toLong, kv("id_col"),
+        kv.getOrElse("id_type", "bigint"), batches, retired, gen)
+    protected def withLists(m: Bm25Meta, batches: Seq[String],
+                            retired: Seq[String], gen: Long) =
+      m.copy(batches = batches, retired = retired, gen = gen)
   }
 
-  /** Read the committed meta ALONG WITH its raw bytes — the bytes are
-    * what a maintenance path hands back to [[swapBm25Meta]] as its CAS
-    * expectation. Self-healing: a crash between a swap's
-    * delete-old-meta and rename-new-meta steps leaves `_meta.next`
-    * without `_meta`; the next reader completes the rename and
-    * proceeds — the swap is effectively atomic for every reader that
-    * comes after the crash.
+  /** The committed meta ALONG WITH its raw bytes (the CAS expectation
+    * of a maintenance swap); heals a crashed swap first.
     */
   private[graft] def readBm25MetaRaw(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): (Bm25Meta, Array[Byte]) = {
-    val fs = fsFor(spark, path)
-    val p = bm25MetaPath(path)
-    graft.sources.MetaSwap.heal(fs, p)
-    require(fs.exists(p),
-      s"no committed BM25 index at $path (missing _meta — " +
-        "half-built index or wrong path); build one with writeBm25Index")
-    val raw = graft.sources.MetaSwap.readCommitted(fs, p)
-    (parseBm25Meta(raw), raw)
-  }
-
-  /** Parse serialized meta bytes — shared by the live read above and
-    * the as-of-gen history read ([[bm25TopKIndexedAt]]), so the two
-    * views can never diverge in format handling.
-    */
-  private def parseBm25Meta(raw: Array[Byte]): Bm25Meta = {
-    val kv = new String(raw, "UTF-8").linesIterator
-      .map(_.split("=", 2)).collect {
-        case Array(a, b) => a -> b
-      }.toMap
-    Bm25Meta(kv("n").toLong, kv("sum_len").toLong, kv("id_col"),
-      kv.getOrElse("id_type", "bigint"),
-      kv("batches").split(",").toSeq.filter(_.nonEmpty),
-      kv.getOrElse("retired", "").split(",").toSeq.filter(_.nonEmpty),
-      kv.getOrElse("gen", "0").toLong)
-  }
+      path: String): (Bm25Meta, Array[Byte]) =
+    Layout.read(fsFor(spark, path), path)
 
   private[graft] def readBm25Meta(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Bm25Meta = readBm25MetaRaw(spark, path)._1
 
-  private def writeBm25Meta(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String, m: Bm25Meta): Unit = {
-    val bytes = bm25MetaBytes(m)
-    val out = fs.create(bm25MetaPath(path), true)
-    try out.write(bytes) finally out.close()
-    IndexProtocol.recordMetaHistory(fs, path, m.gen, bytes)
+  /** A batch's `term_p=*` postings partition directories — and ONLY
+    * those: a stats or sidecar file a future layout drops into the
+    * batch dir must never leak into a scan. Empty when the batch
+    * directory is gone.
+    */
+  private def termDirs(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                       bid: String): Seq[String] = {
+    val d = new org.apache.hadoop.fs.Path(s"$path/batches/$bid")
+    if (!fs.exists(d)) Seq.empty
+    else fs.listStatus(d).filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("term_p="))
+      .map(_.getPath.toString).toSeq
   }
 
-  /** One batch's postings staged and atomically published under
-    * `batches/<bid>`, returning its (n, Σlen) contribution. A
-    * directory already listed in the meta refuses loudly (replay); an
-    * UNLISTED existing directory is crash residue from an append that
-    * never committed its meta swap — deleted and re-staged.
+  /** Write postings rows (id, len, term, tf) under `staging`,
+    * partitioned by term prefix — the one layout every publish path
+    * (append, retraction rewrite, compaction) writes. `cluster`
+    * groups rows by prefix first, so each `term_p` dir lands as ~one
+    * file instead of one per (task × prefix).
     */
-  private def publishPostingsBatch(docs: DataFrame, idCol: String,
-                                   textCol: String, path: String,
-                                   bid: String,
-                                   committed: Seq[String],
-                                   retired: Seq[String]): (Long, Long) = {
-    val spark = docs.sparkSession
-    val fs = fsFor(spark, path)
-    val target = new org.apache.hadoop.fs.Path(s"$path/batches/$bid")
-    if (retired.contains(bid)) throw new graft.ReplayRefused(
-      s"BM25 index append refused: batch $bid was committed and later " +
-        "compacted away — its postings already live in the merged " +
-        "batch; a replay would double every tf/df it carries")
-    if (committed.contains(bid)) throw new graft.ReplayRefused(
-      s"BM25 index append refused: batch $bid is already committed at " +
-        s"$target — a replayed batch would double every tf/df it " +
-        "carries; drop it from the meta first if this is an " +
-        "intentional re-ingest")
-    // a pending grace-period delete of this id must be forgotten
-    // BEFORE the id is re-staged, or a later sweep would reap the
-    // re-ingested batch
-    IndexProtocol.clearPendingDelete(fs, path, bid)
-    // crash residue (published dir, meta swap never committed):
-    // invisible to probes, safe to redo
-    // VERIFIED delete: renaming into a still-existing directory
-    // nests the staged payload under the residue and returns true —
-    // the meta would commit a batch dir holding stale postings
-    if (fs.exists(target) && !fs.delete(target, true))
-      throw new IllegalStateException(
-        s"cannot reclaim crash residue at $target before publishing " +
-          s"batch $bid — refusing to rename into an existing directory")
-    // the term_p partition dirs land DIRECTLY under the staged batch
-    // dir, so one rename publishes batches/<bid>/term_p=xx/
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_staging/$bid")
-    // verified wipe for uniformity (the overwrite below replaces the
-    // whole staging dir, but a silent false from delete must not pass)
-    if (fs.exists(staging) && !fs.delete(staging, true))
-      throw new IllegalStateException(
-        s"cannot wipe stale staging at $staging before publishing " +
-          s"batch $bid")
+  private def writePostings(rows: DataFrame,
+                            staging: org.apache.hadoop.fs.Path,
+                            cluster: Boolean = false): Unit = {
+    val p = rows.withColumn("term_p", termPrefixCol(col("term")))
+    (if (cluster) p.repartition(col("term_p")) else p)
+      .write.mode("overwrite").partitionBy("term_p")
+      .parquet(staging.toString)
+  }
+
+  /** Tokenize `docs` once and stage their postings under `staging`,
+    * returning the batch's (n, Σlen) contribution. The scalars come
+    * BEFORE any write: an empty batch refuses loudly here (all empty
+    * sets share one content id — an empty append would permanently
+    * block future empty-able ids), and the streams' skip-empty guard
+    * is not a contract direct API callers inherit.
+    */
+  private def stagePostings(docs: DataFrame, idCol: String,
+                            textCol: String,
+                            staging: org.apache.hadoop.fs.Path)
+      : (Long, Long) =
     graft.Checkpoints.cached(graft.sources.Tables.fanOut(
         docs.select(col(idCol),
           graft.functions.TextFunctions.bpeTokens(lower(col(textCol)))
             .as("__t")))
       .withColumn("len", size(col("__t")).cast("bigint"))) { base =>
-      // scalars BEFORE any write: an empty batch must refuse loudly
-      // here (sum over zero rows is null — the old order NPE'd after
-      // already staging files), and the streams' skip-empty guard is
-      // not a contract direct API callers inherit
       val s = base.agg(count(lit(1)).as("n"), sum(col("len")).as("sl"))
         .head()
       require(s.getLong(0) > 0L,
-        s"refusing to publish empty batch $bid: the batch has no " +
-          "documents (all empty sets share one content id — an empty " +
-          "append would permanently block future empty-able ids)")
-      base.select(col(idCol), col("len"), explode(col("__t")).as("term"))
-        .groupBy(col(idCol), col("len"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-        .withColumn("term_p", termPrefixCol(col("term")))
-        .write.mode("overwrite").partitionBy("term_p")
-        .parquet(staging.toString)
-      fs.mkdirs(target.getParent)
-      require(fs.rename(staging, target),
-        s"atomic publish of batch $bid failed (staging → $target)")
+        s"refusing to publish empty batch ${staging.getName}: the batch " +
+          "has no documents (all empty sets share one content id — an " +
+          "empty append would permanently block future empty-able ids)")
+      writePostings(
+        base.select(col(idCol), col("len"), explode(col("__t")).as("term"))
+          .groupBy(col(idCol), col("len"), col("term"))
+          .agg(count(lit(1)).as("tf")),
+        staging)
       (s.getLong(0), s.getLong(1))
     }
-  }
 
   /** T13 (production shape) — materialize the inverted index ONCE so
     * queries stop re-tokenizing the corpus: one directory per ingest
@@ -374,20 +303,21 @@ object Bm25 {
                      path: String): Unit = {
     val spark = docs.sparkSession
     val fs = fsFor(spark, path)
-    fs.delete(bm25MetaPath(path), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_meta.next"), false)
-    // stale snapshot records / grace markers from a predecessor index
-    // at this path must not resolve against the new one's batches
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_meta_history"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_pending_delete"), true)
-    val (n, sl) = publishPostingsBatch(docs, idCol, textCol, path,
-      "bootstrap", Seq.empty, Seq.empty)
+    // the marker first; stale snapshot records / grace markers from a
+    // predecessor index at this path must not resolve against the new
+    // one's batches
+    Seq("_meta", "_meta.next", "_meta_history", "_pending_delete")
+      .foreach { c =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$c"), true); ()
+      }
     // id column NAME and TYPE both pin to the meta: the probe's
     // empty-result branch must produce the exact schema a non-empty
     // probe would, or downstream unions/comparisons break on the
     // no-match case
-    writeBm25Meta(fs, path, Bm25Meta(n, sl, idCol,
-      docs.schema(idCol).dataType.sql, Seq("bootstrap")))
+    Layout.bootstrap(fs, path) { staging =>
+      val (n, sl) = stagePostings(docs, idCol, textCol, staging)
+      Bm25Meta(n, sl, idCol, docs.schema(idCol).dataType.sql, Nil)
+    }
   }
 
   /** Daily lexical ingest: publish `docs` as one atomic postings
@@ -399,28 +329,13 @@ object Bm25 {
     * read ([[readBm25Meta]]). Returns the batch id.
     */
   def appendBm25Index(docs: DataFrame, textCol: String, path: String,
-                      batchId: Option[String] = None): String = {
-    val spark = docs.sparkSession
-    val fs = fsFor(spark, path)
-    val (meta, raw) = readBm25MetaRaw(spark, path)
-    val bid = batchId.getOrElse(Dedup.batchId(docs, meta.idCol))
-    // a supplied id becomes both a directory name and an entry in the
-    // meta's comma-separated committed list; content-derived ids are
-    // hex — and the merged-batch shape is reserved for compaction
-    IndexProtocol.validateAppendId(bid, "BM25 index")
-    val (dn, dsl) = publishPostingsBatch(docs, meta.idCol, textCol,
-      path, bid, meta.batches, meta.retired)
-    swapBm25Meta(fs, path,
-      meta.copy(n = meta.n + dn, sumLen = meta.sumLen + dsl,
-        batches = meta.batches :+ bid), raw)
-    // a racing maintenance sweep may have orphan-marked this batch
-    // between its publish and the swap above (unlisted then); the
-    // batch is committed now, so the marker is stale — clear it, or
-    // a LATER drop's first-marker-wins would inherit the orphan
-    // deadline and silently truncate that drop's promised window
-    IndexProtocol.clearPendingDelete(fs, path, bid)
-    bid
-  }
+                      batchId: Option[String] = None): String =
+    Layout.append(fsFor(docs.sparkSession, path), path)(meta =>
+      batchId.getOrElse(Dedup.batchId(docs, meta.idCol))) {
+      (meta, staging) =>
+        val (dn, dsl) = stagePostings(docs, meta.idCol, textCol, staging)
+        meta.copy(n = meta.n + dn, sumLen = meta.sumLen + dsl)
+    }
 
   /** Remove one COMMITTED batch — the executable repair for a batch
     * ingested with bad documents (re-ingest it after). The batch's
@@ -437,7 +352,7 @@ object Bm25 {
     * delisted directory then stays in place (invisible — probes are
     * meta-driven) for at least that grace window, recorded under
     * `_pending_delete/` and reclaimed by a later maintenance call's
-    * sweep ([[IndexProtocol.sweepPendingDeletes]]). If the batch's
+    * sweep (the [[IndexProtocol]] grace contract). If the batch's
     * payload directory is LOST (the audit's committed_missing_payload
     * — the incident [[IndexProtocol.preflightCompaction]] refuses on
     * and points at this drop as the remedy), the drop still works:
@@ -476,15 +391,6 @@ object Bm25 {
     val drops = meta.batches.filter(dropSet)
     if (drops.isEmpty) false
     else {
-      def batchTermDirs(b: String): Seq[String] = {
-        val d = new org.apache.hadoop.fs.Path(s"$path/batches/$b")
-        // scoped to the batch's `term_p=*` postings partitions ONLY:
-        // a future layout change dropping a stats/sidecar file into
-        // the batch dir must never leak into the (n, Σlen) repair
-        fs.listStatus(d).filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("term_p="))
-          .map(_.getPath.toString).toSeq
-      }
       def scalars(dirs: Seq[String]): (Long, Long) =
         if (dirs.isEmpty) (0L, 0L)
         else {
@@ -506,7 +412,7 @@ object Bm25 {
           // the normal remedial drop: subtract the dropped batches'
           // recounted contributions — drop-sized, never the corpus
           val (dn, dsl) =
-            sumPairs(drops.map(b => scalars(batchTermDirs(b))))
+            sumPairs(drops.map(b => scalars(termDirs(fs, path, b))))
           (meta.n - dn, meta.sumLen - dsl)
         } else {
           // the committed_missing_payload remedy (the incident the
@@ -532,20 +438,11 @@ object Bm25 {
                 s"$path/batches/$lost — the scalar rebuild needs " +
                 "every surviving batch's postings; include it in the " +
                 s"drop set (dropBm25Batches(Seq(..., \"$lost\")))"))
-          sumPairs(survivors.map(b => scalars(batchTermDirs(b))))
+          sumPairs(survivors.map(b => scalars(termDirs(fs, path, b))))
         }
-      swapBm25Meta(fs, path,
-        meta.copy(n = newN, sumLen = newSl, batches = survivors), raw)
-      val now = System.currentTimeMillis()
-      // THIS drop is the delist event: reset (clear + mark) so a
-      // stale publish-race marker cannot pre-empt the promised window
-      drops.foreach(b =>
-        IndexProtocol.resetPendingDelete(fs, path, b, now, retainMs))
-      // rail the sweep on the CURRENT committed list (re-read after
-      // the swap), never the pre-swap snapshot: a batch committed by
-      // a racing append between the swap and this sweep must survive
-      IndexProtocol.sweepPendingDeletes(fs, path, now,
-        IndexProtocol.committedFromMeta(fs, path))
+      Layout.delist(fs, path,
+        meta.copy(n = newN, sumLen = newSl, batches = survivors), raw,
+        drops, retainMs)
       true
     }
   }
@@ -582,81 +479,24 @@ object Bm25 {
     import spark.implicits._
     val idsDf = ids.map(_.toString).toDF("__rid")
       .select(col("__rid").cast(meta.idType).as(meta.idCol)).distinct()
-    def termDirs(b: String): Seq[String] = {
-      val d = new org.apache.hadoop.fs.Path(s"$path/batches/$b")
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("term_p="))
-        .map(_.getPath.toString).toSeq
-    }
-    final case class Rewrite(old: String, replacement: Option[String],
-                             dn: Long, dsl: Long)
-    val rewrites = meta.batches.flatMap { b =>
-      val dirs = termDirs(b)
+    val found = Layout.retract(fs, path, meta, raw, ids.map(_.toString),
+      retainMs) { b =>
+      val dirs = termDirs(fs, path, b)
       if (dirs.isEmpty) None
       else {
         val rows = spark.read.parquet(dirs: _*)
-        val victims = rows.join(broadcast(idsDf), Seq(meta.idCol),
-          "left_semi")
-        val vs = victims.select(col(meta.idCol), col("len")).distinct()
+        val vs = rows.join(broadcast(idsDf), Seq(meta.idCol), "left_semi")
+          .select(col(meta.idCol), col("len")).distinct()
           .agg(count(lit(1)).as("n"), sum(col("len")).as("sl")).head()
         if (vs.getLong(0) == 0L) None
-        else {
-          val remainder = rows.join(broadcast(idsDf), Seq(meta.idCol),
-            "left_anti")
-          val replacement =
-            if (remainder.isEmpty) None
-            else {
-              // deterministic rewrite id: re-running the same retract
-              // after a crash re-stages the same directory; the "r"
-              // prefix keeps it disjoint from content-derived (bare
-              // hex) and merged ("m" + hex) id spaces
-              val rid = "r" + java.security.MessageDigest
-                .getInstance("SHA-256")
-                .digest((b + ":" + ids.map(_.toString).sorted
-                  .mkString(",")).getBytes("UTF-8"))
-                .take(8).map("%02x".format(_)).mkString
-              val staging = new org.apache.hadoop.fs.Path(
-                s"$path/_staging/$rid")
-              val target = new org.apache.hadoop.fs.Path(
-                s"$path/batches/$rid")
-              if (fs.exists(staging) && !fs.delete(staging, true))
-                throw new IllegalStateException(
-                  s"cannot wipe stale staging at $staging")
-              if (fs.exists(target) && !fs.delete(target, true))
-                throw new IllegalStateException(
-                  s"cannot reclaim crash residue at $target")
-              remainder
-                .withColumn("term_p", termPrefixCol(col("term")))
-                .write.mode("overwrite").partitionBy("term_p")
-                .parquet(staging.toString)
-              fs.mkdirs(target.getParent)
-              require(fs.rename(staging, target),
-                s"atomic publish of rewritten batch $rid failed")
-              Some(rid)
-            }
-          Some(Rewrite(b, replacement, vs.getLong(0),
-            if (vs.isNullAt(1)) 0L else vs.getLong(1)))
-        }
+        else Some(((vs.getLong(0), if (vs.isNullAt(1)) 0L else vs.getLong(1)),
+          rows.join(broadcast(idsDf), Seq(meta.idCol), "left_anti")))
       }
+    }((remainder, staging) => writePostings(remainder, staging)) { hits =>
+      meta.copy(n = meta.n - hits.map(_._1).sum,
+        sumLen = meta.sumLen - hits.map(_._2).sum)
     }
-    if (rewrites.isEmpty) return 0L
-    val byOld = rewrites.map(r => r.old -> r).toMap
-    val newBatches = meta.batches.flatMap {
-      case b if byOld.contains(b) => byOld(b).replacement.toSeq
-      case b                      => Seq(b)
-    }
-    swapBm25Meta(fs, path, meta.copy(
-      n = meta.n - rewrites.map(_.dn).sum,
-      sumLen = meta.sumLen - rewrites.map(_.dsl).sum,
-      batches = newBatches,
-      retired = (meta.retired ++ rewrites.map(_.old)).distinct), raw)
-    val now = System.currentTimeMillis()
-    rewrites.foreach(r =>
-      IndexProtocol.resetPendingDelete(fs, path, r.old, now, retainMs))
-    IndexProtocol.sweepPendingDeletes(fs, path, now,
-      IndexProtocol.committedFromMeta(fs, path))
-    rewrites.map(_.dn).sum
+    found.map(_._1).sum
   }
 
   /** Index MAINTENANCE: merge every committed batch's postings into
@@ -712,8 +552,8 @@ object Bm25 {
     * never concurrently; and since r10 that contract is ENFORCED, not
     * just documented: the meta swap is compare-and-set against the
     * bytes this compaction read, so a batch committed between the
-    * read and the swap fails the compaction loudly
-    * ([[graft.sources.MetaSwap.CasFailed]]) with the appended batch
+    * read and the swap fails the compaction loudly (the typed CAS
+    * failure of [[IndexProtocol.BatchList]]) with the appended batch
     * intact — the merged directory is unlisted residue, reclaimed by
     * the re-run. Entry runs the A6d audit as a PRE-FLIGHT
     * ([[IndexProtocol.preflightCompaction]]): a committed batch with
@@ -741,157 +581,18 @@ object Bm25 {
       path: String, retainMs: Long, maxRetired: Int,
       beforeSwap: () => Unit,
       beforeSweep: () => Unit = () => ()): String = {
-    require(maxRetired >= 1, s"maxRetired must be >= 1, got $maxRetired")
     val fs = fsFor(spark, path)
-    val (meta, raw) = readBm25MetaRaw(spark, path)
-    require(meta.batches.nonEmpty,
-      s"no committed batches to compact at $path")
-    // diagnose BEFORE destroying (the A6d audit at maintenance entry):
-    // refuse on a committed batch with lost payload — merging would
-    // bake the loss in and retire the evidence — and re-record a lost
-    // current-gen snapshot record while the meta bytes still exist
-    IndexProtocol.preflightCompaction(fs, path)
-    // a marker on a COMMITTED batch is by definition stale (see
-    // IndexProtocol.clearStaleMarkers) — clear them now so no stale
-    // clock survives a crash-recovery path into these batches'
-    // eventual retirement and truncates the window promised there
-    val cleared = IndexProtocol.clearStaleMarkers(fs, path, meta.batches)
-    // if OUR swap loses the CAS, a marker cleared above may have been
-    // a concurrent drop's promised window (delisted between the
-    // re-read and the clear) — restore it before failing, so the
-    // losing compaction cannot erase the winner's grace promise
-    def swapRestoring(m: Bm25Meta): Unit =
-      try swapBm25Meta(fs, path, m, raw)
-      catch {
-        case e: graft.sources.MetaSwap.CasFailed =>
-          IndexProtocol.restorePendingDeletes(fs, path, cleared)
-          throw e
-      }
-    def retireAllBut(keep: String): Unit = {
-      beforeSweep()
-      val now = System.currentTimeMillis()
-      // the rail is the CURRENT lists, re-read AFTER this compaction's
-      // swap: the pre-swap snapshot is stale here — an append that
-      // read the post-swap meta and CAS-committed before this sweep
-      // is only on the re-read list, and marking or sweeping its
-      // directory would be data loss with the batch still committed
-      // (the r10 finding)
-      val (current, curRetired) = IndexProtocol.listsFromMeta(fs, path)
-      val superseded = meta.batches.toSet
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/batches"))
-        .filter(st => st.isDirectory && st.getPath.getName != keep &&
-          !current(st.getPath.getName))
-        .foreach { st =>
-          val bid = st.getPath.getName
-          // superseded/retired/merged-shape dirs are unambiguous →
-          // caller's retainMs; any other unlisted dir may be an
-          // in-flight publish whose CAS hasn't run → orphan-grace
-          // floor (see IndexProtocol.OrphanGraceMs)
-          val grace =
-            if (superseded(bid) || curRetired(bid) ||
-              IndexProtocol.isMergedShape(bid)) retainMs
-            else math.max(retainMs, IndexProtocol.OrphanGraceMs)
-          // no stale-marker hazard here: markers on this run's
-          // committed list were cleared at compaction entry, so
-          // first-marker-wins only ever preserves a RUNNING clock
-          // (e.g. a prior crashed compaction's retirement window)
-          IndexProtocol.markPendingDelete(fs, path, bid, now, grace)
-        }
-      IndexProtocol.sweepPendingDeletes(fs, path, now,
-        IndexProtocol.committedFromMeta(fs, path))
-      ()
+    Layout.compact(fs, path, retainMs, maxRetired, beforeSwap,
+      beforeSweep) { (meta, staging) =>
+      // postings read from the committed batches' term_p dirs only;
+      // the partition value is recomputed from the term with the
+      // write-side function, so no partition-discovery walk runs over
+      // heterogeneous batch roots. The merged rows are the EXACT ROW
+      // MULTISET (see compactBm25Index)
+      val dirs = meta.batches.flatMap(termDirs(fs, path, _))
+      require(dirs.nonEmpty, s"no postings to compact at $path")
+      writePostings(spark.read.parquet(dirs: _*), staging, cluster = true)
     }
-    if (meta.batches.size == 1) {
-      // already compact — but a crash between a PRIOR compaction's
-      // meta swap and its sweep leaves invisible orphan dirs, and
-      // this re-run is the documented recovery: sweep before
-      // returning, or the orphans persist until the next full cycle.
-      // The no-op still CAS-swaps the UNCHANGED meta first: a
-      // concurrent append landing since this call's read fails the
-      // swap loudly instead of having its published-but-not-yet-
-      // committed directory swept out from under its commit
-      beforeSwap()
-      swapRestoring(meta)
-      retireAllBut(meta.batches.head)
-      return meta.batches.head
-    }
-    // postings read from the committed batches' term_p dirs only; the
-    // partition value is recomputed from the term with the exact
-    // write-side function, so no partition-discovery walk runs over
-    // heterogeneous batch roots
-    val termDirs = meta.batches.flatMap { b =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/batches/$b")
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("term_p="))
-        .map(_.getPath.toString).toSeq
-    }
-    require(termDirs.nonEmpty, s"no postings to compact at $path")
-    val rows = spark.read.parquet(termDirs: _*)
-      .withColumn("term_p", termPrefixCol(col("term")))
-    // deterministic merged id from the SORTED committed list: crash
-    // re-runs recompute the same id (residue reclaimed), and the
-    // derivation space is disjoint from content-derived append ids
-    val cid = IndexProtocol.mergedId(meta.batches)
-    // the shape is reserved at append time, so a collision can only
-    // come from an index predating that guard — refuse (typed, the
-    // append-side twin's ReservedIdRefused) rather than destroy the
-    // committed batch's payload and rebuild over it
-    if (meta.batches.contains(cid) || meta.retired.contains(cid))
-      throw new graft.ReservedIdRefused(
-        s"merged id $cid is already on the committed/retired list at " +
-          s"$path — a pre-reservation user-supplied id squats on the " +
-          "merged shape; drop and re-ingest that batch under another " +
-          "id before compacting")
-    // the retired list is CAPPED, so a pre-reservation squatter that
-    // aged off it evades the list check — but a dropped squatter
-    // inside its grace window still has a pending-delete marker, and
-    // rebuilding over its directory would cut the promised window
-    // short; refuse while the window is open (a marker for a merged
-    // id cannot be this compaction's own residue: markers are only
-    // written post-swap, and post-swap the list is [cid] whose
-    // mergedId differs). An EXPIRED or unreadable marker is exactly
-    // what the sweep would reclaim — reclaim it here so a stale
-    // marker can never wedge every future compaction
-    IndexProtocol.pendingDeadline(fs, path, cid) match {
-      case Some(d) if d > System.currentTimeMillis() =>
-        throw new graft.ReservedIdRefused(
-          s"merged id $cid has a pending grace-period delete at " +
-            s"$path — a delisted pre-reservation batch still inside " +
-            "its retain window squats on the merged shape; wait for " +
-            "the window to expire (or clear the marker explicitly) " +
-            "before compacting")
-      case _ => IndexProtocol.clearPendingDelete(fs, path, cid)
-    }
-    val target = new org.apache.hadoop.fs.Path(s"$path/batches/$cid")
-    if (fs.exists(target) && !fs.delete(target, true))
-      throw new IllegalStateException(
-        s"cannot reclaim crashed-compaction residue at $target — " +
-          "refusing to rename into an existing directory")
-    val staging =
-      new org.apache.hadoop.fs.Path(s"$path/_staging/$cid")
-    if (fs.exists(staging) && !fs.delete(staging, true))
-      throw new IllegalStateException(
-        s"cannot wipe stale compaction staging at $staging")
-    // DEFRAGMENT, not just merge: cluster rows by their partition
-    // value before the write so each term_p dir lands as one file
-    // per writing task that owns the prefix (~1), instead of one
-    // per (task × prefix) — compaction exists to cut file counts
-    rows.repartition(col("term_p"))
-      .write.mode("overwrite").partitionBy("term_p")
-      .parquet(staging.toString)
-    fs.mkdirs(target.getParent)
-    require(fs.rename(staging, target),
-      s"cannot publish compacted batch $staging to $target")
-    beforeSwap()
-    swapRestoring(meta.copy(batches = Seq(cid),
-      retired =
-        (meta.retired ++ meta.batches).distinct.takeRight(maxRetired)))
-    // retire every batch dir off the committed list: superseded
-    // payloads AND any invisible orphans a prior crash left behind
-    retireAllBut(cid)
-    cid
   }
 
   /** The probe against a [[writeBm25Index]] index: per-query cost is
@@ -932,21 +633,7 @@ object Bm25 {
   def bm25TopKIndexedAt(spark: org.apache.spark.sql.SparkSession,
                         path: String, gen: Long, query: String, k: Int,
                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val fs = fsFor(spark, path)
-    val raw = IndexProtocol.readMetaHistory(fs, path, gen).getOrElse {
-      throw new graft.SnapshotUnavailable(
-        s"BM25 index at $path has no snapshot record for gen $gen — " +
-          "the gen never committed, crashed before recording, or aged " +
-          "past the history cap; probe the live index instead")
-    }
-    val meta = parseBm25Meta(raw)
-    val missing = meta.batches.filterNot(bid =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/batches/$bid")))
-    if (missing.nonEmpty) throw new graft.SnapshotUnavailable(
-      s"snapshot gen $gen of the BM25 index at $path is no longer " +
-        s"servable: batch dir(s) ${missing.mkString(", ")} were " +
-        "retired and physically reclaimed (grace expired) — " +
-        "snapshots outlive maintenance only within retainMs")
+    val meta = Layout.readAt(fsFor(spark, path), path, gen)
     probeWithMeta(spark, path, meta, query, k, k1, b)
   }
 

@@ -916,57 +916,43 @@ object Dedup {
             .distinct().count()
         if (sidHits > 0L || hashHits > 0L) {
           found += sidHits
-          val rid = "r" + java.security.MessageDigest
-            .getInstance("SHA-256")
-            .digest((b + ":" + (sids ++ normHashes).sorted
-              .mkString(",")).getBytes("UTF-8"))
-            .take(8).map("%02x".format(_)).mkString
-          val staging =
-            new org.apache.hadoop.fs.Path(s"$path/_staging/$rid")
-          val target =
-            new org.apache.hadoop.fs.Path(s"$path/batches/$rid")
-          if (fs.exists(staging) && !fs.delete(staging, true))
-            throw new IllegalStateException(
-              s"cannot wipe stale staging at $staging")
-          if (fs.exists(target) && !fs.delete(target, true))
-            throw new IllegalStateException(
-              s"cannot reclaim crash residue at $target")
-          var wroteAny = false
-          if (hasBands) {
-            val b0 = readSub("bands")
-            val rem = b0.join(
-              broadcast(sidAs(b0.schema("sid").dataType)),
-              Seq("sid"), "left_anti")
-            if (!rem.isEmpty) {
-              rem.withColumn("band_p", col("band"))
-                .repartition(col("band_p"))
-                .write.mode("overwrite").partitionBy("band_p")
-                .parquet(s"$staging/bands")
-              wroteAny = true
+          // the remainder republishes under the shared rewrite id; a
+          // batch whose every table emptied publishes nothing
+          IndexProtocol.publishStaged(fs, path,
+            IndexProtocol.rewriteId(b, sids ++ normHashes)) { staging =>
+            var wroteAny = false
+            if (hasBands) {
+              val b0 = readSub("bands")
+              val rem = b0.join(
+                broadcast(sidAs(b0.schema("sid").dataType)),
+                Seq("sid"), "left_anti")
+              if (!rem.isEmpty) {
+                rem.withColumn("band_p", col("band"))
+                  .repartition(col("band_p"))
+                  .write.mode("overwrite").partitionBy("band_p")
+                  .parquet(s"$staging/bands")
+                wroteAny = true
+              }
             }
-          }
-          if (hasShingles) {
-            val s0 = readSub("shingles")
-            val rem = s0.join(
-              broadcast(sidAs(s0.schema("sid").dataType)),
-              Seq("sid"), "left_anti")
-            if (!rem.isEmpty) {
-              rem.write.mode("overwrite").parquet(s"$staging/shingles")
-              wroteAny = true
+            if (hasShingles) {
+              val s0 = readSub("shingles")
+              val rem = s0.join(
+                broadcast(sidAs(s0.schema("sid").dataType)),
+                Seq("sid"), "left_anti")
+              if (!rem.isEmpty) {
+                rem.write.mode("overwrite").parquet(s"$staging/shingles")
+                wroteAny = true
+              }
             }
-          }
-          if (hasHashes) {
-            val rem = hashes
-              .join(broadcast(hashDf), Seq("norm_hash"), "left_anti")
-            if (!rem.isEmpty) {
-              rem.write.mode("overwrite").parquet(s"$staging/hashes")
-              wroteAny = true
+            if (hasHashes) {
+              val rem = hashes
+                .join(broadcast(hashDf), Seq("norm_hash"), "left_anti")
+              if (!rem.isEmpty) {
+                rem.write.mode("overwrite").parquet(s"$staging/hashes")
+                wroteAny = true
+              }
             }
-          }
-          if (wroteAny) {
-            fs.mkdirs(target.getParent)
-            require(fs.rename(staging, target),
-              s"atomic publish of rewritten batch $rid failed")
+            if (wroteAny) Some(()) else None
           }
           // tombstone the superseded batch: payloads go — `accepted`
           // included, since it carries the retracted docs' TEXT and

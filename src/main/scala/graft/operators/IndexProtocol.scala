@@ -1,20 +1,52 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.DataFrame
 
-/** Protocol pieces SHARED by the persisted BM25 and vector indexes —
-  * one implementation so the two cannot drift (the r9 lesson: the
+import graft.sources.MetaSwap
+
+/** The SHARED protocol of the persisted batch-list indexes — the BM25
+  * postings index ([[Bm25]]) and the vector index ([[VectorIndex]]).
+  * One implementation so the two cannot drift (the r9 lesson: the
   * merged-id derivation was fixed for BM25 and the vector index kept
   * the condemned content-derived form for a round).
   *
-  * Three contracts live here:
+  * A batch-list index is a root holding `batches/<bid>/` payload
+  * directories and one `_meta` marker: the layout's head fields, then
+  * `batches=` (the committed, served list), `retired=` (ids compacted
+  * or retracted away, kept only to refuse replay) and `gen=` (the
+  * swap fence). [[BatchList]] owns every sequence over that marker;
+  * a layout supplies only its head fields ([[BatchList.head]] /
+  * [[BatchList.fromKv]]), how a batch's payload is staged (a closure
+  * per call) and its serve. The sequences:
+  *
+  *  - **Meta**: one codec and parser shared by the live read and the
+  *    as-of-gen read; the heal-then-read, the compare-and-set swap
+  *    (gen bump, then the `_meta_history` record) and the gen-0 write.
+  *  - **Publish** ([[publishStaged]]): verified staging wipe, verified
+  *    residue reclaim, stage, atomic rename — every append, retraction
+  *    rewrite and compaction of both indexes, and the dedup index's
+  *    retraction rewrite.
+  *  - **Append**: id validation, the committed/retired replay refusal,
+  *    pending-marker clears around publish and swap.
+  *  - **Delist**: swap, reset the grace clock of each delisted id,
+  *    sweep railed on the re-read committed list — drops and
+  *    retractions.
+  *  - **Compaction**: preflight audit, stale-marker clear with
+  *    restore-on-CasFailed, the single-batch CAS no-op, the merged-id
+  *    squat refusals, publish, swap, retire sweep.
+  *  - **As-of-gen read**: the history record plus the
+  *    reclaimed-batch check, refusing with [[graft.SnapshotUnavailable]].
+  *
+  * The object-level contracts they are built from:
   *
   *  - **Merged-batch ids** ([[mergedId]]): `"m" + 16 hex` derived from
   *    the SORTED committed batch list. Deterministic (crash re-runs
   *    recompute the same id, residue is reclaimed) and DISJOINT from
   *    every other id space: content-derived append ids are pure hex
-  *    (never 'm'-prefixed, [[Dedup.batchId]]), and user-supplied ids
-  *    are refused at append time if they match the reserved shape
+  *    (never 'm'-prefixed, [[Dedup.batchId]]), retraction rewrites are
+  *    'r'-prefixed ([[rewriteId]]), and user-supplied ids are refused
+  *    at append time if they match the reserved shape
   *    ([[validateAppendId]]). A collision between a merged id and a
   *    committed batch therefore cannot arise on an index maintained by
   *    this code — and compaction still guards it explicitly for
@@ -68,8 +100,21 @@ private[graft] object IndexProtocol {
     * reserved for compaction (see [[validateAppendId]]).
     */
   def mergedId(committed: Seq[String]): String =
-    "m" + java.security.MessageDigest.getInstance("SHA-256")
-      .digest(committed.sorted.mkString(",").getBytes("UTF-8"))
+    "m" + hex16(committed.sorted.mkString(","))
+
+  /** Deterministic retraction-rewrite id of `batch` with `keys`
+    * removed: `"r" + first 8 bytes of sha256(batch:sorted keys)`.
+    * Re-running the same retraction after a crash re-stages the same
+    * directory; the "r" prefix keeps it disjoint from content-derived
+    * (bare hex) and merged ("m" + hex) ids. Shared by the BM25, vector
+    * and dedup index retractions.
+    */
+  def rewriteId(batch: String, keys: Seq[String]): String =
+    "r" + hex16(batch + ":" + keys.sorted.mkString(","))
+
+  private def hex16(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString
 
   private val MergedShape = "m[0-9a-f]{16}"
@@ -486,22 +531,27 @@ private[graft] object IndexProtocol {
   def listsFromMeta(fs: FileSystem,
                     root: String): (Set[String], Set[String]) = {
     val kv = metaKv(fs, root)
-    def parse(k: String) = kv.getOrElse(k, "")
-      .split(",").toSeq.filter(_.nonEmpty).toSet
+    def parse(k: String) = idList(kv.getOrElse(k, "")).toSet
     (parse("batches"), parse("retired"))
   }
 
   /** The full key→value map of the index's committed `_meta` marker
     * (both index metas are `k=v` lines) — the audit's raw view.
     */
-  def metaKv(fs: FileSystem, root: String): Map[String, String] = {
-    val raw = graft.sources.MetaSwap.readCommitted(fs,
-      new Path(s"$root/_meta"))
+  def metaKv(fs: FileSystem, root: String): Map[String, String] =
+    kvOf(MetaSwap.readCommitted(fs, new Path(s"$root/_meta")))
+
+  /** The `k=v` lines of serialized meta bytes — the one parser under
+    * every meta view (live, as-of-gen, audit).
+    */
+  private def kvOf(raw: Array[Byte]): Map[String, String] =
     new String(raw, "UTF-8").linesIterator
       .map(_.split("=", 2)).collect {
         case Array(a, b) => a -> b
       }.toMap
-  }
+
+  private def idList(v: String): Seq[String] =
+    v.split(",").toSeq.filter(_.nonEmpty)
 
   /** One audit finding: `kind` names the inventory the entity came
     * from (batch / dir / marker / history), `name` the entity,
@@ -562,8 +612,7 @@ private[graft] object IndexProtocol {
                  nowMs: Long = System.currentTimeMillis())
       : Seq[AuditFinding] = {
     val kv = metaKv(fs, root)
-    def parse(k: String) = kv.getOrElse(k, "")
-      .split(",").toSeq.filter(_.nonEmpty)
+    def parse(k: String) = idList(kv.getOrElse(k, ""))
     val committed = parse("batches")
     val retired = parse("retired")
     val gen = kv.getOrElse("gen", "0").toLong
@@ -685,15 +734,390 @@ private[graft] object IndexProtocol {
     */
   private[graft] def rerecordCurrentGen(fs: FileSystem, root: String,
                                         auditedGen: Long): Seq[Long] = {
-    val raw = graft.sources.MetaSwap.readCommitted(fs,
-      new Path(s"$root/_meta"))
-    val genNow = new String(raw, "UTF-8").linesIterator
-      .collectFirst { case s if s.startsWith("gen=") =>
-        s.stripPrefix("gen=").trim }
-      .flatMap(_.toLongOption).getOrElse(auditedGen)
+    val raw = MetaSwap.readCommitted(fs, new Path(s"$root/_meta"))
+    val genNow = kvOf(raw).get("gen").flatMap(_.trim.toLongOption)
+      .getOrElse(auditedGen)
     if (readMetaHistory(fs, root, genNow).isEmpty) {
       recordMetaHistory(fs, root, genNow, raw)
       Seq(genNow)
     } else Seq.empty
+  }
+
+  /** Publish one batch directory `batches/<bid>` of the index at
+    * `root`: VERIFIED wipe of `_staging/<bid>`, VERIFIED reclaim of an
+    * existing `batches/<bid>` (unlisted crash residue — renaming into a
+    * still-existing directory would nest the staged payload under it
+    * and return true, so the meta would commit stale files), then
+    * `stage` writes the payload under the staging path and one atomic
+    * rename publishes it. `stage` returns None when it staged nothing;
+    * nothing is then published. The directory stays invisible until
+    * the caller's meta swap lists it.
+    */
+  def publishStaged[A](fs: FileSystem, root: String, bid: String)(
+      stage: Path => Option[A]): Option[A] = {
+    val staging = new Path(s"$root/_staging/$bid")
+    val target = new Path(s"$root/batches/$bid")
+    if (fs.exists(staging) && !fs.delete(staging, true))
+      throw new IllegalStateException(
+        s"cannot wipe stale staging at $staging before publishing " +
+          s"batch $bid")
+    if (fs.exists(target) && !fs.delete(target, true))
+      throw new IllegalStateException(
+        s"cannot reclaim crash residue at $target before publishing " +
+          s"batch $bid — refusing to rename into an existing directory")
+    val staged = stage(staging)
+    if (staged.isDefined) {
+      fs.mkdirs(target.getParent)
+      require(fs.rename(staging, target),
+        s"atomic publish of batch $bid failed (staging → $target)")
+    }
+    staged
+  }
+
+  /** Point a serving pointer file at `root` with one marker swap — a
+    * crash mid-swap self-heals on the next [[readPointer]].
+    */
+  def writePointer(fs: FileSystem, pointer: Path, root: String): Unit =
+    MetaSwap.swap(fs, pointer, s"$root\n".getBytes("UTF-8"))
+
+  /** The root a pointer file names, after healing a crashed swap;
+    * None when no pointer was ever published.
+    */
+  def readPointer(fs: FileSystem, pointer: Path): Option[String] = {
+    MetaSwap.heal(fs, pointer)
+    MetaSwap.readIfExists(fs, pointer)
+      .map(new String(_, "UTF-8").linesIterator.next().trim)
+  }
+
+  /** The lists every batch-list meta carries after its head fields.
+    * `batches` serve; `retired` only refuse replay (ids superseded by
+    * compaction or retraction); `gen` is the swap FENCE — bumped on
+    * every commit so no two successive committed metas are
+    * byte-identical, and a state-preserving swap (the single-batch
+    * compaction no-op) still invalidates a concurrent writer's stale
+    * compare-and-set expectation instead of sliding under it.
+    */
+  trait Listed {
+    def batches: Seq[String]
+    def retired: Seq[String]
+    def gen: Long
+  }
+
+  /** THE batch-list index protocol, one instance per layout. The
+    * layout supplies its meta head ([[head]], [[fromKv]],
+    * [[withLists]]), its `name` for messages ("BM25 index"), the
+    * `writer` call that creates one and what a replayed batch would do
+    * (`replayHarm`); payload staging is a closure per call.
+    *
+    * SINGLE MAINTAINER contract: compact/drop/retract and the append
+    * (batch or streaming) ingest are one logical writer; it is
+    * ENFORCED — every swap is compare-and-set against the bytes the
+    * writer read, so a commit landing in between fails the later
+    * writer loudly ([[graft.sources.MetaSwap.CasFailed]]) and its
+    * staged directory stays unlisted residue, reclaimed by a re-run.
+    */
+  abstract class BatchList[M <: Listed](name: String, writer: String,
+                                        replayHarm: String) {
+
+    /** The layout's head fields, in on-disk order before the lists. */
+    protected def head(m: M): Seq[(String, Any)]
+
+    /** The meta from its parsed `k=v` map and the shared lists. */
+    protected def fromKv(kv: Map[String, String], batches: Seq[String],
+                         retired: Seq[String], gen: Long): M
+
+    /** `m` with the shared lists replaced. */
+    protected def withLists(m: M, batches: Seq[String],
+                            retired: Seq[String], gen: Long): M
+
+    private def metaPath(root: String) = new Path(s"$root/_meta")
+
+    private def bytes(m: M): Array[Byte] =
+      (head(m).map { case (k, v) => s"$k=$v\n" }.mkString +
+        s"batches=${m.batches.mkString(",")}\n" +
+        s"retired=${m.retired.mkString(",")}\ngen=${m.gen}\n")
+        .getBytes("UTF-8")
+
+    /** Parse serialized meta bytes — the live read and the as-of-gen
+      * read share it, so the two views never diverge in format
+      * handling. A meta WITHOUT a `batches` key predates the
+      * committed-list format: defaulting it to empty would make a
+      * healthy index refuse every probe and let append/compact delist
+      * and sweep its data, so it refuses instead.
+      */
+    def parse(raw: Array[Byte], root: String): M = {
+      val kv = kvOf(raw)
+      require(kv.contains("batches"),
+        s"$name meta at $root predates the committed-batch list " +
+          "format — refusing to guess visibility; rebuild the index " +
+          s"($writer to a fresh root) or add a batches= line listing " +
+          "the live batch directories")
+      fromKv(kv, idList(kv("batches")),
+        idList(kv.getOrElse("retired", "")),
+        kv.getOrElse("gen", "0").toLong)
+    }
+
+    /** The committed meta ALONG WITH its raw bytes — the bytes are the
+      * CAS expectation a maintenance path hands back to [[swap]].
+      * Self-healing: a crash between a swap's delete-old and
+      * rename-new steps leaves `_meta.next` without `_meta`; this
+      * read completes the rename and proceeds.
+      */
+    def read(fs: FileSystem, root: String): (M, Array[Byte]) = {
+      val p = metaPath(root)
+      MetaSwap.heal(fs, p)
+      require(fs.exists(p),
+        s"no committed $name at $root (missing _meta — half-built " +
+          s"index or wrong path); build one with $writer")
+      val raw = MetaSwap.readCommitted(fs, p)
+      (parse(raw, root), raw)
+    }
+
+    /** Does `root` hold a committed meta (after healing a crashed
+      * swap)?
+      */
+    def isCommitted(fs: FileSystem, root: String): Boolean = {
+      MetaSwap.heal(fs, metaPath(root))
+      fs.exists(metaPath(root))
+    }
+
+    /** Commit `m` with the compare-and-set `_meta.next` swap against
+      * `expect`, bumping the gen fence; the `_meta_history` record is
+      * written AFTER the swap, so it never alters commit semantics.
+      */
+    def swap(fs: FileSystem, root: String, m: M,
+             expect: Array[Byte]): Unit = {
+      val next = withLists(m, m.batches, m.retired, m.gen + 1)
+      val b = bytes(next)
+      MetaSwap.swap(fs, metaPath(root), b, expect)
+      recordMetaHistory(fs, root, next.gen, b)
+    }
+
+    /** Publish the initial corpus as batch `bootstrap` and commit it
+      * with the gen-0 meta written LAST — a crash before the meta
+      * leaves a root every probe refuses loudly. `stage` writes the
+      * payload under the staging path and returns the layout's head
+      * (its lists are replaced).
+      */
+    def bootstrap(fs: FileSystem, root: String)(stage: Path => M): Unit = {
+      val m = publishStaged(fs, root, "bootstrap")(p => Some(stage(p))).get
+      val b = bytes(withLists(m, Seq("bootstrap"), Nil, 0L))
+      val out = fs.create(metaPath(root), true)
+      try out.write(b) finally out.close()
+      recordMetaHistory(fs, root, 0L, b)
+    }
+
+    /** Append one batch: read the meta, derive and validate its id,
+      * refuse a replay of a committed or retired id, forget a pending
+      * delete of the id BEFORE it is re-staged (a later sweep would
+      * reap the re-ingested batch), publish, swap it onto the committed
+      * list, and clear the marker again — a racing sweep may have
+      * orphan-marked the batch between its publish and the swap, and a
+      * later drop's first-marker-wins would inherit that deadline.
+      * `stage` returns the layout's head after this batch. Returns the
+      * batch id.
+      */
+    def append(fs: FileSystem, root: String)(bidOf: M => String)(
+        stage: (M, Path) => M): String = {
+      val (meta, raw) = read(fs, root)
+      val bid = bidOf(meta)
+      validateAppendId(bid, name)
+      if (meta.batches.contains(bid)) throw new graft.ReplayRefused(
+        s"$name append refused: batch $bid is already committed at " +
+          s"$root/batches/$bid — a replay would $replayHarm; drop it " +
+          "from the meta first if this is an intentional re-ingest")
+      if (meta.retired.contains(bid)) throw new graft.ReplayRefused(
+        s"$name append refused: batch $bid was committed and later " +
+          "compacted away — its payload already lives in the merged " +
+          s"batch; a replay would $replayHarm")
+      clearPendingDelete(fs, root, bid)
+      val next =
+        publishStaged(fs, root, bid)(p => Some(stage(meta, p))).get
+      swap(fs, root, withLists(next, meta.batches :+ bid, meta.retired,
+        meta.gen), raw)
+      clearPendingDelete(fs, root, bid)
+      bid
+    }
+
+    /** Commit `next` (which no longer lists `delisted`) and delist: THIS
+      * swap is each id's delist event, so its grace clock is RESET
+      * (clear, then first-marker-wins mark — a stale publish-race
+      * marker cannot pre-empt the promised window), and the sweep
+      * rails on the committed list RE-READ after the swap, never the
+      * pre-swap snapshot — a batch a racing append committed in
+      * between survives.
+      */
+    def delist(fs: FileSystem, root: String, next: M,
+               expect: Array[Byte], delisted: Seq[String],
+               retainMs: Long): Unit = {
+      swap(fs, root, next, expect)
+      val now = System.currentTimeMillis()
+      delisted.foreach(b => resetPendingDelete(fs, root, b, now, retainMs))
+      sweepPendingDeletes(fs, root, now, committedFromMeta(fs, root))
+      ()
+    }
+
+    /** Doc-level retraction over `meta`'s committed batches: `hits`
+      * returns a batch's found-statistics and remainder rows (None: no
+      * retracted key in it); a non-empty remainder republishes through
+      * `stage` under [[rewriteId]]`(batch, keys)`, and ONE delisting
+      * swap replaces every affected id with its rewrite (or nothing,
+      * when all its rows went) and RETIRES the originals, so a replay
+      * of an original batch is still refused. `settle` gives the head
+      * after the found statistics leave. Returns the per-batch
+      * statistics (empty: nothing found, meta untouched).
+      */
+    def retract[T](fs: FileSystem, root: String, meta: M,
+                   expect: Array[Byte], keys: Seq[String],
+                   retainMs: Long)(hits: String => Option[(T, DataFrame)])(
+        stage: (DataFrame, Path) => Unit)(settle: Seq[T] => M): Seq[T] = {
+      val rewrites = meta.batches.flatMap { b =>
+        hits(b).map { case (found, remainder) =>
+          val rid = rewriteId(b, keys)
+          val replacement =
+            if (remainder.isEmpty) None
+            else publishStaged(fs, root, rid) { p =>
+              stage(remainder, p); Some(rid)
+            }
+          (b, replacement, found)
+        }
+      }
+      if (rewrites.nonEmpty) {
+        val byOld = rewrites.map(r => r._1 -> r._2).toMap
+        val olds = rewrites.map(_._1)
+        delist(fs, root, withLists(settle(rewrites.map(_._3)),
+          meta.batches.flatMap(b => byOld.getOrElse(b, Some(b))),
+          (meta.retired ++ olds).distinct, meta.gen),
+          expect, olds, retainMs)
+      }
+      rewrites.map(_._3)
+    }
+
+    /** Index MAINTENANCE: merge every committed batch's payload into
+      * ONE batch `mergedId(committed)`, committed by one swap that
+      * lists exactly it and RETIRES the superseded ids (the retired
+      * list capped at `maxRetired`, newest kept), then retire every
+      * other batch directory. `stage` writes the merged payload of the
+      * meta's committed batches under the staging path.
+      *
+      * The sequence: the preflight audit (refuse on a committed batch
+      * with lost payload, re-record a lost current-gen history record
+      * while the meta bytes exist); clear stale markers on committed
+      * ids, restored if OUR swap loses the CAS (a cleared marker may
+      * have been a racing drop's promised window); a single committed
+      * batch is already compact — it still CAS-swaps the unchanged
+      * meta (a racing append fails loudly instead of having its
+      * published directory swept) and sweeps a prior crash's orphans;
+      * otherwise refuse typed when the merged id squats on the
+      * committed/retired list or on an open grace window (reclaiming
+      * an expired marker), publish, swap, retire. `beforeSwap` and
+      * `beforeSweep` are test seams: the windows the CAS and the
+      * re-read sweep rail defend. Returns the surviving batch id.
+      */
+    def compact(fs: FileSystem, root: String, retainMs: Long,
+                maxRetired: Int, beforeSwap: () => Unit,
+                beforeSweep: () => Unit)(stage: (M, Path) => Unit)
+        : String = {
+      require(maxRetired >= 1, s"maxRetired must be >= 1, got $maxRetired")
+      val (meta, raw) = read(fs, root)
+      require(meta.batches.nonEmpty,
+        s"no committed batches to compact at $root")
+      preflightCompaction(fs, root)
+      val cleared = clearStaleMarkers(fs, root, meta.batches)
+      def swapRestoring(m: M): Unit =
+        try swap(fs, root, m, raw)
+        catch {
+          case e: MetaSwap.CasFailed =>
+            restorePendingDeletes(fs, root, cleared)
+            throw e
+        }
+      def retireAllBut(keep: String): Unit = {
+        beforeSweep()
+        val now = System.currentTimeMillis()
+        // the rail is the CURRENT lists, re-read AFTER this swap: an
+        // append that read the post-swap meta and committed before
+        // this sweep is only on the re-read list (the r10 finding)
+        val (current, curRetired) = listsFromMeta(fs, root)
+        val superseded = meta.batches.toSet
+        fs.listStatus(new Path(s"$root/batches"))
+          .filter(st => st.isDirectory && st.getPath.getName != keep &&
+            !current(st.getPath.getName))
+          .foreach { st =>
+            val bid = st.getPath.getName
+            // superseded, retired and merged-shape dirs are
+            // unambiguous → the caller's retainMs; any other unlisted
+            // dir may be an in-flight publish whose CAS hasn't run →
+            // the orphan-grace floor ([[OrphanGraceMs]]). Markers on
+            // committed ids were cleared at entry, so first-marker-wins
+            // only ever preserves a RUNNING clock here
+            val grace =
+              if (superseded(bid) || curRetired(bid) ||
+                isMergedShape(bid)) retainMs
+              else math.max(retainMs, OrphanGraceMs)
+            markPendingDelete(fs, root, bid, now, grace)
+          }
+        sweepPendingDeletes(fs, root, now, committedFromMeta(fs, root))
+        ()
+      }
+      if (meta.batches.size == 1) {
+        beforeSwap()
+        swapRestoring(meta)
+        retireAllBut(meta.batches.head)
+        meta.batches.head
+      } else {
+        val cid = mergedId(meta.batches)
+        if (meta.batches.contains(cid) || meta.retired.contains(cid))
+          throw new graft.ReservedIdRefused(
+            s"merged id $cid is already on the committed/retired list " +
+              s"at $root — a pre-reservation user-supplied id squats on " +
+              "the merged shape; drop and re-ingest that batch under " +
+              "another id before compacting")
+        // a dropped pre-reservation squatter that aged off the capped
+        // retired list still has its marker while its window is open;
+        // an expired or corrupt marker is what the sweep would reclaim
+        pendingDeadline(fs, root, cid) match {
+          case Some(d) if d > System.currentTimeMillis() =>
+            throw new graft.ReservedIdRefused(
+              s"merged id $cid has a pending grace-period delete at " +
+                s"$root — a delisted pre-reservation batch still inside " +
+                "its retain window squats on the merged shape; wait for " +
+                "the window to expire (or clear the marker explicitly) " +
+                "before compacting")
+          case _ => clearPendingDelete(fs, root, cid)
+        }
+        publishStaged(fs, root, cid)(p => Some(stage(meta, p)))
+        beforeSwap()
+        swapRestoring(withLists(meta, Seq(cid),
+          (meta.retired ++ meta.batches).distinct.takeRight(maxRetired),
+          meta.gen))
+        retireAllBut(cid)
+        cid
+      }
+    }
+
+    /** The committed view at `gen`, from its `_meta_history` record —
+      * the as-of-gen serve's visibility list and head. Bounded by the
+      * history cap and by batch-directory retention (`retainMs`): a
+      * missing record or a reclaimed batch directory refuses with the
+      * typed [[graft.SnapshotUnavailable]], so a reader can fall back
+      * to the live serve without message matching.
+      */
+    def readAt(fs: FileSystem, root: String, gen: Long): M = {
+      val raw = readMetaHistory(fs, root, gen).getOrElse {
+        throw new graft.SnapshotUnavailable(
+          s"$name at $root has no snapshot record for gen $gen — the " +
+            "gen never committed, crashed before recording, or aged " +
+            "past the history cap; probe the live index instead")
+      }
+      val meta = parse(raw, root)
+      val missing = meta.batches.filterNot(b =>
+        fs.exists(new Path(s"$root/batches/$b")))
+      if (missing.nonEmpty) throw new graft.SnapshotUnavailable(
+        s"snapshot gen $gen of the $name at $root is no longer " +
+          s"servable: batch dir(s) ${missing.mkString(", ")} were " +
+          "retired and physically reclaimed (grace expired) — " +
+          "snapshots outlive maintenance only within retainMs")
+      meta
+    }
   }
 }

@@ -67,158 +67,63 @@ object VectorIndex {
                     path: String): org.apache.hadoop.fs.FileSystem =
     graft.sources.Tables.fsFor(spark, path)
 
-  private def metaPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_meta")
-
-  /** The committed state of an index: PQ geometry plus the two
-    * visibility lists. `batches` serve; `retired` only refuse replay.
-    * `gen` is the swap FENCE: a counter [[swapMeta]] bumps on every
-    * commit so no two successive committed metas are ever
-    * byte-identical — without it, a maintenance swap that changes
-    * nothing else (the single-batch compaction no-op) would be
-    * invisible to a concurrent writer's compare-and-set, and the
-    * racing append the swap exists to fail would commit against a
-    * marker the sweep had already acted on.
+  /** The committed state of an index: PQ geometry plus the shared
+    * batch lists ([[IndexProtocol.Listed]]: `batches` serve, `retired`
+    * only refuse replay, `gen` is the swap fence).
     */
   private[graft] final case class VecMeta(m: Int, dim: Int,
                                           batches: Seq[String],
                                           retired: Seq[String],
                                           gen: Long = 0L)
+      extends IndexProtocol.Listed
 
-  /** Read the committed meta ALONG WITH its raw bytes — the bytes are
-    * what a maintenance path hands back to [[swapMeta]] as its CAS
-    * expectation. Self-healing: a crash between a swap's delete-old
-    * and rename-new steps leaves `_meta.next` without `_meta`; the
-    * next reader completes the rename and proceeds.
+  /** The code layout on the shared batch-list protocol: head `m, dim`. */
+  private object Layout extends IndexProtocol.BatchList[VecMeta](
+      "vector index", "VectorIndex.write",
+      "double-count every candidate it carries") {
+    protected def head(m: VecMeta) = Seq("m" -> m.m, "dim" -> m.dim)
+    protected def fromKv(kv: Map[String, String], batches: Seq[String],
+                         retired: Seq[String], gen: Long) =
+      VecMeta(kv("m").toInt, kv("dim").toInt, batches, retired, gen)
+    protected def withLists(m: VecMeta, batches: Seq[String],
+                            retired: Seq[String], gen: Long) =
+      m.copy(batches = batches, retired = retired, gen = gen)
+  }
+
+  /** The committed meta ALONG WITH its raw bytes (the CAS expectation
+    * of a maintenance swap); heals a crashed swap first.
     */
   private[graft] def readMetaRaw(spark: SparkSession,
-                                 path: String): (VecMeta, Array[Byte]) = {
-    val fs = fsFor(spark, path)
-    val p = metaPath(path)
-    graft.sources.MetaSwap.heal(fs, p)
-    require(fs.exists(p),
-      s"no committed vector index at $path (missing _meta — " +
-        "half-built index or wrong path); build one with " +
-        "VectorIndex.write")
-    val raw = graft.sources.MetaSwap.readCommitted(fs, p)
-    (parseVecMeta(raw, path), raw)
-  }
-
-  /** Parse serialized meta bytes — shared by the live read above and
-    * the as-of-gen history read ([[topKAt]]), so the two views can
-    * never diverge in format handling.
-    */
-  private def parseVecMeta(raw: Array[Byte], path: String): VecMeta = {
-    val kv = new String(raw, "UTF-8").linesIterator
-      .map(_.split("=", 2)).collect {
-        case Array(a, b) => a -> b
-      }.toMap
-    // a meta WITHOUT a batches key is the pre-committed-list format:
-    // defaulting it to empty would make a healthy index refuse every
-    // probe and — worse — let append/compact delist and sweep its
-    // data; refuse loudly instead (rebuild to a fresh root, or add
-    // the key listing the live batch dirs by hand)
-    require(kv.contains("batches"),
-      s"vector index meta at $path predates the committed-batch " +
-        "list format — refusing to guess visibility; rebuild the " +
-        "index (VectorIndex.write to a fresh root + writePointer) " +
-        "or add a batches= line listing the live batch directories")
-    VecMeta(kv("m").toInt, kv("dim").toInt,
-      kv("batches").split(",").toSeq.filter(_.nonEmpty),
-      kv.getOrElse("retired", "").split(",").toSeq.filter(_.nonEmpty),
-      kv.getOrElse("gen", "0").toLong)
-  }
+                                 path: String): (VecMeta, Array[Byte]) =
+    Layout.read(fsFor(spark, path), path)
 
   private[graft] def readMeta(spark: SparkSession,
                               path: String): VecMeta =
     readMetaRaw(spark, path)._1
 
-  private def metaBytes(m: VecMeta): Array[Byte] =
-    (s"m=${m.m}\ndim=${m.dim}\nbatches=${m.batches.mkString(",")}\n" +
-      s"retired=${m.retired.mkString(",")}\ngen=${m.gen}\n")
-      .getBytes("UTF-8")
-
-  /** Commit a new meta with the COMPARE-AND-SET `_meta.next` swap
-    * ([[graft.sources.MetaSwap]] — shared with the BM25 index):
-    * `expect` is the committed bytes this writer read, so a
-    * concurrent append/drop/compact landing in between fails this
-    * commit loudly instead of silently delisting the other writer's
-    * batch — the single-logical-writer contract, enforced.
+  /** Encode `emb` with the given artifacts and stage its
+    * cell-partitioned codes under `staging/cellCodes` — `staging` is
+    * the rename source, so the whole batch directory publishes as one.
     */
-  private def swapMeta(fs: org.apache.hadoop.fs.FileSystem,
-                       path: String, m: VecMeta,
-                       expect: Array[Byte]): Unit = {
-    // bump the fence on EVERY commit: successive committed metas are
-    // never byte-identical, so even a state-preserving swap (the
-    // no-op compaction) invalidates a concurrent writer's stale CAS
-    // expectation instead of sliding under it
-    val next = m.copy(gen = m.gen + 1)
-    val bytes = metaBytes(next)
-    graft.sources.MetaSwap.swap(fs, metaPath(path), bytes, expect)
-    // snapshot log for as-of-gen probes — recorded AFTER the swap, so
-    // it never alters commit semantics (see IndexProtocol)
-    IndexProtocol.recordMetaHistory(fs, path, next.gen, bytes)
-  }
+  private def stageCodes(emb: DataFrame, idCol: String, vecCol: String,
+                         centroids: DataFrame, codebook: DataFrame,
+                         m: Int, dim: Int,
+                         staging: org.apache.hadoop.fs.Path): Unit =
+    writeCodes(Similarity.pqEncodeCells(emb, idCol, vecCol, centroids,
+      codebook, m, dim), staging)
 
-  /** Stage a batch's cell-partitioned codes and publish them with one
-    * atomic rename. A batch id on the committed or retired list
-    * refuses loudly (O(1), the [[Bm25]] replay guard); an UNLISTED
-    * existing directory is crash residue from a publish whose meta
-    * swap never landed — deleted and re-staged, so residue can never
-    * ride into the live index.
+  /** Write code rows (id, subspace, code, cell) under
+    * `staging/cellCodes`, partitioned by cell — the layout every
+    * publish path writes. `cluster` groups rows by cell first, so each
+    * cell dir lands as ~one file instead of one per (task × cell).
     */
-  private def publishBatch(emb: DataFrame, idCol: String,
-                           vecCol: String, centroids: DataFrame,
-                           codebook: DataFrame, m: Int, dim: Int,
-                           path: String, bid: String,
-                           committed: Seq[String],
-                           retired: Seq[String]): Unit = {
-    val spark = emb.sparkSession
-    val fs = fsFor(spark, path)
-    val target = new org.apache.hadoop.fs.Path(s"$path/batches/$bid")
-    if (committed.contains(bid)) throw new graft.ReplayRefused(
-      s"VectorIndex append refused: batch $bid is already committed " +
-        s"at $target — a replayed embedding batch would double-count " +
-        "every candidate it carries; drop it from the meta first if " +
-        "this is an intentional re-ingest")
-    if (retired.contains(bid)) throw new graft.ReplayRefused(
-      s"VectorIndex append refused: batch $bid was committed and " +
-        "later compacted away — its codes already live in the merged " +
-        "batch; a replay would double-count every candidate")
-    // a pending grace-period delete of this id must be forgotten
-    // BEFORE the id is re-staged, or a later sweep would reap the
-    // re-ingested batch
-    IndexProtocol.clearPendingDelete(fs, path, bid)
-    // crash residue (published dir, meta swap never committed):
-    // invisible to probes, safe to redo wholesale
-    // VERIFIED delete: renaming into a still-existing directory
-    // nests the staged payload under the residue and returns true —
-    // the meta would commit a batch dir holding stale files
-    if (fs.exists(target) && !fs.delete(target, true))
-      throw new IllegalStateException(
-        s"cannot reclaim crash residue at $target before publishing " +
-          s"batch $bid — refusing to rename into an existing directory")
-    // VERIFIED staging wipe: the rename source is the staging
-    // PARENT and the write below only refreshes its cellCodes child,
-    // so a failed delete could leave stale siblings from a crashed
-    // earlier publish that the rename would commit
-    val stagingRoot =
-      new org.apache.hadoop.fs.Path(s"$path/_staging/$bid")
-    if (fs.exists(stagingRoot) && !fs.delete(stagingRoot, true))
-      throw new IllegalStateException(
-        s"cannot wipe stale staging at $stagingRoot before " +
-          s"publishing batch $bid")
-    // ONE root, children derived from it: the wiped, written, and
-    // renamed directory can never drift apart in a future edit
-    val staging = new org.apache.hadoop.fs.Path(stagingRoot, "cellCodes")
-    Similarity.pqEncodeCells(emb, idCol, vecCol, centroids, codebook,
-        m, dim)
+  private def writeCodes(codes: DataFrame,
+                         staging: org.apache.hadoop.fs.Path,
+                         cluster: Boolean = false): Unit =
+    (if (cluster) codes.repartition(col("cell")) else codes)
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(staging.toString)
-    fs.mkdirs(target.getParent)
-    require(fs.rename(stagingRoot, target),
-      s"atomic publish of batch $bid failed (staging → $target)")
-  }
+      .parquet(new org.apache.hadoop.fs.Path(staging, "cellCodes")
+        .toString)
 
   /** Assemble and publish the index from its trained artifacts; the
     * initial corpus lands as batch `bootstrap`, committed by the
@@ -236,8 +141,7 @@ object VectorIndex {
     val spark = emb.sparkSession
     val fs = fsFor(spark, path)
     // complete a crashed swap first so it registers as committed
-    graft.sources.MetaSwap.heal(fs, metaPath(path))
-    require(!fs.exists(metaPath(path)),
+    require(!Layout.isCommitted(fs, path),
       s"refusing to rebuild over the COMMITTED vector index at $path " +
         "— in-place rebuilds mix codes from two codebooks and drop " +
         "the serving index on failure; write to a fresh root and " +
@@ -257,13 +161,10 @@ object VectorIndex {
       .write.mode("overwrite").parquet(s"$path/centroids")
     codebook.select(col("subspace"), col("code"), col("centv"))
       .write.mode("overwrite").parquet(s"$path/codebook")
-    publishBatch(emb, idCol, vecCol, centroids, codebook, m, dim,
-      path, "bootstrap", Seq.empty, Seq.empty)
-    val m0bytes = metaBytes(VecMeta(m, dim, Seq("bootstrap"), Seq.empty))
-    val out = fs.create(metaPath(path), true)
-    try out.write(m0bytes)
-    finally out.close()
-    IndexProtocol.recordMetaHistory(fs, path, 0L, m0bytes)
+    Layout.bootstrap(fs, path) { staging =>
+      stageCodes(emb, idCol, vecCol, centroids, codebook, m, dim, staging)
+      VecMeta(m, dim, Nil, Nil)
+    }
   }
 
   /** Daily dense ingest: encode `emb` with the STORED artifacts,
@@ -277,27 +178,18 @@ object VectorIndex {
   def append(emb: DataFrame, idCol: String, vecCol: String,
              path: String, batchId: Option[String] = None): String = {
     val spark = emb.sparkSession
-    val fs = fsFor(spark, path)
-    val (meta, raw) = readMetaRaw(spark, path)
     val centroids = spark.read.parquet(s"$path/centroids")
     val codebook = spark.read.parquet(s"$path/codebook")
-    val bid = batchId.getOrElse(Dedup.batchId(emb, idCol))
     // a supplied id becomes a directory name and a meta-list entry;
     // content-derived ids are hex, but a caller's id must not smuggle
     // separators or the cell= marker the probe's path parser keys on —
     // and the merged-batch shape is reserved for compaction
-    IndexProtocol.validateAppendId(bid, "VectorIndex")
-    publishBatch(emb, idCol, vecCol, centroids, codebook, meta.m,
-      meta.dim, path, bid, meta.batches, meta.retired)
-    swapMeta(fs, path, meta.copy(batches = meta.batches :+ bid), raw)
-    // a racing maintenance sweep may have orphan-marked this batch
-    // between its publish and the swap above (the directory was
-    // unlisted then); the batch is committed now, so the marker is
-    // stale — clear it, or a LATER drop's first-marker-wins would
-    // inherit the orphan deadline and silently truncate the grace
-    // window that drop promises
-    IndexProtocol.clearPendingDelete(fs, path, bid)
-    bid
+    Layout.append(fsFor(spark, path), path)(_ =>
+      batchId.getOrElse(Dedup.batchId(emb, idCol))) { (meta, staging) =>
+      stageCodes(emb, idCol, vecCol, centroids, codebook, meta.m,
+        meta.dim, staging)
+      meta
+    }
   }
 
   /** The `cell=<c>` partition directories matching `cells`, across
@@ -313,14 +205,21 @@ object VectorIndex {
                                      cells: Seq[Long]): Seq[String] = {
     val fs = fsFor(spark, path)
     val wanted = cells.map(c => s"cell=$c").toSet
-    meta.batches.flatMap { bid =>
-      val cc = new org.apache.hadoop.fs.Path(
-        s"$path/batches/$bid/cellCodes")
-      if (!fs.exists(cc)) Seq.empty
-      else fs.listStatus(cc)
-        .filter(st => st.isDirectory && wanted(st.getPath.getName))
-        .map(_.getPath.toString).toSeq
-    }
+    meta.batches.flatMap(cellDirs(fs, path, _))
+      .filter(p => wanted(p.getName)).map(_.toString)
+  }
+
+  private def cellCodes(path: String, bid: String) =
+    new org.apache.hadoop.fs.Path(s"$path/batches/$bid/cellCodes")
+
+  /** A batch's `cell=<c>` code partition directories; empty when the
+    * batch directory is gone.
+    */
+  private def cellDirs(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                       bid: String): Seq[org.apache.hadoop.fs.Path] = {
+    val cc = cellCodes(path, bid)
+    if (!fs.exists(cc)) Seq.empty
+    else fs.listStatus(cc).filter(_.isDirectory).map(_.getPath).toSeq
   }
 
   /** Convenience form for callers without a snapshot in hand (specs,
@@ -361,7 +260,7 @@ object VectorIndex {
     * delisted directory then stays in place (invisible — probes are
     * meta-driven) for at least that grace window, recorded under
     * `_pending_delete/` and reclaimed by a later maintenance call's
-    * sweep ([[IndexProtocol.sweepPendingDeletes]]). Returns false if
+    * sweep (the [[IndexProtocol]] grace contract). Returns false if
     * the batch was not committed.
     */
   def dropBatch(spark: SparkSession, path: String,
@@ -372,17 +271,9 @@ object VectorIndex {
     val (meta, raw) = readMetaRaw(spark, path)
     if (!meta.batches.contains(batchId)) false
     else {
-      swapMeta(fs, path,
-        meta.copy(batches = meta.batches.filterNot(_ == batchId)), raw)
-      val now = System.currentTimeMillis()
-      // THIS drop is the delist event: reset (clear + mark) so a
-      // stale publish-race marker cannot pre-empt the promised window
-      IndexProtocol.resetPendingDelete(fs, path, batchId, now, retainMs)
-      // rail the sweep on the CURRENT committed list (re-read after
-      // the swap), never the pre-swap snapshot: a batch committed by
-      // a racing append between the swap and this sweep must survive
-      IndexProtocol.sweepPendingDeletes(fs, path, now,
-        IndexProtocol.committedFromMeta(fs, path))
+      Layout.delist(fs, path,
+        meta.copy(batches = meta.batches.filterNot(_ == batchId)), raw,
+        Seq(batchId), retainMs)
       true
     }
   }
@@ -406,67 +297,22 @@ object VectorIndex {
     val fs = fsFor(spark, path)
     val (meta, raw) = readMetaRaw(spark, path)
     import spark.implicits._
-    final case class Rewrite(old: String, replacement: Option[String],
-                             dn: Long)
-    val rewrites = meta.batches.flatMap { b =>
-      val cc = new org.apache.hadoop.fs.Path(
-        s"$path/batches/$b/cellCodes")
-      if (!fs.exists(cc)) None
-      else {
-        val rows = spark.read.parquet(cc.toString)
-        val idsDf = ids.map(_.toString).toDF("__rid")
-          .select(col("__rid").cast(rows.schema("id").dataType)
-            .as("id")).distinct()
-        val dn = rows.join(broadcast(idsDf), Seq("id"), "left_semi")
-          .select(col("id")).distinct().count()
-        if (dn == 0L) None
+    Layout.retract(fs, path, meta, raw, ids.map(_.toString), retainMs) {
+      b =>
+        val cc = cellCodes(path, b)
+        if (!fs.exists(cc)) None
         else {
-          val remainder = rows.join(broadcast(idsDf), Seq("id"),
-            "left_anti")
-          val replacement =
-            if (remainder.isEmpty) None
-            else {
-              val rid = "r" + java.security.MessageDigest
-                .getInstance("SHA-256")
-                .digest((b + ":" + ids.map(_.toString).sorted
-                  .mkString(",")).getBytes("UTF-8"))
-                .take(8).map("%02x".format(_)).mkString
-              val stagingRoot = new org.apache.hadoop.fs.Path(
-                s"$path/_staging/$rid")
-              val target = new org.apache.hadoop.fs.Path(
-                s"$path/batches/$rid")
-              if (fs.exists(stagingRoot) && !fs.delete(stagingRoot, true))
-                throw new IllegalStateException(
-                  s"cannot wipe stale staging at $stagingRoot")
-              if (fs.exists(target) && !fs.delete(target, true))
-                throw new IllegalStateException(
-                  s"cannot reclaim crash residue at $target")
-              remainder.write.mode("overwrite").partitionBy("cell")
-                .parquet(new org.apache.hadoop.fs.Path(stagingRoot,
-                  "cellCodes").toString)
-              fs.mkdirs(target.getParent)
-              require(fs.rename(stagingRoot, target),
-                s"atomic publish of rewritten batch $rid failed")
-              Some(rid)
-            }
-          Some(Rewrite(b, replacement, dn))
+          val rows = spark.read.parquet(cc.toString)
+          val idsDf = ids.map(_.toString).toDF("__rid")
+            .select(col("__rid").cast(rows.schema("id").dataType)
+              .as("id")).distinct()
+          val dn = rows.join(broadcast(idsDf), Seq("id"), "left_semi")
+            .select(col("id")).distinct().count()
+          if (dn == 0L) None
+          else Some((dn, rows.join(broadcast(idsDf), Seq("id"), "left_anti")))
         }
-      }
-    }
-    if (rewrites.isEmpty) return 0L
-    val byOld = rewrites.map(r => r.old -> r).toMap
-    val newBatches = meta.batches.flatMap {
-      case b if byOld.contains(b) => byOld(b).replacement.toSeq
-      case b                      => Seq(b)
-    }
-    swapMeta(fs, path, meta.copy(batches = newBatches,
-      retired = (meta.retired ++ rewrites.map(_.old)).distinct), raw)
-    val now = System.currentTimeMillis()
-    rewrites.foreach(r =>
-      IndexProtocol.resetPendingDelete(fs, path, r.old, now, retainMs))
-    IndexProtocol.sweepPendingDeletes(fs, path, now,
-      IndexProtocol.committedFromMeta(fs, path))
-    rewrites.map(_.dn).sum
+    }((remainder, staging) => writeCodes(remainder, staging))(_ => meta)
+      .sum
   }
 
   /** Index MAINTENANCE: merge every committed batch's codes into ONE
@@ -487,8 +333,8 @@ object VectorIndex {
     * redelivery horizon, not the corpus).
     *
     * The merged batch id derives from the SORTED COMMITTED LIST
-    * ([[IndexProtocol.mergedId]] — the [[Bm25.compactBm25Index]]
-    * scheme), NOT from the content id set: a content-derived id can
+    * (the [[IndexProtocol]] scheme [[Bm25.compactBm25Index]] shares),
+    * NOT from the content id set: a content-derived id can
     * collide with a committed batch that happens to carry the full id
     * set (double-ingest, or a corrected re-ingest under a new id),
     * and the collision would skip the merge while the sweep deleted
@@ -510,8 +356,8 @@ object VectorIndex {
     * never concurrently; and since r10 that contract is ENFORCED: the
     * meta swap is compare-and-set against the bytes this compaction
     * read, so a batch committed between the read and the swap fails
-    * the compaction loudly ([[graft.sources.MetaSwap.CasFailed]])
-    * with the appended batch intact — the merged directory is
+    * the compaction loudly (the typed CAS failure) with the appended
+    * batch intact — the merged directory is
     * unlisted residue, reclaimed by the re-run. Entry runs the A6d
     * audit as a PRE-FLIGHT ([[IndexProtocol.preflightCompaction]]):
     * a committed batch with lost payload refuses the compaction
@@ -536,164 +382,24 @@ object VectorIndex {
                                  beforeSwap: () => Unit,
                                  beforeSweep: () => Unit = () => ())
       : String = {
-    require(maxRetired >= 1, s"maxRetired must be >= 1, got $maxRetired")
     val fs = fsFor(spark, path)
-    val (meta, raw) = readMetaRaw(spark, path)
-    require(meta.batches.nonEmpty,
-      s"no committed batches to compact at $path")
-    // diagnose BEFORE destroying (the A6d audit at maintenance entry):
-    // refuse on a committed batch with lost payload — merging would
-    // bake the loss in and retire the evidence — and re-record a lost
-    // current-gen snapshot record while the meta bytes still exist
-    IndexProtocol.preflightCompaction(fs, path)
-    // a marker on a COMMITTED batch is by definition stale (see
-    // IndexProtocol.clearStaleMarkers) — clear them now so no stale
-    // clock survives a crash-recovery path into these batches'
-    // eventual retirement and truncates the window promised there
-    val cleared = IndexProtocol.clearStaleMarkers(fs, path, meta.batches)
-    // if OUR swap loses the CAS, a marker cleared above may have been
-    // a concurrent drop's promised window (delisted between the
-    // re-read and the clear) — restore it before failing, so the
-    // losing compaction cannot erase the winner's grace promise
-    def swapRestoring(m: VecMeta): Unit =
-      try swapMeta(fs, path, m, raw)
-      catch {
-        case e: graft.sources.MetaSwap.CasFailed =>
-          IndexProtocol.restorePendingDeletes(fs, path, cleared)
-          throw e
-      }
-    def retireAllBut(keep: String): Unit = {
-      beforeSweep()
-      val now = System.currentTimeMillis()
-      // the rail is the CURRENT lists, re-read AFTER this compaction's
-      // swap: the pre-swap snapshot is stale here — an append that
-      // read the post-swap meta and CAS-committed before this sweep
-      // is only on the re-read list, and marking or sweeping its
-      // directory would be data loss with the batch still committed
-      // (the r10 finding)
-      val (current, curRetired) = IndexProtocol.listsFromMeta(fs, path)
-      val superseded = meta.batches.toSet
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/batches"))
-        .filter(st => st.isDirectory && st.getPath.getName != keep &&
-          !current(st.getPath.getName))
-        .foreach { st =>
-          val bid = st.getPath.getName
-          // classification: a dir this compaction delisted, a
-          // currently-retired id, or merged-shape residue is
-          // unambiguous superseded payload → caller's retainMs. Any
-          // OTHER unlisted append-shaped dir may be an in-flight
-          // publish whose CAS hasn't run — reclaiming it immediately
-          // would leave that append committed and payload-less, so it
-          // gets the orphan-grace floor (true crash residue reclaims
-          // after the floor, or sooner via a re-publish)
-          val grace =
-            if (superseded(bid) || curRetired(bid) ||
-              IndexProtocol.isMergedShape(bid)) retainMs
-            else math.max(retainMs, IndexProtocol.OrphanGraceMs)
-          // no stale-marker hazard here: markers on this run's
-          // committed list were cleared at compaction entry, so
-          // first-marker-wins only ever preserves a RUNNING clock
-          // (e.g. a prior crashed compaction's retirement window)
-          IndexProtocol.markPendingDelete(fs, path, bid, now, grace)
-        }
-      IndexProtocol.sweepPendingDeletes(fs, path, now,
-        IndexProtocol.committedFromMeta(fs, path))
-      ()
+    Layout.compact(fs, path, retainMs, maxRetired, beforeSwap,
+      beforeSweep) { (meta, staging) =>
+      val all = meta.batches.flatMap(cellDirs(fs, path, _))
+      require(all.nonEmpty, s"no code partitions to compact at $path")
+      // the exact-row dedup mirrors the probe's read-side discipline
+      // (topK dropDuplicates the same four columns), so the merged
+      // batch serves bit-identically — including under double-ingest,
+      // where the duplicate codes were already invisible to scoring
+      writeCodes(all
+        .groupBy(p => p.getName.stripPrefix("cell=").toLong)
+        .map { case (c, ps) =>
+          spark.read.parquet(ps.map(_.toString): _*)
+            .withColumn("cell", lit(c))
+        }.reduce(_.unionByName(_))
+        .dropDuplicates("id", "subspace", "code", "cell"),
+        staging, cluster = true)
     }
-    if (meta.batches.size == 1) {
-      // already compact — but a crash between a PRIOR compaction's
-      // meta swap and its sweep leaves invisible orphan dirs, and
-      // this re-run is the documented recovery. The no-op still
-      // CAS-swaps the UNCHANGED meta first: a concurrent append
-      // landing since this call's read fails the swap loudly instead
-      // of having its published-but-not-yet-committed directory swept
-      // out from under its commit
-      beforeSwap()
-      swapRestoring(meta)
-      retireAllBut(meta.batches.head)
-      return meta.batches.head
-    }
-    val dirs = meta.batches.map(b =>
-      new org.apache.hadoop.fs.Path(s"$path/batches/$b"))
-    val all = dirs.flatMap { b =>
-      val cc = new org.apache.hadoop.fs.Path(b, "cellCodes")
-      if (!fs.exists(cc)) Seq.empty
-      else fs.listStatus(cc).filter(_.isDirectory).map(_.getPath)
-    }
-    require(all.nonEmpty, s"no code partitions to compact at $path")
-    // the exact-row dedup mirrors the probe's read-side discipline
-    // (topK dropDuplicates the same four columns), so the merged batch
-    // serves bit-identically — including under double-ingest, where
-    // the duplicate codes were already invisible to scoring
-    val codes = all
-      .groupBy(p => p.getName.stripPrefix("cell=").toLong)
-      .map { case (c, ps) =>
-        spark.read.parquet(ps.map(_.toString): _*)
-          .withColumn("cell", lit(c))
-      }.reduce(_.unionByName(_))
-      .dropDuplicates("id", "subspace", "code", "cell")
-    val cid = IndexProtocol.mergedId(meta.batches)
-    // the shape is reserved at append time, so a collision can only
-    // come from an index predating that guard — refuse (typed, the
-    // append-side twin's ReservedIdRefused) rather than destroy the
-    // committed batch's payload and rebuild over it
-    if (meta.batches.contains(cid) || meta.retired.contains(cid))
-      throw new graft.ReservedIdRefused(
-        s"merged id $cid is already on the committed/retired list at " +
-          s"$path — a pre-reservation user-supplied id squats on the " +
-          "merged shape; drop and re-ingest that batch under another " +
-          "id before compacting")
-    // the retired list is CAPPED, so a pre-reservation squatter that
-    // aged off it evades the list check — but a dropped squatter
-    // inside its grace window still has a pending-delete marker, and
-    // rebuilding over its directory would cut the promised window
-    // short; refuse while the window is open (a marker for a merged
-    // id cannot be this compaction's own residue: markers are only
-    // written post-swap, and post-swap the list is [cid] whose
-    // mergedId differs). An EXPIRED or unreadable marker is exactly
-    // what the sweep would reclaim — reclaim it here so a stale
-    // marker can never wedge every future compaction
-    IndexProtocol.pendingDeadline(fs, path, cid) match {
-      case Some(d) if d > System.currentTimeMillis() =>
-        throw new graft.ReservedIdRefused(
-          s"merged id $cid has a pending grace-period delete at " +
-            s"$path — a delisted pre-reservation batch still inside " +
-            "its retain window squats on the merged shape; wait for " +
-            "the window to expire (or clear the marker explicitly) " +
-            "before compacting")
-      case _ => IndexProtocol.clearPendingDelete(fs, path, cid)
-    }
-    val merged = new org.apache.hadoop.fs.Path(s"$path/batches/$cid")
-    // residue from a crashed earlier compaction of the SAME list is
-    // safe to rebuild wholesale — it was never committed
-    if (fs.exists(merged) && !fs.delete(merged, true))
-      throw new IllegalStateException(
-        s"cannot reclaim crashed-compaction residue at $merged — " +
-          "refusing to rename into an existing directory")
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_staging/$cid")
-    // verified wipe — the write below refreshes only the cellCodes
-    // child of the rename source (publishBatch's rationale)
-    if (fs.exists(staging) && !fs.delete(staging, true))
-      throw new IllegalStateException(
-        s"cannot wipe stale compaction staging at $staging")
-    // DEFRAGMENT, not just merge (the compactBm25Index rationale):
-    // cluster rows by cell before the write so each cell dir
-    // lands as ~one file instead of one per (task × cell)
-    codes.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(new org.apache.hadoop.fs.Path(staging, "cellCodes")
-        .toString)
-    if (!fs.rename(staging, merged))
-      throw new IllegalStateException(
-        s"cannot publish compacted batch $staging to $merged")
-    beforeSwap()
-    swapRestoring(meta.copy(batches = Seq(cid),
-      retired =
-        (meta.retired ++ meta.batches).distinct.takeRight(maxRetired)))
-    // retire every batch dir off the committed list: superseded
-    // payloads AND any invisible orphans a prior crash left behind
-    retireAllBut(cid)
-    cid
   }
 
   // ---- zero-downtime republish: the serving pointer --------------
@@ -709,28 +415,20 @@ object VectorIndex {
     */
   def writePointer(spark: SparkSession, pointerPath: String,
                    indexRoot: String): Unit = {
-    val fs = fsFor(spark, pointerPath)
     // refuse to point at a root no probe could serve
     readMeta(spark, indexRoot)
-    graft.sources.MetaSwap.swap(fs,
-      new org.apache.hadoop.fs.Path(pointerPath),
-      s"$indexRoot\n".getBytes("UTF-8"))
+    IndexProtocol.writePointer(fsFor(spark, pointerPath),
+      new org.apache.hadoop.fs.Path(pointerPath), indexRoot)
   }
 
   /** Resolve the active index root; self-heals a crashed swap. */
   def resolvePointer(spark: SparkSession,
-                     pointerPath: String): String = {
-    val fs = fsFor(spark, pointerPath)
-    val p = new org.apache.hadoop.fs.Path(pointerPath)
-    graft.sources.MetaSwap.heal(fs, p)
-    require(fs.exists(p),
-      s"no serving pointer at $pointerPath — publish one with " +
-        "VectorIndex.writePointer")
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .next().trim
-    finally in.close()
-  }
+                     pointerPath: String): String =
+    IndexProtocol.readPointer(fsFor(spark, pointerPath),
+        new org.apache.hadoop.fs.Path(pointerPath)).getOrElse(
+      throw new IllegalArgumentException(
+        s"no serving pointer at $pointerPath — publish one with " +
+          "VectorIndex.writePointer"))
 
   /** The pointer-resolved serve — what a serving tier actually calls,
     * so republishing an index never interrupts it.
@@ -793,25 +491,9 @@ object VectorIndex {
   def topKAt(spark: SparkSession, path: String, gen: Long,
              emb: DataFrame, idCol: String, vecCol: String,
              queryPred: org.apache.spark.sql.Column,
-             k: Int = 10, nprobe: Int = 2, rerank: Int = 50): DataFrame = {
-    val fs = fsFor(spark, path)
-    val raw = IndexProtocol.readMetaHistory(fs, path, gen).getOrElse {
-      throw new graft.SnapshotUnavailable(
-        s"vector index at $path has no snapshot record for gen $gen " +
-          "— the gen never committed, crashed before recording, or " +
-          "aged past the history cap; probe the live index instead")
-    }
-    val meta = parseVecMeta(raw, path)
-    val missing = meta.batches.filterNot(b =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/batches/$b")))
-    if (missing.nonEmpty) throw new graft.SnapshotUnavailable(
-      s"snapshot gen $gen of the vector index at $path is no longer " +
-        s"servable: batch dir(s) ${missing.mkString(", ")} were " +
-        "retired and physically reclaimed (grace expired) — " +
-        "snapshots outlive maintenance only within retainMs")
-    serveWithMeta(spark, path, meta, emb, idCol, vecCol, queryPred,
-      k, nprobe, rerank)
-  }
+             k: Int = 10, nprobe: Int = 2, rerank: Int = 50): DataFrame =
+    serveWithMeta(spark, path, Layout.readAt(fsFor(spark, path), path, gen),
+      emb, idCol, vecCol, queryPred, k, nprobe, rerank)
 
   private def serveWithMeta(spark: SparkSession, path: String,
                             meta: VecMeta, emb: DataFrame,

@@ -63,9 +63,19 @@ private[graft] object MetaSwap {
   def heal(fs: FileSystem, marker: Path): Unit = {
     val next = nextOf(marker)
     if (!fs.exists(marker) && fs.exists(next)) {
-      fs.rename(next, marker); ()
+      renameIn(fs, next, marker); ()
     }
   }
+
+  /** `fs.rename(next, marker)`, false when `next` is already gone: a
+    * concurrent [[heal]] (another writer's or reader's) renamed it
+    * first, and the local file system's rename then throws
+    * FileNotFoundException from its copy fallback instead of
+    * returning false. Callers judge a false by the committed bytes.
+    */
+  private def renameIn(fs: FileSystem, next: Path, marker: Path): Boolean =
+    try fs.rename(next, marker)
+    catch { case _: java.io.FileNotFoundException => false }
 
   /** The committed marker's bytes, healing a crashed swap first —
     * what a CAS writer reads so the SAME bytes can be handed back as
@@ -91,7 +101,7 @@ private[graft] object MetaSwap {
     val out = fs.create(next, true)
     try out.write(bytes) finally out.close()
     fs.delete(marker, false)
-    if (!fs.rename(next, marker)) {
+    if (!renameIn(fs, next, marker)) {
       val committed =
         if (!fs.exists(marker)) null else readAll(fs, marker)
       require(committed != null &&
@@ -125,7 +135,7 @@ private[graft] object MetaSwap {
           else throw e
       }
     try out.write(bytes) finally out.close()
-    if (!fs.rename(next, marker)) {
+    if (!renameIn(fs, next, marker)) {
       // a concurrent reader's heal may have completed this commit
       val committed =
         if (!fs.exists(marker)) null else readAll(fs, marker)

@@ -222,6 +222,57 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       if (silent(f)) false else super.delete(f, recursive)
   }
 
+  /** A FileSystem where another writer wins every `.next` rename and
+    * releases the marker again before the caller's own rename runs:
+    * the caller's rename then finds neither source nor destination,
+    * which the local FS reports with a FileNotFoundException (not
+    * false).
+    */
+  private class RenameRaceFs(u: org.apache.hadoop.fs.FileSystem)
+      extends org.apache.hadoop.fs.FilterFileSystem(u) {
+    override def rename(src: org.apache.hadoop.fs.Path,
+                        dst: org.apache.hadoop.fs.Path): Boolean = {
+      if (src.getName.endsWith(".next")) {
+        super.rename(src, dst)
+        super.delete(dst, false)
+      }
+      super.rename(src, dst)
+    }
+  }
+
+  test("a marker rename that loses its .next to a writer that already " +
+      "committed and released is judged by the marker, never a raw " +
+      "FileNotFoundException") {
+    val dir = tmp("rename-race")
+    try {
+      val root = dir.toString
+      val real = hadoopFs(root)
+      val raced = new RenameRaceFs(real)
+      raced.setConf(spark.sparkContext.hadoopConfiguration)
+      val marker = new org.apache.hadoop.fs.Path(s"$root/_meta")
+      val next = new org.apache.hadoop.fs.Path(s"$root/_meta.next")
+      def bytes(s: String) = s.getBytes("UTF-8")
+      // create-exclusive: the stage file went to another writer — a
+      // typed loss the racers retry, not an untyped crash
+      intercept[MetaSwap.CasFailed] {
+        MetaSwap.create(raced, marker, bytes("a"))
+      }
+      // a late healer of a swap another healer already completed (and
+      // whose marker was since released) finds nothing left to do
+      val out = real.create(next, true)
+      try out.write(bytes("b")) finally out.close()
+      MetaSwap.heal(raced, marker)
+      assert(!real.exists(marker) && !real.exists(next))
+      // the swap's own rename lost the same way: the marker holds
+      // nothing of this writer's, the existing refusal reports it
+      MetaSwap.create(real, marker, bytes("c"))
+      val e = intercept[IllegalArgumentException] {
+        MetaSwap.swap(raced, marker, bytes("d"), bytes("c"))
+      }
+      assert(e.getMessage.contains("marker swap failed"))
+    } finally rmTree(dir)
+  }
+
   /** A FileSystem whose open() fails the first `n` times for chosen
     * names, then recovers — the one-off-hiccup simulator the marker
     * read-retry loop exists for.
@@ -524,6 +575,74 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       assert(VectorIndex.readMeta(spark, path).batches == Seq(cid))
       assert(vecServe(path).nonEmpty)
     } finally rmTree(dir)
+  }
+
+  test("vector index: a drop committed in the compaction's swap " +
+      "window fails the compaction; the drop's effect stands") {
+    val dir = tmp("vec-casdrop")
+    try {
+      val path = dir.toString
+      VectorIndex.write(emb.filter(col("vec_id") < 200), "vec_id",
+        "embedding", cents, cb, m, dim, path)
+      val before = vecServe(path)
+      val a2 = VectorIndex.append(
+        emb.filter(col("vec_id") >= 200 && col("vec_id") < 350),
+        "vec_id", "embedding", path)
+      // the compaction merged pre-drop codes: its swap would resurrect
+      // the dropped batch inside the merged payload, so it must fail
+      intercept[MetaSwap.CasFailed] {
+        VectorIndex.compactImpl(spark, path, 0L, 512, () => {
+          assert(VectorIndex.dropBatch(spark, path, a2)); ()
+        })
+      }
+      assert(VectorIndex.readMeta(spark, path).batches == Seq("bootstrap"))
+      assert(!new java.io.File(s"$path/batches/$a2").exists())
+      assert(vecServe(path) == before)
+    } finally rmTree(dir)
+  }
+
+  test("a meta without a batches= line refuses typed on both indexes " +
+      "instead of guessing visibility") {
+    val dir = tmp("no-batches")
+    try {
+      def refusal(root: String, head: String)(read: => Any): String = {
+        new java.io.File(root).mkdirs()
+        java.nio.file.Files.write(java.nio.file.Paths.get(root, "_meta"),
+          s"${head}retired=\ngen=1\n".getBytes("UTF-8"))
+        intercept[IllegalArgumentException](read).getMessage
+      }
+      val bm = s"$dir/bm25"
+      val eBm = refusal(bm, "n=3\nsum_len=9\nid_col=doc_id\n" +
+        "id_type=bigint\n")(Bm25.readBm25Meta(spark, bm))
+      assert(eBm.contains("predates the committed-batch list"), eBm)
+      assert(eBm.contains("BM25 index"), eBm)
+      val vec = s"$dir/vec"
+      val eVec = refusal(vec, "m=4\ndim=64\n")(
+        VectorIndex.readMeta(spark, vec))
+      assert(eVec.contains("predates the committed-batch list"), eVec)
+      assert(eVec.contains("vector index"), eVec)
+    } finally rmTree(dir)
+  }
+
+  test("one batch-list protocol: neither index file hand-writes a meta " +
+      "swap, a publish rename, a grace marker, the history log or the " +
+      "merged id") {
+    val src = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    assert(java.nio.file.Files.isDirectory(src),
+      s"run from the project root: $src not found")
+    val words = Seq("MetaSwap.", ".rename(", "markPendingDelete",
+      "resetPendingDelete", "sweepPendingDeletes", "recordMetaHistory",
+      "mergedId")
+    val offenders = for {
+      file <- Seq("Bm25.scala", "VectorIndex.scala")
+      (line, i) <- {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.readAllLines(src.resolve(file)).asScala.toSeq
+          .zipWithIndex
+      }
+      if words.exists(line.contains)
+    } yield s"$file:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("bm25 index: an append committed in the compaction's swap " +
