@@ -53,7 +53,11 @@ object Pipeline {
     * inspectable, and the PREVIOUS gold generation keeps serving
     * untouched. The bounded DIMS publish through the snapshot table
     * ([[graft.sources.SnapshotStore.publish]] — full physical gens,
-    * the right cost for a small table); the FACT publishes through
+    * the right cost for a small table; a dim whose `_fingerprint` —
+    * plan, input files' paths/lengths/mtimes, schema, rules — equals
+    * the serving generation's is carried forward as a file copy,
+    * with no Spark job and no re-audit of bytes that already passed
+    * the same rules); the FACT publishes through
     * the MANIFEST table ([[graft.sources.ManifestStore]], partitioned
     * by ship month) so a promotion writes only changed partitions'
     * files and retention holds deltas — at a 100 TB fact the daily
@@ -79,15 +83,20 @@ object Pipeline {
   /** DAILY gold increment — the production shape the reference's
     * "today's partition" read implies (bigquery.py:96 reads the
     * latest dim partition; bigquery.py:141 appends the fact by
-    * partition): dims republish in full (bounded tables, the
-    * reference's own rebuild-from-latest-snapshot discipline,
-    * silver_to_gold.py:96) while the FACT takes only
+    * partition): each dim rebuilds from its sources only when they
+    * changed — the reference's rewrite-when-stale discipline
+    * (bucket.py:96 `write_to_minio_once_a_year`), decided by the
+    * snapshot table's `_fingerprint` instead of an age: unchanged
+    * inputs and code carry the serving generation forward as a file
+    * copy (no Spark job, no re-audit), anything else rebuilds and
+    * re-audits in full (silver_to_gold.py:96). The FACT takes only
     * `batchLineitem`'s rows — built with [[StarSchema.factSalesFrom]]
     * and MERGED partition-scoped into the manifest fact
     * ([[graft.sources.ManifestStore.mergePartitions]] on the lineitem
     * PK): untouched ship months' files are not rewritten, moved, or
     * read, so the daily cost is O(batch's months), never O(fact).
-    * The schema pointer swaps once at the end, same as [[gold]].
+    * Every table's generation advances either way, and the schema
+    * pointer swaps once at the end, same as [[gold]].
     */
   def goldIncrement(spark: SparkSession, sfDir: String, outDir: String,
                     batchLineitem: DataFrame, modelingDate: String,

@@ -701,22 +701,15 @@ object IndexAudit {
     val wBase = new org.apache.hadoop.fs.Path(s"$root/_writes")
     // a concurrent writer stages and commits under `_writes/` while
     // this walk runs, so entries may vanish between a listing and the
-    // next step: a directory gone mid-walk lists as empty (a plain
-    // listing, never the recursive `listFiles`, whose per-file status
-    // fails hard on a file deleted under it)
-    def files(dir: org.apache.hadoop.fs.Path)
-        : Iterator[org.apache.hadoop.fs.FileStatus] =
-      (try fs.listStatus(dir).iterator
-       catch { case _: java.io.FileNotFoundException => Iterator.empty })
-        .flatMap(st =>
-          if (st.isDirectory) files(st.getPath) else Iterator(st))
+    // next step: Tables.filesUnder lists a directory gone mid-walk as
+    // empty
     val writeRows =
       if (!fs.exists(wBase)) Seq.empty
       else fs.listStatus(wBase).toSeq
         .sortBy(_.getPath.getName)
         .flatMap { wd =>
           wd.getPath.getName.toLongOption.toSeq.flatMap { g =>
-            val it = files(wd.getPath)
+            val it = graft.sources.Tables.filesUnder(fs, wd.getPath)
             var orphan = false
             while (it.hasNext && !orphan) {
               val f = it.next()
@@ -884,7 +877,7 @@ object IndexAudit {
               var kept = false
               val doomed =
                 scala.collection.mutable.ArrayBuffer[String]()
-              val it = fs.listFiles(wd.getPath, true)
+              val it = graft.sources.Tables.filesUnder(fs, wd.getPath)
               while (it.hasNext) {
                 val f = it.next()
                 val rel = s"_writes/$g/" + f.getPath.toString

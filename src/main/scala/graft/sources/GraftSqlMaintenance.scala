@@ -40,15 +40,10 @@ private[graft] object GraftSqlMaintenance {
     val poolBase = new Path(
       if (t.manifestLayout) s"${t.root}/_writes"
       else s"${t.root}/_snapshots")
-    var files = 0L
-    if (fs.exists(poolBase)) {
-      val it = fs.listFiles(poolBase, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".")) files += 1
-      }
-    }
+    val files = Tables.filesUnder(fs, poolBase).count { f =>
+      !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith(".")
+    }.toLong
     (gens, files)
   }
 }

@@ -2047,7 +2047,7 @@ object ManifestStore {
         catch { case _: MetaSwap.CasFailed => None }
       if (sweepOwner.isDefined) try {
         var kept = false
-        val it = fs.listFiles(wd.getPath, true)
+        val it = Tables.filesUnder(fs, wd.getPath)
         val doomed = scala.collection.mutable.ArrayBuffer[Path]()
         while (it.hasNext) {
           val f = it.next()

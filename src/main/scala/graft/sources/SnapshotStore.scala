@@ -45,10 +45,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * inspection and throws the typed [[graft.AuditFailed]] — the S18
   * validate-before-publish contract with the serving copy untouched.
   *
+  * Carry-forward: each generation records a `_fingerprint` marker
+  * (see [[fingerprint]]: schema, canonicalized optimized plan, every
+  * input file's path, length and mtime, the expectation list). A
+  * publish whose fingerprint equals the serving generation's copies
+  * that generation's files into the next one at the file-system level
+  * — no Spark job and no audit: the same plan over the same input
+  * bytes under the same rules is what produced, and audited, the
+  * bytes being copied. The generation still advances and the
+  * commit's lock, hook, CAS and prune run as for a write. A plan the
+  * fingerprint cannot see through always rewrites.
+  *
   * Scale shape: the write is a normal distributed parquet write; the
-  * audit is C11's one-scan aggregation over the staged bytes; the
-  * repoint is one small-file swap; retention is one listing bounded
-  * by `keep`. Nothing here re-reads published data.
+  * audit is C11's one-scan aggregation over the staged bytes; a carry
+  * is one copy per file of a bounded table; the repoint is one
+  * small-file swap; retention is one listing bounded by `keep`.
+  * Nothing here re-reads published data through Spark.
   */
 object SnapshotStore {
 
@@ -96,6 +108,10 @@ object SnapshotStore {
     * a resolved generation, and no publish cadence can invalidate an
     * in-flight read. Expired grace is reclaimed by the NEXT publish's
     * prune (the pending-delete sweep pattern).
+    *
+    * A publish whose `_fingerprint` equals the serving generation's
+    * carries that generation forward as a file copy instead of
+    * writing and auditing (see the object scaladoc).
     */
   def publish(spark: SparkSession, df: DataFrame, root: String,
               expectations: Seq[graft.operators.Cleaning.Expectation] =
@@ -123,36 +139,159 @@ object SnapshotStore {
     // those pointer bytes: a promotion landing in between fails loudly
     // instead of being silently replaced by a republish of older rows
     val planned = Generations.plannedFrom(fs, root, expectPointer)
+    val fp = fingerprint(df, expectations)
     Generations.commitGeneration(fs, root, layout, planned, keep,
       retainMs, beforeRepoint) { staging =>
-      // mode=overwrite consumes the one possible residue here: a prior
-      // publish of THIS gen that crashed (or failed its audit) before
-      // the repoint — nothing ever pointed at it
-      writeStamped(spark, df, genDir(root, staging.gen), expectations)
+      val dir = genDir(root, staging.gen)
+      // the planned pointer was re-validated inside the lock, so the
+      // serving generation is the one this commit supersedes
+      val serving = genDir(root, staging.gen - 1L)
+      val carried = fp.isDefined && staging.gen > 1L &&
+        marker(fs, serving, "_fingerprint") == fp &&
+        carry(fs, serving, dir, staging)
+      // a write's mode=overwrite (and a carry's clear) consumes the one
+      // possible residue here: a prior publish of THIS gen that crashed
+      // (or failed its audit) before the repoint — nothing ever
+      // pointed at it
+      if (carried) stampAll(fs, dir, fp)
+      else writeStamped(spark, df, dir, expectations, fp)
+    }
+  }
+
+  /** The `_fingerprint` a publish of `df` under `expectations` records:
+    * a SHA-256 over the frame's schema, its canonicalized optimized
+    * plan (the query's shape and expressions, so a code change to the
+    * build shows), the path, length and mtime of every input file, the
+    * expectation list, and the Spark version, session time zone and
+    * ANSI flag. None — the publish always rewrites — when the plan
+    * reads anything the hash cannot see: a nondeterministic
+    * expression, a user-defined function (its body is opaque to the
+    * plan), a leaf that is not a plain file scan (`range`, a local
+    * relation, a cached frame, a non-file source), or a file scan
+    * with reader options.
+    */
+  private[graft] def fingerprint(df: DataFrame,
+                                 expectations: Seq[graft.operators.Cleaning.Expectation])
+      : Option[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InMemoryFileIndex, LogicalRelation}
+    val plan = df.queryExecution.optimizedPlan
+    val nodes = plan.collectWithSubqueries { case n => n }
+    val opaque = nodes.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions
+        .UserDefinedExpression])))
+    val inputs = nodes.filter(_.children.isEmpty).map {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation if h.options.keySet
+            .forall(k => k.equalsIgnoreCase("path") ||
+              k.equalsIgnoreCase("paths")) =>
+          h.location match {
+            case i: InMemoryFileIndex => Some(i.allFiles().map(f =>
+              s"${f.getPath}|${f.getLen}|${f.getModificationTime}"))
+            case _ => None
+          }
+        case _ => None
+      }
+      case _ => None
+    }
+    if (!plan.deterministic || opaque || inputs.exists(_.isEmpty)) None
+    else {
+      val conf = df.sparkSession.conf
+      val text = Seq(org.apache.spark.SPARK_VERSION,
+        conf.get("spark.sql.session.timeZone"),
+        conf.get("spark.sql.ansi.enabled"), df.schema.json,
+        plan.canonicalized.treeString(true, false, Int.MaxValue, false,
+          false)) ++
+        inputs.flatMap(_.get).sorted ++
+        expectations.map(e => s"${e.rule}|${e.column}|${e.detail}")
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      Some(md.digest(text.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString)
+    }
+  }
+
+  /** Carry serving generation `from` forward as `to`: a file-system
+    * copy of its files (no Spark job, no audit — the publish's
+    * fingerprint equals the one `from` recorded, so these bytes already
+    * passed the same rules), verified by file count and lengths. False,
+    * with nothing staged, when `from` holds a subdirectory (not a
+    * layout this store writes), so the caller rewrites instead.
+    */
+  private def carry(fs: org.apache.hadoop.fs.FileSystem, from: Path,
+                    to: Path, staging: Generations.Staging): Boolean = {
+    val listed = fs.listStatus(from)
+    if (listed.exists(_.isDirectory)) false
+    else {
+      val files = listed.filterNot(st =>
+        Markers.contains(st.getPath.getName))
+      // residue of a crashed publish of this gen: cleared first, with
+      // ownership re-verified (the fastForwardBranch discipline)
+      staging.verifyLock()
+      if (fs.exists(to) && !fs.delete(to, true))
+        throw new IllegalStateException(
+          s"cannot clear staged residue at $to before carrying $from")
+      fs.mkdirs(to)
+      files.foreach { st =>
+        org.apache.hadoop.io.IOUtils.copyBytes(fs.open(st.getPath),
+          fs.create(new Path(to, st.getPath.getName), false), 1 << 16,
+          true)
+      }
+      val want = files.map(st => st.getPath.getName -> st.getLen).toMap
+      val got = fs.listStatus(to)
+        .map(st => st.getPath.getName -> st.getLen).toMap
+      if (got != want) throw new IllegalStateException(
+        s"carry of $from to $to did not verify: expected files " +
+          s"$want, found $got")
+      true
     }
   }
 
   /** Write `df` as a generation directory, audit the staged bytes
     * (blocking), and record its publish instant — an explicit
     * `_published_at` marker (directory mtimes are not portable to
-    * object stores), underscore-prefixed and invisible to readers.
+    * object stores), underscore-prefixed and invisible to readers —
+    * and its `_fingerprint`, when it has one.
     */
   private def writeStamped(spark: SparkSession, df: DataFrame, dir: Path,
-                           expectations: Seq[graft.operators.Cleaning.Expectation])
-      : Unit = {
+                           expectations: Seq[graft.operators.Cleaning.Expectation],
+                           fp: Option[String]): Unit = {
     df.write.mode("overwrite").parquet(dir.toString)
     if (expectations.nonEmpty) {
       Tables.auditStaged(spark, dir.toString, expectations)
       ()
     }
-    stamp(Tables.fsFor(spark, dir.toString), dir)
+    stampAll(Tables.fsFor(spark, dir.toString), dir, fp)
+  }
+
+  // the underscore markers a generation directory carries beside its
+  // data files
+  private val Markers = Set("_published_at", "_fingerprint")
+
+  private def stampAll(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+                       fp: Option[String]): Unit = {
+    fp.foreach(stamp(fs, dir, "_fingerprint", _))
+    stamp(fs, dir)
   }
 
   private def stamp(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-                    marker: String = "_published_at"): Unit = {
+                    marker: String = "_published_at",
+                    text: String = System.currentTimeMillis().toString)
+      : Unit = {
     val out = fs.create(new Path(dir, marker), true)
-    try out.write(System.currentTimeMillis().toString.getBytes("UTF-8"))
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
+  }
+
+  /** Marker `name`'s text in `dir`, or None when absent. */
+  private def marker(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+                     name: String): Option[String] = {
+    val m = new Path(dir, name)
+    if (!fs.exists(m)) None
+    else {
+      val in = fs.open(m)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim)
+      finally in.close()
+    }
   }
 
   /** The `_published_at` instant of generation `g`, or None for a gen
@@ -164,20 +303,8 @@ object SnapshotStore {
     publishedAtDir(fs, genDir(root, g))
 
   private def publishedAtDir(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: Path): Option[Long] = {
-    val m = new Path(dir, "_published_at")
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](64)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        new String(buf.toByteArray, "UTF-8").trim.toLongOption
-      } finally in.close()
-    }
-  }
+                             dir: Path): Option[Long] =
+    marker(fs, dir, "_published_at").flatMap(_.toLongOption)
 
   private def prune(fs: org.apache.hadoop.fs.FileSystem, root: String,
                     gen: Long, keep: Int, retainMs: Long): Unit = {
@@ -249,7 +376,7 @@ object SnapshotStore {
       throw new IllegalStateException(
         s"no published snapshot at $root — nothing has been " +
           "promoted yet (SnapshotStore.publish)"))
-    spark.read.parquet(genDir(root, gen).toString)
+    Tables.readParquet(spark, genDir(root, gen).toString)
   }
 
   /** Time travel: read generation `gen` as it was served. Refuses
@@ -270,7 +397,7 @@ object SnapshotStore {
     if (!fs.exists(genDir(root, gen))) throw new graft.SnapshotUnavailable(
       s"generation $gen of $root aged past the retention window " +
         "(keep) — snapshots are a bounded window by design")
-    spark.read.parquet(genDir(root, gen).toString)
+    Tables.readParquet(spark, genDir(root, gen).toString)
   }
 
   /** TIME-based travel: the newest generation whose `_published_at`
@@ -404,7 +531,7 @@ object SnapshotStore {
           throw new graft.SnapshotUnavailable(
             s"branch '$name' of $root is missing its head copy " +
               s"${d.getName} — run IndexAudit.auditSnapshots")
-        spark.read.parquet(d.toString)
+        Tables.readParquet(spark, d.toString)
     }
 
   /** Create BRANCH `name` forked from `fromGen` (default: the
@@ -434,7 +561,7 @@ object SnapshotStore {
       // overwrite consumes a crashed prior publish of THIS seq (the
       // numeric-generation residue rule)
       writeStamped(spark, df, branchDir(root, name, staging.gen),
-        expectations)
+        expectations, fingerprint(df, expectations))
     }
 
   /** FAST-FORWARD main to branch `name`'s head — METADATA-ONLY on
@@ -487,7 +614,7 @@ object SnapshotStore {
         s"${headDir.getName} — run IndexAudit.auditSnapshots")
     if (expectations.nonEmpty) {
       val report = graft.operators.Cleaning.validateExpectations(
-        spark.read.parquet(headDir.toString), expectations)
+        Tables.readParquet(spark, headDir.toString), expectations)
       val failed = report.collect().filter(!_.getBoolean(5))
       if (failed.nonEmpty) throw new graft.AuditFailed(
         s"audit failed for branch '$name' of $root: " +
@@ -563,7 +690,7 @@ object SnapshotStore {
                      retainMs: Long = 0L): Int = {
     require(targetRowsPerFile > 0)
     val raw = servingPointer(spark, root)
-    val df = spark.read.parquet(
+    val df = Tables.readParquet(spark,
       genDir(root, Generations.genOf(raw, layout)).toString)
     val n = df.count()
     val files = math.max(1L,
@@ -597,7 +724,8 @@ object SnapshotStore {
       (total + targetBytesPerFile - 1) / targetBytesPerFile).toInt
     // CAS against the generation THIS sizing read (see compactCurrent)
     publishImpl(spark,
-      spark.read.parquet(genDir(root, gen).toString).repartition(files),
+      Tables.readParquet(spark, genDir(root, gen).toString)
+        .repartition(files),
       root, Nil, keep, () => (), retainMs, expectPointer = Some(raw))
     files
   }

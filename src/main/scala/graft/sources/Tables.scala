@@ -53,7 +53,7 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(path)
+      val raw = readParquet(spark, path)
       import org.apache.spark.sql.functions.{col, expr}
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -62,7 +62,67 @@ object Tables {
           raw.withColumn("ts", col("ts").cast("timestamp"))
         case _ => raw
       }
-    } else spark.read.parquet(path)
+    } else readParquet(spark, path)
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job:
+    * Spark infers a parquet schema from the first data file's footer
+    * (files sorted by path, hidden names skipped), but reads that one
+    * footer inside a one-task Spark job per call. This reads the same
+    * footer on the driver, converts it with Spark's own converter and
+    * passes the result as the read schema; partition columns are
+    * still discovered from the directory names. A path with summary
+    * files, a glob, or no data file reads the plain way.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None    => spark.read.parquet(path)
+    }
+
+  private[graft] def footerSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    if (path.exists("*?[{".contains(_))) None
+    else {
+      val fs = fsFor(spark, path)
+      val files =
+        filesUnder(fs, new org.apache.hadoop.fs.Path(path), visible = true)
+          .toSeq
+      val summary = Set("_metadata", "_common_metadata")
+      if (files.exists(f => summary(f.getPath.getName))) None
+      else files.sortBy(_.getPath.toString).headOption
+        .flatMap(org.apache.spark.sql.execution.datasources.parquet
+          .GraftParquetBridge.footerSchema(spark, _))
+    }
+
+  /** Every file under `dir` (or `dir` itself when it is a file),
+    * walked with plain listings. A directory that vanishes mid-walk —
+    * a concurrent writer committing, a prune sweeping — lists as
+    * empty, where the recursive `fs.listFiles` fails hard on a file
+    * deleted under it (and, on the local file system, forks a
+    * permission lookup per file). `visible` skips what a parquet read
+    * skips: names starting with `_` (unless a `k=v` partition
+    * directory or a `_metadata`/`_common_metadata` summary) or `.`.
+    */
+  private[graft] def filesUnder(fs: org.apache.hadoop.fs.FileSystem,
+                                dir: org.apache.hadoop.fs.Path,
+                                visible: Boolean = false)
+      : Iterator[org.apache.hadoop.fs.FileStatus] = {
+    def shown(n: String) = !visible || n.startsWith("_metadata") ||
+      n.startsWith("_common_metadata") ||
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith("."))
+    def walk(d: org.apache.hadoop.fs.Path)
+        : Iterator[org.apache.hadoop.fs.FileStatus] =
+      (try fs.listStatus(d).iterator
+       catch { case _: java.io.FileNotFoundException => Iterator.empty })
+        .flatMap { st =>
+          // a file `dir` lists as itself: it is asked for, never hidden
+          val self = st.isFile && d == dir && st.getPath.getName == d.getName
+          if (!self && !shown(st.getPath.getName)) Iterator.empty
+          else if (st.isDirectory) walk(st.getPath)
+          else Iterator(st)
+        }
+    walk(dir)
   }
 
   /** Register every testdata table as a temp view (for spark.sql use). */
@@ -632,7 +692,7 @@ object Tables {
       : (Array[org.apache.spark.sql.Row],
          org.apache.spark.sql.types.StructType) = {
     val report = graft.operators.Cleaning.validateExpectations(
-      spark.read.parquet(stagingPath), expectations)
+      readParquet(spark, stagingPath), expectations)
     val rows = report.collect() // bounded: one row per rule
     val failed = rows.filter(!_.getBoolean(5))
     if (failed.nonEmpty)

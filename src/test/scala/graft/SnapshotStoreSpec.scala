@@ -908,6 +908,155 @@ class SnapshotStoreSpec extends AnyFunSuite {
     } finally rmTree(dir)
   }
 
+  // ---- carry-forward: an unchanged publish copies the serving gen ----
+
+  /** Spark jobs `body` ran, counted by a listener. */
+  private def jobsIn(body: => Any): Int =
+    graft.tools.Profile.recording(spark) { r =>
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark); r.take()
+      body
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark)
+      r.take().jobs
+    }
+
+  /** A dimension-shaped frame over a private copy of the nation file,
+    * built fresh on each call (a new plan, the same inputs).
+    */
+  private def dimOver(src: String) =
+    graft.operators.StarSchema.dimension(Tables.readParquet(spark, src),
+      Seq("n_regionkey", "n_name"), Seq("n_name"), "id_nation")
+
+  private def copyNation(dir: java.io.File): String = {
+    val src = new java.io.File(dir, "src/nation.parquet")
+    src.getParentFile.mkdirs()
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/nation.parquet"),
+      src.toPath)
+    src.toString
+  }
+
+  private def dataFiles(root: String, gen: Long): Map[String, Long] =
+    new java.io.File(s"$root/_snapshots/$gen").listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-"))
+      .map(f => f.getName -> f.length()).toMap
+
+  private val dimRules = Seq(
+    graft.operators.Cleaning.ExpectNotNull("id_nation"),
+    graft.operators.Cleaning.ExpectUnique("id_nation"))
+
+  test("an unchanged file-sourced publish carries the serving " +
+      "generation forward with no Spark job; its rows equal a forced " +
+      "rewrite") {
+    val dir = tmp("snapcarry")
+    try {
+      val src = copyNation(dir)
+      val root = dir.toString + "/t"
+      assert(SnapshotStore.publish(spark, dimOver(src), root, dimRules) == 1L)
+      var gen = 0L
+      assert(jobsIn {
+        gen = SnapshotStore.publish(spark, dimOver(src), root, dimRules)
+      } == 0, "the carry ran a Spark job")
+      // the generation still advances, as a byte copy of the serving one
+      assert(gen == 2L)
+      assert(SnapshotStore.currentGen(spark, root).contains(2L))
+      assert(dataFiles(root, 2L) == dataFiles(root, 1L))
+      assert(dataFiles(root, 2L).nonEmpty)
+      assert(SnapshotStore.publishedAt(
+        Tables.fsFor(spark, root), root, 2L).isDefined)
+      // the reference: the same rows through a frame the fingerprint
+      // cannot see (an RDD leaf), which always rewrites
+      val ref = dir.toString + "/ref"
+      val d = dimOver(src)
+      SnapshotStore.publish(spark, spark.createDataFrame(d.rdd, d.schema),
+        ref, dimRules)
+      assert(jobsIn(SnapshotStore.publish(spark,
+        spark.createDataFrame(d.rdd, d.schema), ref, dimRules)) > 0)
+      assert(rows(SnapshotStore.readCurrent(spark, root)) ==
+        rows(SnapshotStore.readCurrent(spark, ref)))
+      assert(rows(SnapshotStore.readCurrent(spark, root)) == rows(d))
+    } finally rmTree(dir)
+  }
+
+  test("a touched source file, changed expectations and a non-file " +
+      "leaf each rewrite instead of carrying") {
+    import graft.operators.Cleaning
+    val dir = tmp("snaprewrite")
+    try {
+      val src = copyNation(dir)
+      val root = dir.toString + "/t"
+      SnapshotStore.publish(spark, dimOver(src), root, dimRules)
+      // a touched source: same bytes, new mtime — the publish rewrites
+      val f = new java.io.File(src)
+      assert(f.setLastModified(f.lastModified() - 60000L))
+      assert(jobsIn(SnapshotStore.publish(spark, dimOver(src), root,
+        dimRules)) > 0)
+      assert(SnapshotStore.currentGen(spark, root).contains(2L))
+      // changed expectations: the audit runs, so a planted failing rule
+      // still refuses typed and the pointer stays
+      val e = intercept[AuditFailed] {
+        SnapshotStore.publish(spark, dimOver(src), root,
+          dimRules :+ Cleaning.ExpectRange("n_regionkey", -9.0, -1.0))
+      }
+      assert(e.getMessage.contains("n_regionkey"))
+      assert(SnapshotStore.currentGen(spark, root).contains(2L))
+      // leaves the fingerprint cannot see: range, toDF, an RDD
+      import spark.implicits._
+      Seq[() => org.apache.spark.sql.DataFrame](
+        () => spark.range(5).toDF("id_nation"),
+        () => Seq(1L, 2L).toDF("id_nation")).foreach { mk =>
+        val r = dir.toString + s"/leaf${mk.hashCode}"
+        SnapshotStore.publish(spark, mk(), r, dimRules)
+        assert(jobsIn(SnapshotStore.publish(spark, mk(), r, dimRules)) > 0)
+        assert(SnapshotStore.currentGen(spark, r).contains(2L))
+      }
+      // what the fingerprint refuses, and what it sees as equal
+      val fp = SnapshotStore.fingerprint(_, dimRules)
+      assert(fp(dimOver(src)).isDefined)
+      assert(fp(dimOver(src)) == fp(dimOver(src)))
+      assert(fp(dimOver(src)) != SnapshotStore.fingerprint(dimOver(src),
+        Nil))
+      assert(fp(dimOver(src).filter(col("n_regionkey") > 0)) !=
+        fp(dimOver(src)))
+      assert(fp(dimOver(src).withColumn("r", rand())).isEmpty)
+      assert(fp(dimOver(src).withColumn("u",
+        udf((s: String) => s.length).apply(col("n_name")))).isEmpty)
+      assert(fp(spark.read.option("mergeSchema", "true").parquet(src))
+        .isEmpty)
+      assert(fp(spark.range(3).toDF()).isEmpty)
+      assert(fp(Seq(1).toDF("a")).isEmpty)
+    } finally rmTree(dir)
+  }
+
+  test("the crash hook fires on the carry path; the retry carries") {
+    val dir = tmp("snapcarrycrash")
+    try {
+      val src = copyNation(dir)
+      val root = dir.toString + "/t"
+      SnapshotStore.publish(spark, dimOver(src), root, dimRules)
+      class Boom extends RuntimeException("injected crash")
+      var fired = false
+      intercept[Boom] {
+        SnapshotStore.publishImpl(spark, dimOver(src), root, dimRules, 3,
+          () => {
+            fired = true
+            // the carried copy is staged, the old gen still serves
+            assert(dataFiles(root, 2L) == dataFiles(root, 1L))
+            assert(rows(SnapshotStore.readCurrent(spark, root)) ==
+              rows(dimOver(src)))
+            throw new Boom
+          })
+      }
+      assert(fired)
+      assert(SnapshotStore.currentGen(spark, root).contains(1L))
+      intercept[SnapshotUnavailable](SnapshotStore.readAt(spark, root, 2L))
+      // the retry clears the residue and carries again
+      assert(jobsIn(SnapshotStore.publish(spark, dimOver(src), root,
+        dimRules)) == 0)
+      assert(SnapshotStore.currentGen(spark, root).contains(2L))
+      assert(rows(SnapshotStore.readCurrent(spark, root)) ==
+        rows(dimOver(src)))
+    } finally rmTree(dir)
+  }
+
   test("one generation protocol: neither layout mentions the other, " +
       "and only Generations writes the pointer bytes") {
     val src = java.nio.file.Paths.get("src/main/scala/graft")
