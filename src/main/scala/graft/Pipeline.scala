@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.Tables
@@ -391,22 +391,26 @@ object Pipeline {
     * greedy pack → packed rows with a deterministic epoch order — the
     * publishable training-set table.
     *
-    * Batch-sized by design at the incremental steady state: the
-    * expensive per-document derivations (`n_bpe_tokens`, `shard`) are
-    * PERSISTED into silver at accept time and never recomputed here,
-    * and every downstream stage — quality/token filter, mixture,
-    * split (all row-local hash filters), pack window, packed-row
-    * groupBy, epoch window — is per-shard work with no cross-shard
-    * dependency. So a rebuild restricted to `shards = Some(ks)` reads
-    * ONLY those silver partition directories (explicit-path read:
-    * pruning is structural, not optimizer-dependent) and replaces
-    * ONLY those gold shard directories — staged, C11-audited, then
-    * swapped per `shard=` dir (the S18 write-audit-publish gate,
-    * hand-rolled delete+verified-rename per directory rather than
-    * Spark's dynamic partition overwrite, so a failing audit leaves
-    * the serving table untouched and the staging inspectable). That
-    * is what keeps [[corpusIncrement]]'s daily gold cost proportional
-    * to the batch's affected shards, never the corpus.
+    * Shard-local by design: the expensive per-document derivations
+    * (`n_bpe_tokens`, `shard`) are PERSISTED into silver at accept
+    * time and never recomputed here, and every downstream stage —
+    * quality/token filter, mixture, split (all row-local hash
+    * filters), then the pack, packed rows and epoch rank
+    * ([[Corpus.packEpochRanked]], one shuffle on the shard) — is
+    * per-shard work with no cross-shard dependency. So a rebuild
+    * restricted to `shards = Some(ks)` reads ONLY those silver
+    * partition directories (explicit-path read: pruning is
+    * structural, not optimizer-dependent) and replaces ONLY those
+    * gold shard directories — staged, C11-audited, then swapped per
+    * `shard=` dir (the S18 write-audit-publish gate, hand-rolled
+    * delete+verified-rename per directory rather than Spark's dynamic
+    * partition overwrite, so a failing audit leaves the serving table
+    * untouched and the staging inspectable). [[corpusIncrement]]'s
+    * daily gold cost is therefore proportional to the silver rows of
+    * the shards its accepted documents touch — not to the batch: a
+    * touched shard repacks all of its silver rows, and with few
+    * shards (4 in the default recipe) a batch of a hundred documents
+    * touches every shard, so each increment repacks all of silver.
     */
   def corpusGold(spark: SparkSession, outDir: String,
                  modelingDate: String, epoch: Int = 1,
@@ -415,32 +419,26 @@ object Pipeline {
                  extraAudit: Seq[Cleaning.Expectation] = Nil): Unit = {
     val silverPath = s"$outDir/silver/documents"
     if (shards.exists(_.isEmpty)) return // no shard touched: nothing to do
+    // the footer schema: no schema-inference job per rebuild
     val silver = shards match {
-      case Some(ks) => spark.read.option("basePath", silverPath)
-        .parquet(ks.map(k => s"$silverPath/shard=$k"): _*)
-      case None => spark.read.parquet(silverPath)
+      case Some(ks) =>
+        val dirs = ks.map(k => s"$silverPath/shard=$k")
+        val r = spark.read.option("basePath", silverPath)
+        Tables.footerSchema(spark, dirs.head).fold(r)(r.schema)
+          .parquet(dirs: _*)
+      case None => Tables.readParquet(spark, silverPath)
     }
     val kept = silver
       .withColumn("shard", col("shard").cast("bigint"))
       .filter(col("q") >= recipe.minQuality &&
         col("n_bpe_tokens").between(recipe.minTokens, recipe.maxTokens))
-    // two consumers: pack assignment + join-back
-    val train = Checkpoints.truncate(Corpus.splitByHash(
+    val train = Corpus.splitByHash(
         Corpus.mixtureSample(kept, "doc_id", "lang", recipe.mixtureSalt,
           recipe.mixtureDen, recipe.mixtureRates.toMap),
         "doc_id", recipe.splitSalt, recipe.splitWeights)
-      .filter(col("split") === "train"))
-    val bins = Corpus.packGreedy(train, "doc_id", "n_bpe_tokens",
-      "shard", Seq("doc_id"), recipe.packBudget)
-    val packed = Corpus.materializePacked(
-        train.join(bins.drop("shard"), Seq("doc_id")),
-        "doc_id", "clean_text", "shard", "bin_id")
-      .withColumn("pack_id", concat_ws("/", col("shard"), col("bin_id")))
-    val ranked = Corpus.epochOrder(packed, "pack_id", "shard", epoch)
-    val out = packed
-      .join(ranked.select("pack_id", "epoch_rank"), Seq("pack_id"))
-      .select(col("shard"), col("bin_id"), col("n_docs"),
-        col("epoch_rank"), col("packed_text"))
+      .filter(col("split") === "train")
+    val out = Corpus.packEpochRanked(train, "doc_id", "clean_text",
+        "n_bpe_tokens", "shard", recipe.packBudget, epoch)
       .withColumn("_modeling_date", lit(modelingDate))
     // WRITE-AUDIT-PUBLISH, restated for a shard-partitioned target
     // (the S18 discipline composed into the DAG): stage the batch's
@@ -454,8 +452,8 @@ object Pipeline {
     // staged parquet is LEFT for inspection.
     val target = s"$outDir/gold/train_packed"
     val staging = s"$target.staging"
-    out.repartition(col("shard"))
-      .write.mode("overwrite")
+    // the kernel's shuffle already put each shard in one task
+    out.write.mode("overwrite")
       .partitionBy("shard")
       .parquet(staging)
     Tables.auditStaged(spark, staging,
@@ -640,33 +638,46 @@ object Pipeline {
     * precedence — so `accept` here IS the increment's accepted set,
     * by construction rather than by parallel reimplementation.
     *
-    * One batch-sized pass: each document carries three flags (exact
-    * winner, text in silver, near an older doc), the first three
-    * labels are one `when` chain over them, and that frame is
-    * checkpointed once; the within-batch groups run over its
-    * unlabelled rows (differential reference: `ClassifyParitySpec`).
+    * The evidence is every index batch's `hashes/` side table (32 B
+    * per accepted doc) in one scan, never the silver table — except
+    * for an index that predates the evidence (bare writeDedupIndex
+    * state): the O(corpus) silver scan. A batch-local sketch decides
+    * in one task ([[decideInOneTask]]); any other runs the frame form
+    * ([[decideInFrames]]). Both equal the five-branch reference kept
+    * in `ClassifyParitySpec`.
     */
   private def classifyCleaned(spark: SparkSession, outDir: String,
                               cleaned: DataFrame,
                               sketch: Dedup.BatchSketch): DataFrame = {
     val idx = indexDir(outDir)
+    val evidence = Dedup.readBatchHashes(spark, idx).getOrElse(
+      Tables.readParquet(spark, s"$outDir/silver/documents")
+        .select(col("norm_hash")))
+    // (b)'s near-dup pairs vs everything ever processed and within the
+    // batch, from the batch's sketch (the index _meta supplies the
+    // boilerplate df-cap, so batch and stored sides stay consistent
+    // with the bootstrap build)
+    val pairs = Dedup.matchSketch(sketch, idx)
+    if (sketch.local) decideInOneTask(cleaned, evidence, pairs)
+    else decideInFrames(cleaned, evidence, pairs)
+  }
+
+  /** The decision as frames: each document carries three flags (exact
+    * winner, text in silver, near an older doc), the first three
+    * labels are one `when` chain over them, and that frame is
+    * checkpointed once; the within-batch groups run over its
+    * unlabelled rows through [[Dedup.resolveGroups]].
+    */
+  private def decideInFrames(cleaned: DataFrame, evidence: DataFrame,
+                             pairs: DataFrame): DataFrame = {
     val ids = cleaned.select(col("doc_id"))
     // (a) exact: the best-quality batch sibling per norm_hash wins
     // (keepCanonical's order: score desc, id asc); a winner whose text
-    // is already in silver is a corpus dup. The evidence is every index
-    // batch's `hashes/` side table (32 B per accepted doc) in one scan,
-    // never the silver table — except for an index that predates the
-    // evidence (bare writeDedupIndex state): the O(corpus) silver scan
-    val evidence = Dedup.readBatchHashes(spark, idx).getOrElse(
-      spark.read.parquet(s"$outDir/silver/documents")
-        .select(col("norm_hash")))
+    // is already in silver is a corpus dup
     val inSilver = evidence
       .join(cleaned.select(col("norm_hash")), Seq("norm_hash"), "left_semi")
       .distinct().withColumn("in_silver", lit(true))
-    // (b) near-dups vs everything ever processed, from the batch's
-    // sketch (the index _meta supplies the boilerplate df-cap, so batch
-    // and stored sides stay consistent with the bootstrap build)
-    val pairs = Dedup.matchSketch(sketch, idx)
+    // (b) near an older document: a pair with one side outside the batch
     val nearOld = pairs
       .join(ids.withColumnRenamed("doc_id", "id_a"), Seq("id_a"),
         "left_anti")
@@ -706,6 +717,128 @@ object Pipeline {
         .as("decision"))
   }
 
+  /** The decision of a batch-local batch (at most
+    * [[Dedup.LocalBatchRows]] rows, long ids) as ONE executor task —
+    * the [[Dedup.resolveGroups]] union-find precedent — with the labels
+    * checkpointed. The task receives, as tagged rows on one partition:
+    * the batch's (doc_id, norm_hash, q); the evidence hashes,
+    * semi-joined map-side to the broadcast batch hashes; and the
+    * near-dup pairs, each tagged against the broadcast batch ids as
+    * with-a-stored-document or within-the-batch. Sorted on the tag,
+    * every within-batch pair arrives after everything the first three
+    * labels need, so it streams through the union-find of the
+    * surviving documents and is never held: the task's state is
+    * O(batch rows). Orders, flags and groups are exactly the frame
+    * form's: the exact winner per hash (null hashes form one group) is
+    * the least (-q, doc_id) in Spark's ascending order — a null q
+    * first, NaN last, 0.0 equal to -0.0 — and so is the canonical of a
+    * within-batch group.
+    */
+  private def decideInOneTask(cleaned: DataFrame, evidence: DataFrame,
+                              pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.collection.mutable.ArrayBuffer
+    // one row shape for the task's inputs, told apart and ordered by
+    // `t`: 0 batch doc (a doc_id, h norm_hash, q), 1 evidence hash (h),
+    // 2 pair with a stored doc and 3 within-batch pair (a id_a, b id_b)
+    def tagged(t: Column, a: Column, b: Column, h: Column, q: Column) =
+      Seq(t.as("t"), a.cast("long").as("a"), b.cast("long").as("b"),
+        h.cast("string").as("h"), q.cast("double").as("q"))
+    val batchIds = broadcast(cleaned.select(col("doc_id").as("__in")))
+    val rows = cleaned.select(tagged(lit(0), col("doc_id"), lit(null),
+        col("norm_hash"), col("q")): _*)
+      .unionByName(evidence.join(broadcast(cleaned.select(col("norm_hash"))),
+          Seq("norm_hash"), "left_semi")
+        .select(tagged(lit(1), lit(null), lit(null), col("norm_hash"),
+          lit(null)): _*))
+      .unionByName(pairs
+        .join(batchIds, col("id_a") === col("__in"), "left")
+        .select(col("id_a"), col("id_b"), col("__in").isNotNull.as("__a"))
+        .join(batchIds, col("id_b") === col("__in"), "left")
+        .select(tagged(when(col("__a") && col("__in").isNotNull, 3)
+            .otherwise(2), col("id_a"), col("id_b"), lit(null),
+          lit(null)): _*))
+    val schema = StructType(Seq(StructField("doc_id", LongType, false),
+      StructField("decision", StringType, false)))
+    val labels = rows.repartition(1).sortWithinPartitions(col("t"))
+      .mapPartitions { it =>
+        val slot = new java.util.HashMap[java.lang.Long, Integer]()
+        val ids = ArrayBuffer.empty[Long]
+        val hashes = ArrayBuffer.empty[String]
+        val qs = ArrayBuffer.empty[java.lang.Double]
+        // ascending (-q, doc_id) as Spark orders it
+        def before(x: Int, y: Int): Boolean = {
+          val (qx, qy) = (qs(x), qs(y))
+          val c =
+            if (qx == null) { if (qy == null) 0 else -1 }
+            else if (qy == null) 1
+            else {
+              val (nx, ny) = (-qx.doubleValue, -qy.doubleValue)
+              if (nx == ny) 0 else java.lang.Double.compare(nx, ny)
+            }
+          c < 0 || (c == 0 && ids(x) < ids(y))
+        }
+        val winner = new java.util.HashMap[String, Integer]()
+        val inSilver = new java.util.HashSet[String]()
+        // first read by a pair row, after every batch doc has arrived
+        lazy val nearOld = new Array[Boolean](ids.size)
+        // labels (a) and (b): null for a surviving doc
+        lazy val pre = Array.tabulate(ids.size) { i =>
+          if (winner.get(hashes(i)).intValue != i) "exact_dup_batch"
+          else if (hashes(i) != null && inSilver.contains(hashes(i)))
+            "exact_dup_corpus"
+          else if (nearOld(i)) "near_dup_corpus"
+          else null
+        }
+        lazy val parent = Array.tabulate(ids.size)(identity)
+        def find(x: Int): Int = {
+          var r = x
+          while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+          r
+        }
+        def slotOf(r: Row, i: Int): Integer =
+          if (r.isNullAt(i)) null else slot.get(r.getLong(i))
+        it.foreach { r =>
+          r.getInt(0) match {
+            case 0 =>
+              val i = ids.size
+              ids += r.getLong(1)
+              hashes += (if (r.isNullAt(3)) null else r.getString(3))
+              qs += (if (r.isNullAt(4)) null else r.getDouble(4))
+              slot.put(r.getLong(1), i)
+              val w = winner.get(hashes(i))
+              if (w == null || before(i, w)) winner.put(hashes(i), i)
+            case 1 => inSilver.add(r.getString(3))
+            case 2 =>
+              val (a, b) = (slotOf(r, 1), slotOf(r, 2))
+              if (a == null && b != null) nearOld(b) = true
+              if (b == null && a != null) nearOld(a) = true
+            case _ =>
+              val (a, b) = (slotOf(r, 1), slotOf(r, 2))
+              if (a != null && b != null && pre(a) == null && pre(b) == null) {
+                val (ra, rb) = (find(a), find(b))
+                if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+              }
+          }
+          ()
+        }
+        // (c) the group canonical: its least (-q, doc_id) member
+        val canon = Array.fill(ids.size)(-1)
+        ids.indices.foreach { i =>
+          if (pre(i) == null) {
+            val g = find(i)
+            if (canon(g) < 0 || before(i, canon(g))) canon(g) = i
+          }
+        }
+        ids.indices.iterator.map { i =>
+          Row(ids(i), if (pre(i) != null) pre(i)
+            else if (canon(find(i)) == i) "accept" else "near_dup_batch")
+        }
+      }(org.apache.spark.sql.Encoders.row(schema))
+    Checkpoints.truncate(labels.toDF())
+  }
+
   /** Why was each document of `batch` kept or rejected? The
     * introspection form of [[corpusIncrement]]'s decision — same
     * cleaning, same persisted-state checks, same precedence, NO state
@@ -715,10 +848,20 @@ object Pipeline {
     * label vocabulary.
     */
   def classifyBatch(spark: SparkSession, outDir: String,
-                    batch: DataFrame): DataFrame = {
+                    batch: DataFrame): DataFrame =
+    classifyBatch(spark, outDir, batch, Dedup.LocalBatchRows)
+
+  /** [[classifyBatch]] with the batch-local bound of
+    * [[Dedup.withIndexSketch]] (negative: never; specs force the frame
+    * form with it).
+    */
+  private[graft] def classifyBatch(spark: SparkSession, outDir: String,
+                                   batch: DataFrame,
+                                   localRows: Long): DataFrame = {
     val cleaned = Checkpoints.truncate(corpusClean(batch))
     Dedup.withIndexSketch(cleaned, "doc_id", "norm_text", indexDir(outDir),
-      cleaned.count())(classifyCleaned(spark, outDir, cleaned, _))
+      cleaned.count(), localRows = localRows)(
+      classifyCleaned(spark, outDir, cleaned, _))
   }
 
   /** [[corpusIncrement]] with a crash-injection hook fired at the
@@ -754,6 +897,10 @@ object Pipeline {
     val cleaned = Checkpoints.truncate(corpusClean(batch))
     val idx = indexDir(outDir)
     val (bid, rows) = Dedup.batchIdAndRows(cleaned, "doc_id")
+    // an empty day is a no-op: nothing to index, land or repack (its
+    // empty id set would otherwise publish a batch directory, and the
+    // next empty day would be refused as its replay)
+    if (rows == 0L) return 0L
     val batchDir = new org.apache.hadoop.fs.Path(s"$idx/batches/$bid")
     val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val landedMarker = new org.apache.hadoop.fs.Path(batchDir, "_landed")
@@ -771,10 +918,10 @@ object Pipeline {
     val resuming = fs.exists(batchDir)
     if (!resuming) Dedup.withIndexSketch(cleaned, "doc_id", "norm_text",
         idx, rows) { sketch =>
+      val acceptIds = classifyCleaned(spark, outDir, cleaned, sketch)
+        .filter(col("decision") === "accept").select(col("doc_id"))
       val accepted = cleaned.join(
-        classifyCleaned(spark, outDir, cleaned, sketch)
-          .filter(col("decision") === "accept").select(col("doc_id")),
-        Seq("doc_id"))
+        if (sketch.local) broadcast(acceptIds) else acceptIds, Seq("doc_id"))
       // two consumers: commit record + hash evidence
       val acceptedSilver0 =
         Checkpoints.truncate(silverColumns(accepted, runDate, recipe))
@@ -795,7 +942,7 @@ object Pipeline {
           "bootstrap corpus or a bare writeDedupIndex append); " +
           "re-submitting those documents as a daily batch is a " +
           "landing-zone error, not a resumable crash")
-    val acceptedSilver = spark.read.parquet(s"$batchDir/accepted")
+    val acceptedSilver = Tables.readParquet(spark, s"$batchDir/accepted")
     val toLand =
       if (!resuming) acceptedSilver
       else acceptedSilver.join( // recovery only: O(corpus) id probe

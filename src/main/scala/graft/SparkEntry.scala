@@ -1091,27 +1091,15 @@ object SparkEntry {
             col("clean_text"))
         val mixed = Corpus.mixtureSample(kept, "doc_id", "lang",
           R.mixtureSalt, R.mixtureDen, R.mixtureRates.toMap)
-        // train feeds TWO consumers (the pack assignment and the
-        // packed materialization join); the checkpoint stops each from
-        // re-running the whole dedup→canonical→filter chain
-        val train = Checkpoints.truncate(Corpus.splitByHash(mixed, "doc_id",
-            R.splitSalt, R.splitWeights)
+        val train = Corpus.splitByHash(mixed, "doc_id", R.splitSalt,
+            R.splitWeights)
           .filter(col("split") === "train")
           .withColumn("shard",
-            Corpus.hashBucket(col("doc_id"), R.shardSalt, R.shards)))
-        val bins = Corpus.packGreedy(train, "doc_id", "n_bpe_tokens",
-          "shard", Seq("doc_id"), R.packBudget)
-        val packed = Corpus.materializePacked(
-            train.join(bins.drop("shard"), Seq("doc_id")),
-            "doc_id", "clean_text", "shard", "bin_id")
-          .withColumn("pack_id",
-            concat_ws("/", col("shard"), col("bin_id")))
-        val ranked = Corpus.epochOrder(packed, "pack_id", "shard",
-          epoch = 1)
-        Checkpoints.truncate(packed
-          .join(ranked.select("pack_id", "epoch_rank"), Seq("pack_id"))
-          .select(col("shard"), col("bin_id"), col("n_docs"),
-            col("epoch_rank"), col("packed_text")))
+            Corpus.hashBucket(col("doc_id"), R.shardSalt, R.shards))
+        // pack, packed rows and epoch rank: the corpus gold's one-shuffle
+        // kernel, so the oracle below pins what Pipeline.corpusGold writes
+        Checkpoints.truncate(Corpus.packEpochRanked(train, "doc_id",
+          "clean_text", "n_bpe_tokens", "shard", R.packBudget, epoch = 1))
       }
     }),
     "q_dedup_cosine" -> ((s, d) =>

@@ -559,6 +559,80 @@ object Corpus {
       row_number().over(w).cast("bigint").as("epoch_rank"))
   }
 
+  /** K6+K6b+K9 in ONE shuffle — the packed, epoch-ranked training rows
+    * (shard, bin_id, n_docs, epoch_rank, packed_text) the corpus gold
+    * publishes: [[packGreedy]] by `idCol` order, [[materializePacked]]
+    * of the bins, and [[epochOrder]] over `pack_id = shard "/" bin_id`,
+    * computed without their five exchanges (that chain is the
+    * reference: PackParitySpec).
+    *
+    * `df` repartitions by shard and sorts by (shard, id) within each
+    * partition. One pass then streams each shard's budget-aligned
+    * greedy bins — a row's bin is floor(preceding tokens / `budget`),
+    * null token counts adding nothing — and emits a bin's row when the
+    * next bin starts: `n_docs` counts every member, the text joins the
+    * non-null texts in id order. A second sort within the partition
+    * orders the bins by (shard, sha2(pack_id ":" epoch), pack_id) and a
+    * last pass numbers each shard's rows. Every pass is an iterator:
+    * a task holds one bin's text, never a partition's rows.
+    */
+  def packEpochRanked(df: DataFrame, idCol: String, textCol: String,
+                      nTokensCol: String, shardCol: String, budget: Int,
+                      epoch: Int, sep: String = "<|eot|>"): DataFrame = {
+    require(budget > 0, s"budget must be positive, got $budget")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def schema(fs: (String, DataType)*) =
+      org.apache.spark.sql.Encoders.row(StructType(fs.map {
+        case (n, t) => StructField(n, t) }))
+    def binOf(cum: Long): Long = math.floor(cum / budget.toDouble).toLong
+    val bins = df.select(col(shardCol).cast("bigint").as("shard"),
+        col(idCol).as("__id"), col(nTokensCol).cast("bigint").as("__n"),
+        col(textCol).cast("string").as("__t"))
+      .repartition(col("shard"))
+      .sortWithinPartitions(col("shard"), col("__id"))
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        var shard: Any = null
+        var cum = 0L
+        new Iterator[Row] {
+          def hasNext: Boolean = in.hasNext
+          def next(): Row = {
+            if (in.head.get(0) != shard) { shard = in.head.get(0); cum = 0L }
+            val bin = binOf(cum)
+            val text = new java.lang.StringBuilder
+            var n, texts = 0L
+            while (in.hasNext && in.head.get(0) == shard &&
+                binOf(cum) == bin) {
+              val r = in.next()
+              n += 1
+              if (!r.isNullAt(3)) {
+                if (texts > 0) text.append(sep)
+                text.append(r.getString(3)); texts += 1
+              }
+              if (!r.isNullAt(2)) cum += r.getLong(2)
+            }
+            Row(shard, bin, n, text.toString)
+          }
+        }
+      }(schema("shard" -> LongType, "bin_id" -> LongType,
+        "n_docs" -> LongType, "packed_text" -> StringType))
+    val packId = concat_ws("/", col("shard"), col("bin_id"))
+    bins.sortWithinPartitions(col("shard"),
+        sha2(concat(packId, lit(s":$epoch")), 256), packId)
+      .mapPartitions { rows =>
+        var shard: Any = null
+        var rank = 0L
+        rows.map { r =>
+          if (r.get(0) != shard) { shard = r.get(0); rank = 0L }
+          rank += 1
+          Row(shard, r.get(1), r.get(2), rank, r.get(3))
+        }
+      }(schema("shard" -> LongType, "bin_id" -> LongType,
+        "n_docs" -> LongType, "epoch_rank" -> LongType,
+        "packed_text" -> StringType))
+  }
+
   /** Training-ready corpus filter: quality score ≥ `minQuality` and
     * BPE-ish token count within [minTokens, maxTokens] — the composed
     * end-of-pipeline gate a pretraining corpus runs after dedup.

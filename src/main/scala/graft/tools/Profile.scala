@@ -21,7 +21,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *  - `time` runs each query `reps` times under [[graft.Bench]]'s
   *    discipline (clear the cache, write to the `noop` sink) and
   *    prints one JSON line per rep: wall time, jobs, stages, tasks,
-  *    task time, shuffle and spill bytes, and the per-site job table.
+  *    task time, shuffle and spill bytes, and the per-site job table
+  *    (jobs, job seconds, and the driver gap before them).
   *  - `plans` writes each query's formatted plan as a `## <q>` section
   *    of `out.md`, followed by one `### truncate at <site>` subsection
   *    per [[graft.Checkpoints.truncate]] the query ran: the plan that
@@ -34,8 +35,14 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * [[graft.GraftSession.local]].
   */
 object Profile {
-  /** The jobs one call site ran, and their summed wall time. */
-  final case class Site(site: String, jobs: Int, jobS: Double)
+  /** The jobs one call site ran, their summed wall time, and the
+    * summed driver time before them: per job, the time from the end of
+    * the previous job (or from the last [[Recorder.take]]) to its start
+    * — planning, listing, commits — and 0 for a job that starts while
+    * another runs, so the gaps of a snapshot never overlap.
+    */
+  final case class Site(site: String, jobs: Int, jobS: Double,
+                        gapS: Double)
 
   /** What the listener saw between two [[Recorder.take]] calls. */
   final case class Snapshot(stages: Int, tasks: Long, taskS: Double,
@@ -63,7 +70,8 @@ object Profile {
     private val execs =
       mutable.LinkedHashMap.empty[Long, SparkListenerSQLExecutionStart]
     private val running = mutable.Map.empty[Int, (String, Long)]
-    private val sites = mutable.Map.empty[String, (Int, Long)]
+    private val sites = mutable.Map.empty[String, (Int, Long, Long)]
+    private var lastEnd = System.currentTimeMillis()
     private var stages = 0
     private var tasks, runMs, shRead, shWrite, spill = 0L
 
@@ -79,14 +87,19 @@ object Profile {
         .flatMap(id => execs.get(id.toLong)).map(_.details)
         .orElse(j.stageInfos.sortBy(_.stageId).headOption.map(_.details))
         .getOrElse("")
-      running(j.jobId) = (siteOf(stack), j.time)
+      val site = siteOf(stack)
+      val (n, ms, gap) = sites.getOrElse(site, (0, 0L, 0L))
+      val before = if (running.isEmpty) math.max(0L, j.time - lastEnd) else 0L
+      sites(site) = (n, ms, gap + before)
+      running(j.jobId) = (site, j.time)
     }
 
     override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
       running.remove(j.jobId).foreach { case (site, t0) =>
-        val (n, ms) = sites.getOrElse(site, (0, 0L))
-        sites(site) = (n + 1, ms + j.time - t0)
+        val (n, ms, gap) = sites(site)
+        sites(site) = (n + 1, ms + j.time - t0, gap)
       }
+      lastEnd = math.max(lastEnd, j.time)
     }
 
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -107,10 +120,12 @@ object Profile {
     def take(): Snapshot = synchronized {
       val snap = Snapshot(stages, tasks, runMs / 1e3, shRead, shWrite,
         spill,
-        sites.toSeq.map { case (s, (n, ms)) => Site(s, n, ms / 1e3) }
+        sites.toSeq.filter(_._2._1 > 0).map { case (s, (n, ms, gap)) =>
+            Site(s, n, ms / 1e3, gap / 1e3) }
           .sortBy(s => (-s.jobS, s.site)),
         execs.values.toSeq)
       execs.clear(); running.clear(); sites.clear()
+      lastEnd = System.currentTimeMillis()
       stages = 0; tasks = 0; runMs = 0; shRead = 0; shWrite = 0; spill = 0
       snap
     }
@@ -202,7 +217,8 @@ object Profile {
           for (q <- names; rep <- 1 to reps.toInt) {
             val (wall, s) = timeRep(spark, sfDir, q, r)
             val sites = s.sites.map(x =>
-              f"""{"site":${json(x.site)},"jobs":${x.jobs},"job_s":${x.jobS}%.3f}""")
+              f"""{"site":${json(x.site)},"jobs":${x.jobs},"job_s":${x.jobS}%.3f,""" +
+                f""""gap_s":${x.gapS}%.3f}""")
             println(f"""{"query":${json(q)},"rep":$rep,"wall_s":$wall%.3f,""" +
               f""""jobs":${s.jobs},"stages":${s.stages},"tasks":${s.tasks},""" +
               f""""task_s":${s.taskS}%.3f,"shuffle_read_bytes":${s.shuffleReadBytes},""" +

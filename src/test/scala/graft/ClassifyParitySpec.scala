@@ -5,11 +5,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Corpus, Dedup}
 
-/** Differential parity for the single-pass batch classifier behind
-  * `Pipeline.classifyBatch` / `corpusIncrement`: its (doc_id, decision)
+/** Differential parity for the batch classifier behind
+  * `Pipeline.classifyBatch` / `corpusIncrement`, in both of its forms —
+  * the one-task decision of a batch-local batch and the frame form
+  * (forced with a negative batch-local bound): each (doc_id, decision)
   * set must equal the earlier five-branch union, kept below as the
-  * reference, on a batch that produces every label and on a day batch
-  * of sf0.01 documents with planted exact and near re-sends.
+  * reference, on batches that produce every label, on a day batch of
+  * sf0.01 documents with planted exact and near re-sends, and on the
+  * edges the one-task form orders by hand (null texts, a group member
+  * that is also near an old document, one large group).
   */
 class ClassifyParitySpec extends AnyFunSuite {
   import SparkTestSession._
@@ -71,20 +75,42 @@ class ClassifyParitySpec extends AnyFunSuite {
       .unionByName(lab(accepts, "accept"))
   }
 
-  /** Both classifiers' labels for `batch`, as collected maps; asserts
-    * they are equal and returns the single-pass one. */
+  /** Both forms' labels for `batch` and the reference's, as collected
+    * maps; asserts all three are equal and returns the one-task form's.
+    */
   private def assertParity(out: String, batch: DataFrame)
       : Map[Long, String] = {
     def labels(df: DataFrame) = df.collect().toSeq
       .map(r => r.getLong(0) -> r.getString(1))
-    val single = labels(Pipeline.classifyBatch(spark, out, batch))
     val reference = labels(fiveBranch(out,
       Pipeline.corpusClean(batch).localCheckpoint()))
-    assert(single.size == single.toMap.size, s"doc labelled twice: $single")
-    assert(single.toMap == reference.toMap && reference.size == single.size,
-      s"single pass ${single.sorted} vs five-branch ${reference.sorted}")
-    single.toMap
+    val oneTask = labels(Pipeline.classifyBatch(spark, out, batch))
+    val frames = labels(Pipeline.classifyBatch(spark, out, batch, -1L))
+    Seq("one task" -> oneTask, "frame form" -> frames).foreach {
+      case (form, got) =>
+        assert(got.size == got.toMap.size, s"$form labelled a doc twice")
+        assert(got.toMap == reference.toMap && reference.size == got.size,
+          s"$form ${got.sorted} vs five-branch ${reference.sorted}")
+    }
+    oneTask.toMap
   }
+
+  /** A fresh corpus bootstrapped from the sf documents outside the
+    * batch buckets, plus `extra` old documents. */
+  private def bootstrap(name: String, extra: Seq[(Long, String, String)])
+      : String = {
+    val out = java.nio.file.Files.createTempDirectory(name).toString
+    val doc = sources.Tables.table(spark, sf, "documents")
+      .select("doc_id", "lang", "text")
+    Pipeline.corpusInit(spark,
+      doc.filter(Corpus.hashBucket(col("doc_id"), "cinc", 5) >= 2)
+        .unionByName(extra.toDF("doc_id", "lang", "text")),
+      out, "2026-08-12")
+    out
+  }
+
+  private def words(from: Int, to: Int): String =
+    (from to to).map(i => s"w$i").mkString(" ")
 
   test("every label: the single pass equals the five-branch union") {
     val out = java.nio.file.Files.createTempDirectory("graft-clspar").toString
@@ -138,5 +164,43 @@ class ClassifyParitySpec extends AnyFunSuite {
         "accept")
       .subsetOf(m.values.toSet), m.values.groupBy(identity).map {
         case (k, v) => k -> v.size }.toString)
+  }
+
+  test("null texts: one exact group, null q first, both forms agree") {
+    val out = bootstrap("graft-clsnull", Nil)
+    val batch = Seq[(Long, String, String)](
+      (810001L, "en", null), (810002L, "en", null), (810003L, "de", null),
+      (810004L, "en", "a plain fresh document " + words(1, 30)))
+      .toDF("doc_id", "lang", "text")
+    val m = assertParity(out, batch)
+    assert(m(810001L) != "exact_dup_batch" &&
+      Seq(810002L, 810003L).forall(m(_) == "exact_dup_batch"), m.toString)
+  }
+
+  test("a doc near an old doc joins no within-batch group") {
+    // word blocks a b c d of 12 words and e of 4: old s = abc; x = abcd
+    // is near s; y = bcde and z = acd are near x, but not near s or
+    // each other, so only a group through x would join them
+    val (a, b, c, d, e) = (words(1, 12), words(13, 24), words(25, 36),
+      words(37, 48), words(49, 52))
+    val out = bootstrap("graft-clsnear", Seq((820000L, "en", s"$a $b $c")))
+    val batch = Seq((820001L, "en", s"$a $b $c $d"),
+        (820002L, "en", s"$b $c $d $e"), (820003L, "en", s"$a $c $d"))
+      .toDF("doc_id", "lang", "text")
+    val m = assertParity(out, batch)
+    assert(m == Map(820001L -> "near_dup_corpus", 820002L -> "accept",
+      820003L -> "accept"), m.toString)
+  }
+
+  test("300 near-identical copies of one text: one group, one accept") {
+    val out = bootstrap("graft-clsmany", Nil)
+    val base = "one shared body of text that every copy repeats " +
+      words(100, 160)
+    val batch = (1 to 300).map { i =>
+      (830000L + i, "en", s"$base tail$i") }.toDF("doc_id", "lang", "text")
+    val m = assertParity(out, batch)
+    assert(m.values.count(_ == "accept") == 1 &&
+      m.values.count(_ == "near_dup_batch") == 299, m.values.groupBy(identity)
+      .map { case (k, v) => k -> v.size }.toString)
   }
 }

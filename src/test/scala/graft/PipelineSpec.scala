@@ -624,6 +624,32 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("an empty batch is a no-op: two empty days return 0, nothing moves") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Corpus
+    val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val doc = graft.sources.Tables.table(spark, sf, "documents")
+      .select("doc_id", "lang", "text")
+    val bucket = Corpus.hashBucket(col("doc_id"), "cinc", 5)
+    Pipeline.corpusInit(spark, doc.filter(bucket >= 2), out, "2026-08-12")
+    // every file under silver, gold and the index batch list, with its
+    // length and mtime
+    def files(rel: String): Seq[(String, Long, Long)] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+        else Seq(f)
+      walk(new java.io.File(s"$out/$rel")).map(f =>
+        (f.getPath, f.length(), f.lastModified())).sorted
+    }
+    def state = Seq("silver/documents", "gold/train_packed",
+      "dedup_index/batches").map(files)
+    val before = state
+    val empty = doc.filter(lit(false))
+    assert(Pipeline.corpusIncrement(spark, out, empty, "2026-08-13") == 0L)
+    assert(Pipeline.corpusIncrement(spark, out, empty, "2026-08-14") == 0L)
+    assert(state == before, "an empty day changed silver, gold or the index")
+  }
+
   test("recipe shards are layout-only: membership identical at Shards=16") {
     import org.apache.spark.sql.functions._
     import graft.operators.Corpus

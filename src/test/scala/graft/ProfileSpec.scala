@@ -21,6 +21,17 @@ class ProfileSpec extends AnyFunSuite {
       s.sites.mkString("\n"))
   }
 
+  test("time: each site's driver gap is the time before its jobs") {
+    val (wall, s) = Profile.recording(spark) { r =>
+      Profile.timeRep(spark, sf, "q_dedup_incremental", r)
+    }
+    assert(s.sites.forall(x => x.gapS >= 0 && x.jobs > 0), s.sites)
+    // the gaps are disjoint stretches of the rep
+    assert(s.sites.map(_.gapS).sum <= wall + 0.01,
+      s"$wall s wall vs ${s.sites.mkString("\n")}")
+    assert(s.sites.map(_.gapS).sum > 0)
+  }
+
   test("plans: each truncate's pre-truncation plan is captured") {
     val (text, truncates) = Profile.recording(spark) { r =>
       Profile.plan(spark, sf, "q_dedup_incremental", r)
