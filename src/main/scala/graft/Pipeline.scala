@@ -421,11 +421,8 @@ object Pipeline {
     if (shards.exists(_.isEmpty)) return // no shard touched: nothing to do
     // the footer schema: no schema-inference job per rebuild
     val silver = shards match {
-      case Some(ks) =>
-        val dirs = ks.map(k => s"$silverPath/shard=$k")
-        val r = spark.read.option("basePath", silverPath)
-        Tables.footerSchema(spark, dirs.head).fold(r)(r.schema)
-          .parquet(dirs: _*)
+      case Some(ks) => Tables.readParquet(spark, silverPath,
+        ks.map(k => s"$silverPath/shard=$k"))
       case None => Tables.readParquet(spark, silverPath)
     }
     val kept = silver
@@ -728,11 +725,13 @@ object Pipeline {
     * every within-batch pair arrives after everything the first three
     * labels need, so it streams through the union-find of the
     * surviving documents and is never held: the task's state is
-    * O(batch rows). Orders, flags and groups are exactly the frame
-    * form's: the exact winner per hash (null hashes form one group) is
-    * the least (-q, doc_id) in Spark's ascending order — a null q
-    * first, NaN last, 0.0 equal to -0.0 — and so is the canonical of a
-    * within-batch group.
+    * O(batch rows). The batch documents arrive sorted on (-q, doc_id),
+    * the frame form's window order with Spark's own null and NaN
+    * placement, and take their slots in that order: the exact winner
+    * per hash (null hashes form one group) is the hash's first slot,
+    * and a within-batch group's canonical is its least slot — the
+    * union-find's root, since a union parents the larger root to the
+    * smaller.
     */
   private def decideInOneTask(cleaned: DataFrame, evidence: DataFrame,
                               pairs: DataFrame): DataFrame = {
@@ -761,24 +760,12 @@ object Pipeline {
           lit(null)): _*))
     val schema = StructType(Seq(StructField("doc_id", LongType, false),
       StructField("decision", StringType, false)))
-    val labels = rows.repartition(1).sortWithinPartitions(col("t"))
+    val labels = rows.repartition(1)
+      .sortWithinPartitions(col("t"), negate(col("q")), col("a"))
       .mapPartitions { it =>
         val slot = new java.util.HashMap[java.lang.Long, Integer]()
         val ids = ArrayBuffer.empty[Long]
         val hashes = ArrayBuffer.empty[String]
-        val qs = ArrayBuffer.empty[java.lang.Double]
-        // ascending (-q, doc_id) as Spark orders it
-        def before(x: Int, y: Int): Boolean = {
-          val (qx, qy) = (qs(x), qs(y))
-          val c =
-            if (qx == null) { if (qy == null) 0 else -1 }
-            else if (qy == null) 1
-            else {
-              val (nx, ny) = (-qx.doubleValue, -qy.doubleValue)
-              if (nx == ny) 0 else java.lang.Double.compare(nx, ny)
-            }
-          c < 0 || (c == 0 && ids(x) < ids(y))
-        }
         val winner = new java.util.HashMap[String, Integer]()
         val inSilver = new java.util.HashSet[String]()
         // first read by a pair row, after every batch doc has arrived
@@ -805,10 +792,8 @@ object Pipeline {
               val i = ids.size
               ids += r.getLong(1)
               hashes += (if (r.isNullAt(3)) null else r.getString(3))
-              qs += (if (r.isNullAt(4)) null else r.getDouble(4))
               slot.put(r.getLong(1), i)
-              val w = winner.get(hashes(i))
-              if (w == null || before(i, w)) winner.put(hashes(i), i)
+              winner.putIfAbsent(hashes(i), i)
             case 1 => inSilver.add(r.getString(3))
             case 2 =>
               val (a, b) = (slotOf(r, 1), slotOf(r, 2))
@@ -823,17 +808,9 @@ object Pipeline {
           }
           ()
         }
-        // (c) the group canonical: its least (-q, doc_id) member
-        val canon = Array.fill(ids.size)(-1)
-        ids.indices.foreach { i =>
-          if (pre(i) == null) {
-            val g = find(i)
-            if (canon(g) < 0 || before(i, canon(g))) canon(g) = i
-          }
-        }
         ids.indices.iterator.map { i =>
           Row(ids(i), if (pre(i) != null) pre(i)
-            else if (canon(find(i)) == i) "accept" else "near_dup_batch")
+            else if (find(i) == i) "accept" else "near_dup_batch")
         }
       }(org.apache.spark.sql.Encoders.row(schema))
     Checkpoints.truncate(labels.toDF())

@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object Corpus {
 
+  /** The separator between the documents of a packed training row (the
+    * EOS-token analog a trainer splits on).
+    */
+  private val PackSep = "<|eot|>"
+
   /** The gold-stage training-set recipe — quality/token gates, the
     * language mixture, split weights, sharding and the pack budget —
     * shared by [[graft.Pipeline.corpusGold]] and the composed
@@ -355,7 +360,7 @@ object Corpus {
     */
   def packTokenStream(docs: DataFrame, idCol: String, textCol: String,
                       shardCol: String, budget: Int,
-                      sep: String = "<|eot|>"): DataFrame = {
+                      sep: String = PackSep): DataFrame = {
     graft.Checkpoints.cached(graft.sources.Tables.fanOut(
         docs.select(col(idCol), col(shardCol),
           graft.functions.TextFunctions.bpeTokens(col(textCol))
@@ -528,7 +533,7 @@ object Corpus {
     */
   def materializePacked(df: DataFrame, idCol: String, textCol: String,
                         shardCol: String, binCol: String,
-                        sep: String = "<|eot|>"): DataFrame =
+                        sep: String = PackSep): DataFrame =
     df.groupBy(col(shardCol), col(binCol))
       .agg(array_sort(
         collect_list(struct(col(idCol), col(textCol)))).as("__ds"))
@@ -578,7 +583,7 @@ object Corpus {
     */
   def packEpochRanked(df: DataFrame, idCol: String, textCol: String,
                       nTokensCol: String, shardCol: String, budget: Int,
-                      epoch: Int, sep: String = "<|eot|>"): DataFrame = {
+                      epoch: Int): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -607,7 +612,7 @@ object Corpus {
               val r = in.next()
               n += 1
               if (!r.isNullAt(3)) {
-                if (texts > 0) text.append(sep)
+                if (texts > 0) text.append(PackSep)
                 text.append(r.getString(3)); texts += 1
               }
               if (!r.isNullAt(2)) cum += r.getLong(2)

@@ -80,6 +80,17 @@ object Tables {
       case None    => spark.read.parquet(path)
     }
 
+  /** [[readParquet]] of some partition directories of the table at
+    * `basePath` (its partition columns still come from the directory
+    * names below `basePath`), with the schema of the first directory's
+    * footer.
+    */
+  def readParquet(spark: SparkSession, basePath: String,
+                  paths: Seq[String]): DataFrame = {
+    val r = spark.read.option("basePath", basePath)
+    footerSchema(spark, paths.head).fold(r)(r.schema).parquet(paths: _*)
+  }
+
   private[graft] def footerSchema(spark: SparkSession, path: String)
       : Option[org.apache.spark.sql.types.StructType] =
     if (path.exists("*?[{".contains(_))) None

@@ -12,8 +12,8 @@ import graft.operators.{Corpus, Dedup}
   * set must equal the earlier five-branch union, kept below as the
   * reference, on batches that produce every label, on a day batch of
   * sf0.01 documents with planted exact and near re-sends, and on the
-  * edges the one-task form orders by hand (null texts, a group member
-  * that is also near an old document, one large group).
+  * edges of the one-task form's slot order and union-find (null texts,
+  * a group member that is also near an old document, one large group).
   */
 class ClassifyParitySpec extends AnyFunSuite {
   import SparkTestSession._
