@@ -203,10 +203,10 @@ object Pipeline {
                      outDir: String): Map[String, Long] = {
     val fs = Tables.fsFor(spark, outDir)
     val p = new org.apache.hadoop.fs.Path(s"$outDir/gold/_schema")
-    graft.sources.MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"no promoted gold schema at $outDir/gold — run the DAG first")
-    new String(graft.sources.MetaSwap.readCommitted(fs, p), "UTF-8")
+    val raw = graft.sources.MetaSwap.read(fs, p).getOrElse(
+      throw new IllegalStateException(
+        s"no promoted gold schema at $outDir/gold — run the DAG first"))
+    new String(raw, "UTF-8")
       .linesIterator.flatMap { l =>
         val i = l.indexOf('=')
         if (i < 0) None

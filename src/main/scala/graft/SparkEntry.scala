@@ -2152,7 +2152,7 @@ object SparkEntry {
     // build a real two-generation snapshot table, plant one incident
     // per class — a crashed publish's residue gen (current+1), an
     // impossible future gen (tampering), an interrupted pointer swap
-    // (`.next` beside the committed pointer), and a crashed prune's
+    // (a stage file beside the committed pointer), and a crashed prune's
     // leftover (audited with keep=1 against a keep=3 publish) — and
     // recount the structure-driven status inventory against a literal
     // oracle. Repair runs in-gate behind requires: residue and the
@@ -2174,9 +2174,10 @@ object SparkEntry {
         }
         mk(s"$root/_snapshots/3") // crashed publish residue (cur+1)
         mk(s"$root/_snapshots/9") // impossible future gen
-        val next = fs.create(
-          new org.apache.hadoop.fs.Path(s"$root/_current.next"), true)
-        try next.write("gen=3\n".getBytes("UTF-8")) finally next.close()
+        val stage = graft.sources.MetaSwap.stagePath(
+          graft.sources.Generations.pointer(root))
+        val out = fs.create(stage, true)
+        try out.write("gen=3\n".getBytes("UTF-8")) finally out.close()
         val report = Checkpoints.truncate(graft.operators.IndexAudit
           .auditSnapshotsDf(s, root, keep = 1)
           .groupBy(col("kind"), col("status"), col("healthy"))
@@ -2191,8 +2192,7 @@ object SparkEntry {
           acts.toString)
         require(!fs.exists(new org.apache.hadoop.fs.Path(
           s"$root/_snapshots/3")))
-        require(!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$root/_current.next")))
+        require(!fs.exists(stage))
         require(fs.exists(new org.apache.hadoop.fs.Path(
           s"$root/_snapshots/9")),
           "repair must never delete tampering evidence")

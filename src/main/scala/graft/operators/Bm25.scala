@@ -201,7 +201,7 @@ object Bm25 {
   }
 
   /** The committed meta ALONG WITH its raw bytes (the CAS expectation
-    * of a maintenance swap); heals a crashed swap first.
+    * of a maintenance swap).
     */
   private[graft] def readBm25MetaRaw(
       spark: org.apache.spark.sql.SparkSession,
@@ -306,10 +306,7 @@ object Bm25 {
     // the marker first; stale snapshot records / grace markers from a
     // predecessor index at this path must not resolve against the new
     // one's batches
-    Seq("_meta", "_meta.next", "_meta_history", "_pending_delete")
-      .foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$c"), true); ()
-      }
+    Layout.wipe(fs, path, Seq("_meta", "_meta_history", "_pending_delete"))
     // id column NAME and TYPE both pin to the meta: the probe's
     // empty-result branch must produce the exact schema a non-empty
     // probe would, or downstream unions/comparisons break on the
@@ -324,9 +321,9 @@ object Bm25 {
     * batch, then commit it with a meta swap that adds the batch to
     * the visibility list and the batch's (n, Σlen) to the corpus
     * scalars. Never touches existing batches; replayed batches refuse
-    * loudly off the meta's committed list. The swap stages
-    * `_meta.next` first — a crash mid-swap self-heals on the next
-    * read ([[readBm25Meta]]). Returns the batch id.
+    * loudly off the meta's committed list. The swap replaces `_meta`
+    * atomically, so a crash leaves the old or the new meta. Returns
+    * the batch id.
     */
   def appendBm25Index(docs: DataFrame, textCol: String, path: String,
                       batchId: Option[String] = None): String =
@@ -342,7 +339,7 @@ object Bm25 {
     * (n, Σlen) contribution is recomputed from its own postings
     * (distinct doc rows — batch-sized, never the corpus), subtracted
     * from the meta scalars, and the batch leaves the visibility list
-    * in the same self-healing meta swap as [[appendBm25Index]]; the
+    * in the same atomic meta swap as [[appendBm25Index]]; the
     * directory is deleted after the swap commits (an orphan dir left
     * by a crash between the two is invisible and reclaimed by the
     * next append of the same content). An IN-FLIGHT probe that

@@ -475,29 +475,20 @@ object Dedup {
     new org.apache.hadoop.fs.Path(s"$path/_meta")
 
   private[graft] def readIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                                   path: String): Option[IndexMeta] = {
-    val p = metaPath(path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val kv = scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().map(_.split("=", 2)).collect {
-            case Array(a, b) => a -> b.toInt
-          }.toMap
-        Some(IndexMeta(kv("k"), kv("rowsPerBand"), kv("maxDocFreq")))
-      } finally in.close()
+                                   path: String): Option[IndexMeta] =
+    graft.sources.MetaSwap.read(fs, metaPath(path)).map { raw =>
+      val kv = new String(raw, "UTF-8").linesIterator
+        .map(_.split("=", 2)).collect {
+          case Array(a, b) => a -> b.toInt
+        }.toMap
+      IndexMeta(kv("k"), kv("rowsPerBand"), kv("maxDocFreq"))
     }
-  }
 
   private def writeIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                             path: String, m: IndexMeta): Unit = {
-    val out = fs.create(metaPath(path), true)
-    try out.write(
+                             path: String, m: IndexMeta): Unit =
+    graft.sources.MetaSwap.swap(fs, metaPath(path),
       s"k=${m.k}\nrowsPerBand=${m.rowsPerBand}\nmaxDocFreq=${m.maxDocFreq}\n"
         .getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Every published batch directory under the index root (markers and
     * staging excluded by construction — staging lives at `_staging/`,

@@ -264,15 +264,28 @@ object IndexAudit {
   // SnapshotStore publishes immutable generation directories behind
   // one CAS'd pointer; its incident classes mirror the index family —
   // crashed-publish residue (the staged gen nothing points at), an
-  // interrupted pointer swap (`.next` beside or instead of the
-  // committed marker), over-retention after a crashed prune — plus
+  // interrupted pointer swap (a stage file beside the committed
+  // marker), over-retention after a crashed prune — plus
   // two states only a pointer protocol has: a pointer whose target
   // generation is GONE (the serving table is lost) and a future gen
   // the gen=current+1 rule cannot produce (tampering/FS damage).
 
-  /** The fsck's view of `<root>/_current`: whether a crashed swap's
-    * `.next` was present (recorded BEFORE the committed read heals it,
-    * so the finding survives its own remediation), the pointer state
+  /** The stage files crashed marker writers left under a table root —
+    * beside the pointer and among the refs — reported as the
+    * pointer's swap_residue and reclaimed together.
+    */
+  private def swapResidue(fs: org.apache.hadoop.fs.FileSystem,
+                          root: String): Seq[org.apache.hadoop.fs.Path] = {
+    import graft.sources.{Generations, MetaSwap}
+    val refs = new org.apache.hadoop.fs.Path(s"$root/_refs")
+    MetaSwap.residue(fs, Generations.pointer(root)) ++
+      (if (!fs.exists(refs)) Nil
+       else fs.listStatus(refs).toSeq.map(_.getPath)
+         .filter(p => MetaSwap.isStage(p.getName)))
+  }
+
+  /** The fsck's view of `<root>/_current`: whether crashed marker
+    * writers left stage files ([[swapResidue]]), the pointer state
     * (Left = CORRUPT bytes, classified instead of crashed on — an fsck
     * must report the damage it exists to diagnose; Right(None) =
     * never published), and the recorded keep and grace.
@@ -280,15 +293,14 @@ object IndexAudit {
   private def pointerState(fs: org.apache.hadoop.fs.FileSystem,
                            root: String)
       : (Boolean, Either[Unit, Option[Long]], Option[Int], Option[Long]) = {
-    import graft.sources.Generations
-    val swapResidue =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/_current.next"))
-    Generations.committed(fs, Generations.pointer(root)) match {
-      case None => (swapResidue, Right(None), None, None)
+    import graft.sources.{Generations, MetaSwap}
+    val residue = swapResidue(fs, root).nonEmpty
+    MetaSwap.read(fs, Generations.pointer(root)) match {
+      case None => (residue, Right(None), None, None)
       case Some(raw) => Generations.parsedGen(raw) match {
-        case Some(g) => (swapResidue, Right(Some(g)),
+        case Some(g) => (residue, Right(Some(g)),
           Generations.parsedKeep(raw), Generations.parsedGrace(raw))
-        case None => (swapResidue, Left(()), None, None)
+        case None => (residue, Left(()), None, None)
       }
     }
   }
@@ -305,10 +317,9 @@ object IndexAudit {
     * and every superseded gen reports retained. Statuses
     * (healthy=true unless noted):
     *
-    *  - pointer/swap_residue — `_current.next` present: an
-    *    interrupted swap; self-healing (the crashed form completes on
-    *    the next read — which THIS audit performs — and the
-    *    crashed-earlier form is overwritten by the next swap), but
+    *  - pointer/swap_residue — a stage file beside `_current` or among
+    *    the refs: a marker swap that crashed before its rename (the
+    *    committed marker is intact; readers never look at the stage),
     *    surfaced so a persistent crash pattern shows across audits
     *  - pointer/current_ok — the committed gen's directory exists
     *  - pointer/corrupt (UNHEALTHY) — the committed pointer exists
@@ -541,7 +552,6 @@ object IndexAudit {
     val gens: Seq[Long] =
       if (!fs.exists(mBase)) Seq.empty
       else fs.listStatus(mBase).toSeq
-        .filterNot(_.getPath.getName.endsWith(".next"))
         .flatMap(_.getPath.getName.toLongOption).sorted
     def parsed(g: Long)
         : Option[graft.sources.ManifestStore.GenFile] =
@@ -813,7 +823,7 @@ object IndexAudit {
         Seq(("group", n, "unrepairable_missing_group"))
       case IndexProtocol.AuditFinding("pointer", _, "swap_residue", _)
           if !corrupt =>
-        verifiedDelete(s"$root/_current.next")
+        swapResidue(fs, root).foreach(p => verifiedDelete(p.toString))
         Seq(("pointer", "_current", "reclaimed_swap_residue"))
       case IndexProtocol.AuditFinding("pointer", n, "corrupt", _) =>
         Seq(("pointer", n, "unrepairable_corrupt_pointer"))
@@ -857,7 +867,7 @@ object IndexAudit {
           if (!fs.exists(mBase)) Set.empty[String]
           else fs.listStatus(mBase).toSeq
             .filter(st => st.isFile &&
-              !st.getPath.getName.endsWith(".next"))
+              !MetaSwap.isStage(st.getPath.getName))
             .filter(st =>
               st.getPath.getName.toLongOption.isDefined ||
                 graft.sources.Generations.parseBranchToken(st.getPath.getName)
@@ -926,12 +936,11 @@ object IndexAudit {
     *    only copy;
     *  - over_retained (requires `keep`) → verified delete (finishing
     *    the crashed prune);
-    *  - swap_residue → the crashed form was healed by the audit's own
-    *    committed read; a leftover `.next` beside a committed pointer
-    *    is verified-deleted ("reclaimed_swap_residue") — UNLESS the
-    *    committed pointer is corrupt, in which case the `.next` may
-    *    hold the last good bytes and is preserved as recovery
-    *    evidence;
+    *  - swap_residue → a crashed writer's stage file beside the
+    *    committed pointer is verified-deleted
+    *    ("reclaimed_swap_residue") — UNLESS the committed pointer is
+    *    corrupt, in which case the stage may hold the last good bytes
+    *    and is preserved as recovery evidence;
     *  - corrupt pointer → REPORTED as
     *    `unrepairable_corrupt_pointer`: the operator rewrites the
     *    pointer to a chosen gen — repair never guesses;
@@ -981,10 +990,10 @@ object IndexAudit {
         reclaimGen(g, "pruned_over_retained")
       case IndexProtocol.AuditFinding("pointer", _, "swap_residue", _)
           if !corrupt =>
-        // under a CORRUPT committed pointer the leftover `.next` may
-        // hold the last good bytes — recovery evidence, never reclaimed
-        reclaim("pointer", "_current", s"$root/_current.next",
-          "reclaimed_swap_residue")
+        // under a CORRUPT committed pointer a leftover stage may hold
+        // the last good bytes — recovery evidence, never reclaimed
+        swapResidue(fs, root).flatMap(p => reclaim("pointer", "_current",
+          p.toString, "reclaimed_swap_residue")).distinct
       case IndexProtocol.AuditFinding("pointer", n, "corrupt", _) =>
         Seq(("pointer", n, "unrepairable_corrupt_pointer"))
       case IndexProtocol.AuditFinding("pointer", g,

@@ -21,8 +21,8 @@ import graft.sources.MetaSwap
   * per call) and its serve. The sequences:
   *
   *  - **Meta**: one codec and parser shared by the live read and the
-  *    as-of-gen read; the heal-then-read, the compare-and-set swap
-  *    (gen bump, then the `_meta_history` record) and the gen-0 write.
+  *    as-of-gen read; the read, the compare-and-set swap
+  *    (gen bump, then the `_meta_history` record) and the gen-0 create.
   *  - **Publish** ([[publishStaged]]): verified staging wipe, verified
   *    residue reclaim, stage, atomic rename — every append, retraction
   *    rewrite and compaction of both indexes, and the dedup index's
@@ -722,11 +722,11 @@ private[graft] object IndexProtocol {
     * [[IndexAudit.repair]]. The record is written under the gen
     * PARSED FROM THE BYTES ACTUALLY READ, never the gen an earlier
     * audit read saw: if a (contract-violating) writer swapped the
-    * meta between the audit and this heal, recording fresh bytes
+    * meta between the audit and this re-record, recording fresh bytes
     * under the stale gen would make `topKAt(staleGen)` silently serve
     * the WRONG snapshot — the one failure the snapshot protocol
     * promises never happens (it refuses typed, it never mis-serves).
-    * Re-parsed, the heal is self-consistent under any interleaving:
+    * Re-parsed, the re-record is self-consistent under any interleaving:
     * either the missing gen's record is restored from its own bytes,
     * or the newer gen (whose own swap already recorded it) is left
     * alone and the stale gen stays typed-unavailable. Only a still-
@@ -774,20 +774,16 @@ private[graft] object IndexProtocol {
     staged
   }
 
-  /** Point a serving pointer file at `root` with one marker swap — a
-    * crash mid-swap self-heals on the next [[readPointer]].
-    */
+  /** Point a serving pointer file at `root` with one marker swap. */
   def writePointer(fs: FileSystem, pointer: Path, root: String): Unit =
     MetaSwap.swap(fs, pointer, s"$root\n".getBytes("UTF-8"))
 
-  /** The root a pointer file names, after healing a crashed swap;
-    * None when no pointer was ever published.
+  /** The root a pointer file names; None when no pointer was ever
+    * published.
     */
-  def readPointer(fs: FileSystem, pointer: Path): Option[String] = {
-    MetaSwap.heal(fs, pointer)
-    MetaSwap.readIfExists(fs, pointer)
+  def readPointer(fs: FileSystem, pointer: Path): Option[String] =
+    MetaSwap.read(fs, pointer)
       .map(new String(_, "UTF-8").linesIterator.next().trim)
-  }
 
   /** The lists every batch-list meta carries after its head fields.
     * `batches` serve; `retired` only refuse replay (ids superseded by
@@ -859,29 +855,29 @@ private[graft] object IndexProtocol {
 
     /** The committed meta ALONG WITH its raw bytes — the bytes are the
       * CAS expectation a maintenance path hands back to [[swap]].
-      * Self-healing: a crash between a swap's delete-old and
-      * rename-new steps leaves `_meta.next` without `_meta`; this
-      * read completes the rename and proceeds.
       */
     def read(fs: FileSystem, root: String): (M, Array[Byte]) = {
-      val p = metaPath(root)
-      MetaSwap.heal(fs, p)
-      require(fs.exists(p),
+      val raw = MetaSwap.read(fs, metaPath(root))
+      require(raw.isDefined,
         s"no committed $name at $root (missing _meta — half-built " +
           s"index or wrong path); build one with $writer")
-      val raw = MetaSwap.readCommitted(fs, p)
-      (parse(raw, root), raw)
+      (parse(raw.get, root), raw.get)
     }
 
-    /** Does `root` hold a committed meta (after healing a crashed
-      * swap)?
+    /** Delete `components` of the index at `root`, and any stage file a
+      * crashed meta writer left — the wipe before a (re)build.
       */
-    def isCommitted(fs: FileSystem, root: String): Boolean = {
-      MetaSwap.heal(fs, metaPath(root))
-      fs.exists(metaPath(root))
-    }
+    def wipe(fs: FileSystem, root: String, components: Seq[String]): Unit =
+      (components.map(c => new Path(s"$root/$c")) ++
+        MetaSwap.residue(fs, metaPath(root))).foreach { p =>
+        fs.delete(p, true); ()
+      }
 
-    /** Commit `m` with the compare-and-set `_meta.next` swap against
+    /** Does `root` hold a committed meta? */
+    def isCommitted(fs: FileSystem, root: String): Boolean =
+      fs.exists(metaPath(root))
+
+    /** Commit `m` with the compare-and-set `_meta` swap against
       * `expect`, bumping the gen fence; the `_meta_history` record is
       * written AFTER the swap, so it never alters commit semantics.
       */
@@ -894,16 +890,16 @@ private[graft] object IndexProtocol {
     }
 
     /** Publish the initial corpus as batch `bootstrap` and commit it
-      * with the gen-0 meta written LAST — a crash before the meta
-      * leaves a root every probe refuses loudly. `stage` writes the
-      * payload under the staging path and returns the layout's head
-      * (its lists are replaced).
+      * with the gen-0 meta created LAST — a crash before the meta
+      * leaves a root every probe refuses loudly, and of two racing
+      * bootstraps one fails typed ([[MetaSwap.CasFailed]]). `stage`
+      * writes the payload under the staging path and returns the
+      * layout's head (its lists are replaced).
       */
     def bootstrap(fs: FileSystem, root: String)(stage: Path => M): Unit = {
       val m = publishStaged(fs, root, "bootstrap")(p => Some(stage(p))).get
       val b = bytes(withLists(m, Seq("bootstrap"), Nil, 0L))
-      val out = fs.create(metaPath(root), true)
-      try out.write(b) finally out.close()
+      MetaSwap.create(fs, metaPath(root), b)
       recordMetaHistory(fs, root, 0L, b)
     }
 

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * behavior — appending never retrains; retrain-and-reindex is a
   * separate scheduled rebuild), stages it under `_staging/<bid>`,
   * publishes with one atomic directory rename, and commits it with a
-  * self-healing `_meta.next` swap. A batch id already on the
+  * atomic `_meta` swap. A batch id already on the
   * committed (or retired) list is refused loudly (O(1) probe), so
   * redelivered embedding batches cannot double-count candidates.
   *
@@ -91,7 +91,7 @@ object VectorIndex {
   }
 
   /** The committed meta ALONG WITH its raw bytes (the CAS expectation
-    * of a maintenance swap); heals a crashed swap first.
+    * of a maintenance swap).
     */
   private[graft] def readMetaRaw(spark: SparkSession,
                                  path: String): (VecMeta, Array[Byte]) =
@@ -140,7 +140,6 @@ object VectorIndex {
             m: Int, dim: Int, path: String): Unit = {
     val spark = emb.sparkSession
     val fs = fsFor(spark, path)
-    // complete a crashed swap first so it registers as committed
     require(!Layout.isCommitted(fs, path),
       s"refusing to rebuild over the COMMITTED vector index at $path " +
         "— in-place rebuilds mix codes from two codebooks and drop " +
@@ -152,11 +151,8 @@ object VectorIndex {
     // the index-shaped names under it (_meta_history/_pending_delete
     // included — stale snapshot records from a torn-down predecessor
     // index must not resolve against the new one's batches)
-    Seq("centroids", "codebook", "batches", "_staging", "_meta.next",
-      "_meta_history", "_pending_delete")
-      .foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$c"), true); ()
-      }
+    Layout.wipe(fs, path, Seq("centroids", "codebook", "batches",
+      "_staging", "_meta_history", "_pending_delete"))
     centroids.select(col("cell"), col("centv"))
       .write.mode("overwrite").parquet(s"$path/centroids")
     codebook.select(col("subspace"), col("code"), col("centv"))
@@ -409,9 +405,9 @@ object VectorIndex {
     * [[write]] a complete index under a FRESH path, then redirect the
     * pointer. In-flight probes finish against the root they already
     * resolved; every later [[resolvePointer]] sees the new one; the
-    * superseded root is dropped after a grace period. The swap is the
-    * `_meta.next` protocol: stage `<pointer>.next`, delete, rename —
-    * a crash mid-swap self-heals on the next resolve.
+    * superseded root is dropped after a grace period. The swap is one
+    * [[graft.sources.MetaSwap]] atomic replace: a crash leaves the old
+    * or the new root.
     */
   def writePointer(spark: SparkSession, pointerPath: String,
                    indexRoot: String): Unit = {
@@ -421,7 +417,7 @@ object VectorIndex {
       new org.apache.hadoop.fs.Path(pointerPath), indexRoot)
   }
 
-  /** Resolve the active index root; self-heals a crashed swap. */
+  /** Resolve the active index root. */
   def resolvePointer(spark: SparkSession,
                      pointerPath: String): String =
     IndexProtocol.readPointer(fsFor(spark, pointerPath),

@@ -79,11 +79,9 @@ object ChangeFeed {
              checkpointDir: String): Option[Long] = {
     val fs = Tables.fsFor(spark, checkpointDir)
     val p = cursorPath(checkpointDir)
-    MetaSwap.heal(fs, p)
-    if (!fs.exists(p)) None
-    else Generations.parsedGen(MetaSwap.readCommitted(fs, p))
-      .orElse(throw new IllegalStateException(
-        s"malformed change-feed cursor at $p: no parseable gen= line"))
+    MetaSwap.read(fs, p).map(b => Generations.parsedGen(b)
+      .getOrElse(throw new IllegalStateException(
+        s"malformed change-feed cursor at $p: no parseable gen= line")))
   }
 
   /** One promotion's CHANGE SET: the S12 diff between gen−1 and gen,
@@ -114,7 +112,6 @@ object ChangeFeed {
     val gens =
       if (!fs.exists(base)) Seq.empty
       else fs.listStatus(base).toSeq
-        .filterNot(_.getPath.getName.endsWith(".next"))
         .flatMap(_.getPath.getName.toLongOption).filter(_ <= cur)
     if (gens.isEmpty) throw new graft.SnapshotUnavailable(
       s"no retained generation at $root")

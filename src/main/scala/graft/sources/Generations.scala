@@ -54,21 +54,6 @@ private[graft] object Generations {
 
   def pointer(root: String): Path = new Path(s"$root/_current")
 
-  /** The marker's committed bytes (healing a crashed swap first), or
-    * None when it was never committed.
-    */
-  def committed(fs: FileSystem, marker: Path): Option[Array[Byte]] = {
-    MetaSwap.heal(fs, marker)
-    readNow(fs, marker)
-  }
-
-  // The commit's in-lock re-check reads without the leading heal
-  // (readCommitted heals): a marker caught mid-swap reads as changed
-  // or fails — the conservative answer
-  private def readNow(fs: FileSystem, marker: Path): Option[Array[Byte]] =
-    if (fs.exists(marker)) Some(MetaSwap.readCommitted(fs, marker))
-    else None
-
   private def parsedField(bytes: Array[Byte], key: String): Option[Long] =
     new String(bytes, "UTF-8").linesIterator
       .collectFirst { case s if s.startsWith(s"$key=") =>
@@ -102,7 +87,7 @@ private[graft] object Generations {
     */
   def currentGen(fs: FileSystem, root: String,
                  layout: Layout): Option[Long] =
-    committed(fs, pointer(root)).map(genOf(_, layout))
+    MetaSwap.read(fs, pointer(root)).map(genOf(_, layout))
 
   /** The pointer bytes a caller plans from: its own earlier read
     * `expect` (the OPTIMIZE and DML forms re-publish rows of the
@@ -112,7 +97,7 @@ private[graft] object Generations {
     */
   def plannedFrom(fs: FileSystem, root: String,
                   expect: Option[Array[Byte]]): Option[Array[Byte]] = {
-    val now = committed(fs, pointer(root))
+    val now = MetaSwap.read(fs, pointer(root))
     expect.foreach { exp =>
       if (!now.exists(java.util.Arrays.equals(_, exp)))
         throw new MetaSwap.CasFailed(
@@ -149,7 +134,7 @@ private[graft] object Generations {
     val what = s"generation $token of $root (${layout.lockDir}/.lock-$token)"
     val owner = StagingLock.acquire(fs, lock, what)
     try {
-      val unchanged = (planned, readNow(fs, marker)) match {
+      val unchanged = (planned, MetaSwap.read(fs, marker)) match {
         case (Some(a), Some(b)) => java.util.Arrays.equals(a, b)
         case (None, None)       => true
         case _                  => false
@@ -163,10 +148,10 @@ private[graft] object Generations {
       StagingLock.verify(fs, lock, owner, what)
       try planned match {
         case Some(expect) => MetaSwap.swap(fs, marker, next, expect)
-        case None         => MetaSwap.swap(fs, marker, next)
+        case None         => MetaSwap.create(fs, marker, next)
       } catch { case lost: MetaSwap.CasFailed => throw onLostCas(lost) }
       after
-    } finally StagingLock.release(fs, lock)
+    } finally StagingLock.release(fs, lock, owner)
   }
 
   /** Commit main generation `planned`'s gen + 1 (1 on a table never
@@ -219,7 +204,7 @@ private[graft] object Generations {
     * branches. A corrupt pointer is fsck territory: no-op.
     */
   def expire(fs: FileSystem, root: String, layout: Layout): Unit =
-    committed(fs, pointer(root)).foreach { raw =>
+    MetaSwap.read(fs, pointer(root)).foreach { raw =>
       parsedGen(raw).foreach(g => layout.prune(fs, root, g,
         parsedKeep(raw).getOrElse(3), parsedGrace(raw).getOrElse(0L)))
     }
@@ -256,17 +241,10 @@ private[graft] object Generations {
       else body.drop(i + 1).toLongOption.map(k => (body.take(i), k))
     }
 
-  def requireRefName(name: String): Unit = {
+  // no leading dot: that namespace is MetaSwap's stage files
+  def requireRefName(name: String): Unit =
     require(name.matches("[A-Za-z0-9][A-Za-z0-9_.-]*"),
       s"ref name '$name' must match [A-Za-z0-9][A-Za-z0-9_.-]*")
-    // '.next' is MetaSwap's temp-marker suffix: a committed ref named
-    // 'foo.next' would read to rawRefs/heal as ref 'foo's crashed swap
-    // (silently renamed to '_refs/foo') and dropRef("foo") would
-    // delete it — a legally-named ref destroyed through normal calls
-    require(!name.endsWith(".next"),
-      s"ref name '$name' collides with the swap protocol's temp-" +
-        "marker suffix ('.next') — pick another name")
-  }
 
   def serializeRef(r: Ref): Array[Byte] = (r match {
     case TagRef(g, c) => s"kind=tag\ngen=$g\ncreated=$c\n"
@@ -293,22 +271,17 @@ private[graft] object Generations {
     }
   }
 
-  /** (name → committed marker bytes) of every ref. HEALS crashed
-    * swaps first: a ref CAS that died between its delete and rename
-    * leaves only `<name>.next` — skipping it here would make the
-    * branch invisible to prune (which would then reclaim the branch's
-    * live files) while the next [[refAt]] resurrects the ref pointing
-    * at swept data. Every reader of the full ref set must see what a
-    * healed read would see.
+  /** (name → committed marker bytes) of every ref. A ref marker is
+    * never absent mid-swap, so the listing is the full ref set; a
+    * crashed writer's stage file beside one is not a ref.
     */
   def rawRefs(fs: FileSystem, root: String): Map[String, Array[Byte]] = {
     val base = new Path(s"$root/_refs")
     if (!fs.exists(base)) Map.empty
     else fs.listStatus(base).toSeq
-      .filter(_.isFile)
-      .map(_.getPath.getName.stripSuffix(".next"))
-      .distinct
-      .flatMap(n => committed(fs, refPath(root, n)).map(n -> _))
+      .filter(st => st.isFile && !MetaSwap.isStage(st.getPath.getName))
+      .map(_.getPath.getName)
+      .flatMap(n => MetaSwap.read(fs, refPath(root, n)).map(n -> _))
       .toMap
   }
 
@@ -338,7 +311,7 @@ private[graft] object Generations {
 
   private def refWithBytes(fs: FileSystem, root: String, name: String,
                            layout: Layout): (Ref, Array[Byte]) = {
-    val bytes = committed(fs, refPath(root, name)).getOrElse(
+    val bytes = MetaSwap.read(fs, refPath(root, name)).getOrElse(
       throw new graft.SnapshotUnavailable(s"no ref '$name' at $root"))
     parsedRef(bytes).getOrElse(throw new IllegalStateException(
       s"ref '$name' of $root is corrupt — run ${layout.fsck}")) -> bytes
@@ -396,7 +369,7 @@ private[graft] object Generations {
   /** Create ref `name` = `ref(g)` for committed, retained generation
     * `g` (default: the serving one). Refs are immutable: an existing
     * name refuses, and creation is create-EXCLUSIVE — two racing
-    * creators collide on the one stage file and one fails typed.
+    * creators cannot both commit: one fails typed.
     * Returns g.
     */
   def createRef(fs: FileSystem, root: String, layout: Layout,
@@ -411,7 +384,6 @@ private[graft] object Generations {
         s"cannot create ref '$name' at generation $g of $root: not a " +
           "committed, retained generation")
     val p = refPath(root, name)
-    MetaSwap.heal(fs, p)
     if (fs.exists(p)) throw new IllegalStateException(
       s"ref '$name' already exists at $root — refs are immutable; " +
         "dropRef first to rename on purpose")
@@ -419,11 +391,8 @@ private[graft] object Generations {
     g
   }
 
-  /** Drop ref `name` (and any crashed-swap residue of it). */
+  /** Drop ref `name`. */
   def dropRef(fs: FileSystem, root: String, name: String): Unit = {
-    val p = refPath(root, name)
-    fs.delete(p, false)
-    fs.delete(new Path(p.getParent, p.getName + ".next"), false)
-    ()
+    fs.delete(refPath(root, name), false); ()
   }
 }

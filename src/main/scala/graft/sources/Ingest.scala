@@ -33,16 +33,6 @@ object Ingest {
     spark.read.text(dir)
       .select(input_file_name().as("source_uri"), col("value").as("payload"))
 
-  /** Streaming twin of [[manifestFromDir]]: a landing directory
-    * watched as a file-source stream — new payload files become
-    * manifest rows continuously, and [[landRawJson]] applies unchanged
-    * (one definition, two execution modes; same contract as
-    * [[graft.streaming.EventStream]]).
-    */
-  def manifestStreamFromDir(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.text(dir)
-      .select(input_file_name().as("source_uri"), col("value").as("payload"))
-
   /** Land a manifest of raw JSON payloads as a bronze table: payloads
     * parse against an EXPLICIT schema (schema inference over raw
     * payloads is a second full scan at 100 TB), and every row carries

@@ -197,7 +197,7 @@ object ManifestStore {
     s"$root/_writes/$gen"
 
   /** The committed generation the pointer serves, if the table has
-    * ever been published (self-heals a crashed swap first).
+    * ever been published.
     */
   def currentGen(spark: SparkSession, root: String): Option[Long] =
     Generations.currentGen(Tables.fsFor(spark, root), root, layout)
@@ -207,7 +207,7 @@ object ManifestStore {
     */
   private def servingPointer(spark: SparkSession,
                              root: String): (Long, Array[Byte]) = {
-    val raw = Generations.committed(Tables.fsFor(spark, root),
+    val raw = MetaSwap.read(Tables.fsFor(spark, root),
       Generations.pointer(root)).getOrElse(throw new IllegalStateException(
         s"no published manifest table at $root — bootstrap with " +
           "ManifestStore.publish first"))
@@ -658,7 +658,6 @@ object ManifestStore {
     val candidates =
       if (!fs.exists(base)) Seq.empty
       else fs.listStatus(base).toSeq
-        .filterNot(_.getPath.getName.endsWith(".next"))
         .flatMap(_.getPath.getName.toLongOption)
         .filter(_ <= cur) // residue manifests never served
         .map(g => g -> parseGenFile(MetaSwap.readCommitted(fs,
@@ -1663,7 +1662,7 @@ object ManifestStore {
   type BranchRef = Generations.BranchRef
   val BranchRef = Generations.BranchRef
 
-  /** Every ref of the table, healed and parsed. Corrupt markers are
+  /** Every ref of the table, parsed. Corrupt markers are
     * OMITTED here (the fsck reports them); the retention sweeps
     * SUSPEND on damage instead.
     */
@@ -1732,17 +1731,6 @@ object ManifestStore {
       val m = assemble(fs, root, branchGenFile(spark, root, name, b))
       readEntries(spark, root, m.schemaDdl, m.entries, m.renames)
   }
-
-  /** The WAP review step: what would [[fastForward]]`(name)` change?
-    * One S12 diff (added/removed/changed per key) between the table
-    * MAIN serves and the branch head — both sides resolved once, so
-    * the answer is consistent even while promotions land elsewhere.
-    * Works for tags too (diff against the pinned generation).
-    */
-  def diffRef(spark: SparkSession, root: String, name: String,
-              keys: Seq[String]): DataFrame =
-    graft.operators.Incremental.snapshotDiff(
-      readCurrent(spark, root), readRef(spark, root, name), keys)
 
   /** Publish `df` onto BRANCH `name` — the staged-promotion half of
     * write-audit-publish on a branch: partition-replace semantics
@@ -1880,7 +1868,6 @@ object ManifestStore {
     val mBase = new Path(s"$root/_manifests")
     if (!fs.exists(mBase)) return
     val allGens = fs.listStatus(mBase).toSeq
-      .filterNot(_.getPath.getName.endsWith(".next"))
       .flatMap(_.getPath.getName.toLongOption)
     def verifiedDelete(p: Path, what: String): Unit =
       if (!fs.delete(p, true)) throw new IllegalStateException(
@@ -1924,7 +1911,7 @@ object ManifestStore {
     // still covers an in-flight reader. Survivors join the reference
     // sweeps; a corrupt survivor suspends them.
     val branchManifests = fs.listStatus(mBase).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.endsWith(".next"))
+      .filter(_.isFile)
       .flatMap(st => Generations.parseBranchToken(st.getPath.getName)
         .map { case (n, k) => (st.getPath, n, k) })
     var suspendSweeps = false
@@ -1998,8 +1985,7 @@ object ManifestStore {
         }
         if (sweepable) {
           fs.listStatus(d.getPath)
-            .filter(f => f.isFile &&
-              !f.getPath.getName.endsWith(".next"))
+            .filter(f => f.isFile && !MetaSwap.isStage(f.getPath.getName))
             .foreach { f =>
               val rel = s"_manifests/${d.getPath.getName}/" +
                 f.getPath.getName
@@ -2021,15 +2007,17 @@ object ManifestStore {
       // writer mid-staging and stays (its own finally releases it).
       // Lock markers are files, never write dirs — they skip the
       // reference sweep below entirely.
-      if (token.startsWith(".lock-")) {
-        if (System.currentTimeMillis() -
-            wd.getModificationTime > StagingLock.LeaseMs)
-          verifiedDelete(wd.getPath, "expired staging lock")
-      } else {
-      // numeric tokens sweep as before; branch tokens sweep unless
-      // they are an existing ref's in-flight residue (beyond head)
+      if (token.startsWith(".lock-"))
+        StagingLock.reclaimExpired(fs, wd.getPath)
+      else {
+      // numeric tokens sweep up to this prune's generation: a higher
+      // one is a publish planned after it — in flight, or committed
+      // since `referenced` was read, whose files that set cannot
+      // name (the next publish of a crashed token overwrites its
+      // residue); branch tokens sweep unless they are an existing
+      // ref's in-flight residue (beyond head)
       val sweepable = token.toLongOption match {
-        case Some(_) => true
+        case Some(t) => t <= gen
         case None => Generations.parseBranchToken(token).isDefined &&
           !inFlightBranchToken(token)
       }
@@ -2078,7 +2066,7 @@ object ManifestStore {
             .foreach(st =>
               verifiedDelete(st.getPath, "emptied partition dir"))
         }
-      } finally StagingLock.release(fs, lock)
+      } finally sweepOwner.foreach(StagingLock.release(fs, lock, _))
       }
     }
   }

@@ -75,8 +75,7 @@ object SnapshotStore {
     (fs, root, g) => fs.exists(genDir(root, g)), prune)
 
   /** The committed generation the pointer serves, if the table has
-    * ever been published (self-heals a crashed swap first, like every
-    * marker read).
+    * ever been published.
     */
   def currentGen(spark: SparkSession, root: String): Option[Long] =
     Generations.currentGen(Tables.fsFor(spark, root), root, layout)
@@ -233,7 +232,7 @@ object SnapshotStore {
       fs.mkdirs(to)
       files.foreach { st =>
         org.apache.hadoop.io.IOUtils.copyBytes(fs.open(st.getPath),
-          fs.create(new Path(to, st.getPath.getName), false), 1 << 16,
+          fs.create(new Path(to, st.getPath.getName), true), 1 << 16,
           true)
       }
       val want = files.map(st => st.getPath.getName -> st.getLen).toMap
@@ -337,8 +336,7 @@ object SnapshotStore {
         case None if nm.startsWith(".lock-") =>
           // a crashed stager's EXPIRED lock is residue; a live one is
           // a writer mid-staging (its own finally releases it)
-          if (now - st.getModificationTime > StagingLock.LeaseMs)
-            verifiedDelete(st.getPath)
+          StagingLock.reclaimExpired(fs, st.getPath)
         case None => Generations.parseBranchToken(nm).foreach {
           case (bn, k) =>
             val head = refs.get(bn).collect {
@@ -600,7 +598,7 @@ object SnapshotStore {
                         keep: Int = 3, retainMs: Long = 0L,
                         force: Boolean = false): Long = {
     val fs = Tables.fsFor(spark, root)
-    val prior = Generations.committed(fs, Generations.pointer(root))
+    val prior = MetaSwap.read(fs, Generations.pointer(root))
     val mainGen = prior.map(Generations.genOf(_, layout)).getOrElse(
       throw new IllegalStateException(s"no published snapshot at $root"))
     val (b, refBytes) =
@@ -672,7 +670,7 @@ object SnapshotStore {
   }
 
   private def servingPointer(spark: SparkSession, root: String): Array[Byte] =
-    Generations.committed(Tables.fsFor(spark, root), Generations.pointer(root))
+    MetaSwap.read(Tables.fsFor(spark, root), Generations.pointer(root))
       .getOrElse(throw new IllegalStateException(
         s"no published snapshot at $root — nothing has been " +
           "promoted yet (SnapshotStore.publish)"))

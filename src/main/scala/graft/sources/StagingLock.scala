@@ -11,31 +11,27 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * catch it. The commit therefore takes this lock, holds it across
   * stage + swap, and re-validates the planned-from pointer inside it.
   *
-  * The lock is OWNED, not merely held: [[acquire]] stamps unique
-  * owner bytes (timestamp + UUID) into the marker and returns them;
-  * the holder hands them back to [[verify]] immediately before its
-  * commit. That ownership check is what makes the crash-recovery
-  * path safe:
+  * The lock is a [[MetaSwap]] marker holding unique owner bytes
+  * (timestamp + UUID), and every transition of it is one of
+  * MetaSwap's exclusive primitives:
   *
+  *  - [[acquire]] is a put-if-absent ([[MetaSwap.create]]): of any
+  *    number of racing writers exactly one owns the lock.
   *  - A crashed stager's lock expires after [[LeaseMs]]. A recoverer
-  *    STEALS it by ATOMIC RENAME to a uniquely-named tombstone — the
-  *    filesystem guarantees exactly one renamer of a given lock
-  *    incarnation succeeds, so two simultaneous recoverers cannot
-  *    both proceed past the steal (the r17 lease-steal race: both
-  *    deleted, both created, both staged).
-  *  - The winner then compares the tombstone's bytes with the bytes
-  *    it OBSERVED when it judged the lock expired. A mismatch means
-  *    it grabbed a FRESH lock a faster recoverer re-created in the
-  *    window between observation and rename — it renames the
-  *    tombstone straight back and fails typed, restoring the live
-  *    owner.
-  *  - After create, the acquirer re-reads the marker and requires
-  *    its own bytes — and every holder re-verifies via [[verify]]
-  *    right before committing. So even a steal that lands DURING a
-  *    legitimate stage (a write that outlived the lease) converts
-  *    into a TYPED refusal at the victim's commit, never a silent
-  *    mutual overwrite: the victim's staged residue is unlisted, the
-  *    thief's generation commits alone.
+  *    STEALS it with a compare-and-set swap from the bytes it judged
+  *    expired to its own: exactly one recoverer of a given lock
+  *    incarnation wins, and a recoverer whose observed incarnation was
+  *    already replaced (by a faster recoverer, or released and
+  *    re-taken) fails typed.
+  *  - [[release]] deletes the lock only while it still holds the
+  *    releaser's bytes, so a holder whose lease was stolen never
+  *    deletes the new owner's lock.
+  *  - Every holder re-checks ownership via [[verify]] right before
+  *    committing. So even a steal that lands DURING a legitimate stage
+  *    (a write that outlived the lease) converts into a TYPED refusal
+  *    at the victim's commit, never a silent mutual overwrite: the
+  *    victim's staged residue is unlisted, the thief's generation
+  *    commits alone.
   *
   * Lease contract: size [[LeaseMs]] above the longest staging write.
   * Exceeding it no longer risks silent corruption — the over-lease
@@ -47,75 +43,63 @@ private[graft] object StagingLock {
   val LeaseMs = 15L * 60 * 1000L
 
   /** Test seam: runs after a recoverer has observed an expired lock
-    * (bytes + mtime) but BEFORE its steal rename — the window the
+    * (bytes + mtime) but BEFORE its steal — the window the
     * double-steal race lives in. Specs park one recoverer here while
-    * another completes the full steal + re-create, then release it
-    * to prove the late recoverer loses typed. Production: no-op.
+    * another completes the full steal, then release it to prove the
+    * late recoverer loses typed. Production: no-op.
     */
   @volatile private[graft] var stealSeam: Path => Unit = _ => ()
 
-  private def nextOf(lock: Path): Path =
-    new Path(lock.getParent, lock.getName + ".next")
-
   /** Acquire the lock at `lock` exclusively, stealing a crashed
-    * holder's expired residue first. Returns this acquisition's owner
-    * stamp — hand it to [[verify]] before the commit the lock
-    * protects. Throws [[MetaSwap.CasFailed]] (with `what` naming the
-    * contended token) when another writer holds or wins the lock.
+    * holder's expired lock. Returns this acquisition's owner stamp —
+    * hand it to [[verify]] before the commit the lock protects and to
+    * [[release]] after. Throws [[MetaSwap.CasFailed]] (with `what`
+    * naming the contended token) when another writer holds or wins
+    * the lock.
     */
   def acquire(fs: FileSystem, lock: Path, what: String): Array[Byte] = {
-    fs.mkdirs(lock.getParent)
-    val st =
-      try Some(fs.getFileStatus(lock))
-      catch { case _: java.io.FileNotFoundException => None }
-    val expired = st.exists(s =>
-      System.currentTimeMillis() - s.getModificationTime > LeaseMs)
-    if (expired) MetaSwap.readIfExists(fs, lock).foreach { observed =>
-      stealSeam(lock)
-      // steal by ATOMIC RENAME: one winner per lock incarnation
-      val tomb = new Path(lock.getParent,
-        lock.getName + ".tomb-" + java.util.UUID.randomUUID().toString)
-      if (fs.rename(lock, tomb)) {
-        val grabbed = MetaSwap.readIfExists(fs, tomb)
-        if (grabbed.exists(java.util.Arrays.equals(_, observed))) {
-          // the expired incarnation we judged dead: reclaim it and
-          // its crashed-create residue, then take the lock normally
-          fs.delete(tomb, false)
-          fs.delete(nextOf(lock), false)
-          ()
-        } else {
-          // a LIVE lock a faster recoverer re-created between our
-          // observation and our rename: put it straight back and
-          // lose typed (if the restore rename fails, a third writer
-          // created in the gap — drop the tombstone; that writer's
-          // own post-create/pre-commit verifies arbitrate ownership)
-          if (!fs.rename(tomb, lock)) fs.delete(tomb, false)
-          throw new MetaSwap.CasFailed(
+    val owner = (s"ts=${System.currentTimeMillis()}\n" +
+      s"owner=${java.util.UUID.randomUUID()}\n").getBytes("UTF-8")
+    expired(fs, lock) match {
+      case Some(observed) =>
+        stealSeam(lock)
+        try MetaSwap.swap(fs, lock, owner, observed)
+        catch {
+          case _: MetaSwap.CasFailed => throw new MetaSwap.CasFailed(
             s"another recoverer re-took the expired staging lock " +
               s"for $what first — nothing was staged or lost; " +
               "re-read and re-run")
         }
-      }
-      // rename failed: another recoverer stole this incarnation
-      // first — fall through; create-exclusive below fails typed
-      // against its fresh lock
+      case None =>
+        try MetaSwap.create(fs, lock, owner)
+        catch {
+          case _: MetaSwap.CasFailed => throw new MetaSwap.CasFailed(
+            s"another writer is STAGING $what right now — concurrent " +
+              "stagers of one generation would overwrite each other's " +
+              "files; re-read and re-run (a crashed stager's lock " +
+              s"expires after ${LeaseMs / 60000} minutes)")
+        }
     }
-    val owner = (s"ts=${System.currentTimeMillis()}\n" +
-      s"owner=${java.util.UUID.randomUUID()}\n").getBytes("UTF-8")
-    try MetaSwap.create(fs, lock, owner)
-    catch {
-      case _: MetaSwap.CasFailed => throw new MetaSwap.CasFailed(
-        s"another writer is STAGING $what right now — concurrent " +
-          "stagers of one generation would overwrite each other's " +
-          "files; re-read and re-run (a crashed stager's lock " +
-          s"expires after ${LeaseMs / 60000} minutes)")
-    }
-    // ownership check before ANY staged byte lands: a recoverer that
-    // observed the PREVIOUS incarnation may have renamed our fresh
-    // lock away in the instant after our create
-    verify(fs, lock, owner, what)
     owner
   }
+
+  /** The lock's bytes if it is past its lease. Bytes first, then age:
+    * a lock released and re-taken between the two reads shows the
+    * fresh lock's mtime and is left alone.
+    */
+  private def expired(fs: FileSystem, lock: Path): Option[Array[Byte]] =
+    MetaSwap.read(fs, lock).filter { _ =>
+      try System.currentTimeMillis() -
+        fs.getFileStatus(lock).getModificationTime > LeaseMs
+      catch { case _: java.io.FileNotFoundException => false }
+    }
+
+  /** A prune's reclaim of a crashed stager's expired lock: deletes only
+    * the incarnation judged expired, never a lock a recoverer re-took
+    * in the meantime.
+    */
+  def reclaimExpired(fs: FileSystem, lock: Path): Unit =
+    expired(fs, lock).foreach(MetaSwap.remove(fs, lock, _))
 
   /** Require the lock still holds exactly this acquisition's `owner`
     * bytes — called by the holder immediately before the commit the
@@ -125,19 +109,19 @@ private[graft] object StagingLock {
     * prune reclaims it).
     */
   def verify(fs: FileSystem, lock: Path, owner: Array[Byte],
-             what: String): Unit = {
-    val held = MetaSwap.readIfExists(fs, lock)
-    if (!held.exists(java.util.Arrays.equals(_, owner)))
+             what: String): Unit =
+    if (!MetaSwap.read(fs, lock).exists(java.util.Arrays.equals(_, owner)))
       throw new MetaSwap.CasFailed(
         s"this writer's staging lock for $what was taken over " +
           s"(lease of ${LeaseMs / 60000} minutes exceeded " +
           "mid-stage, or released) — refusing to commit over the " +
           "new holder; nothing was committed, the staged residue " +
           "is unlisted; re-read and re-run")
-  }
 
-  def release(fs: FileSystem, lock: Path): Unit = {
-    fs.delete(lock, false)
-    ()
+  /** Release the lock if it still holds `owner`'s bytes; a lock a
+    * recoverer stole since stays with its new owner.
+    */
+  def release(fs: FileSystem, lock: Path, owner: Array[Byte]): Unit = {
+    MetaSwap.remove(fs, lock, owner); ()
   }
 }

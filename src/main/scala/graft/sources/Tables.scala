@@ -559,28 +559,6 @@ object Tables {
     else { df.write.mode("overwrite").parquet(path); true }
   }
 
-  /** Data-derived freshness gate (reference: bigquery.py:60
-    * `upload_to_bq_once_a_year`): skip the write when the existing
-    * table's `MAX(lineageDateCol)` falls in the same period as `asOf`
-    * (year granularity, like the reference). The staleness check reads
-    * ONE aggregated value of one column — with parquet column stats
-    * it's a footer read, not a scan.
-    */
-  def appendIfStaleByColumn(spark: SparkSession, df: DataFrame, path: String,
-                            lineageDateCol: String, asOfYear: Int): Boolean = {
-    val fresh = fsFor(spark, path)
-      .exists(new org.apache.hadoop.fs.Path(path)) && {
-      val last = spark.read.parquet(path)
-        .agg(org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.year(
-            org.apache.spark.sql.functions.col(lineageDateCol))))
-        .head()
-      !last.isNullAt(0) && last.getInt(0) == asOfYear
-    }
-    if (fresh) false
-    else { df.write.mode("append").parquet(path); true }
-  }
-
   /** S18 — WRITE-AUDIT-PUBLISH: stage the write, audit WHAT WAS
     * ACTUALLY WRITTEN against a C11 expectation list
     * ([[graft.operators.Cleaning.validateExpectations]]), and only

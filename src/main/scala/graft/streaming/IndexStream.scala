@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * indexes): a Structured Streaming source lands through the index's
   * append one micro-batch at a time — each micro-batch staged once,
   * published as one atomic batch directory and committed by the
-  * self-healing meta swap. Runs with `AvailableNow` and returns the
+  * atomic meta swap. Runs with `AvailableNow` and returns the
   * terminated query.
   *
   * Exactly-once BY CONSTRUCTION, at two independent layers:

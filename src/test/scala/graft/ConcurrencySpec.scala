@@ -245,10 +245,10 @@ class ConcurrencySpec extends AnyFunSuite {
   }
 
   // ---- staging-lock lease-steal races (seam-driven, deterministic) --
-  // The r17 verdict's one defect: two recoverers of an EXPIRED lock
-  // could both delete-then-create and both proceed. The steal is now
-  // an atomic rename to a unique tombstone + content verify; these
-  // schedules force the exact interleavings through the stealSeam.
+  // Two recoverers of an EXPIRED lock must never both proceed. The
+  // steal is a compare-and-set swap from the bytes judged expired;
+  // these schedules force the exact interleavings through the
+  // stealSeam.
 
   import graft.sources.StagingLock
   import org.apache.hadoop.fs.Path
@@ -295,12 +295,12 @@ class ConcurrencySpec extends AnyFunSuite {
       } finally StagingLock.stealSeam = _ => ()
       assert(fastOwner != null, "the fast recoverer never acquired")
       // the surviving lock is the fast recoverer's, byte-exact, and
-      // its pre-commit verify still passes; no tombstone residue
+      // its pre-commit verify still passes; no stage or claim residue
       StagingLock.verify(fs, lock, fastOwner, "gen 7 (fast)")
       val residue = fs.listStatus(new Path(s"$dir/_writes"))
-        .map(_.getPath.getName).filter(_.contains(".tomb-"))
+        .map(_.getPath.getName).filter(MetaSwap.isStage)
       assert(residue.isEmpty,
-        s"tombstone residue after the race: ${residue.mkString(",")}")
+        s"stage residue after the race: ${residue.mkString(",")}")
     } finally rmTree(dir)
   }
 
@@ -324,6 +324,16 @@ class ConcurrencySpec extends AnyFunSuite {
       assert(e.getMessage.contains("taken over"))
       // ... while the recoverer's ownership stands
       StagingLock.verify(fs, lock, thief, "gen 9 (recoverer)")
+      // the victim's release (its commit's finally) must leave the
+      // thief's lock in place: deleting it would let a third writer
+      // stage into the thief's generation
+      StagingLock.release(fs, lock, victim)
+      StagingLock.verify(fs, lock, thief, "gen 9 (recoverer)")
+      intercept[MetaSwap.CasFailed] {
+        StagingLock.acquire(fs, lock, "gen 9 (third)")
+      }
+      StagingLock.release(fs, lock, thief)
+      assert(!fs.exists(lock), "the owner's release left its lock")
     } finally rmTree(dir)
   }
 
@@ -358,8 +368,8 @@ class ConcurrencySpec extends AnyFunSuite {
         "the losing publish staged files")
       assert(ManifestStore.currentGen(spark, root).contains(1L))
       // competitor done → release; the retry serves generation 2
-      StagingLock.release(fs, lock)
       assert(competitor != null)
+      StagingLock.release(fs, lock, competitor)
       val g = ManifestStore.publish(spark,
         Seq((9L, "a")).toDF("k", "p"), root, "p", keep = 10)
       assert(g == 2L)

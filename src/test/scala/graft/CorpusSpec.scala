@@ -719,15 +719,15 @@ class CorpusSpec extends AnyFunSuite {
       assert(Bm25.bm25TopKIndexed(spark, path, query, k = 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
         .toSet == inline)
-      // meta swap self-heal: the crash window between delete(_meta)
-      // and rename(_meta.next) leaves only _meta.next — the next
-      // reader completes the swap and serves
-      assert(new java.io.File(path, "_meta")
-        .renameTo(new java.io.File(path, "_meta.next")))
+      // a meta swap that crashed before its rename leaves its stage
+      // file beside the intact _meta: readers never look at it
+      val stageFile = new java.io.File(graft.sources.MetaSwap.stagePath(
+        new org.apache.hadoop.fs.Path(s"$path/_meta")).toUri.getPath)
+      java.nio.file.Files.write(stageFile.toPath,
+        "n=1\nbatches=\nretired=\ngen=99\n".getBytes("UTF-8"))
       assert(Bm25.bm25TopKIndexed(spark, path, query, k = 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
         .toSet == inline)
-      assert(new java.io.File(path, "_meta").exists)
       // commit marker: no meta at all (crash mid-rebuild) → loud
       // refusal instead of serving half an index
       assert(new java.io.File(path, "_meta").delete())
@@ -735,6 +735,12 @@ class CorpusSpec extends AnyFunSuite {
         Bm25.bm25TopKIndexed(spark, path, query, k = 5)
       }
       assert(e.getMessage.contains("_meta"))
+      // the rebuild over the crashed root reclaims the stage residue
+      Bm25.writeBm25Index(docs, "doc_id", "text", path)
+      assert(!stageFile.exists, "the rebuild left the stage residue")
+      assert(Bm25.bm25TopKIndexed(spark, path, query, k = 10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+        .toSet == inline)
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm)

@@ -222,57 +222,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       if (silent(f)) false else super.delete(f, recursive)
   }
 
-  /** A FileSystem where another writer wins every `.next` rename and
-    * releases the marker again before the caller's own rename runs:
-    * the caller's rename then finds neither source nor destination,
-    * which the local FS reports with a FileNotFoundException (not
-    * false).
-    */
-  private class RenameRaceFs(u: org.apache.hadoop.fs.FileSystem)
-      extends org.apache.hadoop.fs.FilterFileSystem(u) {
-    override def rename(src: org.apache.hadoop.fs.Path,
-                        dst: org.apache.hadoop.fs.Path): Boolean = {
-      if (src.getName.endsWith(".next")) {
-        super.rename(src, dst)
-        super.delete(dst, false)
-      }
-      super.rename(src, dst)
-    }
-  }
-
-  test("a marker rename that loses its .next to a writer that already " +
-      "committed and released is judged by the marker, never a raw " +
-      "FileNotFoundException") {
-    val dir = tmp("rename-race")
-    try {
-      val root = dir.toString
-      val real = hadoopFs(root)
-      val raced = new RenameRaceFs(real)
-      raced.setConf(spark.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(s"$root/_meta")
-      val next = new org.apache.hadoop.fs.Path(s"$root/_meta.next")
-      def bytes(s: String) = s.getBytes("UTF-8")
-      // create-exclusive: the stage file went to another writer — a
-      // typed loss the racers retry, not an untyped crash
-      intercept[MetaSwap.CasFailed] {
-        MetaSwap.create(raced, marker, bytes("a"))
-      }
-      // a late healer of a swap another healer already completed (and
-      // whose marker was since released) finds nothing left to do
-      val out = real.create(next, true)
-      try out.write(bytes("b")) finally out.close()
-      MetaSwap.heal(raced, marker)
-      assert(!real.exists(marker) && !real.exists(next))
-      // the swap's own rename lost the same way: the marker holds
-      // nothing of this writer's, the existing refusal reports it
-      MetaSwap.create(real, marker, bytes("c"))
-      val e = intercept[IllegalArgumentException] {
-        MetaSwap.swap(raced, marker, bytes("d"), bytes("c"))
-      }
-      assert(e.getMessage.contains("marker swap failed"))
-    } finally rmTree(dir)
-  }
-
   /** A FileSystem whose open() fails the first `n` times for chosen
     * names, then recovers — the one-off-hiccup simulator the marker
     * read-retry loop exists for.

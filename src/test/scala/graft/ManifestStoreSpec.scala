@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.IndexAudit
-import graft.sources.{ManifestStore, Tables}
+import graft.sources.{ManifestStore, MetaSwap, Tables}
 
 /** S20 — the manifest table: generations as FILE LISTS over an
   * immutable pool, so partition-scoped promotions write only changed
@@ -765,19 +765,6 @@ class ManifestStoreSpec extends AnyFunSuite {
       assert(headEntries.filter(_.partition == "2")
         .forall(_.relPath.startsWith("_writes/r-wap-1/")))
 
-      // the WAP review step: diffRef previews exactly what the
-      // fast-forward will change — partition 2's rows swap, the rest
-      // is unchanged (and therefore absent from the change set)
-      val preview = ManifestStore.diffRef(spark, root, "wap",
-        Seq("id")).collect()
-        .map(r => r.getAs[String]("id") -> r.getAs[String]("change"))
-      assert(preview.filter(_._2 == "added").map(_._1).toSet ==
-        (1 to 5).map(i => s"b1-2-$i").toSet)
-      assert(preview.filter(_._2 == "removed").map(_._1).toSet ==
-        (1 to 5).map(i => s"g1-2-$i").toSet)
-      assert(!preview.exists(_._2 == "changed"))
-      assert(preview.count(_._2 == "unchanged") == 15)
-
       // a failing audit refuses the fast-forward with main untouched
       // (the branch's partition-2 ids are b1-*, violating the rule)
       intercept[graft.AuditFailed] {
@@ -952,7 +939,8 @@ class ManifestStoreSpec extends AnyFunSuite {
         String) => Long,
       readRef: (String, String) => org.apache.spark.sql.DataFrame,
       tag: (String, String) => Long,
-      healthy: String => Boolean)
+      healthy: String => Boolean,
+      repair: String => Seq[String])
 
   private lazy val refLayouts = {
     import graft.sources.SnapshotStore
@@ -964,14 +952,18 @@ class ManifestStoreSpec extends AnyFunSuite {
         (df, root, n) => ManifestStore.publishToBranch(spark, df, root, n),
         (root, n) => ManifestStore.readRef(spark, root, n),
         (root, n) => ManifestStore.tag(spark, root, n),
-        root => IndexAudit.isManifestTableHealthy(spark, root)),
+        root => IndexAudit.isManifestTableHealthy(spark, root),
+        root => IndexAudit.repairManifestTable(spark, root).collect()
+          .map(_.getString(2)).toSeq),
       RefLayout("snapshot",
         (df, root, _) => SnapshotStore.publish(spark, df, root),
         (root, n) => SnapshotStore.branch(spark, root, n),
         (df, root, n) => SnapshotStore.publishToBranch(spark, df, root, n),
         (root, n) => SnapshotStore.readRef(spark, root, n),
         (root, n) => SnapshotStore.tag(spark, root, n),
-        root => IndexAudit.isSnapshotsHealthy(spark, root)))
+        root => IndexAudit.isSnapshotsHealthy(spark, root),
+        root => IndexAudit.repairSnapshots(spark, root).collect()
+          .map(_.getString(2)).toSeq))
   }
 
   test("refs crash honesty: a ref CAS that died mid-swap (only " +
@@ -991,21 +983,24 @@ class ManifestStoreSpec extends AnyFunSuite {
       L.branch(root, "b")
       L.publishToBranch(batch("b1", Seq(0)), root, "b")
       val branchRows = rows(L.readRef(root, "b"))
-      // simulate the crash window of the ref swap: the committed
-      // marker deleted, the staged .next not yet renamed in
+      // the crash state of a ref swap: a writer died after staging
+      // its bytes, before the rename — the committed marker intact,
+      // its stage file beside it
       val marker = new org.apache.hadoop.fs.Path(s"$root/_refs/b")
-      val next = new org.apache.hadoop.fs.Path(s"$root/_refs/b.next")
-      org.apache.hadoop.fs.FileUtil.copy(fs, marker, fs, next, false,
+      val stage = MetaSwap.stagePath(marker)
+      org.apache.hadoop.fs.FileUtil.copy(fs, marker, fs, stage, false,
         spark.sparkContext.hadoopConfiguration)
-      assert(fs.delete(marker, false))
-      // a main publish prunes — it must HEAL the ref first, keep the
-      // branch head, and keep the branch's unique files
+      // a main publish prunes — the stage is not a ref: the branch
+      // head and the branch's unique files stay
       L.publish(batch("g2", Seq(1)), root, "p")
-      assert(fs.exists(marker),
-        s"${L.name}: prune must heal the crashed swap")
+      assert(graft.sources.Generations.refs(fs, root).keySet == Set("b"),
+        L.name)
       assert(rows(L.readRef(root, "b")) == branchRows,
-        s"${L.name}: the branch must serve in full after the healed prune")
+        s"${L.name}: the branch must serve in full after the prune")
       assert(L.healthy(root), L.name)
+      // the fsck reclaims the stage and leaves the ref
+      assert(L.repair(root).contains("reclaimed_swap_residue"), L.name)
+      assert(!fs.exists(stage) && fs.exists(marker), L.name)
     } finally rmTree(dir)
     }
   }
@@ -1292,21 +1287,23 @@ class ManifestStoreSpec extends AnyFunSuite {
     } finally rmTree(dir)
   }
 
-  test("ref-name hygiene: '.next' suffix refuses (it is the swap " +
-      "protocol's temp-marker namespace), and a TAG pinning a " +
+  test("ref-name hygiene: a leading dot refuses (it is the marker " +
+      "protocol's stage-file namespace), and a TAG pinning a " +
       "zero-entry generation serves empty through the SQL ref view") {
     val dir = tmp("manirefhyg")
     try {
       val root = dir.toString + "/t"
       val nation = Tables.table(spark, sf, "nation")
       ManifestStore.publish(spark, nation, root, "n_regionkey")
-      // 'foo.next' committed as a REF would read to heal/rawRefs as
-      // ref 'foo's crashed swap and be silently renamed over it
+      // a ref named like a stage file would be skipped by every
+      // ref-set reader and reclaimed by the fsck
+      val stageName = MetaSwap.stagePath(
+        new org.apache.hadoop.fs.Path(s"$root/_refs/foo")).getName
       intercept[IllegalArgumentException] {
-        ManifestStore.tag(spark, root, "foo.next")
+        ManifestStore.tag(spark, root, stageName)
       }
       intercept[IllegalArgumentException] {
-        ManifestStore.branch(spark, root, "bar.next")
+        ManifestStore.branch(spark, root, stageName)
       }
       // a tag on a generation that a later full-table delete emptied:
       // the ref=<tag> SQL path serves schema-with-no-rows, exactly

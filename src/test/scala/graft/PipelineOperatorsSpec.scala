@@ -1217,11 +1217,17 @@ class PipelineOperatorsSpec extends AnyFunSuite {
       // the zero-downtime republish: repoint, the serve follows
       VectorIndex.writePointer(spark, s"$root/current", s"$root/v2")
       assert(serveVia() == v2)
-      // crashed swap (delete committed, only .next left) self-heals
-      assert(new java.io.File(root, "current")
-        .renameTo(new java.io.File(root, "current.next")))
+      // a repoint that crashed before its rename leaves its stage
+      // file (naming v1) beside the intact pointer: the serve ignores
+      // it, and the next repoint commits over it
+      val pointer = new org.apache.hadoop.fs.Path(s"$root/current")
+      val stage = graft.sources.MetaSwap.stagePath(pointer)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(stage.toUri.getPath),
+        s"$root/v1\n".getBytes("UTF-8"))
       assert(serveVia() == v2)
-      assert(new java.io.File(root, "current").exists)
+      VectorIndex.writePointer(spark, s"$root/current", s"$root/v1")
+      assert(serveVia() == v1)
     } finally SparkTestSession.rmTree(dir)
   }
 
@@ -1254,19 +1260,22 @@ class PipelineOperatorsSpec extends AnyFunSuite {
       assert(e.getMessage.contains("COMMITTED"))
       assert(serve().collect().toSet == before,
         "a refused rebuild damaged the serving index")
+      // a meta swap that crashed before its rename leaves its stage
+      // file beside the intact _meta: the serve never reads it
+      val stage = graft.sources.MetaSwap.stagePath(
+        new org.apache.hadoop.fs.Path(s"$path/_meta"))
+      val stageFile = new java.io.File(stage.toUri.getPath)
+      java.nio.file.Files.write(stageFile.toPath,
+        "m=4\ndim=64\nbatches=\nretired=\ngen=9\n".getBytes("UTF-8"))
+      assert(serve().collect().toSet == before)
       // a crashed bootstrap (artifacts present, _meta never written)
-      // is residue: re-running write wipes and rebuilds cleanly
+      // is residue: re-running write wipes it, the stage included,
+      // and rebuilds cleanly
       assert(new java.io.File(path, "_meta").delete())
       VectorIndex.write(emb, "vec_id", "embedding", cents, cb, m, dim,
         path)
       assert(serve().collect().toSet == before)
-      // meta swap self-heal (BM25 parity): the crash window between
-      // delete(_meta) and rename(_meta.next) leaves only _meta.next —
-      // the next reader completes the swap and serves
-      assert(new java.io.File(path, "_meta")
-        .renameTo(new java.io.File(path, "_meta.next")))
-      assert(serve().collect().toSet == before)
-      assert(new java.io.File(path, "_meta").exists)
+      assert(!stageFile.exists, "the rebuild left the stage residue")
       // memberless probed cells (partitionBy writes no directory for
       // a cell with no members): the serve returns the EMPTY result
       // in the exact scored schema — never a throw on a healthy

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{MetaSwap, SnapshotStore, Tables}
+import graft.sources.{Generations, MetaSwap, SnapshotStore, Tables}
 
 /** S19 — the snapshot-table pointer protocol: zero-downtime
   * promotion, time travel, bounded retention, audit-gated publish,
@@ -351,12 +351,15 @@ class SnapshotStoreSpec extends AnyFunSuite {
         nation.filter(col("n_regionkey") < 2), root, keep = 3) // gen 2
       assert(IndexAudit.isSnapshotsHealthy(spark, root))
       // plants: crashed-publish residue (cur+1), impossible future
-      // gen, an interrupted swap's leftover `.next`
+      // gen, a pointer swap that crashed before its rename (its stage
+      // file beside the intact pointer)
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_snapshots/3"))
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_snapshots/9"))
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$root/_current.next"), true)
+      val stage = MetaSwap.stagePath(Generations.pointer(root))
+      val out = fs.create(stage, true)
       try out.write("gen=3\n".getBytes("UTF-8")) finally out.close()
+      // readers ignore the stage: the pointer still serves gen 2
+      assert(SnapshotStore.currentGen(spark, root).contains(2L))
       val got = IndexAudit.auditSnapshots(spark, root, keep = 1)
         .map(f => (f.kind, f.name, f.status, f.healthy)).toSet
       assert(got == Set(
@@ -382,8 +385,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
       // generation untouched
       assert(!fs.exists(new org.apache.hadoop.fs.Path(
         s"$root/_snapshots/3")))
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        s"$root/_current.next")))
+      assert(!fs.exists(stage))
       assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$root/_snapshots/9")))
       assert(rows(SnapshotStore.readCurrent(spark, root)) == served)
@@ -408,14 +410,19 @@ class SnapshotStoreSpec extends AnyFunSuite {
       SnapshotStore.publish(spark, nation, root, keep = 3)
       SnapshotStore.publish(spark,
         nation.filter(col("n_regionkey") < 2), root, keep = 3)
-      // a crashed swap's ONLY-.next form heals on the audit's own
-      // committed read and is reported as the residue it was
-      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/_current"),
-        new org.apache.hadoop.fs.Path(s"$root/_current.next")))
-      val healed = IndexAudit.auditSnapshots(spark, root)
-      assert(healed.exists(f => f.status == "swap_residue" && f.healthy))
-      assert(healed.exists(f => f.status == "current_ok"))
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/_current")))
+      // a pointer swap that crashed before its rename leaves its stage
+      // beside the intact pointer: reported as residue, never read,
+      // and reclaimed by repair
+      val stage = MetaSwap.stagePath(Generations.pointer(root))
+      val st = fs.create(stage, true)
+      try st.write("gen=3\n".getBytes("UTF-8")) finally st.close()
+      val crashed = IndexAudit.auditSnapshots(spark, root)
+      assert(crashed.exists(f => f.status == "swap_residue" && f.healthy))
+      assert(crashed.exists(f => f.status == "current_ok"))
+      assert(SnapshotStore.currentGen(spark, root).contains(2L))
+      assert(IndexAudit.repairSnapshots(spark, root).collect()
+        .map(_.getString(2)).toSeq == Seq("reclaimed_swap_residue"))
+      assert(!fs.exists(stage))
       // the serving target vanishes: reported, never repointed-around
       assert(fs.delete(new org.apache.hadoop.fs.Path(
         s"$root/_snapshots/2"), true))
@@ -676,11 +683,10 @@ class SnapshotStoreSpec extends AnyFunSuite {
       SnapshotStore.publish(spark, nation, root, keep = 3)
       SnapshotStore.publish(spark,
         nation.filter(col("n_regionkey") < 2), root, keep = 3)
-      // the last good bytes survive in a leftover .next (the
-      // crashed-after-stage swap form); then the committed pointer
-      // is corrupted
-      val next = fs.create(
-        new org.apache.hadoop.fs.Path(s"$root/_current.next"), true)
+      // the last good bytes survive in a crashed swap's stage file;
+      // then the committed pointer is corrupted
+      val stage = MetaSwap.stagePath(Generations.pointer(root))
+      val next = fs.create(stage, true)
       try next.write("gen=2\n".getBytes("UTF-8")) finally next.close()
       val out = fs.create(
         new org.apache.hadoop.fs.Path(s"$root/_current"), true)
@@ -699,11 +705,10 @@ class SnapshotStoreSpec extends AnyFunSuite {
       val acts = IndexAudit.repairSnapshots(spark, root).collect()
         .map(_.getString(2)).toSet
       assert(acts == Set("unrepairable_corrupt_pointer"), acts.toString)
-      // the .next evidence (the last good bytes) and every gen dir
+      // the stage evidence (the last good bytes) and every gen dir
       // survive the repair — rewriting the pointer is the operator's
       // explicit call
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        s"$root/_current.next")))
+      assert(fs.exists(stage))
       assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$root/_snapshots/1")))
       assert(fs.exists(new org.apache.hadoop.fs.Path(
@@ -1083,5 +1088,30 @@ class SnapshotStoreSpec extends AnyFunSuite {
         .flatMap(offenders(_, "keep=$")).toList
     }
     assert(pointerWriters.isEmpty, pointerWriters.mkString("\n"))
+  }
+
+  test("one marker primitive: no main file but MetaSwap names a " +
+      "marker's stage protocol or creates a file non-overwriting") {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(src),
+      s"run from the project root: $src not found")
+    // `.next` as a name (not an iterator's `next()`), the old swap's
+    // `heal`, and a create-exclusive by `create(…, false)`
+    val forbidden = Seq(
+      """\.next\b(?!\s*\()""".r,
+      """\bheal\b""".r,
+      """\.create\((?:[^()]|\([^()]*\))*,\s*false\s*\)""".r)
+    val offenders = java.nio.file.Files.walk(src).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "MetaSwap.scala")
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        forbidden.flatMap(_.findAllMatchIn(text)).map { m =>
+          val line = text.substring(0, m.start).count(_ == '\n') + 1
+          s"${src.relativize(p)}:$line: ${m.matched}"
+        }
+      }.toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -42,20 +42,6 @@ class SourcesSpec extends AnyFunSuite {
       nowMillis = System.currentTimeMillis() + 366L * 86400000L))
   }
 
-  test("data-derived freshness gate: same-year data skips, new year appends") {
-    val tmp = java.nio.file.Files.createTempDirectory("t").toString + "/x"
-    import spark.implicits._
-    val y2025 = Seq(("a", "2025-06-01")).toDF("k", "d")
-      .withColumn("d", org.apache.spark.sql.functions.col("d").cast("date"))
-    assert(graft.sources.Tables.appendIfStaleByColumn(
-      spark, y2025, tmp, "d", 2025)) // first write
-    assert(!graft.sources.Tables.appendIfStaleByColumn(
-      spark, y2025, tmp, "d", 2025)) // same year → skip
-    assert(graft.sources.Tables.appendIfStaleByColumn(
-      spark, y2025, tmp, "d", 2026)) // new year → append
-    assert(spark.read.parquet(tmp).count() == 2)
-  }
-
   test("ORC round-trip preserves values; filters push into the ORC scan") {
     val sup = Tables.table(spark, sf, "supplier")
     val tmp = java.nio.file.Files.createTempDirectory("t").toString

@@ -62,25 +62,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("S9 streaming: manifest ingestion lands payloads from a watched dir") {
-    import graft.sources.Ingest
-    val dir = java.nio.file.Files.createTempDirectory("graft-sing").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.jsonl"),
-      "{\"k\": 1}\n{\"k\": 2}".getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "b.jsonl"),
-      "{\"k\": 3}".getBytes("UTF-8"))
-    val landed = Ingest.landRawJson(
-      Ingest.manifestStreamFromDir(spark, dir), "k INT", "2026-08-12")
-    val q = EventStream.runToMemory(landed, "stream_ingest", "append")
-    try {
-      val rows = spark.table("stream_ingest").collect()
-      assert(rows.length == 3)
-      assert(rows.forall(_.getString(2) == "2026-08-12"))
-      assert(rows.exists(r => r.getInt(0) == 3 &&
-        r.getString(1).endsWith("b.jsonl")))
-    } finally q.stop()
-  }
-
   test("E4: streaming dedup drops duplicate event_ids within watermark") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
