@@ -594,11 +594,11 @@ object Pipeline {
     * dedup — a later, higher-quality near-dup does NOT displace an
     * accepted doc; re-canonicalization is a bootstrap re-run's job).
     * Accepted docs append to silver, the WHOLE batch publishes to the
-    * index as one atomic batch directory (see [[indexDir]] and
+    * index as one committed batch (see [[indexDir]] and
     * [[Dedup.writeDedupIndex]]), gold rebuilds ONLY the shards the
     * accepted docs touched (see [[corpusGold]]), and a replayed batch
-    * is refused LOUDLY by an O(1) marker probe — the guard's cost
-    * never grows with the corpus. Returns the accepted count.
+    * is refused LOUDLY by an O(1) meta and marker probe — the guard's
+    * cost never grows with the corpus. Returns the accepted count.
     *
     * `batch` needs (doc_id, lang, text) with ids disjoint from every
     * earlier batch — the landing-zone invariant. An exact replay is
@@ -850,15 +850,16 @@ object Pipeline {
     * Commit protocol (all idempotent under retry):
     *  1. compute the accepted set ([[classifyCleaned]]'s accept
     *     label);
-    *  2. publish ONE batch directory to the index via
-    *     [[Dedup.writeDedupIndex]]'s staged atomic rename, carrying
+    *  2. append ONE batch to the index via [[Dedup.writeDedupIndex]]'s
+    *     protocol (staged, committed by the `_meta` swap), carrying
     *     the accepted docs' silver rows as a commit record
     *     (`accepted/` side table) — before this point a crash leaves
     *     no visible state at all;
     *  3. land the accepted rows into silver, rebuild gold for the
     *     touched shards, then write the batch's `_landed` marker.
-    * A retry of a FULLY landed batch is refused loudly (O(1) marker
-    * probe). A retry after a crash between 2 and 3 RESUMES: the
+    * A retry of a FULLY landed batch is refused loudly (one `_meta`
+    * read and one marker probe; a retired id counts as landed). A
+    * retry after a crash between 2 and 3 RESUMES: the
     * accepted set is read back from the commit record (never
     * recomputed — recomputing against a half-committed index would
     * mis-classify near-dups of this batch's own docs), silver gets
@@ -879,20 +880,23 @@ object Pipeline {
     // next empty day would be refused as its replay)
     if (rows == 0L) return 0L
     val batchDir = new org.apache.hadoop.fs.Path(s"$idx/batches/$bid")
-    val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Tables.fsFor(spark, idx)
     val landedMarker = new org.apache.hadoop.fs.Path(batchDir, "_landed")
+    val index = Dedup.readMeta(fs, idx)
+    val resuming = index.batches.contains(bid)
     // the LANDED subtype, not the parent: this is the one replay the
     // streaming sink may treat as "already done" — the batch finished
-    // the whole protocol, silver/gold included. Index-level append
-    // refusals further down (writeDedupIndex's dir-exists guard on a
-    // batch another writer published but never landed) stay the parent
-    // type and fail the stream loudly: swallowing them would drop a
-    // micro-batch that never reached silver/gold.
-    if (fs.exists(landedMarker)) throw new graft.BatchAlreadyLanded(
-      s"corpusIncrement replay refused: batch $bid has already been " +
-        s"processed and landed at $batchDir — re-submitting a committed " +
-        "batch would double-count it")
-    val resuming = fs.exists(batchDir)
+    // the whole protocol, silver/gold included. A retired id was
+    // compacted or retracted away, which both refuse while a batch is
+    // mid-landing, so it landed. The index-level append refusal further
+    // down (a batch another writer committed after this read) stays the
+    // parent type and fails the stream loudly: swallowing it would drop
+    // a micro-batch that never reached silver/gold.
+    if (index.retired.contains(bid) || (resuming && fs.exists(landedMarker)))
+      throw new graft.BatchAlreadyLanded(
+        s"corpusIncrement replay refused: batch $bid has already been " +
+          s"processed and landed in the index at $idx — re-submitting a " +
+          "committed batch would double-count it")
     if (!resuming) Dedup.withIndexSketch(cleaned, "doc_id", "norm_text",
         idx, rows) { sketch =>
       val acceptIds = classifyCleaned(spark, outDir, cleaned, sketch)
@@ -966,7 +970,7 @@ object Pipeline {
     *     re-run to finish the rebuild.
     *  3. DEDUP INDEX — band/shingle rows, exact-dup hash evidence,
     *     and the batches' `accepted` text records scrub via
-    *     [[Dedup.retractFromDedupIndex]] (tombstoned originals keep
+    *     [[Dedup.retractFromDedupIndex]] (the retired originals keep
     *     refusing replays, so a redelivered batch cannot resurrect
     *     the doc).
     *  4. Optionally a BM25 postings index and a vector index over the

@@ -23,11 +23,12 @@ class ReplayRefused(msg: String) extends IllegalStateException(msg)
 
 /** The LANDING-ZONE replay specifically: this batch completed the full
   * corpusIncrement commit protocol — index batch published, silver
-  * landed, gold rebuilt, `_landed` marker written. This is the only
-  * refusal [[graft.streaming.CorpusStream]] may treat as "already
-  * done": an INDEX-level append refusal inside the same pipeline
-  * (e.g. [[graft.operators.Dedup.writeDedupIndex]]'s dir-exists guard
-  * firing on a batch some other writer published but never landed)
+  * landed, gold rebuilt, `_landed` marker written (or its id retired
+  * by a compaction or retraction, which refuse mid-landing batches).
+  * This is the only refusal [[graft.streaming.CorpusStream]] may treat
+  * as "already done": an INDEX-level append refusal inside the same
+  * pipeline (e.g. [[graft.operators.Dedup.writeDedupIndex]]'s replay
+  * guard firing on a batch some other writer committed but never landed)
   * means silver/gold did NOT receive the batch, and swallowing it
   * would silently drop the micro-batch's documents — so those stay
   * the parent type and fail the stream loudly.

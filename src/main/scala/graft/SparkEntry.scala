@@ -1430,17 +1430,18 @@ object SparkEntry {
             "healthy_after", "snapshot_served")
       }
     }),
-    // ---- §2.7 A6f dedup-index fsck (directory-visibility) --------
-    // the same never-trust-the-filesystem pass as A6d, retargeted at
-    // the MinHash dedup index whose visibility IS directory presence:
-    // build a real two-batch index, compact it (merged batch + two
-    // replay tombstones), plant one incident of each class — a
-    // crashed landing (commit record without _landed), filesystem
-    // damage (partial payload), staging residue, dropping residue —
-    // and recount the structure-driven status inventory against a
-    // literal oracle. Repair runs in-gate behind requires: residue
-    // reclaimed, unrepairables reported not papered over, and the
-    // index audits healthy once the planted damage is lifted.
+    // ---- §2.7 A6f dedup-index fsck ---------------------------------
+    // the A6d never-trust-the-filesystem pass on the MinHash dedup
+    // index, which runs the same batch-list protocol: build a real
+    // two-batch index and compact it (one merged batch, two retired
+    // ids), then plant one incident of each class the audit reaches on
+    // a dedup root — a crashed landing (a committed batch with a commit
+    // record and no _landed), filesystem damage (a committed batch's
+    // half payload), an unlisted orphan directory — and recount the
+    // status inventory against a literal oracle. Repair runs in-gate
+    // behind requires: damage reported not papered over, the orphan
+    // scheduled for reclaim, and the index audits healthy once the
+    // planted damage is lifted.
     "q_dedup_index_audit" -> ((s, d) => {
       Checkpoints.tempDir("graft-dfsck") { dir =>
         val idx = s"$dir/idx"
@@ -1453,34 +1454,34 @@ object SparkEntry {
           mode = "append")
         val merged = graft.operators.Dedup.compactDedupIndex(s, idx)
         val fs = Tables.fsFor(s, idx)
-        def mk(p: String) = {
-          require(fs.mkdirs(new org.apache.hadoop.fs.Path(p))); ()
-        }
-        mk(s"$idx/batches/$merged/accepted") // crashed landing
-        mk(s"$idx/batches/feedbead01/bands") // FS damage: half payload
-        mk(s"$idx/_staging/crashed1")
-        mk(s"$idx/_dropping/crashed2")
+        // crashed landing: a batch committed with its commit record
+        val day = docs.filter(col("doc_id") % 3 === 2)
+        val landing = graft.operators.Dedup.writeDedupIndex(day, "doc_id",
+          "text", idx, mode = "append", sideTables = Seq("accepted" -> day))
+        require(fs.delete(new org.apache.hadoop.fs.Path(
+          s"$idx/batches/$merged/shingles"), true)) // FS damage
+        require(fs.mkdirs(new org.apache.hadoop.fs.Path(
+          s"$idx/batches/feedbead01")))             // unlisted orphan
         val report = Checkpoints.truncate(
-          graft.operators.IndexAudit.auditDedupDf(s, idx)
+          graft.operators.IndexAudit.audit(s, idx)
             .groupBy(col("kind"), col("status"), col("healthy"))
             .agg(count(lit(1)).as("n")))
-        require(!graft.operators.IndexAudit.isDedupHealthy(s, idx))
-        // repair: residue reclaimed, damage reported — never hidden
-        val acts = graft.operators.IndexAudit.repairDedup(s, idx)
+        require(!graft.operators.IndexAudit.isHealthy(s, idx))
+        // repair: damage reported — never hidden — and the orphan
+        // scheduled behind the orphan grace, not deleted
+        val acts = graft.operators.IndexAudit.repair(s, idx)
           .collect().map(_.getString(2)).sorted.toSeq
         require(acts == Seq("needs_increment_retry",
-          "reclaimed_dropping", "reclaimed_staging",
+          "scheduled_reclaim_orphan_grace",
           "unrepairable_partial_payload"), acts.toString)
-        require(!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$idx/_staging/crashed1")))
-        require(!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$idx/_dropping/crashed2")))
-        // lifting the planted damage restores a healthy audit
-        require(fs.delete(new org.apache.hadoop.fs.Path(
-          s"$idx/batches/$merged/accepted"), true))
-        require(fs.delete(new org.apache.hadoop.fs.Path(
-          s"$idx/batches/feedbead01"), true))
-        require(graft.operators.IndexAudit.isDedupHealthy(s, idx))
+        require(fs.exists(new org.apache.hadoop.fs.Path(
+          s"$idx/_pending_delete/feedbead01")))
+        // lifting the planted damage restores a healthy audit: the
+        // landing finishes, the damaged batch is dropped
+        fs.create(new org.apache.hadoop.fs.Path(
+          s"$idx/batches/$landing/_landed"), true).close()
+        require(graft.operators.Dedup.dropBatchFromIndex(s, idx, merged))
+        require(graft.operators.IndexAudit.isHealthy(s, idx))
         report
       }
     }),
@@ -6236,18 +6237,18 @@ object SparkEntry {
         |  CAST(1 AS BIGINT) AS history_rerecorded,
         |  CAST(1 AS BIGINT) AS dirs_reclaimed,
         |  true AS healthy_after, true AS snapshot_served""".stripMargin,
-    // the dedup fsck inventory is structure-driven: one merged active
-    // batch carrying the planted crashed-landing record, two replay
-    // tombstones from the compaction, one planted half-payload dir,
-    // one staging and one dropping residue, params present
+    // the dedup fsck inventory is structure-driven: the two batches
+    // the compaction retired (directories reclaimed), the merged batch
+    // with its planted half payload, the appended batch with its
+    // planted crashed landing, one planted orphan directory, and the
+    // current gen's snapshot record
     "q_dedup_index_audit" ->
       """SELECT * FROM (VALUES
         |  ('batch', 'mid_landing', false, CAST(1 AS BIGINT)),
         |  ('batch', 'partial_payload', false, CAST(1 AS BIGINT)),
-        |  ('batch', 'tombstone', true, CAST(2 AS BIGINT)),
-        |  ('dropping', 'residue', true, CAST(1 AS BIGINT)),
-        |  ('meta', 'params_present', true, CAST(1 AS BIGINT)),
-        |  ('staging', 'residue', true, CAST(1 AS BIGINT))
+        |  ('batch', 'retired_reclaimed', true, CAST(2 AS BIGINT)),
+        |  ('dir', 'orphan', false, CAST(1 AS BIGINT)),
+        |  ('history', 'current_recorded', true, CAST(1 AS BIGINT))
         |) AS t(kind, status, healthy, n)""".stripMargin,
     "q_embed_kmeans" ->
       s"""WITH c0 AS (

@@ -311,7 +311,7 @@ object Bm25 {
     // empty-result branch must produce the exact schema a non-empty
     // probe would, or downstream unions/comparisons break on the
     // no-match case
-    Layout.bootstrap(fs, path) { staging =>
+    Layout.bootstrap(fs, path, "bootstrap") { staging =>
       val (n, sl) = stagePostings(docs, idCol, textCol, staging)
       Bm25Meta(n, sl, idCol, docs.schema(idCol).dataType.sql, Nil)
     }
@@ -489,7 +489,9 @@ object Bm25 {
         else Some(((vs.getLong(0), if (vs.isNullAt(1)) 0L else vs.getLong(1)),
           rows.join(broadcast(idsDf), Seq(meta.idCol), "left_anti")))
       }
-    }((remainder, staging) => writePostings(remainder, staging)) { hits =>
+    } { (remainder, staging) =>
+      !remainder.isEmpty && { writePostings(remainder, staging); true }
+    } { hits =>
       meta.copy(n = meta.n - hits.map(_._1).sum,
         sumLen = meta.sumLen - hits.map(_._2).sum)
     }

@@ -42,14 +42,6 @@ object Dedup {
   // concat_ws(...)))` HOF chain, whose lambdas ran interpreted per
   // element — one fused loop per row instead.
 
-  /** Word n-gram shingles of a text column (empty array below n
-    * words). Convenience form for single-expression use; pipelines
-    * should materialize tokens once and use [[shinglesFromTokens]]
-    * (see [[shingleIndex]]).
-    */
-  def wordShingles(c: Column, n: Int = 3): Column =
-    shinglesFromTokens(TextFunctions.tokens(c), n)
-
   /** D1 — exact duplicate groups: one row per distinct text with the
     * surviving (minimum) id and copy count.
     */
@@ -111,10 +103,6 @@ object Dedup {
           when(col(s"m$i").isNotNull,
             format_string("%08x", col(s"m$i"))).as(s"mh$i")): _*)
   }
-
-  def minhashSignature(df: DataFrame, idCol: String, textCol: String,
-                       k: Int = 16): DataFrame =
-    signatureFromIndex(shingleIndex(df, idCol, textCol), k)
 
   /** One (sid, band-bucket) row per band of each signature — the LSH
     * key space both the batch and incremental candidate joins use.
@@ -455,62 +443,74 @@ object Dedup {
     (id, if (r.isNullAt(3)) 0L else r.getLong(3))
   }
 
-  /** The index's structural parameters, persisted at `_meta` in the
-    * index root so every append and every query runs with the SAME
-    * signature scheme and document-frequency cap the index was built
-    * with — a k/band/cap mismatch between writer and reader silently
-    * shifts candidate generation and Jaccard counts, so it is checked
-    * loudly instead. `maxDocFreq = -1` encodes "no cap".
+  /** The committed state of a [[writeDedupIndex]] index: the signature
+    * scheme every append and every query must run with — `k` minhash
+    * slices, `rowsPerBand` rows per LSH band and the boilerplate df-cap
+    * `maxDocFreq` (-1: no cap); a mismatch between writer and reader
+    * silently shifts candidate generation and Jaccard counts, so it is
+    * refused — and the shared batch lists ([[IndexProtocol.Listed]]).
     */
-  private[graft] final case class IndexMeta(k: Int, rowsPerBand: Int,
-                                            maxDocFreq: Int)
+  private[graft] final case class DedupMeta(k: Int, rowsPerBand: Int,
+                                            maxDocFreq: Int,
+                                            batches: Seq[String] = Nil,
+                                            retired: Seq[String] = Nil,
+                                            gen: Long = 0L)
+      extends IndexProtocol.Listed
 
-  // one shared resolver ([[graft.sources.Tables.fsFor]]) so "the same
-  // FS primitive as every publish path" is structural, not copy-paste
-  private def fsFor(df: DataFrame,
-                    path: String): org.apache.hadoop.fs.FileSystem =
-    graft.sources.Tables.fsFor(df.sparkSession, path)
-
-  private def metaPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_meta")
-
-  private[graft] def readIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                                   path: String): Option[IndexMeta] =
-    graft.sources.MetaSwap.read(fs, metaPath(path)).map { raw =>
-      val kv = new String(raw, "UTF-8").linesIterator
-        .map(_.split("=", 2)).collect {
-          case Array(a, b) => a -> b.toInt
-        }.toMap
-      IndexMeta(kv("k"), kv("rowsPerBand"), kv("maxDocFreq"))
-    }
-
-  private def writeIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                             path: String, m: IndexMeta): Unit =
-    graft.sources.MetaSwap.swap(fs, metaPath(path),
-      s"k=${m.k}\nrowsPerBand=${m.rowsPerBand}\nmaxDocFreq=${m.maxDocFreq}\n"
-        .getBytes("UTF-8"))
-
-  /** Every published batch directory under the index root (markers and
-    * staging excluded by construction — staging lives at `_staging/`,
-    * never under `batches/`).
+  /** The dedup index on the shared batch-list protocol: head `k,
+    * rowsPerBand, maxDocFreq`. A committed batch `batches/<bid>/`
+    * holds `bands/` and `shingles/`, plus the side tables its writer
+    * staged (`hashes/`, `accepted/`) and, once its landing finished,
+    * the `_landed` marker.
     */
-  private def batchSubPaths(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String, sub: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(s"$path/batches")
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).filter(_.isDirectory)
-      .map(st => new org.apache.hadoop.fs.Path(st.getPath, sub))
-      .filter(fs.exists).map(_.toString).toSeq
+  private object Layout extends IndexProtocol.BatchList[DedupMeta](
+      "dedup index", "writeDedupIndex",
+      "double its (sid, sh) rows and shift every Jaccard verify count") {
+    protected def head(m: DedupMeta) = Seq("k" -> m.k,
+      "rowsPerBand" -> m.rowsPerBand, "maxDocFreq" -> m.maxDocFreq)
+    protected def fromKv(kv: Map[String, String], batches: Seq[String],
+                         retired: Seq[String], gen: Long) =
+      DedupMeta(kv("k").toInt, kv("rowsPerBand").toInt,
+        kv("maxDocFreq").toInt, batches, retired, gen)
+    protected def withLists(m: DedupMeta, batches: Seq[String],
+                            retired: Seq[String], gen: Long) =
+      m.copy(batches = batches, retired = retired, gen = gen)
   }
 
-  /** The exact-dup evidence (`norm_hash`) of every published batch
-    * that carries a `hashes/` side table, as one scan relation — `None`
-    * when no batch does. See [[readHashTables]] for the layouts read.
+  private def fsFor(spark: org.apache.spark.sql.SparkSession,
+                    path: String): org.apache.hadoop.fs.FileSystem =
+    graft.sources.Tables.fsFor(spark, path)
+
+  /** The committed meta of the index at `path` (one `_meta` read). */
+  private[graft] def readMeta(fs: org.apache.hadoop.fs.FileSystem,
+                              path: String): DedupMeta =
+    Layout.read(fs, path)._1
+
+  /** `table` of each of `batches`: a committed batch always carries
+    * `bands/` and `shingles/`, so the committed list names them without
+    * a listing.
+    */
+  private def tablePaths(path: String, batches: Seq[String],
+                         table: String): Seq[String] =
+    batches.map(b => s"$path/batches/$b/$table")
+
+  /** The `hashes/` side tables of `batches` that exist — the one
+    * optional table (a bare [[writeDedupIndex]] batch has none), so
+    * the one probed per batch.
+    */
+  private def hashPaths(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                        batches: Seq[String]): Seq[String] =
+    tablePaths(path, batches, "hashes")
+      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+
+  /** The exact-dup evidence (`norm_hash`) of every committed batch that
+    * carries a `hashes/` side table, as one scan relation — `None` when
+    * none does. See [[readHashTables]] for the layouts read.
     */
   private[graft] def readBatchHashes(spark: org.apache.spark.sql.SparkSession,
                                      path: String): Option[DataFrame] = {
-    val paths = batchSubPaths(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), path, "hashes")
+    val fs = fsFor(spark, path)
+    val paths = hashPaths(fs, path, readMeta(fs, path).batches)
     if (paths.isEmpty) None else Some(readHashTables(spark, paths))
   }
 
@@ -541,34 +541,35 @@ object Dedup {
     * cluster into their own files) and `shingles/` (sid, sh — what the
     * exact-Jaccard verify needs for intersection counts and set
     * sizes), with `<batch-id>` derived from the batch's id set
-    * ([[batchId]]). The index is append-only state, the shape the
-    * reference keeps in its warehouse-native append loads
-    * (bigquery.py:141): `mode = "append"` adds one batch directory and
-    * never touches existing files.
+    * ([[batchId]]) — the bootstrap batch's too. The index is
+    * append-only state, the shape the reference keeps in its
+    * warehouse-native append loads (bigquery.py:141): `mode = "append"`
+    * adds one batch directory and never touches existing files.
     *
-    * Commit protocol: both tables (plus any `sideTables` commit
-    * records) are first written under `_staging/<batch-id>/`, then
-    * PUBLISHED with one atomic directory rename — so the
-    * two-table-write crash window of a naive append does not exist: a
-    * crash mid-stage leaves the live index untouched and the retry
-    * re-stages over the residue. (On stores without atomic rename —
-    * raw S3 — use a real table format's commit; this is the same
-    * caveat as [[graft.sources.Tables.compact]].)
+    * Commit protocol: the shared batch list ([[IndexProtocol.BatchList]]).
+    * Both tables (plus any `sideTables` commit records) are staged
+    * under `_staging/<batch-id>/` and moved into `batches/`, and the
+    * batch becomes visible only when the `_meta` compare-and-set swap
+    * lists it — a crash anywhere before the swap leaves the served
+    * index untouched, and the retry re-stages over the residue. The
+    * swap is the only commit, so the index needs no atomic directory
+    * rename (an object store's rename is a copy). `overwrite` wipes the
+    * root and commits the batch as the gen-0 meta.
     *
-    * Replay guard, O(1): a batch id that already has a published
-    * directory is refused LOUDLY — a silently re-appended batch would
-    * double (sid, sh) rows and shift every downstream Jaccard verify
-    * count. The guard's cost never grows with the corpus (the r6
-    * design scanned the stored sid column per append — O(corpus) every
-    * day). `auditOverlap = true` additionally runs that full
-    * column-pruned sid-overlap scan, refusing PARTIAL overlaps (a
-    * malformed batch that reuses some already-indexed ids without
-    * being an exact replay) — the maintenance-audit form, not the
-    * daily path. Repair tooling: [[dropBatchFromIndex]] removes a
-    * batch directory (the executable form of "drop the batch's
-    * band/shingle rows"). As defense in depth
-    * [[minhashDedupAgainstIndex]] also dedupes the
-    * candidate-restricted stored shingles it reads.
+    * Replay guard, O(1): a batch id on the meta's committed or retired
+    * list is refused LOUDLY ([[graft.ReplayRefused]]) — a silently
+    * re-appended batch would double (sid, sh) rows and shift every
+    * downstream Jaccard verify count. The guard's cost never grows
+    * with the corpus (the r6 design scanned the stored sid column per
+    * append — O(corpus) every day). `auditOverlap = true` additionally
+    * runs that full column-pruned sid-overlap scan over the committed
+    * batches, refusing PARTIAL overlaps (a malformed batch that reuses
+    * some already-indexed ids without being an exact replay) — the
+    * maintenance-audit form, not the daily path. Repair tooling:
+    * [[dropBatchFromIndex]] delists a batch (the executable form of
+    * "drop the batch's band/shingle rows"). As defense in depth
+    * [[minhashDedupAgainstIndex]] also dedupes the candidate-restricted
+    * stored shingles it reads.
     *
     * `maxDocFreq` is the boilerplate df-cap ([[minhashDedup]]'s
     * rationale), applied to this batch's shingles BEFORE the signature
@@ -602,8 +603,8 @@ object Dedup {
       s"mode must be overwrite|append, got $mode")
     val cap =
       if (mode == "overwrite") maxDocFreq.getOrElse(-1)
-      else indexCap(fsFor(df, path), path, k, rowsPerBand, maxDocFreq,
-        "append")
+      else indexCap(fsFor(df.sparkSession, path), path, k, rowsPerBand,
+        maxDocFreq, "append")
     withBatchSketch(df, idCol, textCol, k, rowsPerBand, cap,
         local = false) { sk =>
       publishBatch(sk, df, idCol, path, mode, auditOverlap, sideTables,
@@ -613,26 +614,25 @@ object Dedup {
 
   /** The df-cap a batch must be sketched with to join or extend the
     * index at `path`: the one its `_meta` records (a k/band/cap
-    * mismatch is refused), else `maxDocFreq` (-1: no cap).
+    * mismatch is refused).
     */
   private def indexCap(fs: org.apache.hadoop.fs.FileSystem, path: String,
                        k: Int, rowsPerBand: Int,
-                       maxDocFreq: Option[Int], what: String): Int =
-    readIndexMeta(fs, path) match {
-      case Some(m) =>
-        require(m.k == k && m.rowsPerBand == rowsPerBand,
-          s"index at $path was built with k=${m.k}/rowsPerBand=" +
-            s"${m.rowsPerBand}, $what called with $k/$rowsPerBand")
-        maxDocFreq.foreach(c => require(c == m.maxDocFreq,
-          s"index at $path was built with maxDocFreq=${m.maxDocFreq}, " +
-            s"$what called with $c"))
-        m.maxDocFreq
-      case None => maxDocFreq.getOrElse(-1)
-    }
+                       maxDocFreq: Option[Int], what: String): Int = {
+    val m = readMeta(fs, path)
+    require(m.k == k && m.rowsPerBand == rowsPerBand,
+      s"index at $path was built with k=${m.k}/rowsPerBand=" +
+        s"${m.rowsPerBand}, $what called with $k/$rowsPerBand")
+    maxDocFreq.foreach(c => require(c == m.maxDocFreq,
+      s"index at $path was built with maxDocFreq=${m.maxDocFreq}, " +
+        s"$what called with $c"))
+    m.maxDocFreq
+  }
 
   /** [[writeDedupIndex]] from an already-built sketch of `df`: the
-    * replay guard, the staged write of the sketch's bands and shingles
-    * plus `sideTables`, and the atomic publish. Returns the batch id.
+    * staged write of the sketch's bands and shingles plus `sideTables`,
+    * committed as the bootstrap (`overwrite`) or appended behind the
+    * replay guard (`append`). Returns the batch id.
     */
   private[graft] def publishBatch(sk: BatchSketch, df: DataFrame,
                                   idCol: String, path: String,
@@ -642,72 +642,54 @@ object Dedup {
                                   knownId: Option[String] = None): String = {
     // all probes through the Hadoop FS API, NOT java.io.File: the
     // production index lives on hdfs:// paths where File.exists is
-    // always false and a local-only probe would silently skip the
-    // guard — the exact silent corruption it exists to prevent
-    val fs = fsFor(df, path)
+    // always false
     val spark = df.sparkSession
+    val fs = fsFor(spark, path)
     val bid = knownId.getOrElse(batchId(df, idCol))
-    val batchDir = new org.apache.hadoop.fs.Path(s"$path/batches/$bid")
-    val meta = IndexMeta(sk.k, sk.rowsPerBand, sk.cap)
-    val stored = if (mode == "overwrite") None else readIndexMeta(fs, path)
-    if (mode == "overwrite") {
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      ()
-    } else {
-      stored.foreach(m => require(m == meta,
-        s"index at $path was built with $m, the batch is sketched with " +
-          s"$meta"))
-      if (fs.exists(batchDir)) throw new graft.ReplayRefused(
-        s"writeDedupIndex append refused: batch $bid is already " +
-          s"published in the index at $path — a duplicated/retried " +
-          "append would corrupt Jaccard verify counts " +
-          "(recover with dropBatchFromIndex if this batch must be " +
-          "re-ingested)")
-      if (auditOverlap) {
-        val bandPaths = batchSubPaths(fs, path, "bands")
-        if (bandPaths.nonEmpty) {
-          val stored = readBatchTables(spark, bandPaths).select(col("sid"))
-          val batchIds = df.select(col(idCol).as("sid")).distinct()
-          val overlap = stored.join(broadcast(batchIds), Seq("sid"),
-            "left_semi").distinct().count()
-          if (overlap > 0L) throw new graft.ReplayRefused(
-            s"writeDedupIndex append refused: $overlap batch id(s) are " +
-              s"already in the index at $path — a duplicated/retried " +
-              "append would corrupt Jaccard verify counts")
-        }
+    val scheme = DedupMeta(sk.k, sk.rowsPerBand, sk.cap)
+    def stage(staging: org.apache.hadoop.fs.Path): Unit = {
+      // band rides BOTH as a data column and as the partition directory
+      // (band_p): the directory clusters each band's buckets into their
+      // own files, while the data column keeps every batch directory a
+      // uniform self-contained table — which is what lets the reader
+      // union any number of batch dirs in ONE scan relation
+      // (recursiveFileLookup) instead of per-batch plans or a
+      // partition-discovery walk over heterogeneous roots
+      sk.bands.withColumn("band_p", col("band"))
+        .write.mode("overwrite").partitionBy("band_p")
+        .parquet(s"$staging/bands")
+      sk.sh.write.mode("overwrite").parquet(s"$staging/shingles")
+      // side tables (commit records, exact-dup evidence) ride the same
+      // publish, each written with its own partitioning — the caller
+      // coalesces a batch-sized record, corpus-sized evidence keeps its
+      // parallelism
+      sideTables.foreach { case (name, t) =>
+        t.write.mode("overwrite").parquet(s"$staging/$name")
       }
     }
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_staging/$bid")
-    // VERIFIED wipe: the writes below refresh only CHILDREN of the
-    // rename source, so a silently surviving sibling from a crashed
-    // earlier stage would be committed by the publish rename
-    if (fs.exists(staging) && !fs.delete(staging, true))
-      throw new IllegalStateException(
-        s"cannot wipe stale staging at $staging before publishing " +
-          s"batch $bid")
-    // band rides BOTH as a data column and as the partition directory
-    // (band_p): the directory clusters each band's buckets into their
-    // own files, while the data column keeps every batch directory a
-    // uniform self-contained table — which is what lets the reader
-    // union any number of batch dirs in ONE scan relation
-    // (recursiveFileLookup) instead of per-batch plans or a
-    // partition-discovery walk over heterogeneous roots
-    sk.bands.withColumn("band_p", col("band"))
-      .write.mode("overwrite").partitionBy("band_p")
-      .parquet(s"$staging/bands")
-    sk.sh.write.mode("overwrite").parquet(s"$staging/shingles")
-    // side tables (commit records, exact-dup evidence) ride the same
-    // atomic publish, each written with its own partitioning — the
-    // caller coalesces a batch-sized record, corpus-sized evidence
-    // keeps its parallelism
-    sideTables.foreach { case (name, t) =>
-      t.write.mode("overwrite").parquet(s"$staging/$name")
-    }
-    if (stored.isEmpty) writeIndexMeta(fs, path, meta)
-    fs.mkdirs(batchDir.getParent)
-    if (!fs.rename(staging, batchDir)) throw new IllegalStateException(
-      s"cannot publish staged batch $staging to $batchDir")
-    bid
+    if (mode == "overwrite") {
+      Layout.wipe(fs, path,
+        Seq("_meta", "_meta_history", "_pending_delete", "_staging",
+          "batches"))
+      Layout.bootstrap(fs, path, bid) { staging => stage(staging); scheme }
+      bid
+    } else Layout.append(fs, path) { m =>
+      require(m.copy(batches = Nil, retired = Nil, gen = 0L) == scheme,
+        s"index at $path was built with $m, the batch is sketched with " +
+          s"$scheme")
+      if (auditOverlap && m.batches.nonEmpty) {
+        val stored = readBatchTables(spark,
+          tablePaths(path, m.batches, "bands")).select(col("sid"))
+        val batchIds = df.select(col(idCol).as("sid")).distinct()
+        val overlap = stored.join(broadcast(batchIds), Seq("sid"),
+          "left_semi").distinct().count()
+        if (overlap > 0L) throw new graft.ReplayRefused(
+          s"writeDedupIndex append refused: $overlap batch id(s) are " +
+            s"already in the index at $path — a duplicated/retried " +
+            "append would corrupt Jaccard verify counts")
+      }
+      bid
+    } { (m, staging) => stage(staging); m }
   }
 
   /** One batch's side of the incremental dedup index, derived once and
@@ -801,268 +783,209 @@ object Dedup {
     }
   }
 
-  /** Remove one published batch from a [[writeDedupIndex]] index — the
+  /** Remove one committed batch from a [[writeDedupIndex]] index — the
     * executable repair for an indexed-but-never-landed batch (see
     * [[graft.Pipeline.corpusIncrement]]'s commit protocol, which
     * normally recovers WITHOUT this: the helper exists for operator
     * intervention, e.g. re-ingesting a batch that was published with
-    * bad data). Returns true if the batch existed.
-    *
-    * Crash honesty: the batch leaves visibility with one ATOMIC
-    * rename into `_dropping/` (readers list only `batches/`), and
-    * only then does the recursive delete run — a crash mid-delete
-    * leaves invisible residue, never a PARTIAL batch whose surviving
-    * band files would silently shrink candidate generation. Residue
-    * under `_dropping/` is reclaimed by the next drop of the same id.
+    * bad data, or dropping a batch whose payload the audit reports
+    * damaged). The batch leaves the committed list in one `_meta` swap
+    * ([[IndexProtocol.BatchList.delist]]) and is not retired, so the
+    * same content may be appended again; its directory is deleted
+    * after the swap, and a crash in between leaves an unlisted
+    * directory no probe reads. Returns true if the batch was committed.
     */
   def dropBatchFromIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, batchId: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/batches/$batchId")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_staging/$batchId"),
-      true)
-    val dropping =
-      new org.apache.hadoop.fs.Path(s"$path/_dropping/$batchId")
-    fs.delete(dropping, true)
-    if (!fs.exists(p)) false
-    else {
-      fs.mkdirs(dropping.getParent)
-      require(fs.rename(p, dropping),
-        s"cannot move batch $batchId out of visibility ($p → $dropping)")
-      fs.delete(dropping, true)
+    val fs = fsFor(spark, path)
+    val (meta, raw) = Layout.read(fs, path)
+    meta.batches.contains(batchId) && {
+      Layout.delist(fs, path,
+        meta.copy(batches = meta.batches.filterNot(_ == batchId)), raw,
+        Seq(batchId), 0L)
       true
     }
   }
 
+  /** Refuse a maintenance pass over `meta`'s committed batches while
+    * one of them is damaged or mid-landing ([[payloadStatus]]): a
+    * mid-landing batch's `accepted/` record is the recovery state
+    * [[graft.Pipeline.corpusIncrement]] still needs (retiring the batch
+    * would also make its resume refuse as landed), and merging or
+    * rewriting around a half payload would silently shrink candidate
+    * generation and destroy the evidence, while before the pass the
+    * incident is recoverable (restore the directory, or
+    * [[dropBatchFromIndex]] + re-ingest).
+    */
+  private def refuseUnsettled(fs: org.apache.hadoop.fs.FileSystem,
+                              path: String, meta: DedupMeta,
+                              what: String): Unit = {
+    val status = meta.batches.flatMap(b => payloadStatus(fs, path, b)
+      .map(b -> _))
+    def named(s: String) = status.collect { case (b, `s`) => b }
+    require(named("mid_landing").isEmpty,
+      s"refusing to $what $path: ${named("mid_landing").length} " +
+        "batch(es) are mid-landing (commit record without _landed) — " +
+        s"resume or drop them first: ${named("mid_landing").mkString(", ")}")
+    if (named("partial_payload").nonEmpty) throw new graft.IndexUnhealthy(
+      s"refusing to $what $path: batch(es) " +
+        s"${named("partial_payload").mkString(", ")} have a partial " +
+        "payload (bands or shingles missing) — merging around it would " +
+        "silently shrink candidate generation and retire the evidence; " +
+        "restore the directory or dropBatchFromIndex + re-ingest " +
+        "(IndexAudit.audit for the full report)")
+  }
+
+  /** What the shared audit cannot see in a committed dedup batch whose
+    * directory exists: `mid_landing` — a commit record (`accepted/`)
+    * without its `_landed` marker, a crashed
+    * [[graft.Pipeline.corpusIncrement]] that re-running the same batch
+    * resumes — or `partial_payload`, bands or shingles missing, which
+    * the staged publish cannot produce (filesystem damage). None for a
+    * whole batch.
+    */
+  private[graft] def payloadStatus(fs: org.apache.hadoop.fs.FileSystem,
+                                   path: String,
+                                   bid: String): Option[String] = {
+    def has(t: String) =
+      fs.exists(new org.apache.hadoop.fs.Path(s"$path/batches/$bid/$t"))
+    if (has("accepted") && !has("_landed")) Some("mid_landing")
+    else if (!has("bands") || !has("shingles")) Some("partial_payload")
+    else None
+  }
+
+  /** [[payloadStatus]] for the index at `path` when it is a dedup
+    * index (its meta carries the dedup head), else no finding — what
+    * [[IndexAudit]] adds to the shared audit.
+    */
+  private[graft] def payloadCheck(fs: org.apache.hadoop.fs.FileSystem,
+                                  path: String): String => Option[String] =
+    if (IndexProtocol.metaKv(fs, path).contains("rowsPerBand"))
+      payloadStatus(fs, path, _)
+    else _ => None
+
   /** DOC-LEVEL RETRACTION (the takedown/opt-out path, R1 — the
-    * [[Bm25.retractFromBm25Index]] discipline on the directory-
-    * visibility index): physically remove `sids`' band/shingle rows —
-    * and `normHashes`' exact-dup evidence — from every published
-    * batch. Per affected batch the remainder republishes as a fresh
-    * `r…` batch directory (atomic rename), and the superseded batch
-    * is TOMBSTONED the compaction way: payload tables delete, the
-    * directory and its `_landed`/`accepted` markers stay — so the
-    * replay guard still refuses the original batch (a replay would
-    * resurrect the retracted doc) and [[graft.Pipeline]]'s landed
-    * probes are unchanged. Crash honesty matches [[compactDedupIndex]]:
-    * a crash between the republish and the tombstoning leaves
-    * duplicate rows that reads already tolerate AND the retracted
-    * rows still visible — re-run the retraction to finish. Returns
-    * the number of distinct retracted sids found across batches.
+    * [[Bm25.retractFromBm25Index]] discipline): physically remove
+    * `sids`' band/shingle rows — and `normHashes`' exact-dup evidence —
+    * from every committed batch. Per affected batch the remainder
+    * republishes as an `r…` batch and ONE `_meta` swap replaces the
+    * affected ids with their rewrites and RETIRES the originals
+    * ([[IndexProtocol.BatchList.retract]]): a replay of an original
+    * batch is still refused, and [[graft.Pipeline.corpusIncrement]]
+    * refuses it as landed. The originals' directories — `accepted/`
+    * included, which carries the retracted docs' TEXT — are deleted
+    * after the swap. Refuses while a batch is mid-landing or damaged
+    * ([[refuseUnsettled]]). Crash honesty: staged rewrites are unlisted
+    * until the swap, so a crash before it changes nothing a probe
+    * sees; re-run the retraction to finish. Returns the number of
+    * distinct retracted sids found across batches.
     */
   def retractFromDedupIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String, sids: Seq[String],
                             normHashes: Seq[String] = Nil): Long = {
     require(sids.nonEmpty || normHashes.nonEmpty,
       "retractFromDedupIndex needs sids or normHashes")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
+    val (meta, raw) = Layout.read(fs, path)
+    refuseUnsettled(fs, path, meta, "retract from")
     import spark.implicits._
     val sidDf = sids.toDF("sid").distinct()
     val hashDf = normHashes.toDF("norm_hash").distinct()
-    val base = new org.apache.hadoop.fs.Path(s"$path/batches")
-    if (!fs.exists(base)) return 0L
-    // the compactDedupIndex entry guard: a mid-landing batch's
-    // `accepted/` record is live recovery state — tombstoning it
-    // would destroy the resume path; finish or drop the landing first
-    val midLanding = fs.listStatus(base).filter(_.isDirectory)
-      .map(_.getPath).filter(b =>
-        fs.exists(new org.apache.hadoop.fs.Path(b, "accepted")) &&
-          !fs.exists(new org.apache.hadoop.fs.Path(b, "_landed")))
-    require(midLanding.isEmpty,
-      s"refusing to retract from $path: ${midLanding.length} " +
-        "batch(es) are mid-landing (commit record without _landed) — " +
-        "resume or drop them first: " +
-        midLanding.map(_.getName).mkString(", "))
-    var found = 0L
-    fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
-      .sortBy(_.getName).foreach { bdir =>
-        val b = bdir.getName
-        def sub(t: String) = new org.apache.hadoop.fs.Path(bdir, t)
-        def readSub(t: String) = spark.read
-          .option("recursiveFileLookup", "true")
-          .parquet(sub(t).toString)
-        val hasBands = fs.exists(sub("bands"))
-        val hasShingles = fs.exists(sub("shingles"))
-        val hasHashes = fs.exists(sub("hashes"))
-        // the stored sid column keeps the ingest's type (bigint ids
-        // are common); cast the request to it so the join is typed,
-        // never coercion-dependent
-        def sidAs(t: org.apache.spark.sql.types.DataType) =
-          sidDf.select(col("sid").cast(t).as("sid"))
-        val sidHits =
-          if (sids.isEmpty || !hasBands) 0L
-          else {
-            val b0 = readSub("bands")
-            b0.select(col("sid"))
-              .join(broadcast(sidAs(b0.schema("sid").dataType)),
-                Seq("sid"), "left_semi")
-              .distinct().count()
-          }
-        def hashes = readHashTables(spark, Seq(sub("hashes").toString))
-        val hashHits =
-          if (normHashes.isEmpty || !hasHashes) 0L
-          else hashes
-            .join(broadcast(hashDf), Seq("norm_hash"), "left_semi")
+    def sub(b: String, t: String) = s"$path/batches/$b/$t"
+    def has(b: String, t: String) =
+      fs.exists(new org.apache.hadoop.fs.Path(sub(b, t)))
+    def readSub(b: String, t: String) = spark.read
+      .option("recursiveFileLookup", "true").parquet(sub(b, t))
+    // the stored sid column keeps the ingest's type (bigint ids are
+    // common); cast the request to it so the join is typed, never
+    // coercion-dependent
+    def sidsOf(t: DataFrame) = broadcast(sidDf.select(
+      col("sid").cast(t.schema("sid").dataType).as("sid")))
+    def hashes(b: String) = readHashTables(spark, Seq(sub(b, "hashes")))
+    Layout.retract(fs, path, meta, raw, sids ++ normHashes, 0L) { b =>
+      val sidHits =
+        if (sids.isEmpty) 0L
+        else {
+          val b0 = readSub(b, "bands")
+          b0.select(col("sid")).join(sidsOf(b0), Seq("sid"), "left_semi")
             .distinct().count()
-        if (sidHits > 0L || hashHits > 0L) {
-          found += sidHits
-          // the remainder republishes under the shared rewrite id; a
-          // batch whose every table emptied publishes nothing
-          IndexProtocol.publishStaged(fs, path,
-            IndexProtocol.rewriteId(b, sids ++ normHashes)) { staging =>
-            var wroteAny = false
-            if (hasBands) {
-              val b0 = readSub("bands")
-              val rem = b0.join(
-                broadcast(sidAs(b0.schema("sid").dataType)),
-                Seq("sid"), "left_anti")
-              if (!rem.isEmpty) {
-                rem.withColumn("band_p", col("band"))
-                  .repartition(col("band_p"))
-                  .write.mode("overwrite").partitionBy("band_p")
-                  .parquet(s"$staging/bands")
-                wroteAny = true
-              }
-            }
-            if (hasShingles) {
-              val s0 = readSub("shingles")
-              val rem = s0.join(
-                broadcast(sidAs(s0.schema("sid").dataType)),
-                Seq("sid"), "left_anti")
-              if (!rem.isEmpty) {
-                rem.write.mode("overwrite").parquet(s"$staging/shingles")
-                wroteAny = true
-              }
-            }
-            if (hasHashes) {
-              val rem = hashes
-                .join(broadcast(hashDf), Seq("norm_hash"), "left_anti")
-              if (!rem.isEmpty) {
-                rem.write.mode("overwrite").parquet(s"$staging/hashes")
-                wroteAny = true
-              }
-            }
-            if (wroteAny) Some(()) else None
-          }
-          // tombstone the superseded batch: payloads go — `accepted`
-          // included, since it carries the retracted docs' TEXT and
-          // is dead state once `_landed` exists (the compaction
-          // precedent) — while the directory + markers stay (replay
-          // refusal and landed probes unchanged)
-          Seq("bands", "shingles", "hashes", "accepted").foreach(t =>
-            fs.delete(sub(t), true))
         }
-      }
-    found
+      val hashHits =
+        if (normHashes.isEmpty || !has(b, "hashes")) 0L
+        else hashes(b).join(broadcast(hashDf), Seq("norm_hash"), "left_semi")
+          .distinct().count()
+      if (sidHits > 0L || hashHits > 0L) Some((sidHits, b)) else None
+    } { (b, staging) =>
+      // bands and shingles always republish, as every batch carries
+      // them; the rewrite publishes at all only if some row remains
+      val bands = readSub(b, "bands")
+      val bandRem = bands.join(sidsOf(bands), Seq("sid"), "left_anti")
+      bandRem.withColumn("band_p", col("band")).repartition(col("band_p"))
+        .write.mode("overwrite").partitionBy("band_p")
+        .parquet(s"$staging/bands")
+      val shingles = readSub(b, "shingles")
+      val shRem = shingles.join(sidsOf(shingles), Seq("sid"), "left_anti")
+      shRem.write.mode("overwrite").parquet(s"$staging/shingles")
+      val hashRem =
+        if (!has(b, "hashes")) None
+        else Some(hashes(b)
+          .join(broadcast(hashDf), Seq("norm_hash"), "left_anti"))
+      hashRem.foreach(_.write.mode("overwrite").parquet(s"$staging/hashes"))
+      !bandRem.isEmpty || !shRem.isEmpty || hashRem.exists(!_.isEmpty)
+    }(_ => meta).sum
   }
 
-  /** Index MAINTENANCE: merge every published batch's bands/shingles
-    * into ONE batch directory — the compaction a years-lived daily
-    * index eventually needs (file and directory counts grow one batch
-    * per day; see docs/SCALE.md). Correctness-preserving by
-    * construction: queries read the same (sid, band, bucket) and
-    * (sid, sh) row sets afterwards (spec-asserted identical results).
+  /** Index MAINTENANCE: merge every committed batch's bands, shingles
+    * and exact-dup evidence into ONE batch — the compaction a
+    * years-lived daily index eventually needs (file and directory
+    * counts grow one batch per day; see docs/SCALE.md). Correctness-
+    * preserving by construction: queries read the same (sid, band,
+    * bucket) and (sid, sh) row sets afterwards (spec-asserted identical
+    * results). The shared compaction
+    * ([[IndexProtocol.BatchList.compact]]) publishes the merged batch,
+    * swaps the meta to list exactly it and deletes the superseded
+    * directories.
     *
-    * The REPLAY CONTRACT survives compaction: old batch directories
-    * are kept as payload-free tombstones (their `_landed` markers
-    * intact), so both [[writeDedupIndex]]'s exact-replay guard and
-    * [[graft.Pipeline.corpusIncrement]]'s landed-marker probe refuse
-    * re-submissions exactly as before — [[batchSubPaths]] already
-    * skips directories without the requested table, so tombstones
-    * cost nothing at read time.
-    *
-    * Crash honesty: the merged batch publishes first (atomic rename),
-    * then old payloads are deleted. A crash between the two leaves
-    * duplicate rows visible — which the read path already tolerates
-    * (candidates are `distinct`ed and stored shingles are deduped on
-    * read), so the residue degrades performance, never counts; re-run
-    * the compaction to finish the cleanup. Batches that are
-    * mid-landing (a commit record without its `_landed` marker) make
-    * the compaction refuse: their `accepted/` record is the recovery
-    * state [[graft.Pipeline.corpusIncrement]] still needs.
+    * The REPLAY CONTRACT survives compaction: the superseded ids move
+    * to the meta's retired list, kept in full (no cap — a tombstone was
+    * never reclaimed either), so [[writeDedupIndex]] refuses their
+    * re-submission and [[graft.Pipeline.corpusIncrement]] refuses it
+    * as landed. Refuses while a batch is mid-landing or damaged
+    * ([[refuseUnsettled]]); that guard is what makes "retired ⇒
+    * landed" sound.
     *
     * SINGLE MAINTAINER contract (all three indexes): compact/drop and
-    * the append/streaming ingest are one logical writer — run
-    * maintenance in the same scheduler slot as ingest, never
-    * concurrently (a batch published mid-compaction could lose its
-    * payload to the tombstoning pass).
+    * the append/streaming ingest are one logical writer; the
+    * compare-and-set swap fails a compaction loudly when a batch was
+    * committed in between, leaving the appended batch intact.
     *
-    * Returns the merged batch's id.
+    * Returns the merged batch's id (a single committed batch is already
+    * compact and returns its own id).
     */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String): String = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bandPaths = batchSubPaths(fs, path, "bands")
-    require(bandPaths.nonEmpty,
-      s"no published batches to compact at $path")
-    val batchDirs = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/batches"))
-      .filter(_.isDirectory).map(_.getPath)
-    val midLanding = batchDirs.filter(b =>
-      fs.exists(new org.apache.hadoop.fs.Path(b, "accepted")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(b, "_landed")))
-    require(midLanding.isEmpty,
-      s"refusing to compact $path: ${midLanding.length} batch(es) are " +
-        "mid-landing (commit record without _landed) — resume or drop " +
-        s"them first: ${midLanding.map(_.getName).mkString(", ")}")
-    // diagnose BEFORE destroying (the A6f audit at maintenance entry,
-    // the meta-protocol indexes' preflightCompaction twin): a batch
-    // with HALF a payload (exactly one of bands/shingles — impossible
-    // under the atomic publish, so filesystem damage) must refuse —
-    // merging the surviving half and tombstoning the directory would
-    // silently shrink candidate generation and destroy the evidence,
-    // while before compaction the incident is recoverable (restore
-    // the directory, or dropBatchFromIndex + re-ingest)
-    val partial = IndexAudit.auditDedup(spark, path)
-      .collect { case IndexProtocol.AuditFinding(
-        "batch", b, "partial_payload", _) => b }
-    if (partial.nonEmpty) throw new graft.IndexUnhealthy(
-      s"refusing to compact $path: batch(es) " +
-        s"${partial.mkString(", ")} have a partial payload (exactly " +
-        "one of bands/shingles survives) — compacting would merge the " +
-        "surviving half and tombstone the evidence, silently shrinking " +
-        "candidate generation; restore the directory or " +
-        "dropBatchFromIndex + re-ingest (IndexAudit.auditDedup for the " +
-        "full report)")
-    val bands = readBatchTables(spark, bandPaths).distinct()
-    val shingles =
-      readBatchTables(spark, batchSubPaths(fs, path, "shingles"))
-        .distinct()
-    val cid = batchId(bands, "sid")
-    val merged = new org.apache.hadoop.fs.Path(s"$path/batches/$cid")
-    if (!fs.exists(merged)) {
-      val staging = new org.apache.hadoop.fs.Path(s"$path/_staging/$cid")
-      // verified wipe — the writes below refresh only children of
-      // the rename source (the append path's rationale)
-      if (fs.exists(staging) && !fs.delete(staging, true))
-        throw new IllegalStateException(
-          s"cannot wipe stale compaction staging at $staging")
+    val fs = fsFor(spark, path)
+    refuseUnsettled(fs, path, readMeta(fs, path), "compact")
+    Layout.compact(fs, path, 0L, Int.MaxValue, () => (),
+        () => ()) { (m, staging) =>
       // DEFRAGMENT, not just merge (the compactBm25Index rationale):
       // cluster rows by their partition value before each partitioned
       // write so every partition dir lands as ~one file instead of
       // one per (task × value) — file count is what compaction cuts
-      bands.withColumn("band_p", col("band"))
+      readBatchTables(spark, tablePaths(path, m.batches, "bands"))
+        .distinct().withColumn("band_p", col("band"))
         .repartition(col("band_p"))
         .write.mode("overwrite").partitionBy("band_p")
         .parquet(s"$staging/bands")
-      shingles.write.mode("overwrite").parquet(s"$staging/shingles")
+      readBatchTables(spark, tablePaths(path, m.batches, "shingles"))
+        .distinct().write.mode("overwrite").parquet(s"$staging/shingles")
       // the exact-dup evidence (corpus pipelines only) compacts with
       // everything else: every batch's `hashes/` — either layout —
       // folds into one unpartitioned table the probe reads as one
-      readBatchHashes(spark, path).foreach(
-        _.distinct().write.mode("overwrite").parquet(s"$staging/hashes"))
-      if (!fs.rename(staging, merged)) throw new IllegalStateException(
-        s"cannot publish compacted batch $staging to $merged")
+      val hashes = hashPaths(fs, path, m.batches)
+      if (hashes.nonEmpty) readHashTables(spark, hashes).distinct()
+        .write.mode("overwrite").parquet(s"$staging/hashes")
     }
-    // tombstone the superseded batches: drop payloads, keep the
-    // directory + marker so replay refusal is unchanged
-    batchDirs.filter(_.getName != cid).foreach { b =>
-      Seq("bands", "shingles", "accepted", "hashes").foreach(t =>
-        fs.delete(new org.apache.hadoop.fs.Path(b, t), true))
-    }
-    cid
   }
 
   /** D8 (production shape) — incremental MinHash dedup of `newBatch`
@@ -1133,7 +1056,8 @@ object Dedup {
     // the batch side MUST run the same signature scheme and df-cap the
     // stored index was built with (see writeDedupIndex's meta
     // rationale) — inherit the cap, refuse a k/band mismatch
-    val cap = indexCap(fsFor(batch, path), path, k, rowsPerBand, None,
+    val cap = indexCap(fsFor(batch.sparkSession, path), path, k,
+      rowsPerBand, None,
       "query")
     // long ids only: the one-task verify keys its maps by long id
     val local = localRows >= 0 && batch.schema(idCol).dataType ==
@@ -1156,12 +1080,12 @@ object Dedup {
                                  verifyBytes: Long = LocalVerifyBytes)
       : DataFrame = {
     val spark = sk.sh.sparkSession
-    val fs = fsFor(sk.sh, path)
-    val bandPaths = batchSubPaths(fs, path, "bands")
-    require(bandPaths.nonEmpty,
-      s"no dedup index published at $path — build one with " +
-        "writeDedupIndex before querying against it")
-    val shinglePaths = batchSubPaths(fs, path, "shingles")
+    val batches = readMeta(fsFor(spark, path), path).batches
+    require(batches.nonEmpty,
+      s"no committed batch in the dedup index at $path — append one " +
+        "with writeDedupIndex before querying against it")
+    val bandPaths = tablePaths(path, batches, "bands")
+    val shinglePaths = tablePaths(path, batches, "shingles")
     // the stored tables share the batch's schema (same id column), so
     // no footer-reading schema inference job runs
     def stored(paths: Seq[String], as: DataFrame) =

@@ -3,11 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The PUBLIC surface of the persisted-index integrity audit
-  * ([[IndexProtocol.auditIndex]]) — fsck for the three serve loops
-  * built on the shared batch-directory protocol (the BM25 postings
-  * index, the vector index; the MinHash dedup index keeps
-  * directory-visibility and gets its own taxonomy below,
-  * [[auditDedup]]/[[repairDedup]]). An operator runs
+  * ([[IndexProtocol.auditIndex]]) — fsck for the three indexes built
+  * on the shared batch-list protocol (the BM25 postings index, the
+  * vector index and the MinHash dedup index), plus the two table
+  * layouts' own taxonomies below. An operator runs
   * this after an incident — a crashed maintenance job, a filesystem
   * event, a suspicious probe failure — and gets a bounded, typed
   * report instead of paging through directory listings: every meta
@@ -15,13 +14,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * classified against the committed truth, with `healthy=false` rows
   * marking the states that need action (a committed batch with no
   * payload, an unlisted orphan directory, a stale marker on a
-  * committed id, a lost current-gen snapshot record).
+  * committed id, a lost current-gen snapshot record). On a dedup
+  * index each committed batch's payload is classified too
+  * ([[Dedup.payloadStatus]]): `mid_landing`, a crashed
+  * [[graft.Pipeline.corpusIncrement]], and `partial_payload`,
+  * filesystem damage — both unhealthy.
   *
-  * Pure metadata cost — one `_meta` read plus three listings, bounded
-  * by the batch count (which compaction bounds), never by data size:
-  * the audit of a 100 TB index costs the same as that of a 100 MB
-  * one. The reference has no index to audit (BigQuery owns its
-  * storage, bigquery.py:105); this is the operational complement the
+  * Pure metadata cost — one `_meta` read plus three listings (and, on
+  * a dedup index, a few stats per committed batch), bounded by the
+  * batch count (which compaction bounds), never by data size: the
+  * audit of a 100 TB index costs the same as that of a 100 MB one.
+  * The reference has no index to audit (BigQuery owns its storage,
+  * bigquery.py:105); this is the operational complement the
   * lakehouse restatement needs once the storage layout is ours.
   */
 object IndexAudit {
@@ -34,11 +38,23 @@ object IndexAudit {
     */
   def audit(spark: SparkSession, path: String,
             nowMs: Long = System.currentTimeMillis()): DataFrame = {
-    val fs = graft.sources.Tables.fsFor(spark, path)
-    val rows = IndexProtocol.auditIndex(fs, path, nowMs)
     import spark.implicits._
-    rows.map(f => (f.kind, f.name, f.status, f.healthy))
-      .toDF("kind", "name", "status", "healthy")
+    findings(spark, path, nowMs).map(f => (f.kind, f.name, f.status,
+      f.healthy)).toDF("kind", "name", "status", "healthy")
+  }
+
+  /** [[IndexProtocol.auditIndex]], with a dedup index's committed
+    * batches classified by payload ([[Dedup.payloadCheck]]).
+    */
+  private def findings(spark: SparkSession, path: String, nowMs: Long)
+      : Seq[IndexProtocol.AuditFinding] = {
+    val fs = graft.sources.Tables.fsFor(spark, path)
+    val payload = Dedup.payloadCheck(fs, path)
+    IndexProtocol.auditIndex(fs, path, nowMs).map {
+      case f @ IndexProtocol.AuditFinding("batch", b, "committed_ok", _) =>
+        payload(b).fold(f)(IndexProtocol.AuditFinding("batch", b, _, false))
+      case f => f
+    }
   }
 
   /** The one-line health verdict a scheduler branches on: true iff
@@ -46,151 +62,7 @@ object IndexAudit {
     */
   def isHealthy(spark: SparkSession, path: String,
                 nowMs: Long = System.currentTimeMillis()): Boolean =
-    IndexProtocol.auditIndex(
-      graft.sources.Tables.fsFor(spark, path), path, nowMs)
-      .forall(_.healthy)
-
-  // ---- the DEDUP index's fsck (directory-visibility protocol) ----
-  // The MinHash dedup index (Dedup.writeDedupIndex) does not carry a
-  // committed-list meta: visibility IS directory presence under
-  // `batches/`, staging lives at `_staging/`, drops retire through
-  // `_dropping/`, compaction tombstones superseded batches by
-  // deleting their payload tables while keeping the directory (the
-  // replay guard), and corpusIncrement's commit record is the
-  // `accepted/` table with `_landed` as its completion marker. The
-  // incident classes are the same as the meta-protocol indexes —
-  // orphan staging, crashed-drop residue, lost payload, a crashed
-  // landing — so the audit surface is too; only the classification
-  // source differs (listings instead of a meta).
-
-  /** Audit a [[Dedup.writeDedupIndex]] root; one
-    * [[IndexProtocol.AuditFinding]] per entity, deterministic order.
-    * Pure metadata cost — four listings plus one stat per batch
-    * directory, bounded by batch count (which compaction bounds).
-    *
-    * Statuses (healthy=true unless noted):
-    *  - meta/params_present — the structural `_meta` (k/rowsPerBand/
-    *    maxDocFreq) is readable
-    *  - meta/params_missing (UNHEALTHY) — batches exist but the
-    *    params record is gone: appends and queries cannot verify
-    *    they run the index's signature scheme
-    *  - batch/active_ok — payload tables (bands + shingles) present
-    *  - batch/tombstone — payload-free replay tombstone (the
-    *    post-compaction shape; refusals still work)
-    *  - batch/mid_landing (UNHEALTHY) — commit record (`accepted/`)
-    *    without its `_landed` marker: a crashed
-    *    [[graft.Pipeline.corpusIncrement]]; re-running the same
-    *    batch resumes it (compaction refuses until then)
-    *  - batch/partial_payload (UNHEALTHY) — exactly one of
-    *    bands/shingles survives: impossible under the atomic publish,
-    *    so it marks filesystem damage; candidate generation would
-    *    silently shrink — drop and re-ingest the batch
-    *  - staging/residue — a crashed stage's `_staging/<bid>`;
-    *    reclaimable (the next stage of the same batch overwrites it)
-    *  - dropping/residue — a crashed drop's `_dropping/<bid>`;
-    *    already invisible, reclaimable
-    */
-  def auditDedup(spark: SparkSession, path: String)
-      : Seq[IndexProtocol.AuditFinding] = {
-    val fs = graft.sources.Tables.fsFor(spark, path)
-    def names(sub: String): Seq[String] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath.getName).toSeq.sorted
-    }
-    val batches = names("batches")
-    val metaRow =
-      if (Dedup.readIndexMeta(fs, path).isDefined)
-        Seq(IndexProtocol.AuditFinding("meta", "_meta",
-          "params_present", true))
-      else if (batches.nonEmpty)
-        Seq(IndexProtocol.AuditFinding("meta", "_meta",
-          "params_missing", false))
-      else Seq.empty
-    val batchRows = batches.map { b =>
-      def has(t: String) = fs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/batches/$b/$t"))
-      val (bands, shingles) = (has("bands"), has("shingles"))
-      if (has("accepted") && !has("_landed"))
-        IndexProtocol.AuditFinding("batch", b, "mid_landing", false)
-      else if (bands && shingles)
-        IndexProtocol.AuditFinding("batch", b, "active_ok", true)
-      else if (!bands && !shingles)
-        IndexProtocol.AuditFinding("batch", b, "tombstone", true)
-      else
-        IndexProtocol.AuditFinding("batch", b, "partial_payload", false)
-    }
-    val stagingRows = names("_staging").map(b =>
-      IndexProtocol.AuditFinding("staging", b, "residue", true))
-    val droppingRows = names("_dropping").map(b =>
-      IndexProtocol.AuditFinding("dropping", b, "residue", true))
-    metaRow ++ batchRows ++ stagingRows ++ droppingRows
-  }
-
-  /** [[auditDedup]] as a DataFrame (the [[audit]] shape). */
-  def auditDedupDf(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    auditDedup(spark, path)
-      .map(f => (f.kind, f.name, f.status, f.healthy))
-      .toDF("kind", "name", "status", "healthy")
-  }
-
-  /** True iff the dedup-index audit has no unhealthy finding. */
-  def isDedupHealthy(spark: SparkSession, path: String): Boolean =
-    auditDedup(spark, path).forall(_.healthy)
-
-  /** Safe remediations for the dedup index's findings — a MAINTENANCE
-    * call under the single-logical-writer contract (run it in the
-    * ingest scheduler's slot: with no writer in flight, staging and
-    * dropping entries are by definition residue, which is what makes
-    * reclaiming them safe — the ambiguity that forces the
-    * meta-protocol repair to grace-schedule orphans does not arise):
-    *
-    *  - staging residue → verified delete (what the next stage of the
-    *    same batch would do);
-    *  - dropping residue → verified delete (finishing the crashed
-    *    drop; the directory is already invisible);
-    *  - mid_landing → REPORTED as `needs_increment_retry`: the
-    *    resume path is [[graft.Pipeline.corpusIncrement]] with the
-    *    same batch — repair must not guess at landing state;
-    *  - partial_payload → REPORTED as
-    *    `unrepairable_partial_payload`: restore the directory or
-    *    [[Dedup.dropBatchFromIndex]] + re-ingest;
-    *  - params_missing → REPORTED as `unrepairable_missing_params`:
-    *    the k/band/cap signature cannot be reconstructed from data.
-    *
-    * Returns one row per action: (kind, name, action).
-    */
-  def repairDedup(spark: SparkSession, path: String): DataFrame = {
-    val fs = graft.sources.Tables.fsFor(spark, path)
-    def reclaim(kind: String, sub: String, b: String, action: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub/$b")
-      // verified (the protocol-wide discipline): silently surviving
-      // residue would be re-reported forever while looking repaired
-      if (fs.exists(p) && !fs.delete(p, true))
-        throw new IllegalStateException(
-          s"dedup-index repair cannot reclaim $p")
-      Seq((kind, b, action))
-    }
-    val actions = auditDedup(spark, path).flatMap {
-      case IndexProtocol.AuditFinding("staging", b, "residue", _) =>
-        reclaim("staging", "_staging", b, "reclaimed_staging")
-      case IndexProtocol.AuditFinding("dropping", b, "residue", _) =>
-        reclaim("dropping", "_dropping", b, "reclaimed_dropping")
-      case IndexProtocol.AuditFinding("batch", b, "mid_landing", _) =>
-        Seq(("batch", b, "needs_increment_retry"))
-      case IndexProtocol.AuditFinding("batch", b,
-          "partial_payload", _) =>
-        Seq(("batch", b, "unrepairable_partial_payload"))
-      case IndexProtocol.AuditFinding("meta", m,
-          "params_missing", _) =>
-        Seq(("meta", m, "unrepairable_missing_params"))
-      case _ => Seq.empty
-    }
-    import spark.implicits._
-    actions.toDF("kind", "name", "action")
-  }
+    findings(spark, path, nowMs).forall(_.healthy)
 
   /** Execute the SAFE remediations for the audit's findings — the
     * P11→X2b diagnose-then-remedy pattern applied to the index
@@ -215,7 +87,12 @@ object IndexAudit {
     *  - a committed batch with lost payload is NOT repairable from
     *    metadata — reported as `unrepairable_missing_payload` so the
     *    operator restores the directory or drops the batch
-    *    explicitly;
+    *    explicitly; a dedup batch's half payload likewise as
+    *    `unrepairable_partial_payload`;
+    *  - a dedup batch mid-landing → REPORTED as
+    *    `needs_increment_retry`: the resume path is
+    *    [[graft.Pipeline.corpusIncrement]] with the same batch — repair
+    *    must not guess at landing state;
     *  - finally one sweep reclaims whatever clock has already
     *    expired (railed on the re-read committed list, as always).
     *
@@ -224,7 +101,7 @@ object IndexAudit {
   def repair(spark: SparkSession, path: String,
              nowMs: Long = System.currentTimeMillis()): DataFrame = {
     val fs = graft.sources.Tables.fsFor(spark, path)
-    val actions = IndexProtocol.auditIndex(fs, path, nowMs).flatMap {
+    val actions = findings(spark, path, nowMs).flatMap {
       case IndexProtocol.AuditFinding("marker", m,
           "stale_on_committed", _) =>
         IndexProtocol.clearPendingDelete(fs, path, m)
@@ -251,6 +128,10 @@ object IndexAudit {
       case IndexProtocol.AuditFinding("batch", b,
           "committed_missing_payload", _) =>
         Seq(("batch", b, "unrepairable_missing_payload"))
+      case IndexProtocol.AuditFinding("batch", b, "partial_payload", _) =>
+        Seq(("batch", b, "unrepairable_partial_payload"))
+      case IndexProtocol.AuditFinding("batch", b, "mid_landing", _) =>
+        Seq(("batch", b, "needs_increment_retry"))
       case _ => Seq.empty
     }
     val swept = IndexProtocol.sweepPendingDeletes(fs, path, nowMs,
@@ -738,15 +619,6 @@ object IndexAudit {
     residueRow ++ pointerRows ++ manifestRows ++ refRows ++ writeRows
   }
 
-  /** [[auditManifestTable]] as a DataFrame (the [[audit]] shape). */
-  def auditManifestTableDf(spark: SparkSession,
-                           root: String): DataFrame = {
-    import spark.implicits._
-    auditManifestTable(spark, root)
-      .map(f => (f.kind, f.name, f.status, f.healthy))
-      .toDF("kind", "name", "status", "healthy")
-  }
-
   /** True iff the manifest-table audit has no unhealthy finding. */
   def isManifestTableHealthy(spark: SparkSession,
                              root: String): Boolean =
@@ -914,8 +786,7 @@ object IndexAudit {
   /** Safe remediations for the snapshot table's findings — a
     * MAINTENANCE call under the single-PROMOTER contract (run it in
     * the promotion scheduler's slot: with no publish in flight, a
-    * gen current+1 is by definition crashed-publish residue — the
-    * same no-writer-in-flight argument as [[repairDedup]]):
+    * gen current+1 is by definition crashed-publish residue):
     *
     *  - publish_residue → verified delete (what the retried publish's
     *    overwrite would do); under a lost pointer nothing is deleted —

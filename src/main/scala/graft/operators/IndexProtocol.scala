@@ -1,13 +1,13 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
 
 import graft.sources.MetaSwap
 
 /** The SHARED protocol of the persisted batch-list indexes — the BM25
-  * postings index ([[Bm25]]) and the vector index ([[VectorIndex]]).
-  * One implementation so the two cannot drift (the r9 lesson: the
+  * postings index ([[Bm25]]), the vector index ([[VectorIndex]]) and
+  * the MinHash dedup index ([[Dedup.writeDedupIndex]]). One
+  * implementation so the three cannot drift (the r9 lesson: the
   * merged-id derivation was fixed for BM25 and the vector index kept
   * the condemned content-derived form for a round).
   *
@@ -15,7 +15,10 @@ import graft.sources.MetaSwap
   * directories and one `_meta` marker: the layout's head fields, then
   * `batches=` (the committed, served list), `retired=` (ids compacted
   * or retracted away, kept only to refuse replay) and `gen=` (the
-  * swap fence). [[BatchList]] owns every sequence over that marker;
+  * swap fence). A batch directory is visible only once the `_meta`
+  * swap lists it — the swap, not a rename, is the commit, so the
+  * protocol needs only put-if-absent and an atomic replace of one
+  * small marker. [[BatchList]] owns every sequence over that marker;
   * a layout supplies only its head fields ([[BatchList.head]] /
   * [[BatchList.fromKv]]), how a batch's payload is staged (a closure
   * per call) and its serve. The sequences:
@@ -24,9 +27,8 @@ import graft.sources.MetaSwap
   *    as-of-gen read; the read, the compare-and-set swap
   *    (gen bump, then the `_meta_history` record) and the gen-0 create.
   *  - **Publish** ([[publishStaged]]): verified staging wipe, verified
-  *    residue reclaim, stage, atomic rename — every append, retraction
-  *    rewrite and compaction of both indexes, and the dedup index's
-  *    retraction rewrite.
+  *    residue reclaim, stage, rename into `batches/` — every bootstrap,
+  *    append, retraction rewrite and compaction of the three indexes.
   *  - **Append**: id validation, the committed/retired replay refusal,
   *    pending-marker clears around publish and swap.
   *  - **Delist**: swap, reset the grace clock of each delisted id,
@@ -668,8 +670,8 @@ private[graft] object IndexProtocol {
   }
 
   /** MAINTENANCE PRE-FLIGHT — the A6d audit wired into the compaction
-    * entry points ([[VectorIndex.compact]], [[Bm25.compactBm25Index]])
-    * so the diagnose step runs before EVERY destructive maintenance
+    * entry points ([[VectorIndex.compact]], [[Bm25.compactBm25Index]],
+    * [[Dedup.compactDedupIndex]]) so the diagnose step runs before EVERY destructive maintenance
     * pass, not only when an operator remembers to run the fsck. Two
     * findings matter at this moment, and only this moment:
     *
@@ -889,16 +891,17 @@ private[graft] object IndexProtocol {
       recordMetaHistory(fs, root, next.gen, b)
     }
 
-    /** Publish the initial corpus as batch `bootstrap` and commit it
-      * with the gen-0 meta created LAST — a crash before the meta
-      * leaves a root every probe refuses loudly, and of two racing
-      * bootstraps one fails typed ([[MetaSwap.CasFailed]]). `stage`
-      * writes the payload under the staging path and returns the
-      * layout's head (its lists are replaced).
+    /** Publish the initial corpus as batch `bid` and commit it with
+      * the gen-0 meta created LAST — a crash before the meta leaves a
+      * root every probe refuses loudly, and of two racing bootstraps
+      * one fails typed ([[MetaSwap.CasFailed]]). `stage` writes the
+      * payload under the staging path and returns the layout's head
+      * (its lists are replaced).
       */
-    def bootstrap(fs: FileSystem, root: String)(stage: Path => M): Unit = {
-      val m = publishStaged(fs, root, "bootstrap")(p => Some(stage(p))).get
-      val b = bytes(withLists(m, Seq("bootstrap"), Nil, 0L))
+    def bootstrap(fs: FileSystem, root: String, bid: String)(
+        stage: Path => M): Unit = {
+      val m = publishStaged(fs, root, bid)(p => Some(stage(p))).get
+      val b = bytes(withLists(m, Seq(bid), Nil, 0L))
       MetaSwap.create(fs, metaPath(root), b)
       recordMetaHistory(fs, root, 0L, b)
     }
@@ -954,27 +957,26 @@ private[graft] object IndexProtocol {
     }
 
     /** Doc-level retraction over `meta`'s committed batches: `hits`
-      * returns a batch's found-statistics and remainder rows (None: no
-      * retracted key in it); a non-empty remainder republishes through
-      * `stage` under [[rewriteId]]`(batch, keys)`, and ONE delisting
-      * swap replaces every affected id with its rewrite (or nothing,
-      * when all its rows went) and RETIRES the originals, so a replay
-      * of an original batch is still refused. `settle` gives the head
-      * after the found statistics leave. Returns the per-batch
-      * statistics (empty: nothing found, meta untouched).
+      * returns a batch's found-statistics and remainder (None: no
+      * retracted key in it); `stage` writes the remainder under the
+      * staging path of [[rewriteId]]`(batch, keys)` and says whether
+      * any rows remained, and ONE delisting swap replaces every
+      * affected id with its rewrite (or nothing, when all its rows
+      * went) and RETIRES the originals, so a replay of an original
+      * batch is still refused. `settle` gives the head after the found
+      * statistics leave. Returns the per-batch statistics (empty:
+      * nothing found, meta untouched).
       */
-    def retract[T](fs: FileSystem, root: String, meta: M,
-                   expect: Array[Byte], keys: Seq[String],
-                   retainMs: Long)(hits: String => Option[(T, DataFrame)])(
-        stage: (DataFrame, Path) => Unit)(settle: Seq[T] => M): Seq[T] = {
+    def retract[T, R](fs: FileSystem, root: String, meta: M,
+                      expect: Array[Byte], keys: Seq[String],
+                      retainMs: Long)(hits: String => Option[(T, R)])(
+        stage: (R, Path) => Boolean)(settle: Seq[T] => M): Seq[T] = {
       val rewrites = meta.batches.flatMap { b =>
         hits(b).map { case (found, remainder) =>
           val rid = rewriteId(b, keys)
-          val replacement =
-            if (remainder.isEmpty) None
-            else publishStaged(fs, root, rid) { p =>
-              stage(remainder, p); Some(rid)
-            }
+          val replacement = publishStaged(fs, root, rid) { p =>
+            if (stage(remainder, p)) Some(rid) else None
+          }
           (b, replacement, found)
         }
       }

@@ -354,14 +354,6 @@ object Profiling {
     df.groupBy(shardCol.as("shard"))
       .agg(freqSketchAgg(valueCol, k).as("sketch"))
 
-  /** Candidate heavy items from a union of [[freqSketches]] rows
-    * (optionally pre-filtered to a shard subset): every item whose
-    * corpus-wide frequency exceeds n/(k+1) is guaranteed in this set.
-    */
-  def unionHeavyKeys(sketches: DataFrame, k: Int): DataFrame =
-    sketches.agg(freqSketchMergeAgg(col("sketch"), k).as("sketch"))
-      .select(explode(map_keys(col("sketch"))).as("item"))
-
   /** EXACT heavy hitters at bounded memory: every item occurring in
     * strictly more than 1/`support` of the non-null values, with its
     * exact count — the deterministic two-pass pattern: pass 1 builds

@@ -157,7 +157,7 @@ object VectorIndex {
       .write.mode("overwrite").parquet(s"$path/centroids")
     codebook.select(col("subspace"), col("code"), col("centv"))
       .write.mode("overwrite").parquet(s"$path/codebook")
-    Layout.bootstrap(fs, path) { staging =>
+    Layout.bootstrap(fs, path, "bootstrap") { staging =>
       stageCodes(emb, idCol, vecCol, centroids, codebook, m, dim, staging)
       VecMeta(m, dim, Nil, Nil)
     }
@@ -307,7 +307,9 @@ object VectorIndex {
           if (dn == 0L) None
           else Some((dn, rows.join(broadcast(idsDf), Seq("id"), "left_anti")))
         }
-    }((remainder, staging) => writeCodes(remainder, staging))(_ => meta)
+    } { (remainder, staging) =>
+      !remainder.isEmpty && { writeCodes(remainder, staging); true }
+    }(_ => meta)
       .sum
   }
 

@@ -136,10 +136,6 @@ object Tables {
     walk(dir)
   }
 
-  /** Register every testdata table as a temp view (for spark.sql use). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
-
   /** Restore scan parallelism when the input has fewer splits than the
     * cluster has cores. The testdata ships as single-row-group parquet
     * files — unsplittable, so a scan-side pipeline (sha256 keys,

@@ -235,45 +235,50 @@ class IndexAuditSpec extends AnyFunSuite {
       def mk(p: String): Unit = {
         fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/$p")); ()
       }
-      // params record + one batch of every shape: full payload,
-      // tombstone (replay guard), mid-landing (commit record, no
-      // _landed), LANDED with payload (accepted + _landed → active),
-      // half payload; plus staging and dropping residue
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$root/_meta"), true)
-      try out.write("k=16\nrowsPerBand=2\nmaxDocFreq=-1\n"
-        .getBytes("UTF-8"))
-      finally out.close()
+      def meta(bytes: String): Unit = {
+        val out = fs.create(
+          new org.apache.hadoop.fs.Path(s"$root/_meta"), true)
+        try out.write(bytes.getBytes("UTF-8")) finally out.close()
+      }
+      // a dedup meta committing one batch of every payload shape — whole,
+      // mid-landing (commit record, no _landed), LANDED (accepted +
+      // _landed → whole), half payload — one retired id whose directory
+      // is gone, and one unlisted directory
+      meta("k=16\nrowsPerBand=2\nmaxDocFreq=-1\n" +
+        "batches=b_ok,b_mid,b_land,b_half\nretired=b_old\ngen=0\n")
       mk("batches/b_ok/bands"); mk("batches/b_ok/shingles")
-      mk("batches/b_tomb")
       mk("batches/b_mid/bands"); mk("batches/b_mid/shingles")
       mk("batches/b_mid/accepted")
       mk("batches/b_land/bands"); mk("batches/b_land/shingles")
       mk("batches/b_land/accepted"); mk("batches/b_land/_landed")
       mk("batches/b_half/shingles")
-      mk("_staging/s1"); mk("_dropping/d1")
-      val got = IndexAudit.auditDedup(spark, root)
-        .map(f => (f.kind, f.name, f.status, f.healthy)).toSet
+      mk("batches/b_orphan/bands"); mk("_staging/s1")
+      val got = IndexAudit.audit(spark, root).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getBoolean(3))).toSet
       assert(got == Set(
-        ("meta", "_meta", "params_present", true),
-        ("batch", "b_ok", "active_ok", true),
-        ("batch", "b_tomb", "tombstone", true),
+        ("batch", "b_ok", "committed_ok", true),
         ("batch", "b_mid", "mid_landing", false),
-        ("batch", "b_land", "active_ok", true),
+        ("batch", "b_land", "committed_ok", true),
         ("batch", "b_half", "partial_payload", false),
-        ("staging", "s1", "residue", true),
-        ("dropping", "d1", "residue", true)), got.toString)
-      assert(!IndexAudit.isDedupHealthy(spark, root))
-      // a batches-bearing root whose params record is GONE is
-      // unhealthy (appends/queries cannot verify the signature
-      // scheme); an EMPTY root reports nothing at all
-      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/_meta"),
-        false))
-      assert(IndexAudit.auditDedup(spark, root).exists(f =>
-        f.kind == "meta" && f.status == "params_missing" && !f.healthy))
+        ("batch", "b_old", "retired_reclaimed", true),
+        ("dir", "b_orphan", "orphan", false),
+        ("history", "0", "current_missing", false)), got.toString)
+      assert(!IndexAudit.isHealthy(spark, root))
+      // a meta from before the committed list is refused by every
+      // reader of the index, never guessed at
+      meta("k=16\nrowsPerBand=2\nmaxDocFreq=-1\n")
+      import spark.implicits._
+      val e = intercept[IllegalArgumentException] {
+        graft.operators.Dedup.minhashDedupAgainstIndex(
+          Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
+          "doc_id", "text", root)
+      }
+      assert(e.getMessage.contains("predates the committed-batch list"))
+      // a root with no meta at all is no index to audit
       val empty = tmp("dfsck-empty")
-      try assert(
-        IndexAudit.auditDedup(spark, empty.toString).isEmpty)
+      try intercept[IllegalArgumentException](
+        IndexAudit.audit(spark, empty.toString))
       finally rmTree(empty)
     } finally rmTree(dir)
   }
@@ -292,31 +297,32 @@ class IndexAuditSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       val b1 = graft.operators.Dedup.writeDedupIndex(
         docs.filter(col("doc_id") <= 2), "doc_id", "text", idx)
-      graft.operators.Dedup.writeDedupIndex(
+      val b2 = graft.operators.Dedup.writeDedupIndex(
         docs.filter(col("doc_id") > 2), "doc_id", "text", idx,
         mode = "append")
-      assert(IndexAudit.isDedupHealthy(spark, idx),
+      assert(IndexAudit.isHealthy(spark, idx),
         "a freshly appended index must audit healthy")
       val fs = hadoopFs(idx)
       def mk(p: String): Unit = {
         fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx/$p")); ()
       }
-      mk("_staging/crashed"); mk("_dropping/crashed")
-      val acts = IndexAudit.repairDedup(spark, idx)
+      // a crashed stage and a crashed publish whose swap never ran
+      mk("_staging/crashed"); mk("batches/crashed/bands")
+      val acts = IndexAudit.repair(spark, idx)
         .collect().map(r => (r.getString(0), r.getString(2))).toSet
-      assert(acts == Set(("staging", "reclaimed_staging"),
-        ("dropping", "reclaimed_dropping")), acts.toString)
-      assert(IndexAudit.isDedupHealthy(spark, idx))
+      assert(acts == Set(("dir", "scheduled_reclaim_orphan_grace")),
+        acts.toString)
+      assert(IndexAudit.isHealthy(spark, idx))
       // idempotent: a second repair finds nothing to do
-      assert(IndexAudit.repairDedup(spark, idx).count() == 0)
+      assert(IndexAudit.repair(spark, idx).count() == 0)
       // the repaired index still serves: the incremental probe finds
       // the planted near-pair of a stored doc
       val probe = Seq((9L, "alpha beta gamma delta epsilon zeta plus"))
         .toDF("doc_id", "text")
       assert(graft.operators.Dedup.minhashDedupAgainstIndex(
         probe, "doc_id", "text", idx).count() > 0)
-      // and the replay guard is untouched (repair never deletes a
-      // published batch directory)
+      // and the replay guard is untouched (repair never delists a
+      // committed batch)
       intercept[graft.ReplayRefused] {
         graft.operators.Dedup.writeDedupIndex(
           docs.filter(col("doc_id") <= 2), "doc_id", "text", idx,
@@ -324,14 +330,15 @@ class IndexAuditSpec extends AnyFunSuite {
       }
       assert(b1.nonEmpty)
       // damage classes are reported, not papered over: half payload
-      mk("batches/feedbead01/bands")
-      val acts2 = IndexAudit.repairDedup(spark, idx)
+      assert(fs.delete(new org.apache.hadoop.fs.Path(
+        s"$idx/batches/$b2/shingles"), true))
+      val acts2 = IndexAudit.repair(spark, idx)
         .collect().map(_.getString(2)).toSeq
       assert(acts2 == Seq("unrepairable_partial_payload"))
       assert(fs.exists(new org.apache.hadoop.fs.Path(
-        s"$idx/batches/feedbead01/bands")),
+        s"$idx/batches/$b2/bands")),
         "repair must not delete a damaged batch's surviving half")
-      assert(!IndexAudit.isDedupHealthy(spark, idx))
+      assert(!IndexAudit.isHealthy(spark, idx))
     } finally rmTree(dir)
   }
 
@@ -499,8 +506,8 @@ class IndexAuditSpec extends AnyFunSuite {
         graft.operators.Dedup.compactDedupIndex(spark, idx)
       }
       assert(e.getMessage.contains(b2))
-      // the refusal tombstoned nothing: b1 is whole, b2's surviving
-      // half is intact (the evidence an operator restores from)
+      // the refusal touched nothing: b1 is whole, b2's surviving half
+      // is intact (the evidence an operator restores from)
       assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$idx/batches/$b1/bands")))
       assert(fs.exists(new org.apache.hadoop.fs.Path(
@@ -510,9 +517,8 @@ class IndexAuditSpec extends AnyFunSuite {
       // the remedy: drop the damaged batch, then compaction runs
       // clean and the survivor still serves b1's near-pair
       assert(graft.operators.Dedup.dropBatchFromIndex(spark, idx, b2))
-      assert(graft.operators.Dedup.compactDedupIndex(spark, idx)
-        .nonEmpty)
-      assert(IndexAudit.isDedupHealthy(spark, idx))
+      assert(graft.operators.Dedup.compactDedupIndex(spark, idx) == b1)
+      assert(IndexAudit.isHealthy(spark, idx))
       val probe = Seq((9L, "alpha beta gamma delta epsilon zeta plus"))
         .toDF("doc_id", "text")
       assert(graft.operators.Dedup.minhashDedupAgainstIndex(

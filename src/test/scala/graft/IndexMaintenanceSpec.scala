@@ -583,7 +583,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       "resetPendingDelete", "sweepPendingDeletes", "recordMetaHistory",
       "mergedId")
     val offenders = for {
-      file <- Seq("Bm25.scala", "VectorIndex.scala")
+      file <- Seq("Bm25.scala", "VectorIndex.scala", "Dedup.scala")
       (line, i) <- {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.readAllLines(src.resolve(file)).asScala.toSeq
@@ -591,6 +591,21 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       }
       if words.exists(line.contains)
     } yield s"$file:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no main file names the retired _dropping directory") {
+    val main = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(main),
+      s"run from the project root: $main not found")
+    import scala.jdk.CollectionConverters._
+    val offenders = java.nio.file.Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.toSeq.zipWithIndex
+          .collect { case (line, i) if line.contains("_dropping") =>
+            s"$f:${i + 1}: ${line.trim}" }
+      }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
@@ -1237,15 +1252,15 @@ class IndexMaintenanceSpec extends AnyFunSuite {
                 .filter(col("sid") === "a").count() == 0L)
           }
         }
-      // the ORIGINAL batch directory survives as a tombstone, so an
+      // the ORIGINAL batch id is retired and its directory gone, so an
       // exact replay of the corpus batch still refuses
       intercept[ReplayRefused] {
         Dedup.writeDedupIndex(corpus, "sid", "text", root, k = 8,
           rowsPerBand = 2, mode = "append")
       }
-      assert(graft.operators.IndexAudit.isDedupHealthy(spark, root))
-      assert(graft.operators.IndexAudit.auditDedup(spark, root)
-        .exists(_.status == "tombstone"))
+      assert(graft.operators.IndexAudit.isHealthy(spark, root))
+      assert(graft.operators.IndexAudit.audit(spark, root)
+        .filter(col("status") === "retired_reclaimed").count() == 1L)
       assert(Dedup.retractFromDedupIndex(spark, root, Seq("a")) == 0L)
     } finally rmTree(dir)
   }

@@ -503,13 +503,14 @@ class PipelineOperatorsSpec extends AnyFunSuite {
         mode = "append")
       assert(bid2 == bid, "content-derived id must be reproducible")
       assert(!Dedup.dropBatchFromIndex(spark, dir, "no-such-batch"))
-      // crash window: a drop that moved the batch into _dropping/ but
-      // died before the delete leaves the batch INVISIBLE (probes list
-      // only batches/) — never a partial batch with surviving band
-      // files — and the re-drop of the same id reclaims the residue
-      new java.io.File(dir, "_dropping").mkdirs() // may already exist
-      assert(new java.io.File(dir, s"batches/$bid")
-        .renameTo(new java.io.File(dir, s"_dropping/$bid")))
+      // crash window: a drop whose meta swap committed but which died
+      // before deleting the directory leaves the batch UNLISTED — no
+      // probe reads it (probes read the meta's committed list) — and
+      // the re-append of the same content reclaims the residue
+      val held = new java.io.File(dir + "-held")
+      assert(new java.io.File(dir, s"batches/$bid").renameTo(held))
+      assert(Dedup.dropBatchFromIndex(spark, dir, bid))
+      assert(held.renameTo(new java.io.File(dir, s"batches/$bid")))
       val day1Ids = day1.select("doc_id").collect()
         .map(_.getLong(0)).toSet
       val probePairs = Dedup.minhashDedupAgainstIndex(
@@ -518,11 +519,14 @@ class PipelineOperatorsSpec extends AnyFunSuite {
         .select("id_a", "id_b").collect()
         .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
       assert(probePairs.intersect(day1Ids).isEmpty,
-        "a half-dropped batch leaked into candidate generation")
+        "a dropped batch leaked into candidate generation")
       assert(!Dedup.dropBatchFromIndex(spark, dir, bid),
-        "an already-invisible batch must report false")
-      assert(!new java.io.File(dir, s"_dropping/$bid").exists,
-        "the re-drop should reclaim the residue")
+        "an already-delisted batch must report false")
+      assert(graft.operators.IndexAudit.audit(spark, dir)
+        .filter(col("status") === "orphan").count() == 1L)
+      assert(Dedup.writeDedupIndex(day1, "doc_id", "text", dir,
+        mode = "append") == bid)
+      assert(graft.operators.IndexAudit.isHealthy(spark, dir))
     } finally rmTree(new java.io.File(dir))
   }
 
@@ -545,13 +549,10 @@ class PipelineOperatorsSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val before = pairs()
       val cid = Dedup.compactDedupIndex(spark, dir)
-      // exactly one data-bearing batch remains; the rest are
-      // payload-free tombstones
-      val dataDirs = new java.io.File(s"$dir/batches").listFiles()
-        .filter(b => new java.io.File(b, "bands").exists())
-      assert(dataDirs.map(_.getName).toSeq == Seq(cid))
-      assert(new java.io.File(s"$dir/batches").listFiles().length == 4,
-        "tombstone directories were deleted")
+      // exactly one batch directory remains: the superseded ones are
+      // retired on the meta and their directories deleted
+      assert(new java.io.File(s"$dir/batches").listFiles()
+        .map(_.getName).toSeq == Seq(cid))
       // identical query results through the merged layout
       assert(pairs() == before)
       // the replay contract survives: a superseded batch still refuses

@@ -369,7 +369,7 @@ class PipelineSpec extends AnyFunSuite {
     val after = Pipeline.classifyBatch(spark, out, probe)
       .select("decision").collect().map(_.getString(0)).toSet
     assert(after == Set("accept"), after.toString)
-    assert(graft.operators.IndexAudit.isDedupHealthy(spark, out +
+    assert(graft.operators.IndexAudit.isHealthy(spark, out +
       "/dedup_index"))
     // idempotent re-run: nothing left anywhere
     val again = Pipeline.retractDocs(spark, out,
@@ -597,6 +597,63 @@ class PipelineSpec extends AnyFunSuite {
     // and now the fully-landed batch replays are refused loudly
     intercept[graft.BatchAlreadyLanded] {
       Pipeline.corpusIncrement(spark, out, day1, "2026-08-13")
+    }
+  }
+
+  test("compacting a landed corpus index reclaims every superseded " +
+      "batch and keeps every replay refusal") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.{Corpus, Dedup}
+    val out = java.nio.file.Files.createTempDirectory("graft-dcompact").toString
+    val idx = s"$out/dedup_index"
+    val doc = graft.sources.Tables.table(spark, sf, "documents")
+      .select("doc_id", "lang", "text")
+    val bucket = Corpus.hashBucket(col("doc_id"), "dcompact", 5)
+    Pipeline.corpusInit(spark, doc.filter(bucket >= 3), out, "2026-08-12")
+    val days = Seq(doc.filter(bucket === 0), doc.filter(bucket === 1))
+    days.zipWithIndex.foreach { case (day, i) =>
+      assert(Pipeline.corpusIncrement(spark, out, day, s"2026-08-1${3 + i}")
+        > 0L)
+    }
+    // a third day crashes after its index append: the compaction and
+    // the retraction both refuse while it is mid-landing
+    val day3 = doc.filter(bucket === 2)
+    class Boom extends RuntimeException("injected crash")
+    intercept[Boom] {
+      Pipeline.corpusIncrementWithHook(spark, out, day3, "2026-08-15",
+        afterIndexPublish = () => throw new Boom)
+    }
+    val midLanding = intercept[IllegalArgumentException] {
+      Dedup.compactDedupIndex(spark, idx)
+    }
+    assert(midLanding.getMessage.contains("mid-landing"))
+    intercept[IllegalArgumentException] {
+      Dedup.retractFromDedupIndex(spark, idx, Seq("1"))
+    }
+    assert(Pipeline.corpusIncrement(spark, out, day3, "2026-08-15") > 0L)
+    val cid = Dedup.compactDedupIndex(spark, idx)
+    // no superseded batch directory is left on disk
+    assert(new java.io.File(s"$idx/batches").listFiles().map(_.getName)
+      .toSeq == Seq(cid))
+    // a corpus replay of each compacted day is refused as landed
+    (days :+ day3).foreach { day =>
+      intercept[graft.BatchAlreadyLanded] {
+        Pipeline.corpusIncrement(spark, out, day, "2026-08-16")
+      }
+    }
+    // a bare index append of a retired id is refused by the index
+    // itself — the parent type, never the landed subtype
+    val cleaned = Pipeline.corpusClean(days.head)
+    val e = intercept[graft.ReplayRefused] {
+      Dedup.writeDedupIndex(cleaned, "doc_id", "norm_text", idx,
+        mode = "append")
+    }
+    assert(!e.isInstanceOf[graft.BatchAlreadyLanded])
+    // and appending the bootstrap set is refused too
+    val boot = Pipeline.corpusClean(doc.filter(bucket >= 3))
+    intercept[graft.ReplayRefused] {
+      Dedup.writeDedupIndex(boot, "doc_id", "norm_text", idx,
+        mode = "append")
     }
   }
 
