@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The lifetime of every intermediate graft materializes: nothing else
   * in graft persists, checkpoints or creates a temporary directory.
@@ -8,12 +9,15 @@ import org.apache.spark.sql.DataFrame
   *  - [[truncate]] is the only eager materialization. It cuts the
   *    lineage of iteration state and of results that must outlive a
   *    scope below.
-  *  - [[cached]] persists a frame for the length of a block.
+  *  - [[cached]] persists a frame for the length of a block, and
+  *    [[cachedRows]] its rows.
+  *  - [[broadcast]] ships a driver value to the executors for the
+  *    length of a block.
   *  - [[tempDir]] creates a directory for the length of a block.
   *
   * A scope releases on EVERY exit, normal or thrown, so an operator
-  * that fails mid-flight leaves no cache entry and no directory
-  * behind. The one condition on the caller: a result that still reads
+  * that fails mid-flight leaves no cache entry, persisted RDD,
+  * broadcast or directory behind. The one condition on the caller: a result that still reads
   * the scoped cache or directory must be materialized (with
   * [[truncate]] or a driver action) before the scope closes. Nested
   * scopes release innermost first, which is how an operator drops a
@@ -47,6 +51,33 @@ object Checkpoints {
   def cached[T](df: DataFrame)(body: DataFrame => T): T = {
     val c = df.persist()
     try body(c) finally { c.unpersist(); () }
+  }
+
+  /** Persist `df`'s rows, run `body` on a frame over them, and
+    * unpersist them on every exit. To the planner the frame is a plain
+    * RDD scan, so the first action that reads it builds the rows inside
+    * its own job; a [[cached]] frame that no job has built yet is built
+    * by a job of its own under AQE. Meant for a plan with no exchange.
+    */
+  def cachedRows[T](df: DataFrame)(body: DataFrame => T): T = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession,
+      rows, df.schema))
+    finally { rows.unpersist(blocking = false); () }
+  }
+
+  /** Broadcast `value` from the driver (no job), run `body` on the
+    * handle, and destroy the broadcast on every exit, blocking until
+    * its blocks are gone (`Broadcast.destroy()` only schedules that).
+    * A result that still reads the broadcast must be materialized
+    * inside `body`.
+    */
+  def broadcast[V: scala.reflect.ClassTag, T](spark: SparkSession, value: V)
+                                            (body: Broadcast[V] => T): T = {
+    val b = spark.sparkContext.broadcast(value)
+    try body(b)
+    finally org.apache.spark.sql.GraftSqlBridge.destroyBlocking(b)
   }
 
   /** Create a temporary directory, run `body` on its path, and delete

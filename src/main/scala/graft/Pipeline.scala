@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.operators._
 import graft.sources.Tables
 
@@ -638,26 +640,43 @@ object Pipeline {
     * The evidence is every index batch's `hashes/` side table (32 B
     * per accepted doc) in one scan, never the silver table — except
     * for an index that predates the evidence (bare writeDedupIndex
-    * state): the O(corpus) silver scan. A batch-local sketch decides
-    * in one task ([[decideInOneTask]]); any other runs the frame form
-    * ([[decideInFrames]]). Both equal the five-branch reference kept
-    * in `ClassifyParitySpec`.
+    * state): the O(corpus) silver scan. A batch-local sketch (which
+    * carries [[decided]]) is matched and decided by the batch-local
+    * kernel ([[Dedup.batchLocal]]) in one task ([[labelTask]]); its
+    * labels are collected (at most [[Dedup.LocalBatchRows]] rows). Any
+    * other sketch, or one whose verify state is over `verifyBytes`,
+    * runs the exchange match and the frame form ([[decideInFrames]]).
+    * Both equal the five-branch reference kept in `ClassifyParitySpec`.
     */
   private def classifyCleaned(spark: SparkSession, outDir: String,
                               cleaned: DataFrame,
-                              sketch: Dedup.BatchSketch): DataFrame = {
+                              sketch: Dedup.BatchSketch,
+                              verifyBytes: Long = Dedup.LocalVerifyBytes)
+      : DataFrame = {
     val idx = indexDir(outDir)
     val evidence = Dedup.readBatchHashes(spark, idx).getOrElse(
       Tables.readParquet(spark, s"$outDir/silver/documents")
         .select(col("norm_hash")))
     // (b)'s near-dup pairs vs everything ever processed and within the
-    // batch, from the batch's sketch (the index _meta supplies the
+    // batch come from the batch's sketch (the index _meta supplies the
     // boilerplate df-cap, so batch and stored sides stay consistent
     // with the bootstrap build)
-    val pairs = Dedup.matchSketch(sketch, idx)
-    if (sketch.local) decideInOneTask(cleaned, evidence, pairs)
-    else decideInFrames(cleaned, evidence, pairs)
+    sketch.local.flatMap { ls =>
+      Dedup.batchLocal(sketch, idx, 1, 2, verifyBytes,
+          Some(evidence -> ls.carried.flatMap(r => Option(r.getString(1))).toSet),
+          labelSchema, labelTask) { labels =>
+        spark.createDataFrame(labels.collect().toSeq.asJava, labelSchema)
+      }
+    }.getOrElse(
+      decideInFrames(cleaned, evidence, Dedup.exchangeMatch(sketch, idx)))
   }
+
+  /** The batch columns a batch-local sketch carries to [[labelTask]]. */
+  private val decided = Seq("doc_id", "norm_hash", "q")
+
+  private val labelSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("decision", StringType, nullable = false)))
 
   /** The decision as frames: each document carries three flags (exact
     * winner, text in silver, near an older doc), the first three
@@ -715,106 +734,86 @@ object Pipeline {
   }
 
   /** The decision of a batch-local batch (at most
-    * [[Dedup.LocalBatchRows]] rows, long ids) as ONE executor task —
-    * the [[Dedup.resolveGroups]] union-find precedent — with the labels
-    * checkpointed. The task receives, as tagged rows on one partition:
-    * the batch's (doc_id, norm_hash, q); the evidence hashes,
-    * semi-joined map-side to the broadcast batch hashes; and the
-    * near-dup pairs, each tagged against the broadcast batch ids as
-    * with-a-stored-document or within-the-batch. Sorted on the tag,
-    * every within-batch pair arrives after everything the first three
-    * labels need, so it streams through the union-find of the
-    * surviving documents and is never held: the task's state is
-    * O(batch rows). The batch documents arrive sorted on (-q, doc_id),
-    * the frame form's window order with Spark's own null and NaN
-    * placement, and take their slots in that order: the exact winner
-    * per hash (null hashes form one group) is the hash's first slot,
-    * and a within-batch group's canonical is its least slot — the
-    * union-find's root, since a union parents the larger root to the
-    * smaller.
+    * [[Dedup.LocalBatchRows]] rows, long ids), run inside the
+    * batch-local kernel's one task over its verified pairs — the
+    * [[Dedup.resolveGroups]] union-find precedent. The batch documents
+    * are the sketch's carried (doc_id, norm_hash, q) rows, and
+    * `inSilver` the evidence hashes the task kept (those equal to a
+    * batch hash). The documents take their slots in the frame form's
+    * window order (-q, doc_id), Spark's own null and NaN placement
+    * included ([[byQuality]]): the exact winner per hash (null hashes
+    * form one group) is the hash's first slot, and a within-batch
+    * group's canonical is its least slot — the union-find's root, since
+    * a union parents the larger root to the smaller. Every pair with a
+    * stored document arrives before the within-batch pairs, so those
+    * stream through the union-find of the surviving documents and are
+    * never held: the state is O(batch rows).
     */
-  private def decideInOneTask(cleaned: DataFrame, evidence: DataFrame,
-                              pairs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.collection.mutable.ArrayBuffer
-    // one row shape for the task's inputs, told apart and ordered by
-    // `t`: 0 batch doc (a doc_id, h norm_hash, q), 1 evidence hash (h),
-    // 2 pair with a stored doc and 3 within-batch pair (a id_a, b id_b)
-    def tagged(t: Column, a: Column, b: Column, h: Column, q: Column) =
-      Seq(t.as("t"), a.cast("long").as("a"), b.cast("long").as("b"),
-        h.cast("string").as("h"), q.cast("double").as("q"))
-    val batchIds = broadcast(cleaned.select(col("doc_id").as("__in")))
-    val rows = cleaned.select(tagged(lit(0), col("doc_id"), lit(null),
-        col("norm_hash"), col("q")): _*)
-      .unionByName(evidence.join(broadcast(cleaned.select(col("norm_hash"))),
-          Seq("norm_hash"), "left_semi")
-        .select(tagged(lit(1), lit(null), lit(null), col("norm_hash"),
-          lit(null)): _*))
-      .unionByName(pairs
-        .join(batchIds, col("id_a") === col("__in"), "left")
-        .select(col("id_a"), col("id_b"), col("__in").isNotNull.as("__a"))
-        .join(batchIds, col("id_b") === col("__in"), "left")
-        .select(tagged(when(col("__a") && col("__in").isNotNull, 3)
-            .otherwise(2), col("id_a"), col("id_b"), lit(null),
-          lit(null)): _*))
-    val schema = StructType(Seq(StructField("doc_id", LongType, false),
-      StructField("decision", StringType, false)))
-    val labels = rows.repartition(1)
-      .sortWithinPartitions(col("t"), negate(col("q")), col("a"))
-      .mapPartitions { it =>
-        val slot = new java.util.HashMap[java.lang.Long, Integer]()
-        val ids = ArrayBuffer.empty[Long]
-        val hashes = ArrayBuffer.empty[String]
-        val winner = new java.util.HashMap[String, Integer]()
-        val inSilver = new java.util.HashSet[String]()
-        // first read by a pair row, after every batch doc has arrived
-        lazy val nearOld = new Array[Boolean](ids.size)
-        // labels (a) and (b): null for a surviving doc
-        lazy val pre = Array.tabulate(ids.size) { i =>
-          if (winner.get(hashes(i)).intValue != i) "exact_dup_batch"
-          else if (hashes(i) != null && inSilver.contains(hashes(i)))
-            "exact_dup_corpus"
-          else if (nearOld(i)) "near_dup_corpus"
-          else null
-        }
-        lazy val parent = Array.tabulate(ids.size)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-          r
-        }
-        def slotOf(r: Row, i: Int): Integer =
-          if (r.isNullAt(i)) null else slot.get(r.getLong(i))
-        it.foreach { r =>
-          r.getInt(0) match {
-            case 0 =>
-              val i = ids.size
-              ids += r.getLong(1)
-              hashes += (if (r.isNullAt(3)) null else r.getString(3))
-              slot.put(r.getLong(1), i)
-              winner.putIfAbsent(hashes(i), i)
-            case 1 => inSilver.add(r.getString(3))
-            case 2 =>
-              val (a, b) = (slotOf(r, 1), slotOf(r, 2))
-              if (a == null && b != null) nearOld(b) = true
-              if (b == null && a != null) nearOld(a) = true
-            case _ =>
-              val (a, b) = (slotOf(r, 1), slotOf(r, 2))
-              if (a != null && b != null && pre(a) == null && pre(b) == null) {
-                val (ra, rb) = (find(a), find(b))
-                if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-              }
-          }
-          ()
-        }
-        ids.indices.iterator.map { i =>
-          Row(ids(i), if (pre(i) != null) pre(i)
-            else if (find(i) == i) "accept" else "near_dup_batch")
-        }
-      }(org.apache.spark.sql.Encoders.row(schema))
-    Checkpoints.truncate(labels.toDF())
+  private val labelTask: Dedup.Consume = (carried, inSilver, withStored,
+                                          within) => {
+    val docs = carried.sorted(byQuality)
+    val slot = new java.util.HashMap[java.lang.Long, Integer]()
+    val hashes = docs.map(r => if (r.isNullAt(1)) null else r.getString(1))
+    val winner = new java.util.HashMap[String, Integer]()
+    docs.indices.foreach { i =>
+      slot.put(docs(i).getLong(0), i); winner.putIfAbsent(hashes(i), i)
+    }
+    val nearOld = new Array[Boolean](docs.length)
+    // a stored id that is also a batch doc (a landing-zone violation)
+    // makes its pair a within-batch one
+    val late = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+    withStored.foreach { p =>
+      (slot.get(p(0)), slot.get(p(1))) match {
+        case (null, null) =>
+        case (a, null)    => nearOld(a) = true
+        case (null, b)    => nearOld(b) = true
+        case _            => late += p
+      }
+    }
+    // labels (a) and (b): null for a surviving doc
+    val pre = Array.tabulate(docs.length) { i =>
+      if (winner.get(hashes(i)).intValue != i) "exact_dup_batch"
+      else if (hashes(i) != null && inSilver.contains(hashes(i)))
+        "exact_dup_corpus"
+      else if (nearOld(i)) "near_dup_corpus"
+      else null
+    }
+    val parent = Array.tabulate(docs.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    (late.iterator ++ within).foreach { p =>
+      val (a, b) = (slot.get(p(0)), slot.get(p(1)))
+      if (a != null && b != null && pre(a) == null && pre(b) == null) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+    docs.indices.iterator.map { i =>
+      Row(docs(i).getLong(0), if (pre(i) != null) pre(i)
+        else if (find(i) == i) "accept" else "near_dup_batch")
+    }
   }
+
+  /** Carried (doc_id, norm_hash, q) rows in the frame form's window
+    * order: `negate(q)` ascending — null first, then Spark's double
+    * order (0.0 equals -0.0, NaN last) — then doc_id.
+    */
+  private val byQuality: Ordering[Row] = (x, y) =>
+    (x.isNullAt(2), y.isNullAt(2)) match {
+      case (true, false) => -1
+      case (false, true) => 1
+      case (nx, _) =>
+        val c =
+          if (nx) 0
+          else {
+            val (a, b) = (-x.getDouble(2), -y.getDouble(2))
+            if (a == b) 0 else java.lang.Double.compare(a, b)
+          }
+        if (c != 0) c else java.lang.Long.compare(x.getLong(0), y.getLong(0))
+    }
 
   /** Why was each document of `batch` kept or rejected? The
     * introspection form of [[corpusIncrement]]'s decision — same
@@ -829,16 +828,18 @@ object Pipeline {
     classifyBatch(spark, outDir, batch, Dedup.LocalBatchRows)
 
   /** [[classifyBatch]] with the batch-local bound of
-    * [[Dedup.withIndexSketch]] (negative: never; specs force the frame
-    * form with it).
+    * [[Dedup.withIndexSketch]] (negative: never) and the batch-local
+    * verify budget; specs force the frame form or trip the budget's
+    * gates with them.
     */
   private[graft] def classifyBatch(spark: SparkSession, outDir: String,
-                                   batch: DataFrame,
-                                   localRows: Long): DataFrame = {
+                                   batch: DataFrame, localRows: Long,
+                                   verifyBytes: Long = Dedup.LocalVerifyBytes)
+      : DataFrame = {
     val cleaned = Checkpoints.truncate(corpusClean(batch))
     Dedup.withIndexSketch(cleaned, "doc_id", "norm_text", indexDir(outDir),
-      cleaned.count(), localRows = localRows)(
-      classifyCleaned(spark, outDir, cleaned, _))
+      cleaned.count(), localRows = localRows, carry = decided)(
+      classifyCleaned(spark, outDir, cleaned, _, verifyBytes))
   }
 
   /** [[corpusIncrement]] with a crash-injection hook fired at the
@@ -898,11 +899,12 @@ object Pipeline {
           s"processed and landed in the index at $idx — re-submitting a " +
           "committed batch would double-count it")
     if (!resuming) Dedup.withIndexSketch(cleaned, "doc_id", "norm_text",
-        idx, rows) { sketch =>
+        idx, rows, carry = decided) { sketch =>
       val acceptIds = classifyCleaned(spark, outDir, cleaned, sketch)
         .filter(col("decision") === "accept").select(col("doc_id"))
       val accepted = cleaned.join(
-        if (sketch.local) broadcast(acceptIds) else acceptIds, Seq("doc_id"))
+        if (sketch.local.isDefined) broadcast(acceptIds) else acceptIds,
+        Seq("doc_id"))
       // two consumers: commit record + hash evidence
       val acceptedSilver0 =
         Checkpoints.truncate(silverColumns(accepted, runDate, recipe))

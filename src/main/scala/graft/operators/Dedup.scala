@@ -73,7 +73,15 @@ object Dedup {
     * hashing cost of k independent digests, the dominant cost of
     * signature building at corpus scale.
     */
-  def signatureFromIndex(sh: DataFrame, k: Int = 16): DataFrame = {
+  def signatureFromIndex(sh: DataFrame, k: Int = 16): DataFrame =
+    signature(sh, k, Nil)
+
+  /** [[signatureFromIndex]] plus `extra` aggregates over each
+    * document's (sid, sh) rows, kept under their names after the `mh`
+    * columns.
+    */
+  private def signature(sh: DataFrame, k: Int,
+                        extra: Seq[(String, Column)]): DataFrame = {
     // the last window starts at offset 1+3(k-1) and spans 8 hex chars,
     // so it must satisfy 3(k-1)+8 <= 64; beyond k=19 it would run off
     // the 64-char digest and silently degrade the signature
@@ -87,36 +95,39 @@ object Dedup {
     // value, and format_string("%08x") re-renders the chosen minimum
     // to the exact same 8-char window string (see
     // [[graft.plans.MinhashSlices]]; pinned by MinhashParitySpec).
-    sh.select(col("sid"),
-        graft.plans.MinhashSlicesApi.minhash_longs(col("sh"), k)
-          .as("__xs"))
+    val kept = if (extra.isEmpty) Seq(col("sid")) else Seq(col("sid"), col("sh"))
+    sh.select(kept :+ graft.plans.MinhashSlicesApi.minhash_longs(col("sh"), k)
+          .as("__xs"): _*)
       .groupBy(col("sid"))
       .agg(
         min(element_at(col("__xs"), 1)).as("m0"),
         (1 until k).map(i =>
-          min(element_at(col("__xs"), i + 1)).as(s"m$i")): _*)
-      .select(col("sid") +:
+          min(element_at(col("__xs"), i + 1)).as(s"m$i")) ++
+          extra.map { case (n, c) => c.as(n) }: _*)
+      .select((col("sid") +:
         (0 until k).map(i =>
           // when() keeps the column NULLABLE like min(substring) was
           // (min over a group is never null here — groups come from
           // existing rows — but the schema must not drift)
           when(col(s"m$i").isNotNull,
-            format_string("%08x", col(s"m$i"))).as(s"mh$i")): _*)
+            format_string("%08x", col(s"m$i"))).as(s"mh$i"))) ++
+        extra.map(e => col(e._1)): _*)
   }
 
   /** One (sid, band-bucket) row per band of each signature — the LSH
     * key space both the batch and incremental candidate joins use.
     */
   def bandBuckets(sig: DataFrame, k: Int = 16,
-                  rowsPerBand: Int = 2): DataFrame = {
-    val nBands = k / rowsPerBand
-    val bandCols = (0 until nBands).map { b =>
+                  rowsPerBand: Int = 2): DataFrame =
+    sig.select(col("sid"), explode(bandArray(k, rowsPerBand)).as("bk"))
+
+  /** A signature row's band buckets: one (band, bucket) struct a band. */
+  private def bandArray(k: Int, rowsPerBand: Int): Column =
+    array((0 until k / rowsPerBand).map { b =>
       struct(lit(b).as("band"),
         concat((0 until rowsPerBand).map(r =>
           col(s"mh${b * rowsPerBand + r}")): _*).as("bucket"))
-    }
-    sig.select(col("sid"), explode(array(bandCols: _*)).as("bk"))
-  }
+    }: _*)
 
   /** D2 step 2 — LSH banding: signatures → (band, bucket) keys →
     * equi-self-join → candidate pairs. bandsOf rows per band.
@@ -694,31 +705,40 @@ object Dedup {
 
   /** One batch's side of the incremental dedup index, derived once and
     * read by the candidate probe, the Jaccard verify and the publish:
-    * the batch's df-capped shingles `sh` (sid, sh), cached, and its
-    * band buckets `bands` (sid, band, bucket) derived from them, under
-    * the index's signature scheme (`k`, `rowsPerBand`, `cap` — the
-    * `_meta` values).
+    * the batch's df-capped shingles `sh` (sid, sh) and its band buckets
+    * `bands` (sid, band, bucket) derived from them, under the index's
+    * signature scheme (`k`, `rowsPerBand`, `cap` — the `_meta` values).
     *
     * A `local` sketch sits on ONE partition (see [[LocalBatchRows]]):
-    * its df-cap and signature aggregate run without an exchange, so
-    * each reader re-derives the bands in-task, and `shRows` is its
-    * measured shingle-row count (-1 for any other sketch). Otherwise it
-    * is the exchange form ([[shingleIndex]]'s fan-out, [[capDocFreq]]),
-    * and a reader that scans the bands more than once caches them.
+    * its df-cap and signature aggregate run without an exchange, both
+    * frames read one persisted row a document (its shingles and its
+    * band buckets), and [[LocalSketch]] holds what its one job brought
+    * to the driver. Otherwise it is the exchange form
+    * ([[shingleIndex]]'s fan-out, [[capDocFreq]]) with the shingles
+    * cached, and a reader that scans the bands more than once caches
+    * them.
     */
   private[graft] final case class BatchSketch(sh: DataFrame,
                                               bands: DataFrame, k: Int,
                                               rowsPerBand: Int, cap: Int,
-                                              local: Boolean,
-                                              shRows: Long)
+                                              local: Option[LocalSketch])
+
+  /** What a batch-local sketch's one job measured and brought to the
+    * driver: `shRows`, the batch's shingle rows (the verify budget's
+    * batch term); `buckets`, the batch ids under each (band, bucket)
+    * key; `carried`, the requested columns of every batch row.
+    */
+  private[graft] final case class LocalSketch(
+      shRows: Long, buckets: Map[(Int, String), Array[Long]],
+      carried: Array[org.apache.spark.sql.Row])
 
   /** The largest batch, in rows, that is sketched on one partition and
     * may be verified in one task. It bounds the serial work, not the
-    * memory: the one-partition sketch's window, aggregate and cache
-    * spill like any Spark operator, and the verify task's resident
-    * maps are gated by [[LocalVerifyBytes]] on measured row counts.
-    * What it does bound in that task is the per-document state — the
-    * batch's band buckets (k/rowsPerBand entries a document) and one
+    * memory: the one-partition sketch's window and aggregate spill like
+    * any Spark operator, and the verify task's resident maps are gated
+    * by [[LocalVerifyBytes]] on measured row counts. What it does bound
+    * is the per-document state — the batch's band buckets (k/rowsPerBand
+    * entries a document, held on the driver and broadcast) and one
     * document's within-batch neighbour set (≤ this many ids). Larger
     * batches run the exchange form, which spreads over the cluster.
     */
@@ -729,17 +749,19 @@ object Dedup {
     * heap. The task holds every batch shingle and every stored shingle
     * of the batch's candidates in Java hash maps, plus the stored
     * candidate pairs in a hash set; [[verifyTaskBytes]] prices them
-    * from the counts the path measures before the task runs (the
-    * sketch's shingle rows, the stored-band probe's rows, the
-    * semi-joined stored shingle rows). Over budget — long documents, or
-    * a crowded bucket pulling many stored copies of a template — the
+    * from measured counts: the sketch's shingle rows and the stored
+    * band probe's distinct pairs, both counted before the task runs,
+    * and the stored shingle rows the task has received so far — a
+    * running count inside the task, which stops reading and decides
+    * nothing once it is over. Over budget — long documents, or a
+    * crowded bucket pulling many stored copies of a template — the
     * exchange verify runs instead.
     */
   private[graft] val LocalVerifyBytes: Long = 128L << 20
 
   /** Resident bytes of the one-task verify: ~150 B a batch shingle
     * (string, map node, table slot), ~200 B a stored shingle (the same
-    * plus its dedup-set node) and ~100 B a stored candidate pair row
+    * plus its dedup-set node) and ~100 B a stored candidate pair
     * (boxed tuple, set node). Within-batch pairs are never held: the
     * task forms them one document at a time.
     */
@@ -748,40 +770,73 @@ object Dedup {
     150L * batchShingles + 200L * storedShingles + 100L * storedPairs
 
   /** Build `batch`'s [[BatchSketch]], run `body` on it, and release
-    * its cached shingles on every exit (one scope, so an increment's
-    * probe, verify and publish all read the same sketch).
+    * it on every exit (one scope, so an increment's match and publish
+    * read the same sketch). A `local` sketch is built, persisted and
+    * measured by ONE job, which also collects the `carry` columns of
+    * every batch row to the driver.
     */
   private[graft] def withBatchSketch[T](batch: DataFrame, idCol: String,
                                         textCol: String, k: Int,
                                         rowsPerBand: Int, cap: Int,
-                                        local: Boolean)
-                                       (body: BatchSketch => T): T = {
-    val sh =
-      if (local) {
-        // one partition, no fan-out; the df-cap is a window over that
-        // partition (no exchange), keeping exactly capDocFreq's rows
-        val one = shingleRows(batch.coalesce(1).select(
-          col(idCol).as("sid"), TextFunctions.tokens(col(textCol)).as("__ws")))
+                                        local: Boolean,
+                                        carry: Seq[String] = Nil)
+                                       (body: BatchSketch => T): T =
+    if (local) {
+      // one partition, no fan-out; the df-cap is a window over that
+      // partition (no exchange), keeping exactly capDocFreq's rows
+      val one = shingleRows(batch.coalesce(1).select(
+        col(idCol).as("sid"), TextFunctions.tokens(col(textCol)).as("__ws")))
+      val sh =
         if (cap < 0) one
         else one.withColumn("__df", count(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))))
           .filter(col("__df") <= cap).drop("__df")
-      } else {
-        val all = shingleIndex(batch, idCol, textCol)
-        if (cap < 0) all else capDocFreq(all, cap)
+      // one row a document — its shingles and its band buckets — from
+      // the one signature aggregate, so no reader derives the bands
+      // again (the publish writes these)
+      val perDoc = signature(sh, k, Seq("shs" -> collect_list(col("sh"))))
+        .select(col("sid"), col("shs"), bandArray(k, rowsPerBand).as("bks"))
+      graft.Checkpoints.cachedRows(perDoc) { docs =>
+        val summary = docs.select(lit(true).as("doc"), col("sid"),
+          size(col("shs")).cast("long").as("n"), col("bks"))
+        val rows =
+          if (carry.isEmpty) summary.collect()
+          else {
+            val carried = struct(carry.map(col): _*)
+            summary.select(col("*"), lit(null).cast(
+                batch.select(carried).schema.head.dataType).as("c"))
+              .union(batch.select(lit(false), lit(null).cast("long"),
+                lit(null).cast("long"),
+                lit(null).cast(summary.schema("bks").dataType), carried))
+              .collect()
+          }
+        val (docRows, carriedRows) = rows.partition(_.getBoolean(0))
+        val buckets = scala.collection.mutable.HashMap
+          .empty[(Int, String), scala.collection.mutable.ArrayBuffer[Long]]
+        // a null id pairs with nothing, as in the exchange form's joins
+        docRows.filterNot(_.isNullAt(1)).foreach { r =>
+          r.getSeq[org.apache.spark.sql.Row](3).foreach { b =>
+            buckets.getOrElseUpdate((b.getInt(0), b.getString(1)),
+              scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
+          }
+        }
+        body(BatchSketch(docs.select(col("sid"), explode(col("shs")).as("sh")),
+          docs.select(col("sid"), explode(col("bks")).as("bk"))
+            .select(col("sid"), col("bk.band").as("band"),
+              col("bk.bucket").as("bucket")),
+          k, rowsPerBand, cap,
+          Some(LocalSketch(docRows.map(_.getLong(2)).sum,
+            buckets.map { case (key, ids) => key -> ids.toArray }.toMap,
+            carriedRows.map(_.getStruct(4))))))
       }
-    graft.Checkpoints.cached(sh) { s =>
-      // under AQE every not-yet-built cached scan in a plan is its own
-      // cache-building job, and the batch-local verify's plan scans the
-      // shingles several times: build them here, once — the count is
-      // the verify budget's batch term
-      val shRows = if (local) rowsUpTo(s) else -1L
-      body(BatchSketch(s, bandBuckets(signatureFromIndex(s, k), k,
-          rowsPerBand).select(col("sid"), col("bk.band").as("band"),
-          col("bk.bucket").as("bucket")), k, rowsPerBand, cap, local,
-        shRows))
+    } else {
+      val all = shingleIndex(batch, idCol, textCol)
+      graft.Checkpoints.cached(if (cap < 0) all else capDocFreq(all, cap)) { s =>
+        body(BatchSketch(s, bandBuckets(signatureFromIndex(s, k), k,
+            rowsPerBand).select(col("sid"), col("bk.band").as("band"),
+            col("bk.bucket").as("bucket")), k, rowsPerBand, cap, None))
+      }
     }
-  }
 
   /** Remove one committed batch from a [[writeDedupIndex]] index — the
     * executable repair for an indexed-but-never-landed batch (see
@@ -1003,12 +1058,10 @@ object Dedup {
     * A batch of at most [[LocalBatchRows]] rows with a long id column
     * (a one-job row probe that stops past the bound decides) runs
     * batch-local: its sketch sits on one partition and, while the
-    * measured verify state fits [[LocalVerifyBytes]], the candidate
-    * grouping and verify run in one executor task ([[localMatch]]),
-    * so the batch side costs a handful of Spark jobs instead of one
-    * per exchange. Larger batches, and state over the budget, run the
-    * exchange form. Both return the same pairs (spec-asserted:
-    * AgainstIndexParitySpec).
+    * measured verify state fits [[LocalVerifyBytes]], its pairs come
+    * out of the batch-local kernel ([[batchLocal]]) in three jobs.
+    * Larger batches, and state over the budget, run the exchange form.
+    * Both return the same pairs (spec-asserted: AgainstIndexParitySpec).
     *
     * `newBatch` ids must be disjoint from the indexed corpus (the
     * landing-zone invariant incremental dedup exists to maintain).
@@ -1029,7 +1082,7 @@ object Dedup {
     * SQL execution, so its jobs (a broadcast in `df`'s plan included)
     * show up in the SQL tab and in [[graft.tools.Profile]] under it.
     */
-  private def rowsUpTo(df: DataFrame, upTo: Long = Long.MaxValue): Long = {
+  private def rowsUpTo(df: DataFrame, upTo: Long): Long = {
     val qe = df.queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
         Some("count")) {
@@ -1045,13 +1098,15 @@ object Dedup {
     * against, and then appended to, the published index at `path`:
     * sketched batch-local when its id column is long and `rows` (only
     * evaluated then) is at most `localRows` (negative: never; specs
-    * force either form with it).
+    * force either form with it). A local sketch collects the batch's
+    * `carry` columns.
     */
   private[graft] def withIndexSketch[T](batch: DataFrame, idCol: String,
                                         textCol: String, path: String,
                                         rows: => Long, k: Int = 16,
                                         rowsPerBand: Int = 2,
-                                        localRows: Long = LocalBatchRows)
+                                        localRows: Long = LocalBatchRows,
+                                        carry: Seq[String] = Nil)
                                        (body: BatchSketch => T): T = {
     // the batch side MUST run the same signature scheme and df-cap the
     // stored index was built with (see writeDedupIndex's meta
@@ -1062,200 +1117,259 @@ object Dedup {
     // long ids only: the one-task verify keys its maps by long id
     val local = localRows >= 0 && batch.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType && rows <= localRows
-    withBatchSketch(batch, idCol, textCol, k, rowsPerBand, cap, local)(body)
+    withBatchSketch(batch, idCol, textCol, k, rowsPerBand, cap, local,
+      carry)(body)
+  }
+
+  /** The stored band and shingle tables of the index at `path`: one
+    * path each per committed batch, from one `_meta` read.
+    */
+  private def committedTables(spark: org.apache.spark.sql.SparkSession,
+                              path: String): (Seq[String], Seq[String]) = {
+    val batches = readMeta(fsFor(spark, path), path).batches
+    require(batches.nonEmpty,
+      s"no committed batch in the dedup index at $path — append one " +
+        "with writeDedupIndex before querying against it")
+    (tablePaths(path, batches, "bands"), tablePaths(path, batches, "shingles"))
   }
 
   /** The verified (id_a, id_b, jaccard) pairs of a sketched batch
     * against the index at `path` and against itself, materialized (the
     * result outlives the sketch's scope). A local sketch runs
-    * [[localMatch]] under the `verifyBytes` budget (specs shrink it);
-    * any other sketch, or one over budget, runs the exchange form: a
-    * band-bucket join against the stored bands plus the batch's
-    * self-join, then [[jaccardVerify]] over the batch shingles and the
-    * candidate-restricted stored shingles.
+    * [[batchLocal]] under the `verifyBytes` budget (specs shrink it);
+    * any other sketch, or one over budget, runs [[exchangeMatch]].
     */
   private[graft] def matchSketch(sk: BatchSketch, path: String,
                                  thresholdNum: Int = 1,
                                  thresholdDen: Int = 2,
                                  verifyBytes: Long = LocalVerifyBytes)
       : DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq("id_a", "id_b", "i", "n_a", "n_b")
+      .map(StructField(_, LongType, nullable = false)))
+    sk.local.flatMap(_ => batchLocal(sk, path, thresholdNum, thresholdDen,
+        verifyBytes, None, schema, (_, _, withStored, within) =>
+          (withStored ++ within).map(p =>
+            org.apache.spark.sql.Row(p(0), p(1), p(2), p(3), p(4)))) { rows =>
+        graft.Checkpoints.truncate(jaccardOf(rows, col("n_a"), col("n_b"),
+          thresholdNum, thresholdDen))
+      })
+      .getOrElse(exchangeMatch(sk, path, thresholdNum, thresholdDen))
+  }
+
+  /** The exchange form of [[matchSketch]]: a band-bucket join against
+    * the stored bands plus the batch's self-join, then [[jaccardVerify]]
+    * over the batch shingles and the candidate-restricted stored
+    * shingles, materialized.
+    */
+  private[graft] def exchangeMatch(sk: BatchSketch, path: String,
+                                   thresholdNum: Int = 1,
+                                   thresholdDen: Int = 2): DataFrame = {
     val spark = sk.sh.sparkSession
-    val batches = readMeta(fsFor(spark, path), path).batches
-    require(batches.nonEmpty,
-      s"no committed batch in the dedup index at $path — append one " +
-        "with writeDedupIndex before querying against it")
-    val bandPaths = tablePaths(path, batches, "bands")
-    val shinglePaths = tablePaths(path, batches, "shingles")
+    val (bandPaths, shinglePaths) = committedTables(spark, path)
+    val idxBk = readBatchTables(spark, bandPaths)
+    val idxSh = readBatchTables(spark, shinglePaths)
+    // the batch's band table feeds the index join AND the batch
+    // self-join; it is released before the verify runs
+    val cand = graft.Checkpoints.cached(sk.bands) { newBk =>
+      val vsIndex = newBk.as("a")
+        .join(idxBk.as("b"),
+          col("a.band") === col("b.band") &&
+            col("a.bucket") === col("b.bucket") &&
+            col("a.sid") =!= col("b.sid"))
+        .select(least(col("a.sid"), col("b.sid")).as("id_a"),
+          greatest(col("a.sid"), col("b.sid")).as("id_b"))
+      val vsSelf = newBk.as("a")
+        .join(newBk.as("b"),
+          col("a.band") === col("b.band") &&
+            col("a.bucket") === col("b.bucket") &&
+            col("a.sid") < col("b.sid"))
+        .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"))
+      graft.Checkpoints.truncate(vsIndex.unionByName(vsSelf).distinct())
+    }
+    // verify needs shingles for candidate ids only: semi-join the
+    // (corpus-sized) stored shingle table down to candidates BEFORE
+    // the size aggregate, so the only aggregation that runs is
+    // candidate-sized. No broadcast hint: `cand` is checkpointed, so
+    // AQE sees its true size and broadcasts when it fits (the normal
+    // case — a map-side probe per partition) but degrades to a shuffle
+    // join instead of failing if one day's candidates are huge.
+    val candIds = cand.select(col("id_a").as("cid"))
+      .unionByName(cand.select(col("id_b").as("cid"))).distinct()
+    // .distinct() AFTER the semi-join (candidate-sized, so cheap):
+    // shingle rows are unique per (sid, sh) by construction, but a
+    // duplicated index append that slipped past writeDedupIndex's
+    // guard would double them — and doubled rows shift every verify
+    // count. Dedupe on read so verify stays exact regardless.
+    val storedSh = idxSh
+      .join(candIds, col("sid") === col("cid"), "left_semi")
+      .distinct()
+    graft.Checkpoints.truncate(jaccardVerify(sk.sh.unionByName(storedSh),
+      Some(cand), thresholdNum, thresholdDen))
+  }
+
+  /** The consumer of [[batchLocal]]'s verified pairs, run inside its
+    * one task. It gets the sketch's carried rows, the evidence values
+    * the task received, and the pairs (id_a, id_b, i, n_a, n_b), id_a
+    * < id_b, that pass the threshold: first every pair with a stored
+    * document, then the within-batch pairs. It returns the task's
+    * output rows.
+    */
+  private[graft] type Consume = (Array[org.apache.spark.sql.Row],
+    java.util.Set[String], Iterator[Array[Long]], Iterator[Array[Long]]) =>
+    Iterator[org.apache.spark.sql.Row]
+
+  /** What [[batchLocal]]'s task reads besides its rows: the stored
+    * candidate pairs (batch id, stored id), the ids whose stored
+    * shingles it receives, the batch's carried rows, the evidence
+    * values it keeps, and how many stored shingle rows fit the budget.
+    */
+  private final case class KernelSide(pairs: Array[(Long, Long)],
+                                       ids: Set[Long],
+                                       carried: Array[org.apache.spark.sql.Row],
+                                       keep: Set[String], storedFit: Long)
+
+  /** THE batch-local kernel: a local sketch matched against the index at
+    * `path` and decided in one executor task, or None when the task's
+    * measured state would exceed `verifyBytes` ([[verifyTaskBytes]]).
+    * Two jobs after the sketch's own (the first, and `finish`'s one
+    * job running steps 2 and 3):
+    *
+    *  1. The stored band scan, at its own parallelism, looks each row
+    *     up in the batch's buckets (a driver broadcast) and collects
+    *     the distinct stored candidate pairs; each task stops once its
+    *     pairs exceed what the budget leaves, and the driver gates on
+    *     the measured count.
+    *  2. The stored candidate ids, plus the batch ids (a batch id that
+    *     is also stored, a landing-zone violation, gets its stored rows
+    *     as in the exchange form's candidate-id semi-join), and the
+    *     `evidence` values to keep go to the stored shingle scan and to
+    *     the evidence scan as a second broadcast. Their kept rows and
+    *     the batch's shingles reach ONE task through one shuffle (the
+    *     [[resolveGroups]] union-find precedent). The task counts the
+    *     stored rows as they arrive and decides nothing once they are
+    *     over the budget; otherwise it counts each candidate pair's
+    *     shared shingles and set sizes exactly as [[jaccardVerify]]'s
+    *     joins do (stored rows deduped, batch rows as they are), forms
+    *     the within-batch pairs one document at a time from the band
+    *     buckets, and hands the pairs that pass the threshold (the
+    *     integer test of [[jaccardOf]]) to `consume`.
+    *  3. `finish` materializes the task's rows (of `schema`) while the
+    *     broadcasts live; both are destroyed on every exit.
+    *
+    * Its pairs equal the exchange form's (spec-pinned:
+    * AgainstIndexParitySpec).
+    */
+  private[graft] def batchLocal[T](sk: BatchSketch, path: String,
+                                   thresholdNum: Int, thresholdDen: Int,
+                                   verifyBytes: Long,
+                                   evidence: Option[(DataFrame, Set[String])],
+                                   schema: org.apache.spark.sql.types.StructType,
+                                   consume: Consume)
+                                  (finish: DataFrame => T): Option[T] = {
+    val ls = sk.local.getOrElse(throw new IllegalArgumentException(
+      "batchLocal needs a batch-local sketch"))
+    val spark = sk.sh.sparkSession
+    val (bandPaths, shinglePaths) = committedTables(spark, path)
     // the stored tables share the batch's schema (same id column), so
     // no footer-reading schema inference job runs
     def stored(paths: Seq[String], as: DataFrame) =
       spark.read.schema(as.schema).option("recursiveFileLookup", "true")
         .parquet(paths: _*)
-    val local =
-      if (!sk.local) None
-      else localMatch(sk, stored(bandPaths, sk.bands),
-        stored(shinglePaths, sk.sh), thresholdNum, thresholdDen, verifyBytes)
-    local.getOrElse {
-      val idxBk = readBatchTables(spark, bandPaths)
-      val idxSh = readBatchTables(spark, shinglePaths)
-      // the batch's band table feeds the index join AND the batch
-      // self-join; it is released before the verify runs
-      val cand = graft.Checkpoints.cached(sk.bands) { newBk =>
-        val vsIndex = newBk.as("a")
-          .join(idxBk.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.sid") =!= col("b.sid"))
-          .select(least(col("a.sid"), col("b.sid")).as("id_a"),
-            greatest(col("a.sid"), col("b.sid")).as("id_b"))
-        val vsSelf = newBk.as("a")
-          .join(newBk.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.sid") < col("b.sid"))
-          .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"))
-        graft.Checkpoints.truncate(vsIndex.unionByName(vsSelf).distinct())
+    val pairsFit = (verifyBytes - verifyTaskBytes(ls.shRows, 0L, 0L)) / 100L
+    if (pairsFit < 0L) None
+    else graft.Checkpoints.broadcast(spark, ls.buckets) { buckets =>
+      val found = stored(bandPaths, sk.bands).queryExecution.toRdd
+        .mapPartitions { rows =>
+          val got = new java.util.HashSet[(Long, Long)]()
+          while (got.size <= pairsFit && rows.hasNext) {
+            val r = rows.next()
+            if (!r.isNullAt(0) && !r.isNullAt(2)) {
+              val sid = r.getLong(0)
+              buckets.value.get((r.getInt(1), r.getUTF8String(2).toString))
+                .foreach(_.foreach(n => if (n != sid) got.add((n, sid))))
+            }
+          }
+          Iterator(got.toArray(Array.empty[(Long, Long)]))
+        }.collect().flatten.distinct
+      if (verifyTaskBytes(ls.shRows, 0L, found.length) > verifyBytes) None
+      else graft.Checkpoints.broadcast(spark, KernelSide(found,
+          found.iterator.map(_._2).toSet ++ ls.buckets.valuesIterator.flatten,
+          ls.carried, evidence.fold(Set.empty[String])(_._2),
+          (verifyBytes - verifyTaskBytes(ls.shRows, 0L, found.length)) /
+            200L)) { side =>
+        // one row shape for the task's inputs, told apart by `t`: 1
+        // evidence value, 2 batch shingle, 3 stored shingle
+        def tagged(t: Int, a: Column, s: Column) =
+          Seq(lit(t).as("t"), a.cast("long").as("a"), s.cast("string").as("s"))
+        val isCandidate = udf((sid: Long) => side.value.ids.contains(sid))
+        val kept = udf((v: String) => v != null && side.value.keep.contains(v))
+        val shingles = sk.sh.select(tagged(2, col("sid"), col("sh")): _*)
+          .union(stored(shinglePaths, sk.sh).filter(isCandidate(col("sid")))
+            .select(tagged(3, col("sid"), col("sh")): _*))
+        val rows = evidence.fold(shingles) { case (ev, _) =>
+          val v = col(ev.columns.head)
+          shingles.union(ev.filter(kept(v)).select(tagged(1, lit(null), v): _*))
+        }
+        val over = spark.sparkContext.longAccumulator("batchLocal over budget")
+        val (num, den) = (thresholdNum, thresholdDen)
+        val out = rows.queryExecution.toRdd.map(_.copy()).repartition(1)
+          .mapPartitions { it =>
+            val res = verifyTask(it, side.value, buckets.value, num, den,
+              consume)
+            if (res.isEmpty) over.add(1L)
+            res.getOrElse(Iterator.empty)
+          }
+        val result = finish(spark.createDataFrame(out, schema))
+        if (over.value > 0L) None else Some(result)
       }
-      // verify needs shingles for candidate ids only: semi-join the
-      // (corpus-sized) stored shingle table down to candidates BEFORE
-      // the size aggregate, so the only aggregation that runs is
-      // candidate-sized. No broadcast hint: `cand` is checkpointed, so
-      // AQE sees its true size and broadcasts when it fits (the normal
-      // case — a map-side probe per partition) but degrades to a shuffle
-      // join instead of failing if one day's candidates are huge.
-      val candIds = cand.select(col("id_a").as("cid"))
-        .unionByName(cand.select(col("id_b").as("cid"))).distinct()
-      // .distinct() AFTER the semi-join (candidate-sized, so cheap):
-      // shingle rows are unique per (sid, sh) by construction, but a
-      // duplicated index append that slipped past writeDedupIndex's
-      // guard would double them — and doubled rows shift every verify
-      // count. Dedupe on read so verify stays exact regardless.
-      val storedSh = idxSh
-        .join(candIds, col("sid") === col("cid"), "left_semi")
-        .distinct()
-      graft.Checkpoints.truncate(jaccardVerify(sk.sh.unionByName(storedSh),
-        Some(cand), thresholdNum, thresholdDen))
     }
   }
 
-  /** The batch-local form of [[matchSketch]] (`idxBk`, `idxSh`: the
-    * stored bands and shingles), or None when the verify task's
-    * measured state would exceed `verifyBytes` ([[verifyTaskBytes]]).
-    * Only the stored scans run in parallel: the batch's buckets
-    * broadcast into the stored band scan, and the batch ids plus the
-    * stored candidate ids broadcast into the stored shingle scan; each
-    * result is cached and counted in one job ([[rowsUpTo]]), read once
-    * by the gate and once by the task. Everything else is ONE executor
-    * task (the [[resolveGroups]] union-find precedent): it receives the
-    * stored candidate pairs, the batch's bands and shingles and the
-    * semi-joined stored shingles as tagged rows, forms the within-batch
-    * pairs one document at a time from the (band, bucket) groups, and
-    * counts each candidate pair's shared shingles and set sizes exactly
-    * as [[jaccardVerify]]'s joins do (stored rows deduped, batch rows
-    * as they are). [[jaccardOf]] then applies the same threshold and
-    * rounding, so the output equals the exchange form's (spec-pinned:
-    * AgainstIndexParitySpec).
+  /** [[batchLocal]]'s task over its tagged rows: None once the stored
+    * shingle rows exceed `side.storedFit`, else `consume`'s rows.
     */
-  private def localMatch(sk: BatchSketch, idxBk: DataFrame,
-                         idxSh: DataFrame, thresholdNum: Int,
-                         thresholdDen: Int,
-                         verifyBytes: Long): Option[DataFrame] = {
-    // one row shape for the task's four inputs, told apart by `t`:
-    // 0 stored candidate pair (a batch sid, b stored sid), 1 batch band
-    // (a sid, b band, s bucket), 2 batch shingle and 3 stored shingle
-    // (a sid, s shingle)
-    def tagged(t: Int, a: Column, b: Column, s: Column) =
-      Seq(lit(t).as("t"), a.cast("long").as("a"), b.cast("long").as("b"),
-        s.cast("string").as("s"))
-    val probe = idxBk.join(broadcast(sk.bands.select(col("sid").as("__n"),
-          col("band").as("__b"), col("bucket").as("__k"))),
-        col("band") === col("__b") && col("bucket") === col("__k") &&
-          col("sid") =!= col("__n"))
-      .select(tagged(0, col("__n"), col("sid"), lit(null)): _*)
-    graft.Checkpoints.cached(probe) { pairRows =>
-      val nPairs = rowsUpTo(pairRows)
-      if (verifyTaskBytes(sk.shRows, 0L, nPairs) > verifyBytes) None
-      else {
-        // the batch's ids ride along: a batch id that is also stored (a
-        // landing-zone violation) gets its stored rows, as in the
-        // exchange form's candidate-id semi-join
-        val ids = pairRows.select(col("b").as("__id"))
-          .unionByName(sk.bands.select(col("sid").as("__id")))
-        val storedSh = idxSh.join(broadcast(ids), col("sid") === col("__id"),
-            "left_semi")
-          .select(tagged(3, col("sid"), lit(null), col("sh")): _*)
-        graft.Checkpoints.cached(storedSh) { shRows =>
-          if (verifyTaskBytes(sk.shRows, rowsUpTo(shRows), nPairs) >
-              verifyBytes) None
-          else Some(verifyInOneTask(pairRows
-            .unionByName(sk.bands.select(
-              tagged(1, col("sid"), col("band"), col("bucket")): _*))
-            .unionByName(sk.sh.select(
-              tagged(2, col("sid"), lit(null), col("sh")): _*))
-            .unionByName(shRows), thresholdNum, thresholdDen))
-        }
+  private def verifyTask(it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+                         side: KernelSide,
+                         buckets: Map[(Int, String), Array[Long]],
+                         thresholdNum: Int, thresholdDen: Int,
+                         consume: Consume)
+      : Option[Iterator[org.apache.spark.sql.Row]] = {
+    import scala.jdk.CollectionConverters._
+    type Counts = java.util.HashMap[String, java.lang.Integer]
+    val counts = new java.util.HashMap[java.lang.Long, Counts]()
+    val storedSeen =
+      new java.util.HashMap[java.lang.Long, java.util.HashSet[String]]()
+    val evidence = new java.util.HashSet[String]()
+    def addShingle(sid: Long, sh: String): Unit = {
+      val m = counts.computeIfAbsent(sid, _ => new Counts())
+      m.merge(sh, Integer.valueOf(1),
+        (x, y) => Integer.valueOf(x.intValue + y.intValue)); ()
+    }
+    var storedRows = 0L
+    while (storedRows <= side.storedFit && it.hasNext) {
+      val r = it.next()
+      r.getInt(0) match {
+        case 1 => evidence.add(r.getUTF8String(2).toString)
+        case 2 => addShingle(r.getLong(1), r.getUTF8String(2).toString)
+        case _ =>
+          storedRows += 1
+          val (a, sh) = (r.getLong(1), r.getUTF8String(2).toString)
+          if (storedSeen.computeIfAbsent(a,
+              _ => new java.util.HashSet[String]()).add(sh))
+            addShingle(a, sh)
       }
     }
-  }
-
-  /** [[localMatch]]'s task over its tagged rows, materialized. */
-  private def verifyInOneTask(rows: DataFrame, thresholdNum: Int,
-                              thresholdDen: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.collection.mutable.ArrayBuffer
-    import scala.jdk.CollectionConverters._
-    val schema = StructType(Seq("id_a", "id_b", "i", "n_a", "n_b")
-      .map(StructField(_, LongType, nullable = false)))
-    val verified = rows.repartition(1).mapPartitions { it =>
-      type Counts = java.util.HashMap[String, java.lang.Integer]
-      type Key = (Long, String)
-      val counts = new java.util.HashMap[java.lang.Long, Counts]()
-      val storedSeen =
-        new java.util.HashMap[java.lang.Long, java.util.HashSet[String]]()
-      // (band, bucket) -> batch sids, and sid -> its (band, bucket)s
-      val members = new java.util.HashMap[Key, ArrayBuffer[Long]]()
-      val keys = new java.util.HashMap[java.lang.Long, ArrayBuffer[Key]]()
-      val storedPairs = new java.util.HashSet[(Long, Long)]()
-      def addShingle(sid: Long, sh: String): Unit = {
-        val m = counts.computeIfAbsent(sid, _ => new Counts())
-        m.merge(sh, Integer.valueOf(1),
-          (x, y) => Integer.valueOf(x.intValue + y.intValue)); ()
-      }
-      it.foreach { r =>
-        val a = r.getLong(1)
-        r.getInt(0) match {
-          case 0 =>
-            val b = r.getLong(2)
-            storedPairs.add((math.min(a, b), math.max(a, b)))
-          case 1 =>
-            val key = (r.getLong(2), r.getString(3))
-            members.computeIfAbsent(key, _ => ArrayBuffer.empty[Long]) += a
-            keys.computeIfAbsent(a, _ => ArrayBuffer.empty[Key]) += key
-          case 2 => addShingle(a, r.getString(3))
-          case _ =>
-            if (storedSeen.computeIfAbsent(a,
-                _ => new java.util.HashSet[String]()).add(r.getString(3)))
-              addShingle(a, r.getString(3))
-        }
-        ()
-      }
+    if (storedRows > side.storedFit) None
+    else {
       storedSeen.clear()
       val sizes = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       counts.forEach { (sid, m) =>
         var n = 0L; m.values().forEach(c => n += c.longValue)
         sizes.put(sid, n); ()
       }
-      // within-batch pairs (a, c), a < c, one document's neighbour set
-      // at a time — never the whole pair set; a pair the stored probe
-      // also found is left to `storedPairs`
-      val batchPairs = keys.asScala.iterator.flatMap { case (a, ks) =>
-        val near = new java.util.HashSet[Long]()
-        ks.foreach(members.get(_).foreach(c => if (c > a) near.add(c)))
-        near.asScala.iterator.map(c => (a.longValue, c))
-          .filterNot(p => storedPairs.contains(p))
-      }
-      (batchPairs ++ storedPairs.asScala.iterator).flatMap { case (a, b) =>
+      def verified(p: (Long, Long)): Option[Array[Long]] = {
+        val (a, b) = p
         val (ma, mb) = (counts.get(a), counts.get(b))
         if (ma == null || mb == null) None
         else {
@@ -1265,13 +1379,36 @@ object Dedup {
             val o = big.get(sh)
             if (o != null) i += c.longValue * o.longValue
           })
-          if (i > 0) Some(Row(a, b, i, sizes.get(a), sizes.get(b)))
+          val (na, nb) = (sizes.get(a).longValue, sizes.get(b).longValue)
+          if (i > 0 && i * thresholdDen >= (na + nb - i) * thresholdNum)
+            Some(Array(a, b, i, na, nb))
           else None
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
-    graft.Checkpoints.truncate(jaccardOf(verified.toDF(), col("n_a"),
-      col("n_b"), thresholdNum, thresholdDen))
+      // the batch ids under their (band, bucket) keys, and each batch
+      // id's keys
+      val keys = new java.util.HashMap[java.lang.Long,
+        scala.collection.mutable.ArrayBuffer[(Int, String)]]()
+      buckets.foreach { case (key, ids) => ids.foreach(id =>
+        keys.computeIfAbsent(id,
+          _ => scala.collection.mutable.ArrayBuffer.empty) += key) }
+      val storedPairs = new java.util.HashSet[(Long, Long)]()
+      side.pairs.foreach { case (a, b) =>
+        storedPairs.add((math.min(a, b), math.max(a, b))) }
+      val (within, withStored) = storedPairs.asScala.toSeq
+        .partition { case (a, b) => keys.containsKey(a) && keys.containsKey(b) }
+      // within-batch pairs (a, c), a < c, one document's neighbour set
+      // at a time — never the whole pair set; a pair the stored probe
+      // also found is left to `storedPairs`
+      val batchPairs = keys.asScala.iterator.flatMap { case (a, ks) =>
+        val near = new java.util.HashSet[Long]()
+        ks.foreach(buckets(_).foreach(c => if (c > a) near.add(c)))
+        near.asScala.iterator.map(c => (a.longValue, c))
+          .filterNot(p => storedPairs.contains(p))
+      }
+      Some(consume(side.carried, evidence, withStored.iterator.flatMap(verified),
+        (within.iterator ++ batchPairs).flatMap(verified)))
+    }
   }
 
   /** D9 — benchmark CONTAMINATION check (decontamination pass): flag

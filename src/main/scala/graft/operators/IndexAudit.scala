@@ -49,7 +49,9 @@ object IndexAudit {
   private def findings(spark: SparkSession, path: String, nowMs: Long)
       : Seq[IndexProtocol.AuditFinding] = {
     val fs = graft.sources.Tables.fsFor(spark, path)
-    val payload = Dedup.payloadCheck(fs, path)
+    // read only when a committed batch is listed: a root with no meta
+    // audits as meta/missing alone
+    lazy val payload = Dedup.payloadCheck(fs, path)
     IndexProtocol.auditIndex(fs, path, nowMs).map {
       case f @ IndexProtocol.AuditFinding("batch", b, "committed_ok", _) =>
         payload(b).fold(f)(IndexProtocol.AuditFinding("batch", b, _, false))
@@ -93,6 +95,9 @@ object IndexAudit {
     *    `needs_increment_retry`: the resume path is
     *    [[graft.Pipeline.corpusIncrement]] with the same batch — repair
     *    must not guess at landing state;
+    *  - a root with no committed `_meta` → REPORTED as
+    *    `unrepairable_missing_meta`, and nothing is written: with no
+    *    committed list there is nothing to rail a reclaim on;
     *  - finally one sweep reclaims whatever clock has already
     *    expired (railed on the re-read committed list, as always).
     *
@@ -101,7 +106,10 @@ object IndexAudit {
   def repair(spark: SparkSession, path: String,
              nowMs: Long = System.currentTimeMillis()): DataFrame = {
     val fs = graft.sources.Tables.fsFor(spark, path)
-    val actions = findings(spark, path, nowMs).flatMap {
+    val found = findings(spark, path, nowMs)
+    val actions = found.flatMap {
+      case IndexProtocol.AuditFinding("meta", m, "missing", _) =>
+        Seq(("meta", m, "unrepairable_missing_meta"))
       case IndexProtocol.AuditFinding("marker", m,
           "stale_on_committed", _) =>
         IndexProtocol.clearPendingDelete(fs, path, m)
@@ -134,9 +142,11 @@ object IndexAudit {
         Seq(("batch", b, "needs_increment_retry"))
       case _ => Seq.empty
     }
-    val swept = IndexProtocol.sweepPendingDeletes(fs, path, nowMs,
-      IndexProtocol.committedFromMeta(fs, path))
-      .map(b => ("dir", b, "reclaimed"))
+    val swept =
+      if (found.exists(_.kind == "meta")) Nil
+      else IndexProtocol.sweepPendingDeletes(fs, path, nowMs,
+          IndexProtocol.committedFromMeta(fs, path))
+        .map(b => ("dir", b, "reclaimed"))
     import spark.implicits._
     (actions ++ swept).toDF("kind", "name", "action")
   }

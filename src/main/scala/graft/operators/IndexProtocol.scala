@@ -574,6 +574,11 @@ private[graft] object IndexProtocol {
     * that), never by data size, so it is free at 100 TB.
     *
     * Statuses (healthy=true unless noted):
+    *  - meta/missing (UNHEALTHY) — the root has no committed `_meta`:
+    *    a bootstrap that crashed before its gen-0 meta create (its
+    *    batch directory may be there), or no index at all. Nothing
+    *    else is classified, since there is no committed truth to
+    *    classify against; re-run the bootstrap.
     *  - batch/committed_ok — committed id, payload directory present
     *  - batch/committed_missing_payload (UNHEALTHY) — committed id
     *    with NO directory: probes will fail; restore the directory or
@@ -612,8 +617,16 @@ private[graft] object IndexProtocol {
     */
   def auditIndex(fs: FileSystem, root: String,
                  nowMs: Long = System.currentTimeMillis())
-      : Seq[AuditFinding] = {
-    val kv = metaKv(fs, root)
+      : Seq[AuditFinding] =
+    MetaSwap.read(fs, new Path(s"$root/_meta")).map(kvOf) match {
+      case None => Seq(AuditFinding("meta", "_meta", "missing", false))
+      case Some(kv) => auditListed(fs, root, kv, nowMs)
+    }
+
+  /** [[auditIndex]] of a root whose `_meta` reads as `kv`. */
+  private def auditListed(fs: FileSystem, root: String,
+                          kv: Map[String, String],
+                          nowMs: Long): Seq[AuditFinding] = {
     def parse(k: String) = idList(kv.getOrElse(k, ""))
     val committed = parse("batches")
     val retired = parse("retired")

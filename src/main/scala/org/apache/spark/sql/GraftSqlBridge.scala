@@ -61,6 +61,23 @@ object GraftSqlBridge {
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 
+  /** A batch DataFrame over already-computed internal rows of
+    * `schema` (what [[graft.Checkpoints.cachedRows]] reads its
+    * persisted rows through; `internalCreateDataFrame` is
+    * `private[sql]`, hence bridged here).
+    */
+  def ofRows(spark: SparkSession,
+             rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+             schema: StructType): Dataset[Row] =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
+  /** Destroy `b` and wait until its blocks are removed (the blocking
+    * form is `private[spark]`, hence bridged here).
+    */
+  def destroyBlocking(b: org.apache.spark.broadcast.Broadcast[_]): Unit =
+    b.destroy(blocking = true)
+
   /** The inverse: re-wrap the DataFrame a DSv1 [[execution.streaming
     * .Sink]]'s `addBatch` receives (a streaming-tagged plan) as a
     * plain BATCH frame the store ops can publish — the standard

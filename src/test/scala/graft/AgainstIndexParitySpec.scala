@@ -34,7 +34,8 @@ class AgainstIndexParitySpec extends AnyFunSuite {
       : (Boolean, DataFrame) =
     Dedup.withIndexSketch(batch, "doc_id", textCol, idx, batch.count(),
         localRows = localRows) { sk =>
-      (sk.local, Dedup.matchSketch(sk, idx, verifyBytes = verifyBytes))
+      (sk.local.isDefined,
+        Dedup.matchSketch(sk, idx, verifyBytes = verifyBytes))
     }
 
   /** Both forms' pairs for `batch` against the index at `idx`; asserts
@@ -237,4 +238,58 @@ class AgainstIndexParitySpec extends AnyFunSuite {
           s"append−increment=${(ref -- inc).take(5)}")
     }
   }
+
+  test("each gate of the verify budget, tripped, gives the exchange " +
+      "form's pairs: the pair count and the stored rows in the task") {
+    val (out, batch) = day
+    val idx = s"$out/dedup_index"
+    val cleaned = Pipeline.corpusClean(batch).localCheckpoint()
+    val (shRows, nPairs) = VerifyBudget.terms(cleaned, idx)
+    assert(nPairs > 0, "the batch needs stored candidates")
+    val reference = pairs(against(cleaned, idx, "norm_text", -1L)._2)
+    def run(budget: Long) = Profile.recording(spark) { r =>
+      drained(r)
+      val got = pairs(against(cleaned, idx, "norm_text",
+        Dedup.LocalBatchRows, budget)._2)
+      (got, drained(r).sites)
+    }
+    // the kernel's task runs at a matchSketch site, the exchange form
+    // at exchangeMatch's
+    def ran(sites: Seq[Profile.Site], at: String) = sites.exists(_.site.contains(at))
+    val exact = 150L * shRows + 100L * nPairs
+    val (fits, fitSites) = run(Dedup.LocalVerifyBytes)
+    val (pairGate, pairSites) = run(exact - 1L)
+    val (taskGate, taskSites) = run(exact)
+    assert(ran(fitSites, "matchSketch") && !ran(fitSites, "exchangeMatch"))
+    assert(!ran(pairSites, "matchSketch") && ran(pairSites, "exchangeMatch"),
+      "one pair over the budget: no task, the exchange form")
+    assert(ran(taskSites, "matchSketch") && ran(taskSites, "exchangeMatch"),
+      "the stored rows over the budget: the task ran, then the exchange form")
+    Seq(fits, pairGate, taskGate).foreach(got => assert(got == reference))
+  }
+}
+
+/** The measured terms of the batch-local verify budget
+  * (`Dedup.verifyTaskBytes`) for a batch against a dedup index, as
+  * specs derive them to place a budget on either side of a gate.
+  */
+object VerifyBudget {
+  import SparkTestSession._
+
+  /** The sketch's shingle rows of `cleaned` and its distinct stored
+    * candidate pairs (batch id, stored id) in the index at `idx`.
+    */
+  def terms(cleaned: DataFrame, idx: String): (Long, Long) =
+    Dedup.withIndexSketch(cleaned, "doc_id", "norm_text", idx,
+        cleaned.count()) { sk =>
+      val fs = sources.Tables.fsFor(spark, idx)
+      val stored = spark.read.option("recursiveFileLookup", "true")
+        .parquet(Dedup.readMeta(fs, idx).batches
+          .map(b => s"$idx/batches/$b/bands"): _*)
+      (sk.local.get.shRows, sk.bands.as("a").join(stored.as("b"),
+          col("a.band") === col("b.band") &&
+            col("a.bucket") === col("b.bucket") &&
+            col("a.sid") =!= col("b.sid"))
+        .select(col("a.sid"), col("b.sid")).distinct().count())
+    }
 }

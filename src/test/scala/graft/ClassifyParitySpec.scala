@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Corpus, Dedup}
+import graft.tools.Profile
 
 /** Differential parity for the batch classifier behind
   * `Pipeline.classifyBatch` / `corpusIncrement`, in both of its forms —
@@ -14,6 +15,9 @@ import graft.operators.{Corpus, Dedup}
   * sf0.01 documents with planted exact and near re-sends, and on the
   * edges of the one-task form's slot order and union-find (null texts,
   * a group member that is also near an old document, one large group).
+  * Each gate of the batch-local verify budget, tripped, must give the
+  * same labels, and a batch-local batch must be matched and decided in
+  * at most five Spark jobs.
   */
 class ClassifyParitySpec extends AnyFunSuite {
   import SparkTestSession._
@@ -109,6 +113,30 @@ class ClassifyParitySpec extends AnyFunSuite {
     out
   }
 
+  /** The jobs `body` ran, per call site, counted by a listener. */
+  private def sitesOf[T](body: => T): (T, Seq[Profile.Site]) =
+    Profile.recording(spark) { r =>
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark); r.take()
+      val got = body
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark)
+      (got, r.take().sites)
+    }
+
+  /** A bootstrapped sf corpus and a day batch of its held-out docs plus
+    * a planted exact and a planted near re-send of a bootstrap doc. */
+  private lazy val dayBatch: (String, DataFrame) = {
+    val out = bootstrap("graft-clsgate", Nil)
+    val doc = sources.Tables.table(spark, sf, "documents")
+      .select("doc_id", "lang", "text")
+    val bucket = Corpus.hashBucket(col("doc_id"), "cinc", 5)
+    val seed = doc.filter(bucket >= 2).orderBy("doc_id").limit(1)
+      .collect()(0)
+    (out, doc.filter(bucket < 2).unionByName(Seq(
+        (840001L, seed.getString(1), seed.getString(2) + " trailing bits"),
+        (840002L, seed.getString(1), seed.getString(2)))
+      .toDF("doc_id", "lang", "text")).localCheckpoint())
+  }
+
   private def words(from: Int, to: Int): String =
     (from to to).map(i => s"w$i").mkString(" ")
 
@@ -202,5 +230,45 @@ class ClassifyParitySpec extends AnyFunSuite {
     assert(m.values.count(_ == "accept") == 1 &&
       m.values.count(_ == "near_dup_batch") == 299, m.values.groupBy(identity)
       .map { case (k, v) => k -> v.size }.toString)
+  }
+
+  test("a batch-local classifyBatch matches and decides in at most 5 " +
+      "jobs, none of them a row probe") {
+    val (out, batch) = dayBatch
+    val (labels, sites) = sitesOf(Pipeline.classifyBatch(spark, out, batch)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
+    // the cleaning's truncate and count run at classifyBatch's own
+    // sites; everything else is the sketch, the match and the decision
+    val matched = sites.filterNot(_.site.contains("classifyBatch"))
+    assert(matched.nonEmpty && matched.map(_.jobs).sum <= 5,
+      matched.mkString("\n"))
+    assert(!sites.exists(_.site.contains("rowsUpTo")), sites.mkString("\n"))
+    assert(labels == assertParity(out, batch))
+  }
+
+  test("each gate of the verify budget, tripped, gives the frame " +
+      "form's labels: the pair count and the stored rows in the task") {
+    val (out, batch) = dayBatch
+    val idx = s"$out/dedup_index"
+    val cleaned = Pipeline.corpusClean(batch).localCheckpoint()
+    val (shRows, nPairs) = VerifyBudget.terms(cleaned, idx)
+    assert(nPairs > 0, "the batch needs stored candidates")
+    val reference = assertParity(out, batch)
+    def run(budget: Long) = sitesOf(Pipeline.classifyBatch(spark, out,
+        batch, Dedup.LocalBatchRows, budget).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap)
+    // the kernel's task runs at a classifyCleaned site, the exchange
+    // match at exchangeMatch's
+    def ran(sites: Seq[Profile.Site], at: String) = sites.exists(_.site.contains(at))
+    val exact = 150L * shRows + 100L * nPairs
+    val (fits, fitSites) = run(Dedup.LocalVerifyBytes)
+    val (pairGate, pairSites) = run(exact - 1L)
+    val (taskGate, taskSites) = run(exact)
+    assert(ran(fitSites, "classifyCleaned") && !ran(fitSites, "exchangeMatch"))
+    assert(!ran(pairSites, "classifyCleaned") && ran(pairSites, "exchangeMatch"),
+      "one pair over the budget: no task, the exchange form")
+    assert(ran(taskSites, "classifyCleaned") && ran(taskSites, "exchangeMatch"),
+      "the stored rows over the budget: the task ran, then the exchange form")
+    Seq(fits, pairGate, taskGate).foreach(got => assert(got == reference))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Bm25, IndexAudit, IndexProtocol}
+import scala.jdk.CollectionConverters._
 
 /** Specs for the persisted-index integrity audit (fsck) — every
   * status in the taxonomy produced at least once, on a synthetic
@@ -275,11 +276,65 @@ class IndexAuditSpec extends AnyFunSuite {
           "doc_id", "text", root)
       }
       assert(e.getMessage.contains("predates the committed-batch list"))
-      // a root with no meta at all is no index to audit
+      // a root with no meta at all is reported, not refused
       val empty = tmp("dfsck-empty")
-      try intercept[IllegalArgumentException](
-        IndexAudit.audit(spark, empty.toString))
-      finally rmTree(empty)
+      try assertMissingMeta(empty.toString) finally rmTree(empty)
+    } finally rmTree(dir)
+  }
+
+  /** A root with no committed `_meta`: the audit reports that alone,
+    * unhealthy, and repair reports it and writes nothing.
+    */
+  private def assertMissingMeta(root: String): Unit = {
+    val got = IndexAudit.audit(spark, root).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getBoolean(3)))
+    assert(got == Seq(("meta", "_meta", "missing", false)), got.toString)
+    assert(!IndexAudit.isHealthy(spark, root))
+    def tree(): Map[String, (Long, Long)] = {
+      val base = java.nio.file.Paths.get(root)
+      val walk = java.nio.file.Files.walk(base)
+      try walk.iterator().asScala.map { p =>
+        base.relativize(p).toString -> (p.toFile.length, p.toFile.lastModified)
+      }.toMap finally walk.close()
+    }
+    val before = tree()
+    val acts = IndexAudit.repair(spark, root).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(acts == Seq(("meta", "_meta", "unrepairable_missing_meta")),
+      acts.toString)
+    assert(tree() == before, "repair wrote under a root with no meta")
+  }
+
+  test("a BM25 root and a vector root whose bootstrap crashed before " +
+      "its meta create audit as meta/missing; repair writes nothing") {
+    import spark.implicits._
+    import graft.operators.{Similarity, VectorIndex}
+    val dir = tmp("fsck-nometa")
+    try {
+      val bm25 = s"$dir/bm25"
+      Bm25.writeBm25Index(Seq((1L, "vector hash join fast pipeline"),
+          (2L, "hash join table scan")).toDF("doc_id", "text"),
+        "doc_id", "text", bm25)
+      val emb = sources.Tables.table(spark, sf, "embeddings")
+        .filter(col("vec_id") < 200).localCheckpoint()
+      val cents = emb.filter(col("vec_id") % 37 === 1)
+        .select(col("vec_id").as("cell"), col("embedding").as("centv"))
+      val cb = Similarity.pqTrain(emb, "vec_id", "embedding", 4, 64,
+        col("vec_id") % 17 === 5, rounds = 2).localCheckpoint()
+      val vec = s"$dir/vec"
+      VectorIndex.write(emb, "vec_id", "embedding", cents, cb, 4, 64, vec)
+      // the crash window: the bootstrap batch is published, the gen-0
+      // meta create never ran
+      Seq(bm25, vec).foreach { root =>
+        val fs = hadoopFs(root)
+        val meta = new org.apache.hadoop.fs.Path(s"$root/_meta")
+        assert(fs.exists(meta) &&
+          fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/batches"))
+            .nonEmpty, root)
+        fs.delete(meta, false)
+        assertMissingMeta(root)
+      }
     } finally rmTree(dir)
   }
 

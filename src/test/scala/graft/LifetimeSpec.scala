@@ -44,14 +44,26 @@ class LifetimeSpec extends AnyFunSuite {
     test(s"$name releases its cache when an action throws")(
       assertReleases(name)(op))
 
-  /** `op` fails on the injected row and leaves no cache entry behind. */
-  private def assertReleases(name: String)(op: => Any): Unit = {
+  /** `op` fails on the injected row and leaves no cache entry and no
+    * persisted RDD (other than a truncate's checkpoint) behind.
+    */
+  private def assertReleases(name: String)(op: => Any): Unit =
+    assertReleasesOn(name, "injected")(op)
+
+  /** [[assertReleases]] for a failure whose cause chain names `cause`. */
+  private def assertReleasesOn(name: String, cause: String)(op: => Any)
+      : Unit = {
     spark.catalog.clearCache()
+    val rdds = org.apache.spark.rdd.DriverState
+      .persistedNonCheckpoints(spark.sparkContext)
     val e = intercept[Exception](op)
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => String.valueOf(t.getMessage).contains("injected")),
+      .exists(t => String.valueOf(t.getMessage).contains(cause)),
       s"$name failed for another reason: $e")
     assert(cacheIsEmpty, s"$name left a cache entry behind")
+    val left = org.apache.spark.rdd.DriverState
+      .persistedNonCheckpoints(spark.sparkContext) -- rdds
+    assert(left.isEmpty, s"$name left persisted RDDs $left behind")
   }
 
   releasesOnThrow("minhashDedup") {
@@ -87,6 +99,40 @@ class LifetimeSpec extends AnyFunSuite {
             Dedup.publishBatch(sk, bad, "doc_id", dir, "append")
           })
       }
+    }
+  }
+
+  test("a batch-local classifyBatch whose action throws leaves no " +
+      "persisted RDD and no live broadcast of its own") {
+    Checkpoints.tempDir("graft-lifetime") { out =>
+      val doc = sources.Tables.table(spark, sf, "documents")
+        .select("doc_id", "lang", "text")
+      val bucket = graft.operators.Corpus.hashBucket(col("doc_id"), "cinc", 5)
+      Pipeline.corpusInit(spark, doc.filter(bucket >= 2), out, "2026-08-12")
+      // a stored shingle file that is not parquet: the kernel's stored
+      // shingle scan throws after the sketch is persisted and both
+      // broadcasts are made
+      val walk = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(s"$out/dedup_index/batches"))
+      val bad = try walk.iterator().asScala.find { p =>
+          p.getParent.getFileName.toString == "shingles" &&
+            p.getFileName.toString.endsWith(".parquet")
+        }.get finally walk.close()
+      java.nio.file.Files.write(bad, "not parquet".getBytes("UTF-8"))
+      java.nio.file.Files.deleteIfExists(
+        bad.resolveSibling(s".${bad.getFileName}.crc"))
+      val sc = spark.sparkContext
+      val casts = org.apache.spark.rdd.DriverState.liveBroadcasts(sc).keySet
+      assertReleasesOn("classifyBatch", bad.getFileName.toString)(
+        Pipeline.classifyBatch(spark, out, doc.filter(bucket < 2)).collect())
+      // what a failed job may leave is Spark's own broadcasts — task
+      // binaries and each file scan's Hadoop configuration — until a
+      // driver GC cleans them
+      val fresh = org.apache.spark.rdd.DriverState.liveBroadcasts(sc) --
+        casts
+      assert(fresh.values.forall(v => v.isInstanceOf[Array[Byte]] ||
+          v.isInstanceOf[org.apache.spark.util.SerializableConfiguration]),
+        fresh.values.map(_.getClass.getName).toString)
     }
   }
   releasesOnThrow("contaminationCheck") {
