@@ -356,7 +356,7 @@ object Pipeline {
     * changing `recipe.shards` means a bootstrap re-run, exactly like
     * re-partitioning any other lakehouse table.
     */
-  private def silverColumns(cleaned: org.apache.spark.sql.DataFrame,
+  private[graft] def silverColumns(cleaned: org.apache.spark.sql.DataFrame,
                             processingDate: String,
                             recipe: Corpus.TrainingRecipe)
       : org.apache.spark.sql.DataFrame =
@@ -368,7 +368,7 @@ object Pipeline {
       Corpus.hashBucket(col("doc_id"), recipe.shardSalt, recipe.shards)
         .as("shard"))
 
-  private def writeSilver(df: org.apache.spark.sql.DataFrame,
+  private[graft] def writeSilver(df: org.apache.spark.sql.DataFrame,
                           outDir: String, mode: String): Unit =
     Tables.writeParquet(df, s"$outDir/silver/documents", mode = mode,
       partitionBy = Seq("shard"))
@@ -427,18 +427,20 @@ object Pipeline {
         ks.map(k => s"$silverPath/shard=$k"))
       case None => Tables.readParquet(spark, silverPath)
     }
-    val kept = silver
-      .withColumn("shard", col("shard").cast("bigint"))
-      .filter(col("q") >= recipe.minQuality &&
-        col("n_bpe_tokens").between(recipe.minTokens, recipe.maxTokens))
-    val train = Corpus.splitByHash(
-        Corpus.mixtureSample(kept, "doc_id", "lang", recipe.mixtureSalt,
-          recipe.mixtureDen, recipe.mixtureRates.toMap),
-        "doc_id", recipe.splitSalt, recipe.splitWeights)
-      .filter(col("split") === "train")
-    val out = Corpus.packEpochRanked(train, "doc_id", "clean_text",
-        "n_bpe_tokens", "shard", recipe.packBudget, epoch)
-      .withColumn("_modeling_date", lit(modelingDate))
+    publishGold(spark, outDir, goldRows(silver, modelingDate, epoch, recipe),
+      shards, extraAudit)
+  }
+
+  /** [[corpusGold]]'s publish of the gold rows `out`: staged, audited
+    * and swapped in per shard directory. A full rebuild (`shards =
+    * None`) with no row — an empty corpus, or one the training filter
+    * empties — leaves one zero-row file with gold's schema at the table
+    * root, so gold still reads (as empty); the first staged shard
+    * directory replaces that file.
+    */
+  private def publishGold(spark: SparkSession, outDir: String,
+                          out: DataFrame, shards: Option[Seq[Long]],
+                          extraAudit: Seq[Cleaning.Expectation]): Unit = {
     // WRITE-AUDIT-PUBLISH, restated for a shard-partitioned target
     // (the S18 discipline composed into the DAG): stage the batch's
     // shard directories, run the BLOCKING C11 audit over the staged
@@ -449,19 +451,24 @@ object Pipeline {
     // partitionOverwriteMode did), but a batch that fails its audit
     // now never reaches a directory a trainer could read, and the
     // staged parquet is LEFT for inspection.
-    val target = s"$outDir/gold/train_packed"
+    val target = goldPath(outDir)
     val staging = s"$target.staging"
     // the kernel's shuffle already put each shard in one task
     out.write.mode("overwrite")
       .partitionBy("shard")
       .parquet(staging)
-    Tables.auditStaged(spark, staging,
-      Seq(Cleaning.ExpectNotNull("packed_text"),
-        Cleaning.ExpectNotNull("bin_id"),
-        Cleaning.ExpectRange("n_docs", 1, Long.MaxValue.toDouble),
-        Cleaning.ExpectRange("epoch_rank", 1, Long.MaxValue.toDouble))
-        ++ extraAudit)
     val fs = Tables.fsFor(spark, target)
+    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("shard="))
+    // no staged shard: no row to audit
+    if (staged.nonEmpty)
+      Tables.auditStaged(spark, staging,
+        Seq(Cleaning.ExpectNotNull("packed_text"),
+          Cleaning.ExpectNotNull("bin_id"),
+          Cleaning.ExpectRange("n_docs", 1, Long.MaxValue.toDouble),
+          Cleaning.ExpectRange("epoch_rank", 1, Long.MaxValue.toDouble))
+          ++ extraAudit)
     fs.mkdirs(new org.apache.hadoop.fs.Path(target))
     // the swap is NOT atomic across shards — a failure mid-loop
     // leaves gold serving a mix of new and old shard snapshots. The
@@ -480,10 +487,11 @@ object Pipeline {
         s"snapshots; superseded copies are preserved under $retiring " +
         s"and the staged batch at $staging: re-running the same " +
         "batch re-stages and republishes every shard (idempotent)")
-    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("shard="))
     val stagedNames = staged.map(_.getPath.getName).toSet
+    // an empty gold's zero-row file goes before the first shard lands
+    if (staged.nonEmpty)
+      fs.listStatus(new org.apache.hadoop.fs.Path(target))
+        .filter(_.isFile).foreach(st => fs.delete(st.getPath, false))
     staged.foreach { st =>
       val name = st.getPath.getName
       val dst = new org.apache.hadoop.fs.Path(s"$target/$name")
@@ -518,6 +526,8 @@ object Pipeline {
               s"full rebuild could not remove the stale shard dir " +
                 s"${st.getPath} absent from the staged batch")
         }
+    if (shards.isEmpty && staged.isEmpty)
+      out.limit(0).write.mode("overwrite").parquet(target)
     // the whole batch is serving: reclaim the superseded copies and
     // the consumed staging (verified for the retiring copies — a
     // silent survivor would shadow the next publish's aside slot)
@@ -529,6 +539,28 @@ object Pipeline {
     ()
   }
 
+  /** The gold table's path under `outDir`. */
+  private def goldPath(outDir: String) = s"$outDir/gold/train_packed"
+
+  /** The gold rows of `silver`: the training filter, language mixture,
+    * train split and the packed rows with their epoch rank.
+    */
+  private def goldRows(silver: DataFrame, modelingDate: String, epoch: Int,
+                       recipe: Corpus.TrainingRecipe): DataFrame = {
+    val kept = silver
+      .withColumn("shard", col("shard").cast("bigint"))
+      .filter(col("q") >= recipe.minQuality &&
+        col("n_bpe_tokens").between(recipe.minTokens, recipe.maxTokens))
+    val train = Corpus.splitByHash(
+        Corpus.mixtureSample(kept, "doc_id", "lang", recipe.mixtureSalt,
+          recipe.mixtureDen, recipe.mixtureRates.toMap),
+        "doc_id", recipe.splitSalt, recipe.splitWeights)
+      .filter(col("split") === "train")
+    Corpus.packEpochRanked(train, "doc_id", "clean_text",
+        "n_bpe_tokens", "shard", recipe.packBudget, epoch)
+      .withColumn("_modeling_date", lit(modelingDate))
+  }
+
   /** The persisted MinHash index over every document the corpus
     * pipeline has EVER processed (accepted or rejected). Indexing
     * rejected docs too closes the transitivity gap a canonical-only
@@ -538,52 +570,118 @@ object Pipeline {
   private def indexDir(outDir: String) = s"$outDir/dedup_index"
 
   /** Bootstrap the incremental corpus state: bronze → FULLY deduped
-    * silver (exact-hash canonical, then MinHash near-dup groups →
-    * one best-quality doc per group — the same dedup semantics the
-    * composed `q_llm_pipeline` gate runs) → gold, plus the dedup
-    * index over all processed docs. After this, daily
-    * [[corpusIncrement]] calls carry the corpus forward at
-    * batch-sized cost, and the corpus-wide invariant holds: no two
-    * silver docs are exact or (LSH-detectable) near duplicates.
+    * silver → gold, plus the dedup index over all processed docs. The
+    * bootstrap batch is decided like a [[corpusIncrement]] batch
+    * against an empty index: no evidence and nothing stored, so a
+    * document is accepted iff it is its norm-hash's canonical
+    * (best-quality, tie → min id) and the canonical of its near-dup
+    * group among those ([[bootstrapDedup]]). After this, daily
+    * [[corpusIncrement]] calls carry the corpus forward at batch-sized
+    * cost, and the corpus-wide invariant holds: no two silver docs are
+    * exact or (LSH-detectable) near duplicates.
+    *
+    * An empty `docs` gives an empty corpus that the next increment
+    * grows: an index holding one empty batch, an empty silver, and a
+    * gold of one zero-row file with gold's schema.
     */
   def corpusInit(spark: SparkSession, docs: DataFrame, outDir: String,
                  runDate: String, epoch: Int = 1,
                  maxAttempts: Int = 3,
                  recipe: Corpus.TrainingRecipe =
                    Corpus.TrainingRecipe.Default,
-                 maxDocFreq: Option[Int] = None): DataFrame = {
+                 maxDocFreq: Option[Int] = None): DataFrame =
+    corpusInit(spark, docs, outDir, runDate, epoch, maxAttempts, recipe,
+      maxDocFreq, Dedup.LocalBatchRows, Dedup.LocalVerifyBytes)
+
+  /** [[corpusInit]] with the batch-local bound (negative: never) and
+    * the batch-local verify budget; specs force the exchange form or
+    * trip the budget with them.
+    */
+  private[graft] def corpusInit(spark: SparkSession, docs: DataFrame,
+                                outDir: String, runDate: String,
+                                epoch: Int, maxAttempts: Int,
+                                recipe: Corpus.TrainingRecipe,
+                                maxDocFreq: Option[Int], localRows: Long,
+                                verifyBytes: Long): DataFrame = {
     withRetries(maxAttempts)(corpusLand(docs, outDir, runDate))
-    withRetries(maxAttempts) {
+    val rows = withRetries(maxAttempts) {
       val cleaned = Checkpoints.truncate(corpusClean(
         spark.read.parquet(s"$outDir/bronze/documents")))
-      val exactCanon =
-        Dedup.keepCanonical(cleaned, "doc_id", "norm_hash", "q")
-      val groups = Dedup.resolveGroups(
-          exactCanon.select(col("doc_id").as("id")),
-          Dedup.minhashDedup(exactCanon, "doc_id", "norm_text",
-              maxDocFreq = maxDocFreq)
-            .select(col("id_a"), col("id_b")))
-        .withColumnRenamed("id", "doc_id")
-      // two consumers: silver write + hash evidence
-      val silverDf = Checkpoints.truncate(silverColumns(
-          Dedup.keepCanonical(exactCanon.join(groups, Seq("doc_id")),
-            "doc_id", "group_id", "q"),
-          runDate, recipe))
-      writeSilver(silverDf, outDir, "overwrite")
-      // the boilerplate cap persists into the index _meta, so every
-      // daily append and query runs the SAME cap the bootstrap dedup
-      // ran — the consistency the cap's Jaccard semantics need. The
-      // bootstrap batch also carries the hash evidence of everything
-      // that LANDED in silver, so the daily exact-dup probe never has
-      // to read silver itself (see classifyCleaned).
-      Dedup.writeDedupIndex(cleaned, "doc_id", "norm_text",
-        indexDir(outDir), maxDocFreq = maxDocFreq,
-        sideTables = Seq("hashes" -> silverDf.select(col("norm_hash"))))
+      val (bid, n) = Dedup.batchIdAndRows(cleaned, "doc_id")
+      bootstrapDedup(spark, cleaned, n, maxDocFreq, localRows,
+          verifyBytes) { (kept, sketch) =>
+        // two consumers: silver write + hash evidence
+        val silverDf =
+          Checkpoints.truncate(silverColumns(kept, runDate, recipe))
+        writeSilver(silverDf, outDir, "overwrite")
+        if (n == 0L) publishGold(spark, outDir,
+          goldRows(silverDf, runDate, epoch, recipe), None, Nil)
+        // the boilerplate cap persists into the index _meta, so every
+        // daily append and query runs the SAME cap the bootstrap dedup
+        // ran — the consistency the cap's Jaccard semantics need. The
+        // bootstrap batch also carries the hash evidence of everything
+        // that LANDED in silver, so the daily exact-dup probe never has
+        // to read silver itself (see classifyCleaned).
+        Dedup.publishBatch(sketch, cleaned, "doc_id", indexDir(outDir),
+          "overwrite", knownId = Some(bid),
+          sideTables = Seq("hashes" -> silverDf.select(col("norm_hash"))))
+      }
+      n
     }
-    withRetries(maxAttempts)(
-      corpusGold(spark, outDir, runDate, epoch, recipe))
-    spark.read.parquet(s"$outDir/gold/train_packed")
+    if (rows > 0L)
+      withRetries(maxAttempts)(
+        corpusGold(spark, outDir, runDate, epoch, recipe))
+    spark.read.parquet(goldPath(outDir))
   }
+
+  /** The bootstrap's dedup of `cleaned` (`rows` rows): ONE sketch of
+    * the batch (df-capped over the whole batch with `maxDocFreq`),
+    * from which both the decision and `land` — the silver write and
+    * the index publish — read. `land` gets the accepted rows of
+    * `cleaned` and the sketch.
+    *
+    * A batch-local sketch (at most `localRows` rows, long ids) is
+    * decided by the batch-local kernel ([[Dedup.batchLocal]]) in one
+    * task ([[labelTask]]) against no stored index, and its accepted ids
+    * reach `cleaned` through a broadcast. Any other sketch, or one
+    * whose verify state is over `verifyBytes`, runs the exchange form
+    * on the same sketch: the norm-hash canonicals, their verified
+    * near-dup pairs from the sketch ([[Dedup.batchPairs]]), their
+    * groups ([[Dedup.resolveGroups]]) and each group's canonical. Both
+    * equal the earlier two-sketch bootstrap kept in
+    * `BootstrapParitySpec` (with a df-cap: each other's).
+    */
+  private[graft] def bootstrapDedup[T](spark: SparkSession,
+                                       cleaned: DataFrame, rows: Long,
+                                       maxDocFreq: Option[Int],
+                                       localRows: Long, verifyBytes: Long)
+                                      (land: (DataFrame, Dedup.BatchSketch) => T)
+      : T =
+    Dedup.withBatchSketch(cleaned, "doc_id", "norm_text", 16, 2,
+        maxDocFreq.getOrElse(-1),
+        Dedup.sketchesLocal(cleaned, "doc_id", rows, localRows),
+        carry = decided) { sketch =>
+      val kept = sketch.local.flatMap { _ =>
+        Dedup.batchLocal(sketch, None, 1, 2, verifyBytes, None, labelSchema,
+            labelTask) { labels =>
+          spark.createDataFrame(labels.collect().toSeq.asJava, labelSchema)
+        }
+      }.map(labels => cleaned.join(broadcast(labels
+          .filter(col("decision") === "accept").select(col("doc_id"))),
+          Seq("doc_id")))
+        .getOrElse {
+          val exactCanon =
+            Dedup.keepCanonical(cleaned, "doc_id", "norm_hash", "q")
+          val groups = Dedup.resolveGroups(
+              exactCanon.select(col("doc_id").as("id")),
+              Dedup.batchPairs(sketch, exactCanon.select(col("doc_id").as("sid")))
+                .select(col("id_a"), col("id_b")))
+            .withColumnRenamed("id", "doc_id")
+          Dedup.keepCanonical(exactCanon.join(groups, Seq("doc_id")),
+            "doc_id", "group_id", "q")
+        }
+      land(kept, sketch)
+    }
 
   /** Daily INCREMENT of the corpus state — the production shape: cost
     * scales with the batch, never the corpus. A batch document is
@@ -662,7 +760,7 @@ object Pipeline {
     // boilerplate df-cap, so batch and stored sides stay consistent
     // with the bootstrap build)
     sketch.local.flatMap { ls =>
-      Dedup.batchLocal(sketch, idx, 1, 2, verifyBytes,
+      Dedup.batchLocal(sketch, Some(idx), 1, 2, verifyBytes,
           Some(evidence -> ls.carried.flatMap(r => Option(r.getString(1))).toSet),
           labelSchema, labelTask) { labels =>
         spark.createDataFrame(labels.collect().toSeq.asJava, labelSchema)

@@ -1114,24 +1114,68 @@ object Dedup {
     val cap = indexCap(fsFor(batch.sparkSession, path), path, k,
       rowsPerBand, None,
       "query")
-    // long ids only: the one-task verify keys its maps by long id
-    val local = localRows >= 0 && batch.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType && rows <= localRows
-    withBatchSketch(batch, idCol, textCol, k, rowsPerBand, cap, local,
-      carry)(body)
+    withBatchSketch(batch, idCol, textCol, k, rowsPerBand, cap,
+      sketchesLocal(batch, idCol, rows, localRows), carry)(body)
   }
 
+  /** Is a batch of `rows` rows sketched batch-local under the bound
+    * `localRows` (negative: never)? Only with a long id column (the
+    * one-task verify keys its maps by long id); `rows` is only
+    * evaluated then.
+    */
+  private[graft] def sketchesLocal(batch: DataFrame, idCol: String,
+                                   rows: => Long, localRows: Long): Boolean =
+    localRows >= 0 && batch.schema(idCol).dataType ==
+      org.apache.spark.sql.types.LongType && rows <= localRows
+
   /** The stored band and shingle tables of the index at `path`: one
-    * path each per committed batch, from one `_meta` read.
+    * path each per committed batch, from one `_meta` read. None for no
+    * index (a bootstrap decides against nothing stored), and none for
+    * an index with no committed batch left.
     */
   private def committedTables(spark: org.apache.spark.sql.SparkSession,
-                              path: String): (Seq[String], Seq[String]) = {
-    val batches = readMeta(fsFor(spark, path), path).batches
-    require(batches.nonEmpty,
-      s"no committed batch in the dedup index at $path — append one " +
-        "with writeDedupIndex before querying against it")
-    (tablePaths(path, batches, "bands"), tablePaths(path, batches, "shingles"))
-  }
+                              path: Option[String])
+      : (Seq[String], Seq[String]) =
+    path.fold((Seq.empty[String], Seq.empty[String])) { p =>
+      val batches = readMeta(fsFor(spark, p), p).batches
+      (tablePaths(p, batches, "bands"), tablePaths(p, batches, "shingles"))
+    }
+
+  /** The stored tables at `paths` as one scan with `as`'s schema (the
+    * batch's own sketch table: the same columns and id type), so no
+    * footer-reading schema inference job runs and a batch whose table
+    * holds no file reads as empty. None when there are no paths.
+    */
+  private def readStored(spark: org.apache.spark.sql.SparkSession,
+                         paths: Seq[String], as: DataFrame): Option[DataFrame] =
+    if (paths.isEmpty) None
+    else Some(spark.read.schema(as.schema)
+      .option("recursiveFileLookup", "true").parquet(paths: _*))
+
+  /** The band-bucket self-join of a batch's (sid, band, bucket) rows:
+    * each pair of its ids sharing a bucket, id_a < id_b, once a band.
+    */
+  private def selfPairs(bk: DataFrame): DataFrame =
+    bk.as("a")
+      .join(bk.as("b"),
+        col("a.band") === col("b.band") &&
+          col("a.bucket") === col("b.bucket") &&
+          col("a.sid") < col("b.sid"))
+      .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"))
+
+  /** The verified (id_a, id_b, jaccard) pairs among the sketched
+    * batch's documents whose ids `among` (column `sid`) lists, with
+    * nothing stored to match — the exchange form of a bootstrap: the
+    * band-bucket self-join of those documents' buckets, then
+    * [[jaccardVerify]] over the sketch's shingles, materialized.
+    */
+  private[graft] def batchPairs(sk: BatchSketch, among: DataFrame,
+                                thresholdNum: Int = 1,
+                                thresholdDen: Int = 2): DataFrame =
+    graft.Checkpoints.cached(sk.bands.join(among, Seq("sid"), "left_semi")) { bk =>
+      graft.Checkpoints.truncate(jaccardVerify(sk.sh,
+        Some(selfPairs(bk).distinct()), thresholdNum, thresholdDen))
+    }
 
   /** The verified (id_a, id_b, jaccard) pairs of a sketched batch
     * against the index at `path` and against itself, materialized (the
@@ -1147,7 +1191,7 @@ object Dedup {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq("id_a", "id_b", "i", "n_a", "n_b")
       .map(StructField(_, LongType, nullable = false)))
-    sk.local.flatMap(_ => batchLocal(sk, path, thresholdNum, thresholdDen,
+    sk.local.flatMap(_ => batchLocal(sk, Some(path), thresholdNum, thresholdDen,
         verifyBytes, None, schema, (_, _, withStored, within) =>
           (withStored ++ within).map(p =>
             org.apache.spark.sql.Row(p(0), p(1), p(2), p(3), p(4)))) { rows =>
@@ -1166,26 +1210,21 @@ object Dedup {
                                    thresholdNum: Int = 1,
                                    thresholdDen: Int = 2): DataFrame = {
     val spark = sk.sh.sparkSession
-    val (bandPaths, shinglePaths) = committedTables(spark, path)
-    val idxBk = readBatchTables(spark, bandPaths)
-    val idxSh = readBatchTables(spark, shinglePaths)
+    val (bandPaths, shinglePaths) = committedTables(spark, Some(path))
     // the batch's band table feeds the index join AND the batch
     // self-join; it is released before the verify runs
     val cand = graft.Checkpoints.cached(sk.bands) { newBk =>
-      val vsIndex = newBk.as("a")
-        .join(idxBk.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.sid") =!= col("b.sid"))
-        .select(least(col("a.sid"), col("b.sid")).as("id_a"),
-          greatest(col("a.sid"), col("b.sid")).as("id_b"))
-      val vsSelf = newBk.as("a")
-        .join(newBk.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.sid") < col("b.sid"))
-        .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"))
-      graft.Checkpoints.truncate(vsIndex.unionByName(vsSelf).distinct())
+      val vsIndex = readStored(spark, bandPaths, sk.bands).map(idxBk =>
+        newBk.as("a")
+          .join(idxBk.as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.bucket") === col("b.bucket") &&
+              col("a.sid") =!= col("b.sid"))
+          .select(least(col("a.sid"), col("b.sid")).as("id_a"),
+            greatest(col("a.sid"), col("b.sid")).as("id_b")))
+      val vsSelf = selfPairs(newBk)
+      graft.Checkpoints.truncate(
+        vsIndex.fold(vsSelf)(_.unionByName(vsSelf)).distinct())
     }
     // verify needs shingles for candidate ids only: semi-join the
     // (corpus-sized) stored shingle table down to candidates BEFORE
@@ -1201,11 +1240,11 @@ object Dedup {
     // duplicated index append that slipped past writeDedupIndex's
     // guard would double them — and doubled rows shift every verify
     // count. Dedupe on read so verify stays exact regardless.
-    val storedSh = idxSh
-      .join(candIds, col("sid") === col("cid"), "left_semi")
-      .distinct()
-    graft.Checkpoints.truncate(jaccardVerify(sk.sh.unionByName(storedSh),
-      Some(cand), thresholdNum, thresholdDen))
+    val storedSh = readStored(spark, shinglePaths, sk.sh).map(
+      _.join(candIds, col("sid") === col("cid"), "left_semi").distinct())
+    graft.Checkpoints.truncate(jaccardVerify(
+      storedSh.fold(sk.sh)(sk.sh.unionByName(_)), Some(cand), thresholdNum,
+      thresholdDen))
   }
 
   /** The consumer of [[batchLocal]]'s verified pairs, run inside its
@@ -1233,7 +1272,9 @@ object Dedup {
     * `path` and decided in one executor task, or None when the task's
     * measured state would exceed `verifyBytes` ([[verifyTaskBytes]]).
     * Two jobs after the sketch's own (the first, and `finish`'s one
-    * job running steps 2 and 3):
+    * job running steps 2 and 3); with nothing stored (no `path`, the
+    * bootstrap, or no committed batch) step 1 and the stored shingle
+    * scan are skipped, so only `finish`'s job runs:
     *
     *  1. The stored band scan, at its own parallelism, looks each row
     *     up in the batch's buckets (a driver broadcast) and collects
@@ -1260,7 +1301,7 @@ object Dedup {
     * Its pairs equal the exchange form's (spec-pinned:
     * AgainstIndexParitySpec).
     */
-  private[graft] def batchLocal[T](sk: BatchSketch, path: String,
+  private[graft] def batchLocal[T](sk: BatchSketch, path: Option[String],
                                    thresholdNum: Int, thresholdDen: Int,
                                    verifyBytes: Long,
                                    evidence: Option[(DataFrame, Set[String])],
@@ -1271,16 +1312,12 @@ object Dedup {
       "batchLocal needs a batch-local sketch"))
     val spark = sk.sh.sparkSession
     val (bandPaths, shinglePaths) = committedTables(spark, path)
-    // the stored tables share the batch's schema (same id column), so
-    // no footer-reading schema inference job runs
-    def stored(paths: Seq[String], as: DataFrame) =
-      spark.read.schema(as.schema).option("recursiveFileLookup", "true")
-        .parquet(paths: _*)
     val pairsFit = (verifyBytes - verifyTaskBytes(ls.shRows, 0L, 0L)) / 100L
     if (pairsFit < 0L) None
     else graft.Checkpoints.broadcast(spark, ls.buckets) { buckets =>
-      val found = stored(bandPaths, sk.bands).queryExecution.toRdd
-        .mapPartitions { rows =>
+      val found = readStored(spark, bandPaths, sk.bands).fold(
+          Array.empty[(Long, Long)]) { idxBk =>
+        idxBk.queryExecution.toRdd.mapPartitions { rows =>
           val got = new java.util.HashSet[(Long, Long)]()
           while (got.size <= pairsFit && rows.hasNext) {
             val r = rows.next()
@@ -1292,6 +1329,7 @@ object Dedup {
           }
           Iterator(got.toArray(Array.empty[(Long, Long)]))
         }.collect().flatten.distinct
+      }
       if (verifyTaskBytes(ls.shRows, 0L, found.length) > verifyBytes) None
       else graft.Checkpoints.broadcast(spark, KernelSide(found,
           found.iterator.map(_._2).toSet ++ ls.buckets.valuesIterator.flatten,
@@ -1304,9 +1342,10 @@ object Dedup {
           Seq(lit(t).as("t"), a.cast("long").as("a"), s.cast("string").as("s"))
         val isCandidate = udf((sid: Long) => side.value.ids.contains(sid))
         val kept = udf((v: String) => v != null && side.value.keep.contains(v))
-        val shingles = sk.sh.select(tagged(2, col("sid"), col("sh")): _*)
-          .union(stored(shinglePaths, sk.sh).filter(isCandidate(col("sid")))
-            .select(tagged(3, col("sid"), col("sh")): _*))
+        val batchSh = sk.sh.select(tagged(2, col("sid"), col("sh")): _*)
+        val shingles = readStored(spark, shinglePaths, sk.sh).fold(batchSh)(
+          st => batchSh.union(st.filter(isCandidate(col("sid")))
+            .select(tagged(3, col("sid"), col("sh")): _*)))
         val rows = evidence.fold(shingles) { case (ev, _) =>
           val v = col(ev.columns.head)
           shingles.union(ev.filter(kept(v)).select(tagged(1, lit(null), v): _*))

@@ -135,6 +135,29 @@ class LifetimeSpec extends AnyFunSuite {
         fresh.values.map(_.getClass.getName).toString)
     }
   }
+  test("a batch-local corpusInit whose kernel action throws leaves no " +
+      "persisted RDD and no live broadcast of its own") {
+    Checkpoints.tempDir("graft-lifetime") { out =>
+      val doc = sources.Tables.table(spark, sf, "documents")
+        .select("doc_id", "lang", "text")
+      // a null doc_id (a landing-zone violation) passes the sketch and
+      // fails the kernel's one task, after the sketch is persisted and
+      // both broadcasts are made
+      val bad = doc.limit(40).unionByName(doc.limit(1)
+        .select(lit(null).cast("long").as("doc_id"), col("lang"), col("text")))
+      val sc = spark.sparkContext
+      val casts = org.apache.spark.rdd.DriverState.liveBroadcasts(sc).keySet
+      assertReleasesOn("corpusInit", "ROW_VALUE_IS_NULL")(
+        Pipeline.corpusInit(spark, bad, out, "2026-08-12", 1, 1,
+          graft.operators.Corpus.TrainingRecipe.Default, None,
+          Dedup.LocalBatchRows, Dedup.LocalVerifyBytes))
+      val fresh = org.apache.spark.rdd.DriverState.liveBroadcasts(sc) --
+        casts
+      assert(fresh.values.forall(v => v.isInstanceOf[Array[Byte]] ||
+          v.isInstanceOf[org.apache.spark.util.SerializableConfiguration]),
+        fresh.values.map(_.getClass.getName).toString)
+    }
+  }
   releasesOnThrow("contaminationCheck") {
     Dedup.contaminationCheck(badDocs, "doc_id", "text",
       col("doc_id") % 7 === 0)

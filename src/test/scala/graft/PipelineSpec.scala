@@ -707,6 +707,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(state == before, "an empty day changed silver, gold or the index")
   }
 
+  test("an empty bootstrap: gold reads empty, and one day batch lands " +
+      "the silver rows an init on that batch lands") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.{Corpus, Dedup}
+    val doc = graft.sources.Tables.table(spark, sf, "documents")
+      .select("doc_id", "lang", "text")
+    val batch = doc.filter(Corpus.hashBucket(col("doc_id"), "cinc", 5) < 2)
+    val grown = java.nio.file.Files.createTempDirectory("graft-e0").toString
+    val gold0 = Pipeline.corpusInit(spark, doc.filter(lit(false)), grown,
+      "2026-08-12")
+    assert(gold0.count() == 0L && gold0.columns.contains("packed_text"))
+    assert(spark.read.parquet(s"$grown/gold/train_packed").count() == 0L)
+    // the empty index decides the batch in either form
+    def labels(localRows: Long) = Pipeline.classifyBatch(spark, grown,
+      batch, localRows).collect().map(r => r.getLong(0) -> r.getString(1))
+      .toMap
+    assert(labels(Dedup.LocalBatchRows) == labels(-1L))
+    val accepted = Pipeline.corpusIncrement(spark, grown, batch, "2026-08-13")
+    val initOn = java.nio.file.Files.createTempDirectory("graft-e1").toString
+    Pipeline.corpusInit(spark, batch, initOn, "2026-08-12")
+    def silver(out: String) = spark.read.parquet(s"$out/silver/documents")
+      .drop("_processing_date").collect().map(_.toString).toSeq.sorted
+    assert(silver(grown) == silver(initOn))
+    assert(accepted == silver(initOn).size.toLong && accepted > 0L)
+    assert(spark.read.parquet(s"$grown/gold/train_packed").count() ==
+      spark.read.parquet(s"$initOn/gold/train_packed").count())
+  }
+
   test("recipe shards are layout-only: membership identical at Shards=16") {
     import org.apache.spark.sql.functions._
     import graft.operators.Corpus
